@@ -5,17 +5,23 @@ Design for scale: the topology (``datanodes``/``storages``) is a
 broadcast-sized dimension (thousands of rows even for huge clusters);
 ``replicas`` is the fact table that grows to billions of rows. Every
 function below keeps per-block work distributed — either pure
-DataFrame aggregation (verify) or ``applyInPandas`` over
-``groupBy("block_id")`` (the iterative greedy algorithms, whose rounds
-touch only one block's handful of replicas at a time — SURVEY §7.3).
+DataFrame aggregation (verify) or, for the iterative greedy
+algorithms whose rounds touch only one block's handful of replicas at
+a time (SURVEY §7.3), a ``groupBy`` on the block keys that collects
+each block into one row, then ``mapInArrow`` running the per-block
+loop once per Arrow batch of whole blocks (``_per_block``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from collections import Counter
+from collections.abc import Callable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _pair_explode(df: DataFrame, leaf_col: str) -> DataFrame:
@@ -147,10 +153,6 @@ def verify_placement(
     return out.select("block_id", "replica_cnt", "satisfied", "reason")
 
 
-# buckets for grouped-map ops: enough for full-cluster parallelism,
-# few enough that each pandas call amortizes its dispatch overhead
-DRAIN_BUCKETS = 128
-
 def verify_placement_fast(
     replicas: DataFrame, required: DataFrame | int
 ) -> DataFrame:
@@ -219,6 +221,41 @@ def verify(
     return verify_placement(replicas, datanodes, required)
 
 
+def _per_block(
+    grouped: DataFrame,
+    kernel: Callable[..., list[tuple]],
+    schema: T.StructType,
+) -> DataFrame:
+    """Run ``kernel(*keys, rows)`` once per block, with one Python call
+    per Arrow batch of whole blocks.
+
+    ``grouped`` holds one row per block: its key columns, then a last
+    column with the block's ``collect_list(struct(...))``. The kernel
+    gets the keys and the struct rows as plain tuples and returns
+    output tuples in ``schema``'s column order. No pandas frame is
+    built on either side.
+    """
+    arrow_schema = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            *key_cols, lists = batch.columns
+            keys = zip(*(c.to_pylist() for c in key_cols))
+            # the batch's rows as one struct array, split into its fields
+            rows = list(zip(*(f.to_pylist() for f in lists.flatten().flatten())))
+            offsets = lists.offsets.to_pylist()
+            out: list[tuple] = []
+            for key, lo, hi in zip(keys, offsets, offsets[1:]):
+                out.extend(kernel(*key, rows[lo:hi]))
+            columns = list(zip(*out)) or [()] * len(arrow_schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            )
+
+    return grouped.mapInArrow(run, schema)
+
+
 _DELETE_SCHEMA = T.StructType(
     [
         T.StructField("block_id", T.LongType()),
@@ -248,26 +285,22 @@ def deletion_candidates(
     behind a flag. Hints/excess_types are ignored exactly as the
     reference ignores them (``:295-300``).
 
-    Distributed shape: ``groupBy("block_id").applyInPandas`` — each
-    block's drain loop runs where its replicas live; the topology join
-    happens before the shuffle so the pandas function sees only its
-    own rows.
+    Distributed shape: the topology joins happen before one
+    ``groupBy("block_id")`` that collects each block's replicas into
+    one row; the drain loop then runs per block over Arrow batches of
+    whole blocks (``_per_block``). The clamp is a one-row aggregate of
+    ``datanodes``, broadcast and carried to the kernel as column
+    ``keep``, so building the plan runs no job.
     """
-    n_dcs = datanodes.select("datacenter").distinct().count()
-    eff_keep = min(4, keep) if (two_dc_clamp and n_dcs == 2) else keep
-
-    # Only blocks that actually exceed the target enter the Python
-    # drain — at a billion blocks, most are already at target and
-    # must never pay the applyInPandas round-trip.
-    over = (
-        replicas.groupBy("block_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .where(F.col("_n") > eff_keep)
-        .select("block_id")
+    eff_keep = datanodes.agg(
+        F.when(
+            F.lit(two_dc_clamp) & (F.count_distinct("datacenter") == 2), min(4, keep)
+        )
+        .otherwise(keep)
+        .alias("keep")
     )
-    enriched = (
-        replicas.join(over, "block_id", "left_semi")
-        .join(
+    per_block = (
+        replicas.join(
             F.broadcast(datanodes.select("datanode_id", "datacenter", "rack")),
             "datanode_id",
         )
@@ -275,68 +308,48 @@ def deletion_candidates(
             F.broadcast(storages.select("storage_id", "state", "remaining")),
             "storage_id",
         )
+        .groupBy("block_id")
+        .agg(
+            F.collect_list(
+                F.struct(
+                    "storage_id", "datanode_id", "state", "remaining",
+                    "datacenter", "rack",
+                )
+            ).alias("rows")
+        )
+        .crossJoin(F.broadcast(eff_keep))
+        # Only blocks over the target enter the Python drain: at a
+        # billion blocks, most are already at target.
+        .where(F.size("rows") > F.col("keep"))
+        .select("block_id", "keep", "rows")
     )
 
-    def drain_block(rows: list[tuple]) -> list[tuple]:
-        # rows: (block_id, storage_id, datanode_id, state, remaining,
-        # datacenter, rack) — a handful per block, so plain tuples:
-        # pandas per-round transforms on 6-row frames cost more than
-        # the whole drain.
-        from collections import Counter
-
+    def drain_block(block_id: int, keep: int, rows: list[tuple]) -> list[tuple]:
+        # rows: (storage_id, datanode_id, state, remaining, datacenter,
+        # rack) — a handful per block, so plain tuples.
         out = []
         rnd = 0
-        while len(rows) > eff_keep:
-            if all(r[3] == "FAILED" for r in rows):
+        while len(rows) > keep:
+            if all(r[2] == "FAILED" for r in rows):
                 break  # all-FAILED safety: delete nothing (:356-362)
-            rack_cnt = Counter((r[5], r[6]) for r in rows)
-            dc_cnt = Counter(r[5] for r in rows)
+            rack_cnt = Counter((r[4], r[5]) for r in rows)
+            dc_cnt = Counter(r[4] for r in rows)
             victim = min(
                 rows,
                 key=lambda r: (
-                    0 if r[3] == "FAILED" else 1,  # FAILED first
-                    -rack_cnt[(r[5], r[6])],  # most-crowded rack
-                    -dc_cnt[r[5]],  # most-crowded datacenter
-                    r[4],  # least remaining
-                    r[1],  # storage_id tiebreak
+                    0 if r[2] == "FAILED" else 1,  # FAILED first
+                    -rack_cnt[(r[4], r[5])],  # most-crowded rack
+                    -dc_cnt[r[4]],  # most-crowded datacenter
+                    r[3],  # least remaining
+                    r[0],  # storage_id tiebreak
                 ),
             )
-            out.append((victim[0], rnd, victim[1], victim[2]))
+            out.append((block_id, rnd, victim[0], victim[1]))
             rows.remove(victim)
             rnd += 1
         return out
 
-    def drain_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        out: list[tuple] = []
-        cols = [
-            "block_id",
-            "storage_id",
-            "datanode_id",
-            "state",
-            "remaining",
-            "datacenter",
-            "rack",
-        ]
-        per_block: dict[int, list[tuple]] = {}
-        for row in pdf[cols].itertuples(index=False):
-            per_block.setdefault(row[0], []).append(tuple(row))
-        for block_id in sorted(per_block):
-            out.extend(drain_block(per_block[block_id]))
-        return pd.DataFrame(
-            out, columns=["block_id", "round", "storage_id", "datanode_id"]
-        )
-
-    # Bucket many blocks into one pandas call: per-group Python
-    # dispatch costs ~5-10 ms, which at millions of tiny groups IS
-    # the runtime. Buckets keep parallelism (hash over blocks) while
-    # amortizing the round-trip.
-    bucketed = enriched.withColumn(
-        "_bucket", F.pmod(F.col("block_id"), F.lit(DRAIN_BUCKETS))
-    )
-    return (
-        bucketed.groupBy("_bucket")
-        .applyInPandas(drain_bucket, schema=_DELETE_SCHEMA)
-    )
+    return _per_block(per_block, drain_block, _DELETE_SCHEMA)
 
 
 _CHOOSE_SCHEMA = T.StructType(
@@ -347,6 +360,67 @@ _CHOOSE_SCHEMA = T.StructType(
         T.StructField("storage_id", T.StringType()),
     ]
 )
+
+
+def _choose_kernel(
+    candidates: list[tuple],
+    exclude_nodes: list[int] | None,
+    favored_nodes: list[int] | None,
+) -> Callable[[int, int, list[tuple]], list[tuple]]:
+    """Build ``choose_block(block_id, additional, existing)``, the
+    per-block greedy of ``choose_targets``.
+
+    ``candidates`` are ``(datanode_id, datacenter, rack, xceiver,
+    storage_id, remaining)``; ``existing`` are the block's current
+    replicas as ``(datanode_id, datacenter, rack)``. The candidates are
+    indexed once: datacenter -> rack -> candidates presorted by the W3
+    preference (most remaining, then fewest xceivers, then id). A slot
+    walks datacenters by (load, name), their racks likewise, and takes
+    the first candidate the block does not hold yet, so it visits
+    datacenters and racks, not every node. The kernel is a closure, so
+    it ships to the workers by value.
+    """
+    excluded = set(exclude_nodes or [])
+    by_id = {c[0]: c for c in candidates if c[0] not in excluded}
+    index: dict[str, dict[str, list[tuple]]] = {}
+    for c in sorted(by_id.values(), key=lambda c: (-c[5], c[3], c[0])):
+        index.setdefault(c[1], {}).setdefault(c[2], []).append(c)
+    favored = [by_id[n] for n in (favored_nodes or []) if n in by_id]
+
+    def choose_block(
+        block_id: int, additional: int, existing: list[tuple]
+    ) -> list[tuple]:
+        taken = {r[0] for r in existing}
+        dc_load = Counter(r[1] for r in existing)
+        rack_load = Counter((r[1], r[2]) for r in existing)
+        # favored nodes first, in the given order, then the greedy
+        queue = [c for c in favored if c[0] not in taken]
+        out = []
+        for slot in range(additional):
+            if queue:
+                pick = queue.pop(0)
+            else:
+                pick = next(
+                    (
+                        c
+                        for dc in sorted(index, key=lambda d: (dc_load[d], d))
+                        for rk in sorted(
+                            index[dc], key=lambda rk: (rack_load[dc, rk], rk)
+                        )
+                        for c in index[dc][rk]
+                        if c[0] not in taken
+                    ),
+                    None,
+                )
+                if pick is None:
+                    break
+            out.append((block_id, slot, pick[0], pick[4]))
+            taken.add(pick[0])
+            dc_load[pick[1]] += 1
+            rack_load[pick[1], pick[2]] += 1
+        return out
+
+    return choose_block
 
 
 def choose_targets(
@@ -372,8 +446,9 @@ def choose_targets(
     (``:166-188``) are applied as filters before selection.
 
     The topology candidate list is collected once (broadcast-sized
-    dimension) and shipped in the task closure; per-block greedy loops
-    run distributed via ``applyInPandas``.
+    dimension; the only job of the build) and shipped in the kernel's
+    closure; each block's current replicas are collected into one row
+    and the greedy runs per block over Arrow batches of whole blocks.
 
     ``exclude_nodes`` are dropped from the candidate pool (the
     reference's exclusion predicate P5, ``:162-165``); ``favored_nodes``
@@ -383,8 +458,6 @@ def choose_targets(
     slots fall back to the greedy least-loaded selection, exactly as
     the reference falls back to normal placement.
     """
-    excluded = set(exclude_nodes or [])
-    favored = [n for n in (favored_nodes or []) if n not in excluded]
     healthy = (
         datanodes.where(
             F.col("is_alive")
@@ -401,9 +474,6 @@ def choose_targets(
         .agg(F.max_by("storage_id", "remaining").alias("storage_id"),
              F.max("remaining").alias("remaining"))
     )
-    # (datanode_id, datacenter, rack, xceiver, storage_id, remaining),
-    # as plain tuples: the per-slot greedy scans this list, and tuple
-    # scans beat pandas filtering by ~100x at topology sizes.
     candidates = [
         (
             int(r.datanode_id),
@@ -413,84 +483,29 @@ def choose_targets(
             r.storage_id,
             int(r.remaining),
         )
-        for r in healthy.join(best_storage, "datanode_id")
-        .orderBy("datanode_id")
-        .collect()
-        if int(r.datanode_id) not in excluded
+        for r in healthy.join(best_storage, "datanode_id").collect()
     ]
-    by_id = {c[0]: c for c in candidates}
-    favored_cands = [by_id[n] for n in favored if n in by_id]
+    choose_block = _choose_kernel(candidates, exclude_nodes, favored_nodes)
 
-    existing = blocks.where(F.col("additional") > 0).join(
-        replicas.join(
-            F.broadcast(datanodes.select("datanode_id", "datacenter", "rack")),
-            "datanode_id",
-        ).select("block_id", "datanode_id", "datacenter", "rack"),
-        "block_id",
-        "left",
-    )
-
-    def choose_block(
-        block_id: int, additional: int, existing_rows: list[tuple]
-    ) -> list[tuple]:
-        # existing_rows: (datanode_id, datacenter, rack) of current
-        # replicas (possibly empty). Greedy per slot over the candidate
-        # tuple list: least-loaded DC -> least-loaded rack -> best node.
-        used_nodes = {r[0] for r in existing_rows if r[0] is not None}
-        dc_load: dict[str, int] = {}
-        rack_load: dict[tuple[str, str], int] = {}
-        for r in existing_rows:
-            if r[0] is None:
-                continue
-            dc_load[r[1]] = dc_load.get(r[1], 0) + 1
-            rack_load[(r[1], r[2])] = rack_load.get((r[1], r[2]), 0) + 1
-        pool = [c for c in candidates if c[0] not in used_nodes]
-        out = []
-        queue = [c for c in favored_cands if c[0] not in used_nodes]
-        for slot in range(additional):
-            if queue:
-                pick = queue.pop(0)
-                out.append((block_id, slot, pick[0], pick[4]))
-                dc_load[pick[1]] = dc_load.get(pick[1], 0) + 1
-                rack_load[(pick[1], pick[2])] = (
-                    rack_load.get((pick[1], pick[2]), 0) + 1
-                )
-                pool = [c for c in pool if c[0] != pick[0]]
-                continue
-            if not pool:
-                break
-            dcs = {c[1] for c in pool}
-            dc = min(dcs, key=lambda d: (dc_load.get(d, 0), d))
-            in_dc = [c for c in pool if c[1] == dc]
-            racks = {c[2] for c in in_dc}
-            rack = min(racks, key=lambda rk: (rack_load.get((dc, rk), 0), rk))
-            in_rack = [c for c in in_dc if c[2] == rack]
-            # W3 preference: most remaining, then fewest xceivers, then id
-            pick = min(in_rack, key=lambda c: (-c[5], c[3], c[0]))
-            out.append((block_id, slot, pick[0], pick[4]))
-            dc_load[dc] = dc_load.get(dc, 0) + 1
-            rack_load[(dc, rack)] = rack_load.get((dc, rack), 0) + 1
-            pool = [c for c in pool if c[0] != pick[0]]
-        return out
-
-    def choose_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        out: list[tuple] = []
-        per_block: dict[tuple[int, int], list[tuple]] = {}
-        for row in pdf[
-            ["block_id", "additional", "datanode_id", "datacenter", "rack"]
-        ].itertuples(index=False):
-            key = (int(row[0]), int(row[1]))
-            node = None if pd.isna(row[2]) else int(row[2])
-            per_block.setdefault(key, []).append((node, row[3], row[4]))
-        for (block_id, additional) in sorted(per_block):
-            out.extend(choose_block(block_id, additional, per_block[(block_id, additional)]))
-        return pd.DataFrame(
-            out, columns=["block_id", "slot", "datanode_id", "storage_id"]
+    existing = (
+        blocks.where(F.col("additional") > 0)
+        .join(
+            replicas.join(
+                F.broadcast(datanodes.select("datanode_id", "datacenter", "rack")),
+                "datanode_id",
+            ).select("block_id", "datanode_id", "datacenter", "rack"),
+            "block_id",
+            "left",
         )
-
-    bucketed = existing.withColumn(
-        "_bucket", F.pmod(F.col("block_id"), F.lit(DRAIN_BUCKETS))
+        .groupBy("block_id", "additional")
+        .agg(
+            # a block with no replica keeps an empty list
+            F.collect_list(
+                F.when(
+                    F.col("datanode_id").isNotNull(),
+                    F.struct("datanode_id", "datacenter", "rack"),
+                )
+            ).alias("rows")
+        )
     )
-    return bucketed.groupBy("_bucket").applyInPandas(
-        choose_bucket, schema=_CHOOSE_SCHEMA
-    )
+    return _per_block(existing, choose_block, _CHOOSE_SCHEMA)

@@ -41,6 +41,54 @@ DEFAULT_FIXTURE_DIR = os.path.join(
     "topology",
 )
 
+# The four tables' Arrow schemas: the generator writes them and
+# ``queries.load_fixture`` reads with them, so no read infers a schema.
+SCHEMAS: dict[str, pa.Schema] = {
+    "datanodes": pa.schema(
+        [
+            ("datanode_id", pa.int64()),
+            ("uuid", pa.string()),
+            ("ip", pa.string()),
+            ("hostname", pa.string()),
+            ("datacenter", pa.string()),
+            ("rack", pa.string()),
+            ("location", pa.string()),
+            ("ancestors", pa.list_(pa.string())),
+            ("is_alive", pa.bool_()),
+            ("is_decommissioned", pa.bool_()),
+            ("is_stale", pa.bool_()),
+            ("xceiver_count", pa.int32()),
+        ]
+    ),
+    "storages": pa.schema(
+        [
+            ("storage_id", pa.string()),
+            ("datanode_id", pa.int64()),
+            ("state", pa.string()),
+            ("type", pa.string()),
+            ("capacity", pa.int64()),
+            ("used", pa.int64()),
+            ("remaining", pa.int64()),
+        ]
+    ),
+    "replicas": pa.schema(
+        [
+            ("block_id", pa.int64()),
+            ("replica_idx", pa.int32()),
+            ("datanode_id", pa.int64()),
+            ("storage_id", pa.string()),
+        ]
+    ),
+    "placement_cases": pa.schema(
+        [
+            ("block_id", pa.int64()),
+            ("scenario", pa.string()),
+            ("required_replicas", pa.int32()),
+            ("expect_satisfied", pa.bool_()),
+        ]
+    ),
+}
+
 # scenario -> (replica layout builder, required_replicas, expect_satisfied)
 # layouts are expressed as (datacenter, rack_slot, node_slot) triples;
 # concrete healthy nodes are resolved deterministically per block.
@@ -80,25 +128,7 @@ def _datanodes() -> pa.Table:
                 "xceiver_count": int(rng.randint(0, 40)),
             }
         )
-    return pa.Table.from_pylist(
-        rows,
-        schema=pa.schema(
-            [
-                ("datanode_id", pa.int64()),
-                ("uuid", pa.string()),
-                ("ip", pa.string()),
-                ("hostname", pa.string()),
-                ("datacenter", pa.string()),
-                ("rack", pa.string()),
-                ("location", pa.string()),
-                ("ancestors", pa.list_(pa.string())),
-                ("is_alive", pa.bool_()),
-                ("is_decommissioned", pa.bool_()),
-                ("is_stale", pa.bool_()),
-                ("xceiver_count", pa.int32()),
-            ]
-        ),
-    )
+    return pa.Table.from_pylist(rows, schema=SCHEMAS["datanodes"])
 
 
 def _storages() -> pa.Table:
@@ -122,20 +152,7 @@ def _storages() -> pa.Table:
                     }
                 )
                 k += 1
-    return pa.Table.from_pylist(
-        rows,
-        schema=pa.schema(
-            [
-                ("storage_id", pa.string()),
-                ("datanode_id", pa.int64()),
-                ("state", pa.string()),
-                ("type", pa.string()),
-                ("capacity", pa.int64()),
-                ("used", pa.int64()),
-                ("remaining", pa.int64()),
-            ]
-        ),
-    )
+    return pa.Table.from_pylist(rows, schema=SCHEMAS["storages"])
 
 
 def _replicas_and_cases(n_blocks: int = 2000) -> tuple[pa.Table, pa.Table]:
@@ -239,28 +256,8 @@ def _replicas_and_cases(n_blocks: int = 2000) -> tuple[pa.Table, pa.Table]:
             }
         )
 
-    replicas = pa.Table.from_pylist(
-        rep_rows,
-        schema=pa.schema(
-            [
-                ("block_id", pa.int64()),
-                ("replica_idx", pa.int32()),
-                ("datanode_id", pa.int64()),
-                ("storage_id", pa.string()),
-            ]
-        ),
-    )
-    cases = pa.Table.from_pylist(
-        case_rows,
-        schema=pa.schema(
-            [
-                ("block_id", pa.int64()),
-                ("scenario", pa.string()),
-                ("required_replicas", pa.int32()),
-                ("expect_satisfied", pa.bool_()),
-            ]
-        ),
-    )
+    replicas = pa.Table.from_pylist(rep_rows, schema=SCHEMAS["replicas"])
+    cases = pa.Table.from_pylist(case_rows, schema=SCHEMAS["placement_cases"])
     return replicas, cases
 
 

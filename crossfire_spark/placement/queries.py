@@ -26,14 +26,19 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from crossfire_spark.placement.fixtures import DEFAULT_FIXTURE_DIR
+from crossfire_spark.placement.fixtures import DEFAULT_FIXTURE_DIR, SCHEMAS
 
 FIXTURE_DIR = os.environ.get("SPARK_GRAFT_FIXTURE_DIR", DEFAULT_FIXTURE_DIR)
 
 
 def load_fixture(spark: SparkSession, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(FIXTURE_DIR, f"{name}.parquet"))
+    """Read one topology table with its declared schema: no
+    schema-inference job at build time."""
+    return spark.read.schema(from_arrow_schema(SCHEMAS[name])).parquet(
+        os.path.join(FIXTURE_DIR, f"{name}.parquet")
+    )
 
 
 def q28(spark, sf_dir):
