@@ -579,7 +579,7 @@ def s08_sq8_index(spark, sf_dir):
     )
 
 
-ANN_INDEX_QUERIES = {
+QUERIES = {
     "d13_build_index": d13_build_index,
     "d13_incremental_dedup": d13_incremental_dedup,
     "s06_ivf_index": s06_ivf_index,
@@ -593,8 +593,10 @@ def _oracle() -> dict[str, str]:
     # s06 must equal s03 exactly — same centroids, probes, ranking —
     # so it shares s03's oracle verbatim; only the execution path
     # (persisted index tables vs recompute) differs.
-    from crossfire_spark.functions.similarity import SIMILARITY_ORACLE_SQL
-    from crossfire_spark.functions.text import TEXT_ORACLE_SQL
+    from crossfire_spark.functions.similarity import (
+        ORACLE_SQL as SIMILARITY_ORACLE_SQL,
+    )
+    from crossfire_spark.functions.text import ORACLE_SQL as TEXT_ORACLE_SQL
 
     return {
         # the build's cardinalities are pure SQL over the 90% corpus:
@@ -617,7 +619,7 @@ def _oracle() -> dict[str, str]:
     }
 
 
-ANN_INDEX_ORACLE_SQL = _oracle()
+ORACLE_SQL = _oracle()
 
 
 def build_ivf_pq_index(
@@ -726,16 +728,18 @@ def s21_ivf_pq_index(spark, sf_dir):
     )
 
 
-ANN_INDEX_QUERIES["s21_ivf_pq_index"] = s21_ivf_pq_index
+QUERIES["s21_ivf_pq_index"] = s21_ivf_pq_index
 
 
 def _s21_oracle() -> None:
-    from crossfire_spark.functions.similarity import SIMILARITY_ORACLE_SQL
+    from crossfire_spark.functions.similarity import (
+        ORACLE_SQL as SIMILARITY_ORACLE_SQL,
+    )
 
     # s21 must equal s20 exactly (same centroids, assignment rule,
     # codebooks, codes, ADC and ranking); only the execution path
     # (persisted snapshot tables vs recompute) differs.
-    ANN_INDEX_ORACLE_SQL["s21_ivf_pq_index"] = SIMILARITY_ORACLE_SQL[
+    ORACLE_SQL["s21_ivf_pq_index"] = SIMILARITY_ORACLE_SQL[
         "s20_ivf_pq_topk"
     ]
 

@@ -173,44 +173,6 @@ def d02_ngram_jaccard(spark, sf_dir):
     return exact_jaccard_pairs(d).orderBy("doc_a", "doc_b", "j")
 
 
-def _rotl64(col: F.Column, r: int) -> F.Column:
-    """JVM-expression rotl — the reference form the Arrow minhash
-    kernel is pinned bit-exact against (tests/test_dedup_scale.py)."""
-    r = r % 64
-    if r == 0:
-        return col
-    return F.shiftleft(col, r).bitwiseOR(F.shiftrightunsigned(col, 64 - r))
-
-
-def minhash_signatures_wide_jvm(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """All-JVM form of :func:`minhash_signatures_wide` (128 codegen'd
-    rotl/xor expressions + a k-column min aggregate). Kept as the
-    independent oracle the Arrow kernel is equality-pinned against —
-    and measured 4x slower at sf0.1, which is why it is no longer the
-    default."""
-    sh = _shingles(docs)
-    base = sh.select(
-        "doc_id",
-        F.xxhash64("shingle").alias("_h1"),
-        F.xxhash64("shingle", F.lit(1)).alias("_h2"),
-    )
-    gold = 0x9E3779B97F4A7C15
-    consts = [_i64((i * gold) & 0xFFFFFFFFFFFFFFFF) for i in range(k)]
-    hashed = base.select(
-        "doc_id",
-        *[
-            _rotl64(F.col("_h1"), 7 * i)
-            .bitwiseXOR(_rotl64(F.col("_h2"), i))
-            .bitwiseXOR(F.lit(consts[i]))
-            .alias(f"h{i}")
-            for i in range(k)
-        ],
-    )
-    return hashed.groupBy("doc_id").agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(k)]
-    )
-
-
 def minhash_signatures_wide(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     """One row per doc with k minhash columns ``m0..m{k-1}``.
 
@@ -277,16 +239,6 @@ def minhash_signatures_wide(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     sig = per_doc.select("doc_id", _mins("h1s", "h2s").alias("sig"))
     return sig.select(
         "doc_id", *[F.element_at("sig", i + 1).alias(f"m{i}") for i in range(k)]
-    )
-
-
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """(doc_id, seed, minhash) — narrow view of the wide signature."""
-    wide = minhash_signatures_wide(docs, k)
-    stacked = ", ".join(f"{i}, m{i}" for i in range(k))
-    return wide.select(
-        "doc_id",
-        F.expr(f"stack({k}, {stacked}) as (seed, minh)"),
     )
 
 
@@ -1716,7 +1668,7 @@ def _d10_sql() -> str:
         ORDER BY doc_id, n_chunks, n_kept, chars_total, chars_kept, kept_frac"""
 
 
-DEDUP_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "d10_chunk_dedup": _d10_sql(),
     "d01_dedup_bag": """
         WITH f AS (SELECT md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) fp, doc_id FROM documents)
@@ -1798,7 +1750,7 @@ DEDUP_ORACLE_SQL: dict[str, str] = {
         ORDER BY d.source, n_docs, n_kept, chars_total, chars_kept, kept_frac""",
 }
 
-DEDUP_QUERIES = {
+QUERIES = {
     "d01_dedup_bag": d01_dedup_bag,
     "d02_ngram_jaccard": d02_ngram_jaccard,
     "d03_minhash_lsh": d03_minhash_lsh,
@@ -1818,10 +1770,10 @@ DEDUP_QUERIES = {
     "d16_weighted_neardup": d16_weighted_neardup,
 }
 
-DEDUP_ORACLE_SQL["d17_hashed_decontam"] = DEDUP_ORACLE_SQL["d07_contamination"]
+ORACLE_SQL["d17_hashed_decontam"] = ORACLE_SQL["d07_contamination"]
 
-DEDUP_ORACLE_SQL["d19_dedup_keep_best"] = f"""
-        WITH cl AS (SELECT * FROM ({DEDUP_ORACLE_SQL["d06_dup_clusters"]})),
+ORACLE_SQL["d19_dedup_keep_best"] = f"""
+        WITH cl AS (SELECT * FROM ({ORACLE_SQL["d06_dup_clusters"]})),
         everydoc AS (SELECT d.doc_id, d.n_chars,
                             COALESCE(cl.cluster_id, d.doc_id) cluster_id
                      FROM documents d LEFT JOIN cl ON d.doc_id = cl.doc_id),
@@ -1834,7 +1786,7 @@ DEDUP_ORACLE_SQL["d19_dedup_keep_best"] = f"""
         FROM agg a JOIN ranked r ON a.cluster_id = r.cluster_id AND r.rn = 1
         ORDER BY a.cluster_id, keep_id, n_docs, chars_total"""
 
-DEDUP_ORACLE_SQL["d18_winnow_overlap"] = f"""
+ORACLE_SQL["d18_winnow_overlap"] = f"""
         WITH wds AS (SELECT doc_id, string_split(lower(text), ' ') w FROM documents),
         g AS (SELECT doc_id, i pos,
                      CAST(concat('0x', substr(md5(array_to_string(w[i:i+{WINNOW_K - 1}], ' ')), 1, 8)) AS BIGINT) h
@@ -1851,7 +1803,7 @@ DEDUP_ORACLE_SQL["d18_winnow_overlap"] = f"""
         GROUP BY 1, 2 HAVING COUNT(*) >= {WINNOW_MIN_SHARED}
         ORDER BY doc_a, doc_b, n_shared"""
 
-DEDUP_ORACLE_SQL["d20_dup_span_fraction"] = f"""
+ORACLE_SQL["d20_dup_span_fraction"] = f"""
         WITH wds AS (SELECT doc_id, string_split(lower(text), ' ') w FROM documents),
         base AS (SELECT doc_id, len(w) n_tokens, w FROM wds),
         g AS (SELECT doc_id, i pos,
@@ -1868,7 +1820,7 @@ DEDUP_ORACLE_SQL["d20_dup_span_fraction"] = f"""
         FROM base b LEFT JOIN cnt c USING (doc_id)
         ORDER BY doc_id, n_tokens, dup_tokens, dup_frac"""
 
-DEDUP_ORACLE_SQL["d15_sparse_cosine"] = f"""
+ORACLE_SQL["d15_sparse_cosine"] = f"""
         WITH docs AS (SELECT * FROM documents WHERE doc_id < 500),
         words AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) word
                        FROM docs),
@@ -1889,7 +1841,7 @@ DEDUP_ORACLE_SQL["d15_sparse_cosine"] = f"""
         WHERE sim >= {SPARSE_COSINE_THRESHOLD}
         ORDER BY doc_a, doc_b, sim"""
 
-DEDUP_ORACLE_SQL["d14_containment"] = f"""
+ORACLE_SQL["d14_containment"] = f"""
         WITH w AS (SELECT doc_id, string_split(lower(text), ' ') words FROM documents),
         shd AS (SELECT DISTINCT doc_id, array_to_string(words[i:i+2], ' ') s
                 FROM w, unnest(range(1, greatest(len(words) - 2, 1) + 1)) t(i)),
@@ -1902,7 +1854,7 @@ DEDUP_ORACLE_SQL["d14_containment"] = f"""
         WHERE it.i * 1.0 / ns.n >= {CONTAINMENT_THRESHOLD}
         ORDER BY it."inner", it."outer", containment"""
 
-DEDUP_ORACLE_SQL["d12_fuzzy_match"] = """
+ORACLE_SQL["d12_fuzzy_match"] = """
         WITH c AS (SELECT c_custkey, c_name, c_mktsegment,
                           substring(c_name, 1, greatest(length(c_name) - 2, 0)) pfx,
                           length(c_name) len
@@ -1977,7 +1929,7 @@ def d21_split_leakage(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d21_split_leakage"] = d21_split_leakage
+QUERIES["d21_split_leakage"] = d21_split_leakage
 
 
 def _split_leakage_oracle() -> str:
@@ -2019,7 +1971,7 @@ def _split_leakage_oracle() -> str:
         ORDER BY split_a, split_b, n_pairs, n_docs, max_sim"""
 
 
-DEDUP_ORACLE_SQL["d21_split_leakage"] = _split_leakage_oracle()
+ORACLE_SQL["d21_split_leakage"] = _split_leakage_oracle()
 
 
 def anchor_positives(docs: DataFrame) -> DataFrame:
@@ -2051,10 +2003,10 @@ def d22_anchor_positives(spark, sf_dir):
     return anchor_positives(docs).orderBy("cluster_id", "anchor", "positive")
 
 
-DEDUP_QUERIES["d22_anchor_positives"] = d22_anchor_positives
+QUERIES["d22_anchor_positives"] = d22_anchor_positives
 
-DEDUP_ORACLE_SQL["d22_anchor_positives"] = f"""
-        WITH cl AS (SELECT * FROM ({DEDUP_ORACLE_SQL["d06_dup_clusters"].replace("ORDER BY doc_id, cluster_id", "")})),
+ORACLE_SQL["d22_anchor_positives"] = f"""
+        WITH cl AS (SELECT * FROM ({ORACLE_SQL["d06_dup_clusters"].replace("ORDER BY doc_id, cluster_id", "")})),
         p AS (SELECT a.cluster_id, a.doc_id anchor, b.doc_id positive
               FROM cl a JOIN cl b ON a.cluster_id = b.cluster_id
               WHERE a.doc_id < b.doc_id)
@@ -2159,9 +2111,9 @@ def d23_longest_shared_span(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d23_longest_shared_span"] = d23_longest_shared_span
+QUERIES["d23_longest_shared_span"] = d23_longest_shared_span
 
-DEDUP_ORACLE_SQL["d23_longest_shared_span"] = f"""
+ORACLE_SQL["d23_longest_shared_span"] = f"""
         WITH t AS (SELECT doc_id, string_split(lower(text), ' ') w
                    FROM documents),
         g0 AS (SELECT doc_id, i pos,
@@ -2291,8 +2243,8 @@ def d24_bloom_decontam(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d24_bloom_decontam"] = d24_bloom_decontam
-DEDUP_ORACLE_SQL["d24_bloom_decontam"] = DEDUP_ORACLE_SQL["d07_contamination"]
+QUERIES["d24_bloom_decontam"] = d24_bloom_decontam
+ORACLE_SQL["d24_bloom_decontam"] = ORACLE_SQL["d07_contamination"]
 
 
 def dedup_recall_audit(
@@ -2359,7 +2311,7 @@ def d25_dedup_recall_audit(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d25_dedup_recall_audit"] = d25_dedup_recall_audit
+QUERIES["d25_dedup_recall_audit"] = d25_dedup_recall_audit
 
 
 def d27_simhash_recall_audit(spark, sf_dir):
@@ -2381,7 +2333,7 @@ def d27_simhash_recall_audit(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d27_simhash_recall_audit"] = d27_simhash_recall_audit
+QUERIES["d27_simhash_recall_audit"] = d27_simhash_recall_audit
 
 
 def d28_srp_recall_audit(spark, sf_dir):
@@ -2408,7 +2360,7 @@ def d28_srp_recall_audit(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d28_srp_recall_audit"] = d28_srp_recall_audit
+QUERIES["d28_srp_recall_audit"] = d28_srp_recall_audit
 
 
 LSH_PLAN_FLOOR = 0.2  # loosest similarity the planner's pair pass keeps
@@ -2487,7 +2439,7 @@ def d29_lsh_param_planner(spark, sf_dir):
     return lsh_param_planner(d).orderBy("bands", "rows_per_band")
 
 
-DEDUP_QUERIES["d29_lsh_param_planner"] = d29_lsh_param_planner
+QUERIES["d29_lsh_param_planner"] = d29_lsh_param_planner
 
 
 def _d29_oracle() -> str:
@@ -2531,7 +2483,7 @@ def _d29_oracle() -> str:
         SELECT * FROM t ORDER BY bands, rows_per_band"""
 
 
-DEDUP_ORACLE_SQL["d29_lsh_param_planner"] = _d29_oracle()
+ORACLE_SQL["d29_lsh_param_planner"] = _d29_oracle()
 
 
 # A doc is "gutted" when the plan removes a strict majority of its
@@ -2640,9 +2592,9 @@ def d30_span_removal_plan(spark, sf_dir):
     return span_removal_plan(d).orderBy("source")
 
 
-DEDUP_QUERIES["d30_span_removal_plan"] = d30_span_removal_plan
+QUERIES["d30_span_removal_plan"] = d30_span_removal_plan
 
-DEDUP_ORACLE_SQL["d30_span_removal_plan"] = f"""
+ORACLE_SQL["d30_span_removal_plan"] = f"""
         WITH wds AS (SELECT doc_id, source, string_split(lower(text), ' ') w
                      FROM documents),
         base AS (SELECT doc_id, source, len(w) n_tokens, w FROM wds),
@@ -2767,7 +2719,7 @@ def d31_shard_leakage_audit(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d31_shard_leakage_audit"] = d31_shard_leakage_audit
+QUERIES["d31_shard_leakage_audit"] = d31_shard_leakage_audit
 
 
 def _d31_oracle() -> str:
@@ -2806,7 +2758,7 @@ def _d31_oracle() -> str:
                  leak_share"""
 
 
-DEDUP_ORACLE_SQL["d31_shard_leakage_audit"] = _d31_oracle()
+ORACLE_SQL["d31_shard_leakage_audit"] = _d31_oracle()
 
 
 # ------------------------------------------- d32 template dedup
@@ -2857,9 +2809,9 @@ def d32_template_dedup(spark, sf_dir):
     )
 
 
-DEDUP_QUERIES["d32_template_dedup"] = d32_template_dedup
+QUERIES["d32_template_dedup"] = d32_template_dedup
 
-DEDUP_ORACLE_SQL["d32_template_dedup"] = """
+ORACLE_SQL["d32_template_dedup"] = """
         WITH t AS (
             SELECT doc_id, source,
                    md5(trim(regexp_replace(

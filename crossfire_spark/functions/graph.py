@@ -685,7 +685,7 @@ def _bipartite_oracle() -> str:
         ORDER BY ta, tb, both_users, cosine_aff, jaccard_aff"""
 
 
-GRAPH_QUERIES = {
+QUERIES = {
     "g01_pagerank": g01_pagerank,
     "g02_degree_stats": g02_degree_stats,
     "g03_triangle_count": g03_triangle_count,
@@ -695,7 +695,7 @@ GRAPH_QUERIES = {
     "g07_reachability": g07_reachability,
     "g08_bipartite_projection": g08_bipartite_projection,
 }
-GRAPH_ORACLE_SQL = {
+ORACLE_SQL = {
     "g01_pagerank": _pr_oracle(),
     "g02_degree_stats": _deg_oracle(),
     "g03_triangle_count": _tri_oracle(),
@@ -841,8 +841,8 @@ def _ppr_oracle() -> str:
         FROM r{PR_ITERS} ORDER BY node, rank"""
 
 
-GRAPH_QUERIES["g09_personalized_pagerank"] = g09_personalized_pagerank
-GRAPH_ORACLE_SQL["g09_personalized_pagerank"] = _ppr_oracle()
+QUERIES["g09_personalized_pagerank"] = g09_personalized_pagerank
+ORACLE_SQL["g09_personalized_pagerank"] = _ppr_oracle()
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -895,9 +895,9 @@ def g10_assortativity(spark, sf_dir):
     )
 
 
-GRAPH_QUERIES["g10_assortativity"] = g10_assortativity
+QUERIES["g10_assortativity"] = g10_assortativity
 
-GRAPH_ORACLE_SQL["g10_assortativity"] = """
+ORACLE_SQL["g10_assortativity"] = """
         WITH nmax AS (SELECT MAX(doc_id) + 1 m FROM documents),
         e0 AS (
             SELECT doc_id src, (doc_id * 7 + 1) % m dst FROM documents CROSS JOIN nmax
@@ -972,9 +972,9 @@ def g11_clustering_coefficient(spark, sf_dir):
     )
 
 
-GRAPH_QUERIES["g11_clustering_coefficient"] = g11_clustering_coefficient
+QUERIES["g11_clustering_coefficient"] = g11_clustering_coefficient
 
-GRAPH_ORACLE_SQL["g11_clustering_coefficient"] = """
+ORACLE_SQL["g11_clustering_coefficient"] = """
         WITH nmax AS (SELECT MAX(doc_id) + 1 m FROM documents),
         edges AS (
             SELECT doc_id src, (doc_id * 7 + 1) % m dst FROM documents CROSS JOIN nmax
@@ -1058,9 +1058,9 @@ def g12_harmonic_centrality(spark, sf_dir):
     )
 
 
-GRAPH_QUERIES["g12_harmonic_centrality"] = g12_harmonic_centrality
+QUERIES["g12_harmonic_centrality"] = g12_harmonic_centrality
 
-GRAPH_ORACLE_SQL["g12_harmonic_centrality"] = """
+ORACLE_SQL["g12_harmonic_centrality"] = """
         WITH nmax AS (SELECT MAX(doc_id) + 1 m FROM documents),
         edges AS (
             SELECT doc_id src, (doc_id * 7 + 1) % m dst FROM documents CROSS JOIN nmax
@@ -1129,9 +1129,9 @@ def g13_weighted_shortest_path(spark, sf_dir):
     return dist.orderBy("node", "dist")
 
 
-GRAPH_QUERIES["g13_weighted_shortest_path"] = g13_weighted_shortest_path
+QUERIES["g13_weighted_shortest_path"] = g13_weighted_shortest_path
 
-GRAPH_ORACLE_SQL["g13_weighted_shortest_path"] = f"""
+ORACLE_SQL["g13_weighted_shortest_path"] = f"""
         WITH RECURSIVE nmax AS (SELECT MAX(doc_id) + 1 m FROM documents),
         edges AS (
             SELECT doc_id src, (doc_id * 7 + 1) % m dst FROM documents CROSS JOIN nmax
@@ -1261,8 +1261,8 @@ def _modularity_oracle() -> str:
         ORDER BY community, n_nodes, intra_edges, deg_sum, q_contrib"""
 
 
-GRAPH_QUERIES["g14_modularity"] = g14_modularity
-GRAPH_ORACLE_SQL["g14_modularity"] = _modularity_oracle()
+QUERIES["g14_modularity"] = g14_modularity
+ORACLE_SQL["g14_modularity"] = _modularity_oracle()
 
 
 # --------------------------------------------- edge embeddedness
@@ -1341,9 +1341,9 @@ def g15_edge_embeddedness(spark, sf_dir):
     )
 
 
-GRAPH_QUERIES["g15_edge_embeddedness"] = g15_edge_embeddedness
+QUERIES["g15_edge_embeddedness"] = g15_edge_embeddedness
 
-GRAPH_ORACLE_SQL["g15_edge_embeddedness"] = """
+ORACLE_SQL["g15_edge_embeddedness"] = """
         WITH nmax AS (SELECT MAX(doc_id) + 1 m FROM documents),
         edges AS (
             SELECT doc_id src, (doc_id * 7 + 1) % m dst FROM documents CROSS JOIN nmax

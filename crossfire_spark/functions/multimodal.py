@@ -210,18 +210,6 @@ def resize_nearest(arr, width: int, height: int):
     return a[rows][:, cols]
 
 
-def _fake_features(content: bytes, dim: int = FEATURE_DIM) -> list[float]:
-    """Deterministic stand-in for a decoded-media feature vector:
-    byte-histogram moments. Replace with decode_image(...) output."""
-    if not content:
-        return [0.0] * dim
-    step = max(len(content) // dim, 1)
-    return [
-        float(sum(content[i : i + step]) % 997) / 997.0
-        for i in range(0, step * dim, step)
-    ][:dim]
-
-
 def synthesize_media(docs: DataFrame) -> DataFrame:
     """Deterministic fake media table derived from ``documents`` (the
     container ships no real blobs): content = utf-8 of the text,
@@ -781,7 +769,7 @@ def m08_audio_neardup(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES = {
+QUERIES = {
     "m01_media_features": m01_media_features,
     "m02_image_resize": m02_image_resize,
     "m03_frame_sample": m03_frame_sample,
@@ -798,7 +786,7 @@ MULTIMODAL_QUERIES = {
 # m03's frame fan-out is ceil(bytes/stride) rows summing back to the
 # byte count — the oracle checks the real Spark plumbing (binary
 # columns, Arrow batches, worker-side explode) against closed forms.
-MULTIMODAL_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "m02_image_resize": """
         SELECT doc_id media_id, CAST(224 AS INT) width, CAST(224 AS INT) height,
                CAST(octet_length(encode(text)) AS BIGINT) orig_bytes,
@@ -881,13 +869,13 @@ MULTIMODAL_ORACLE_SQL: dict[str, str] = {
         ORDER BY media_id, n_samples, sr, rms, peak, zc""",
 }
 
-MULTIMODAL_ORACLE_SQL["m07_image_neardup"] = f"""
+ORACLE_SQL["m07_image_neardup"] = f"""
         SELECT MIN(doc_id) cluster_rep, COUNT(*) n_members
         FROM documents
         GROUP BY doc_id % {DHASH_PATTERNS}
         ORDER BY cluster_rep, n_members"""
 
-MULTIMODAL_ORACLE_SQL["m08_audio_neardup"] = f"""
+ORACLE_SQL["m08_audio_neardup"] = f"""
         SELECT MIN(doc_id) cluster_rep, COUNT(*) n_members
         FROM documents
         GROUP BY doc_id % {AFP_PATTERNS}
@@ -972,9 +960,9 @@ def m09_audio_vad_trim(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES["m09_audio_vad_trim"] = m09_audio_vad_trim
+QUERIES["m09_audio_vad_trim"] = m09_audio_vad_trim
 
-MULTIMODAL_ORACLE_SQL["m09_audio_vad_trim"] = f"""
+ORACLE_SQL["m09_audio_vad_trim"] = f"""
         WITH d AS (SELECT doc_id, LEAST(n_chars, {AUDIO_MAX_SAMPLES}) n
                    FROM documents WHERE doc_id % 3 = 1),
         s AS (SELECT d.doc_id, d.n, t.i, t.i // {VAD_WINDOW} w,
@@ -1096,9 +1084,9 @@ def m10_image_patches(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES["m10_image_patches"] = m10_image_patches
+QUERIES["m10_image_patches"] = m10_image_patches
 
-MULTIMODAL_ORACLE_SQL["m10_image_patches"] = f"""
+ORACLE_SQL["m10_image_patches"] = f"""
         WITH g AS (SELECT doc_id, py.y py, px.x px, dy.y dy, dx.x dx
                    FROM documents,
                         UNNEST(range({PATCH_IMG_H // PATCH_H})) py(y),
@@ -1201,7 +1189,7 @@ def m11_goertzel_bands(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES["m11_goertzel_bands"] = m11_goertzel_bands
+QUERIES["m11_goertzel_bands"] = m11_goertzel_bands
 
 
 # ---------------------------------------------------- m12 pHash DCT
@@ -1285,9 +1273,9 @@ def m12_phash_dct(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES["m12_phash_dct"] = m12_phash_dct
+QUERIES["m12_phash_dct"] = m12_phash_dct
 
-MULTIMODAL_ORACLE_SQL["m12_phash_dct"] = f"""
+ORACLE_SQL["m12_phash_dct"] = f"""
         SELECT MIN(doc_id) cluster_rep, COUNT(*) n_members
         FROM documents
         GROUP BY doc_id % {DHASH_PATTERNS}
@@ -1370,9 +1358,9 @@ def m13_image_stats(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES["m13_image_stats"] = m13_image_stats
+QUERIES["m13_image_stats"] = m13_image_stats
 
-MULTIMODAL_ORACLE_SQL["m13_image_stats"] = f"""
+ORACLE_SQL["m13_image_stats"] = f"""
         SELECT MIN(doc_id) cluster_rep, COUNT(*) n_members
         FROM documents
         GROUP BY doc_id % {DHASH_PATTERNS}
@@ -1446,9 +1434,9 @@ def m14_audio_loudness(spark, sf_dir):
     )
 
 
-MULTIMODAL_QUERIES["m14_audio_loudness"] = m14_audio_loudness
+QUERIES["m14_audio_loudness"] = m14_audio_loudness
 
-MULTIMODAL_ORACLE_SQL["m14_audio_loudness"] = f"""
+ORACLE_SQL["m14_audio_loudness"] = f"""
         WITH d AS (SELECT doc_id, LEAST(n_chars, {AUDIO_MAX_SAMPLES}) n
                    FROM documents WHERE doc_id % 3 = 1),
         s AS (SELECT d.doc_id, t.i,

@@ -1415,7 +1415,7 @@ def _bm25_sql() -> str:
                GROUP BY tf.doc_id)"""
 
 
-SIMILARITY_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "s01_cosine_topk": f"""
         WITH q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id % {QUERY_STRIDE} = 0),
         s AS (SELECT qid, vec_id, ROUND(list_cosine_similarity(embedding::DOUBLE[], qe), 4) sim
@@ -1764,7 +1764,7 @@ def s19_hard_negatives(spark, sf_dir):
     )
 
 
-SIMILARITY_QUERIES = {
+QUERIES = {
     "s01_cosine_topk": s01_cosine_topk,
     "s02_lsh_topk": s02_lsh_topk,
     "s03_ivf_topk": s03_ivf_topk,
@@ -1785,7 +1785,7 @@ SIMILARITY_QUERIES = {
     "s19_hard_negatives": s19_hard_negatives,
 }
 
-SIMILARITY_ORACLE_SQL["s19_hard_negatives"] = f"""
+ORACLE_SQL["s19_hard_negatives"] = f"""
         WITH q AS (SELECT vec_id qid, embedding::DOUBLE[] qe FROM embeddings WHERE vec_id % {QUERY_STRIDE} = 0),
         s AS (SELECT qid, vec_id, ROUND(list_cosine_similarity(embedding::DOUBLE[], qe), 4) sim
               FROM embeddings, q WHERE vec_id != qid),
@@ -1956,7 +1956,7 @@ def _kmeans_oracle(n_iter: int = 3) -> str:
     )
 
 
-SIMILARITY_ORACLE_SQL["s04_ivf_kmeans"] = _kmeans_oracle()
+ORACLE_SQL["s04_ivf_kmeans"] = _kmeans_oracle()
 
 
 def _pq_oracle() -> str:
@@ -2016,11 +2016,11 @@ def _pq_oracle() -> str:
         ORDER BY qid, vec_id, sim"""
 
 
-SIMILARITY_ORACLE_SQL["s09_pq_topk"] = _pq_oracle()
+ORACLE_SQL["s09_pq_topk"] = _pq_oracle()
 
-SIMILARITY_ORACLE_SQL["s13_mmr_rerank"] = _mmr_oracle()
+ORACLE_SQL["s13_mmr_rerank"] = _mmr_oracle()
 
-SIMILARITY_ORACLE_SQL["s18_density_clusters"] = f"""
+ORACLE_SQL["s18_density_clusters"] = f"""
         WITH RECURSIVE p AS (
             SELECT a.vec_id va, b.vec_id vb
             FROM embeddings a, embeddings b
@@ -2051,7 +2051,7 @@ SIMILARITY_ORACLE_SQL["s18_density_clusters"] = f"""
         SELECT vec_id, cluster_id, 'border' FROM border
         ORDER BY vec_id, cluster_id, kind"""
 
-SIMILARITY_ORACLE_SQL["s15_knn_graph"] = f"""
+ORACLE_SQL["s15_knn_graph"] = f"""
         WITH s AS (SELECT a.vec_id, b.vec_id nbr_id,
                           ROUND(list_cosine_similarity(a.embedding::DOUBLE[],
                                                        b.embedding::DOUBLE[]), 4) sim
@@ -2064,7 +2064,7 @@ SIMILARITY_ORACLE_SQL["s15_knn_graph"] = f"""
         SELECT vec_id, nbr_id, sim FROM r WHERE rn <= {KNN_K}
         ORDER BY vec_id, nbr_id, sim"""
 
-SIMILARITY_ORACLE_SQL["s14_rp_reduce"] = f"""
+ORACLE_SQL["s14_rp_reduce"] = f"""
         WITH dims AS (SELECT unnest(range(0, 64)) d),
         rs AS (SELECT unnest(range(0, {RP_DIMS})) r),
         signs AS (SELECT d, r,
@@ -2080,7 +2080,7 @@ SIMILARITY_ORACLE_SQL["s14_rp_reduce"] = f"""
         GROUP BY vec_id, r
         ORDER BY vec_id, dim, proj"""
 
-SIMILARITY_ORACLE_SQL["s05_hybrid_rrf"] = f"""
+ORACLE_SQL["s05_hybrid_rrf"] = f"""
         WITH {_bm25_sql()},
         br0 AS (SELECT doc_id, ROW_NUMBER() OVER (ORDER BY s DESC, doc_id) r_sparse
                 FROM sc),
@@ -2254,8 +2254,8 @@ def _ivf_pq_oracle(
         ORDER BY qid, vec_id, sim"""
 
 
-SIMILARITY_QUERIES["s20_ivf_pq_topk"] = s20_ivf_pq_topk
-SIMILARITY_ORACLE_SQL["s20_ivf_pq_topk"] = _ivf_pq_oracle()
+QUERIES["s20_ivf_pq_topk"] = s20_ivf_pq_topk
+ORACLE_SQL["s20_ivf_pq_topk"] = _ivf_pq_oracle()
 
 
 def _residual_col(vec: str, cent: str) -> F.Column:
@@ -2448,8 +2448,8 @@ def _ivf_pq_residual_oracle() -> str:
         ORDER BY qid, vec_id, sim"""
 
 
-SIMILARITY_QUERIES["s22_ivf_pq_residual"] = s22_ivf_pq_residual
-SIMILARITY_ORACLE_SQL["s22_ivf_pq_residual"] = _ivf_pq_residual_oracle()
+QUERIES["s22_ivf_pq_residual"] = s22_ivf_pq_residual
+ORACLE_SQL["s22_ivf_pq_residual"] = _ivf_pq_residual_oracle()
 
 
 MRL_DIMS = (16, 32, 64)
@@ -2581,8 +2581,8 @@ def _s23_oracle() -> str:
         FROM t ORDER BY dims, n_queries, n_hits, recall"""
 
 
-SIMILARITY_QUERIES["s23_matryoshka_eval"] = s23_matryoshka_eval
-SIMILARITY_ORACLE_SQL["s23_matryoshka_eval"] = _s23_oracle()
+QUERIES["s23_matryoshka_eval"] = s23_matryoshka_eval
+ORACLE_SQL["s23_matryoshka_eval"] = _s23_oracle()
 
 
 SWEEP_THRESHOLDS = (0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
@@ -2691,8 +2691,8 @@ def _d26_oracle() -> str:
         ORDER BY threshold, n_pairs, n_touched, touched_frac"""
 
 
-SIMILARITY_QUERIES["d26_threshold_sweep"] = d26_threshold_sweep
-SIMILARITY_ORACLE_SQL["d26_threshold_sweep"] = _d26_oracle()
+QUERIES["d26_threshold_sweep"] = d26_threshold_sweep
+ORACLE_SQL["d26_threshold_sweep"] = _d26_oracle()
 
 
 # ------------------------------------------ IVF probe-recall curve
@@ -2876,8 +2876,8 @@ def _s24_oracle() -> str:
         FROM t ORDER BY n_probes, n_queries, n_hits, recall"""
 
 
-SIMILARITY_QUERIES["s24_probe_recall_curve"] = s24_probe_recall_curve
-SIMILARITY_ORACLE_SQL["s24_probe_recall_curve"] = _s24_oracle()
+QUERIES["s24_probe_recall_curve"] = s24_probe_recall_curve
+ORACLE_SQL["s24_probe_recall_curve"] = _s24_oracle()
 
 
 # ---------------------------------------------- s25 PQ distortion
@@ -2994,8 +2994,8 @@ def _s25_oracle() -> str:
         ORDER BY s, n_vecs, sq_nanos, mse"""
 
 
-SIMILARITY_QUERIES["s25_pq_distortion"] = s25_pq_distortion
-SIMILARITY_ORACLE_SQL["s25_pq_distortion"] = _s25_oracle()
+QUERIES["s25_pq_distortion"] = s25_pq_distortion
+ORACLE_SQL["s25_pq_distortion"] = _s25_oracle()
 
 
 # --------------------------------------------- cluster-quality audit
@@ -3078,7 +3078,7 @@ def s26_silhouette(spark, sf_dir):
     )
 
 
-SIMILARITY_QUERIES["s26_silhouette"] = s26_silhouette
+QUERIES["s26_silhouette"] = s26_silhouette
 
 
 def _s26_oracle(n_iter: int = 3) -> str:
@@ -3117,7 +3117,7 @@ def _s26_oracle(n_iter: int = 3) -> str:
         ORDER BY cid, n_vecs, mean_a, mean_b, silhouette"""
 
 
-SIMILARITY_ORACLE_SQL["s26_silhouette"] = _s26_oracle()
+ORACLE_SQL["s26_silhouette"] = _s26_oracle()
 
 
 # ------------------------------------------- s27 similarity histogram
@@ -3175,9 +3175,9 @@ def s27_sim_histogram(spark, sf_dir):
     return sim_histogram(em, _query_set(em)).orderBy("bin", "lo", "n_pairs")
 
 
-SIMILARITY_QUERIES["s27_sim_histogram"] = s27_sim_histogram
+QUERIES["s27_sim_histogram"] = s27_sim_histogram
 
-SIMILARITY_ORACLE_SQL["s27_sim_histogram"] = f"""
+ORACLE_SQL["s27_sim_histogram"] = f"""
         WITH q AS (SELECT vec_id qid, embedding::DOUBLE[] qe
                    FROM embeddings WHERE vec_id % {QUERY_STRIDE} = 0),
         s AS (SELECT ROUND(list_cosine_similarity(embedding::DOUBLE[], qe), 4) sim
@@ -3240,9 +3240,9 @@ def s28_ivf_pq_adaptive(spark, sf_dir):
     )
 
 
-SIMILARITY_QUERIES["s28_ivf_pq_adaptive"] = s28_ivf_pq_adaptive
+QUERIES["s28_ivf_pq_adaptive"] = s28_ivf_pq_adaptive
 
-SIMILARITY_ORACLE_SQL["s28_ivf_pq_adaptive"] = _ivf_pq_oracle(
+ORACLE_SQL["s28_ivf_pq_adaptive"] = _ivf_pq_oracle(
     nlist_sql="(SELECT n FROM nl)",
     nprobe_sql="(SELECT p FROM np)",
     extra_cte=(

@@ -967,7 +967,7 @@ def _markers_sql(markers: tuple[str, ...]) -> str:
 
 _STOP_SQL = _markers_sql(_EN_STOPWORDS)
 
-TEXT_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "t01_langid": f"""
         SELECT doc_id,
                {_markers_sql(LANG_MARKERS['en'])} s_en,
@@ -1681,7 +1681,7 @@ def t29_source_divergence(spark, sf_dir):
     )
 
 
-TEXT_QUERIES = {
+QUERIES = {
     "t01_langid": t01_langid,
     "t02_quality": t02_quality,
     "t03_tokens": t03_tokens,
@@ -1716,7 +1716,7 @@ TEXT_QUERIES = {
 # positions differ across engines (0- vs 1-based) but only ORDER
 # within a doc matters: ownership ties break on (doc_id, position)
 # and both indexings are monotone in the same split order
-TEXT_ORACLE_SQL["t27_zipf_fit"] = f"""
+ORACLE_SQL["t27_zipf_fit"] = f"""
         WITH toks AS (SELECT unnest(string_split(lower(text), ' ')) w FROM documents),
         c AS (SELECT w, COUNT(*) c FROM toks GROUP BY w ORDER BY c DESC, w LIMIT {ZIPF_CAP}),
         r AS (SELECT ln(c * 1.0) lc,
@@ -1728,7 +1728,7 @@ TEXT_ORACLE_SQL["t27_zipf_fit"] = f"""
                ROUND(ROUND(regr_r2(lc, lr), 6) + 1e-9, 4) r2
         FROM r ORDER BY n_terms, slope, intercept, r2"""
 
-TEXT_ORACLE_SQL["t28_readability"] = """
+ORACLE_SQL["t28_readability"] = """
         WITH m AS (
             SELECT doc_id,
                    len(string_split(text, ' ')) n_words,
@@ -1745,7 +1745,7 @@ TEXT_ORACLE_SQL["t28_readability"] = """
                     ELSE 'difficult' END band
         FROM f ORDER BY doc_id, n_words, n_sents, n_syll, flesch, band"""
 
-TEXT_ORACLE_SQL["t29_source_divergence"] = """
+ORACLE_SQL["t29_source_divergence"] = """
         WITH toks AS (SELECT source, unnest(string_split(lower(text), ' ')) w
                       FROM documents),
         counts AS (SELECT source, w, COUNT(*) c FROM toks GROUP BY 1, 2),
@@ -1766,7 +1766,7 @@ TEXT_ORACLE_SQL["t29_source_divergence"] = """
         GROUP BY 1, 2
         ORDER BY src_a, src_b, kl_ab, kl_ba, jsd"""
 
-TEXT_ORACLE_SQL["t26_sentence_dedup"] = """
+ORACLE_SQL["t26_sentence_dedup"] = """
         WITH e0 AS (SELECT doc_id, string_split(text, '. ') ss
                     FROM documents),
         e AS (SELECT doc_id, i, trim(ss[i]) s
@@ -1786,7 +1786,7 @@ TEXT_ORACLE_SQL["t26_sentence_dedup"] = """
 
 # the oracle groups by the gram STRING (DuckDB has no xxhash64); the
 # engine's 8-byte hash changes the shuffle payload, not the grouping
-TEXT_ORACLE_SQL["t24_ngram_novelty"] = f"""
+ORACLE_SQL["t24_ngram_novelty"] = f"""
         WITH w AS (SELECT doc_id, string_split(lower(text), ' ') words FROM documents),
         g AS (SELECT DISTINCT doc_id,
                      array_to_string(words[i:i+{NOVELTY_N - 1}], ' ') gram
@@ -1800,7 +1800,7 @@ TEXT_ORACLE_SQL["t24_ngram_novelty"] = f"""
         GROUP BY g.doc_id
         ORDER BY doc_id, n_grams, n_novel, novelty_frac"""
 
-TEXT_ORACLE_SQL["t23_dsir_weights"] = f"""
+ORACLE_SQL["t23_dsir_weights"] = f"""
         WITH toks AS (SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) w
                       FROM documents),
         raw AS (SELECT w, COUNT(*) c_r FROM toks GROUP BY w),
@@ -1820,7 +1820,7 @@ TEXT_ORACLE_SQL["t23_dsir_weights"] = f"""
         GROUP BY doc_id
         ORDER BY doc_id, n_tokens, dsir, selected"""
 
-TEXT_ORACLE_SQL["v05_gopher_rules"] = f"""
+ORACLE_SQL["v05_gopher_rules"] = f"""
     WITH w AS (SELECT doc_id, text, string_split(lower(text), ' ') words FROM documents),
     f AS (SELECT doc_id, len(words) n_words,
             ROUND(ROUND((length(text) - (len(words) - 1)) * 1.0 / len(words), 6) + 1e-9, 2) mean_wlen,
@@ -1834,7 +1834,7 @@ TEXT_ORACLE_SQL["v05_gopher_rules"] = f"""
             AND stop_hits >= {GOPHER_MIN_STOPS}) passes
     FROM f ORDER BY doc_id, n_words, mean_wlen, alpha_frac, stop_hits, passes"""
 
-TEXT_ORACLE_SQL["t22_boilerplate"] = f"""
+ORACLE_SQL["t22_boilerplate"] = f"""
     WITH w AS (SELECT doc_id, source, string_split(lower(text), ' ') words FROM documents),
     g AS (SELECT DISTINCT doc_id, source, array_to_string(words[i:i+{BP_NGRAM - 1}], ' ') gram
           FROM w, unnest(range(1, greatest(len(words) - {BP_NGRAM - 1}, 1) + 1)) t(i)),
@@ -1849,7 +1849,7 @@ TEXT_ORACLE_SQL["t22_boilerplate"] = f"""
     FROM base b LEFT JOIN hits h ON b.doc_id = h.doc_id
     ORDER BY b.doc_id, source, n_grams, n_bp, bp_frac"""
 
-TEXT_ORACLE_SQL["t20_pii_spans"] = f"""
+ORACLE_SQL["t20_pii_spans"] = f"""
         WITH m AS (
             SELECT doc_id, 'email' kind, regexp_extract_all(text, '{PII_EMAIL_RE}') l FROM documents
             UNION ALL
@@ -1860,7 +1860,7 @@ TEXT_ORACLE_SQL["t20_pii_spans"] = f"""
         FROM m, unnest(range(1, len(l) + 1)) t(i)
         ORDER BY doc_id, kind, idx, entity"""
 
-TEXT_ORACLE_SQL["t19_token_stats"] = """
+ORACLE_SQL["t19_token_stats"] = """
         WITH toks AS (SELECT source, lang, len(string_split(text, ' ')) n_tok
                       FROM documents)
         SELECT source, lang, COUNT(*) n_docs,
@@ -1873,7 +1873,7 @@ TEXT_ORACLE_SQL["t19_token_stats"] = """
         ORDER BY source, lang, n_docs, tok_total, tok_mean,
                  tok_p50, tok_p90, tok_p99"""
 
-TEXT_ORACLE_SQL["t18_corpus_build"] = f"""
+ORACLE_SQL["t18_corpus_build"] = f"""
         WITH f AS (SELECT doc_id, text,
                length(text) n_chars,
                len(string_split(lower(text), ' ')) n_words,
@@ -1900,7 +1900,7 @@ TEXT_ORACLE_SQL["t18_corpus_build"] = f"""
         FROM lab GROUP BY split
         ORDER BY split, n_docs, n_tokens, n_chars"""
 
-TEXT_ORACLE_SQL["t17_tfidf_keywords"] = f"""
+ORACLE_SQL["t17_tfidf_keywords"] = f"""
         WITH words AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) word
                        FROM documents),
         tf AS (SELECT doc_id, word, COUNT(*) tf FROM words GROUP BY doc_id, word),
@@ -1918,7 +1918,7 @@ TEXT_ORACLE_SQL["t17_tfidf_keywords"] = f"""
         FROM ranked WHERE rk <= {TFIDF_TOPK}
         ORDER BY doc_id, rk, word, score"""
 
-TEXT_ORACLE_SQL["t15_split_assign"] = f"""
+ORACLE_SQL["t15_split_assign"] = f"""
         WITH f AS (SELECT doc_id,
                 md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) fp
             FROM documents),
@@ -1954,12 +1954,12 @@ CDC_CHUNKS_SQL_CTE = f"""
                           md5(string_agg(c, '' ORDER BY p)) fp
                    FROM cid GROUP BY doc_id, chunk_id)"""
 
-TEXT_ORACLE_SQL["t12_cdc_chunks"] = f"""
+ORACLE_SQL["t12_cdc_chunks"] = f"""
         WITH {CDC_CHUNKS_SQL_CTE}
         SELECT doc_id, chunk_id, n_chars, fp FROM chunks
         ORDER BY doc_id, chunk_id, n_chars, fp"""
 
-TEXT_ORACLE_SQL["t14_bigram_lm"] = """
+ORACLE_SQL["t14_bigram_lm"] = """
         WITH t AS (SELECT doc_id, string_split(lower(text), ' ') w FROM documents),
         inst AS (SELECT doc_id,
                         unnest(list_transform(range(1, len(w)),
@@ -1983,7 +1983,7 @@ _U16_SQL = (
     " + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1))"
 )
 
-TEXT_ORACLE_SQL["t13_mixture_sample"] = f"""
+ORACLE_SQL["t13_mixture_sample"] = f"""
         WITH counts AS (SELECT source, COUNT(*) c FROM documents GROUP BY source),
         wts AS (SELECT source, c,
                        1 + (CAST(regexp_extract(source, '([0-9]+)', 1) AS INT) % {MIX_MOD}) w
@@ -2000,7 +2000,7 @@ TEXT_ORACLE_SQL["t13_mixture_sample"] = f"""
         FROM rates r LEFT JOIN sampled s ON r.source = s.source
         ORDER BY r.source, n_docs, target_w, rate, n_kept"""
 
-TEXT_ORACLE_SQL["t21_stratified_sample"] = f"""
+ORACLE_SQL["t21_stratified_sample"] = f"""
         WITH keyed AS (
             SELECT source, doc_id,
                    CAST(concat('0x', substr(md5(concat('t21', '#', doc_id)), 1, 8)) AS BIGINT) skey
@@ -2011,7 +2011,7 @@ TEXT_ORACLE_SQL["t21_stratified_sample"] = f"""
         SELECT source, doc_id, rank FROM ranked WHERE rank <= {STRATIFIED_K}
         ORDER BY source, doc_id, rank"""
 
-TEXT_ORACLE_SQL["t25_heavy_hitters"] = f"""
+ORACLE_SQL["t25_heavy_hitters"] = f"""
         SELECT * FROM (
             SELECT w, COUNT(*) c
             FROM (SELECT unnest(string_split(lower(text), ' ')) w FROM documents)
@@ -2077,7 +2077,7 @@ def t30_epoch_schedule(spark, sf_dir):
     return epoch_schedule(d).orderBy("doc_id", "quality", "n_epochs", "epoch")
 
 
-TEXT_QUERIES["t30_epoch_schedule"] = t30_epoch_schedule
+QUERIES["t30_epoch_schedule"] = t30_epoch_schedule
 
 
 def _epoch_schedule_oracle() -> str:
@@ -2102,7 +2102,7 @@ def _epoch_schedule_oracle() -> str:
         ORDER BY doc_id, quality, n_epochs, epoch"""
 
 
-TEXT_ORACLE_SQL["t30_epoch_schedule"] = _epoch_schedule_oracle()
+ORACLE_SQL["t30_epoch_schedule"] = _epoch_schedule_oracle()
 
 
 T31_RANK_PARTS = 16  # range partitions backing t31's distributed ntile
@@ -2201,9 +2201,9 @@ def t31_ccnet_bucket(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t31_ccnet_bucket"] = t31_ccnet_bucket
+QUERIES["t31_ccnet_bucket"] = t31_ccnet_bucket
 
-TEXT_ORACLE_SQL["t31_ccnet_bucket"] = """
+ORACLE_SQL["t31_ccnet_bucket"] = """
         WITH w AS (SELECT doc_id, lang,
                           unnest(string_split(lower(text), ' ')) word
                    FROM documents),
@@ -2279,9 +2279,9 @@ def t32_packing_efficiency(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t32_packing_efficiency"] = t32_packing_efficiency
+QUERIES["t32_packing_efficiency"] = t32_packing_efficiency
 
-TEXT_ORACLE_SQL["t32_packing_efficiency"] = f"""
+ORACLE_SQL["t32_packing_efficiency"] = f"""
         WITH toks AS (SELECT source, doc_id,
                 len(string_split(text, ' ')) n_tok FROM documents),
         packed AS (SELECT source, n_tok,
@@ -2355,9 +2355,9 @@ def t33_tokenizer_fertility(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t33_tokenizer_fertility"] = t33_tokenizer_fertility
+QUERIES["t33_tokenizer_fertility"] = t33_tokenizer_fertility
 
-TEXT_ORACLE_SQL["t33_tokenizer_fertility"] = """
+ORACLE_SQL["t33_tokenizer_fertility"] = """
         WITH p AS (SELECT lang,
                           length(text) n_chars,
                           len(string_split(text, ' ')) n_words,
@@ -2440,9 +2440,9 @@ def t34_token_budget_mix(spark, sf_dir):
     return token_budget_mix(d).orderBy("source")
 
 
-TEXT_QUERIES["t34_token_budget_mix"] = t34_token_budget_mix
+QUERIES["t34_token_budget_mix"] = t34_token_budget_mix
 
-TEXT_ORACLE_SQL["t34_token_budget_mix"] = f"""
+ORACLE_SQL["t34_token_budget_mix"] = f"""
         WITH per AS (SELECT source, COUNT(*) n_docs,
                             SUM(len(string_split(text, ' '))) tokens
                      FROM documents GROUP BY source),
@@ -2570,10 +2570,10 @@ def t35_shard_manifest(spark, sf_dir):
     return shard_manifest(d).orderBy("shard")
 
 
-TEXT_QUERIES["t35_shard_manifest"] = t35_shard_manifest
+QUERIES["t35_shard_manifest"] = t35_shard_manifest
 
 _SHARD_H = f"md5(CONCAT('{SHARD_SEED}', CAST(doc_id AS VARCHAR)))"
-TEXT_ORACLE_SQL["t35_shard_manifest"] = f"""
+ORACLE_SQL["t35_shard_manifest"] = f"""
         WITH b AS (SELECT doc_id, len(string_split(text, ' ')) tokens,
                           {_SHARD_H} h
                    FROM documents),
@@ -2690,7 +2690,7 @@ def t36_compression_quality(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t36_compression_quality"] = t36_compression_quality
+QUERIES["t36_compression_quality"] = t36_compression_quality
 
 
 # ------------------------------------------- vocabulary coverage curve
@@ -2768,9 +2768,9 @@ def t37_vocab_coverage(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t37_vocab_coverage"] = t37_vocab_coverage
+QUERIES["t37_vocab_coverage"] = t37_vocab_coverage
 
-TEXT_ORACLE_SQL["t37_vocab_coverage"] = f"""
+ORACLE_SQL["t37_vocab_coverage"] = f"""
         WITH counts AS (
             SELECT w, COUNT(*) c
             FROM (SELECT unnest(string_split(lower(text), ' ')) w
@@ -2936,9 +2936,9 @@ def t38_stupid_backoff(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t38_stupid_backoff"] = t38_stupid_backoff
+QUERIES["t38_stupid_backoff"] = t38_stupid_backoff
 
-TEXT_ORACLE_SQL["t38_stupid_backoff"] = """
+ORACLE_SQL["t38_stupid_backoff"] = """
         WITH t AS (SELECT doc_id, string_split(lower(text), ' ') w FROM documents),
         tr AS (SELECT doc_id, w FROM t WHERE doc_id % 2 = 0),
         tri3 AS (SELECT tg.u u, tg.v v, tg.w3 w3
@@ -3069,7 +3069,7 @@ def t39_langid_confusion(spark, sf_dir):
     )
 
 
-TEXT_QUERIES["t39_langid_confusion"] = t39_langid_confusion
+QUERIES["t39_langid_confusion"] = t39_langid_confusion
 
 
 def _t39_oracle() -> str:
@@ -3100,4 +3100,4 @@ def _t39_oracle() -> str:
                  recall_share, precision_share"""
 
 
-TEXT_ORACLE_SQL["t39_langid_confusion"] = _t39_oracle()
+ORACLE_SQL["t39_langid_confusion"] = _t39_oracle()

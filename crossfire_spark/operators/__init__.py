@@ -1,3 +1,1 @@
 """Relational operator surface (SURVEY §2.12) as DataFrame builders."""
-
-from crossfire_spark.operators.relational import RELATIONAL_QUERIES  # noqa: F401

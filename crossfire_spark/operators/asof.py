@@ -265,7 +265,7 @@ def a04_asof_interpolate(spark, sf_dir):
     ).orderBy("event_id", "user_id", "interp_value")
 
 
-ASOF_ORACLE_SQL = {
+ORACLE_SQL = {
     "a03_asof_nearest": """
         WITH c AS (SELECT user_id, ts, MAX(value) AS "value" FROM events
                    WHERE event_type = 'click' GROUP BY user_id, ts),
@@ -321,7 +321,7 @@ ASOF_ORACLE_SQL = {
         FROM b JOIN f USING (event_id)
         ORDER BY event_id, user_id, interp_value""",
 }
-ASOF_QUERIES = {
+QUERIES = {
     "a01_asof_join": a01_asof_join,
     "a02_asof_forward": a02_asof_forward,
     "a03_asof_nearest": a03_asof_nearest,
@@ -370,7 +370,7 @@ def a05_asof_tolerance(spark, sf_dir):
     ).orderBy("event_id", "user_id", "prev_ts", "prev_value")
 
 
-ASOF_ORACLE_SQL["a05_asof_tolerance"] = f"""
+ORACLE_SQL["a05_asof_tolerance"] = f"""
         WITH c AS (SELECT user_id, ts, MAX(value) AS "value" FROM events
                    WHERE event_type = 'click' GROUP BY user_id, ts),
         b AS (SELECT e.event_id, e.user_id, e.ts, p.ts prev_ts, p.value prev_value
@@ -386,4 +386,4 @@ ASOF_ORACLE_SQL["a05_asof_tolerance"] = f"""
         FROM b
         ORDER BY event_id, user_id, prev_ts, prev_value"""
 
-ASOF_QUERIES["a05_asof_tolerance"] = a05_asof_tolerance
+QUERIES["a05_asof_tolerance"] = a05_asof_tolerance

@@ -192,7 +192,7 @@ def h03_matview_rollup(spark, sf_dir):
     )
 
 
-EXTENDED_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "h04_gap_fill": """
         WITH hourly AS (SELECT event_type, DATE_TRUNC('hour', ts) h,
                                COUNT(*) c, ROUND(SUM(value),2) s
@@ -1567,7 +1567,7 @@ def v12_fd_audit(spark, sf_dir):
     return out.orderBy("fd", "n_keys", "n_viol", "viol_rate", "max_deps")
 
 
-EXTENDED_QUERIES = {
+QUERIES = {
     "j01_json_extract": j01_json_extract,
     "h01_time_rollup": h01_time_rollup,
     "h02_ohlc": h02_ohlc,
@@ -1609,7 +1609,7 @@ _EWMA_LAGS_SQL = ", ".join(
     f"lag(value, {k}) OVER w l{k}" for k in range(1, 8)
 )
 
-EXTENDED_ORACLE_SQL["h10_ewma_smooth"] = f"""
+ORACLE_SQL["h10_ewma_smooth"] = f"""
         WITH l AS (
             SELECT event_id, user_id, value, {_EWMA_LAGS_SQL}
             FROM events
@@ -1619,7 +1619,7 @@ EXTENDED_ORACLE_SQL["h10_ewma_smooth"] = f"""
                      + 1e-12, 4) ewma
         FROM l ORDER BY event_id, user_id, value, ewma"""
 
-EXTENDED_ORACLE_SQL["v10_skew_report"] = "\nUNION ALL\n".join(
+ORACLE_SQL["v10_skew_report"] = "\nUNION ALL\n".join(
     f"""
         SELECT '{label}' keyed,
                CAST(SUM(c) AS BIGINT) n_rows,
@@ -1635,7 +1635,7 @@ EXTENDED_ORACLE_SQL["v10_skew_report"] = "\nUNION ALL\n".join(
         ORDER BY keyed, n_rows, n_keys, max_c, p99_c, avg_c,
                  skew_ratio, top_share"""
 
-EXTENDED_ORACLE_SQL["h11_seasonality"] = """
+ORACLE_SQL["h11_seasonality"] = """
         WITH b AS (
             SELECT event_type, CAST(EXTRACT(hour FROM ts) AS INT) hod,
                    COUNT(*) c,
@@ -1646,7 +1646,7 @@ EXTENDED_ORACLE_SQL["h11_seasonality"] = """
                      + 1e-12, 4) hr_share
         FROM b ORDER BY event_type, hod, c, avg_v, hr_share"""
 
-EXTENDED_ORACLE_SQL["v11_benford_report"] = """
+ORACLE_SQL["v11_benford_report"] = """
         WITH b AS (
             SELECT CAST(regexp_extract(CAST(l_extendedprice AS VARCHAR), '[1-9]', 0) AS INT) digit,
                    COUNT(*) c
@@ -1658,7 +1658,7 @@ EXTENDED_ORACLE_SQL["v11_benford_report"] = """
                      + 1e-12, 4) dev
         FROM b ORDER BY digit, c, obs_freq, exp_freq, dev"""
 
-EXTENDED_ORACLE_SQL["h13_retention_cohorts"] = """
+ORACLE_SQL["h13_retention_cohorts"] = """
         WITH fw AS (SELECT user_id, date_trunc('week', MIN(ts)) cw
                     FROM events GROUP BY user_id),
         act AS (SELECT DISTINCT user_id, date_trunc('week', ts) w
@@ -1674,7 +1674,7 @@ EXTENDED_ORACLE_SQL["h13_retention_cohorts"] = """
         FROM offs JOIN s0 ON offs.cw = s0.cw
         ORDER BY cohort_week, week_offset, n_active, retention"""
 
-EXTENDED_ORACLE_SQL["v12_fd_audit"] = "\nUNION ALL\n".join(
+ORACLE_SQL["v12_fd_audit"] = "\nUNION ALL\n".join(
     f"""
         SELECT '{label}' fd,
                COUNT(*) n_keys,
@@ -1688,7 +1688,7 @@ EXTENDED_ORACLE_SQL["v12_fd_audit"] = "\nUNION ALL\n".join(
 ) + """
         ORDER BY fd, n_keys, n_viol, viol_rate, max_deps"""
 
-EXTENDED_ORACLE_SQL["h12_funnel"] = """
+ORACLE_SQL["h12_funnel"] = """
         WITH s1 AS (SELECT user_id, MIN(ts) t FROM events
                     WHERE event_type = 'view' GROUP BY user_id),
         s2 AS (SELECT e.user_id, MIN(e.ts) t FROM events e
@@ -1715,7 +1715,7 @@ EXTENDED_ORACLE_SQL["h12_funnel"] = """
                    ROUND(ROUND(n2 * 1.0 / n0, 9) + 1e-12, 4) FROM c)
         ORDER BY step_no, step, n_users, conv_from_prev, conv_from_first"""
 
-EXTENDED_ORACLE_SQL["h08_rolling_anomaly"] = f"""
+ORACLE_SQL["h08_rolling_anomaly"] = f"""
         WITH scored AS (
             SELECT event_id, user_id, value,
                    COUNT(value) OVER w n,
@@ -1730,7 +1730,7 @@ EXTENDED_ORACLE_SQL["h08_rolling_anomaly"] = f"""
         WHERE n >= {ANOM_MIN_N} AND sd > 0 AND abs((value - mu) / sd) >= {ANOM_Z}
         ORDER BY event_id, user_id, value, z"""
 
-EXTENDED_ORACLE_SQL["v06_column_profile"] = """
+ORACLE_SQL["v06_column_profile"] = """
         SELECT 'o_orderkey' col, COUNT(*) n_rows,
                CAST(SUM(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) n_null,
                COUNT(DISTINCT o_orderkey) n_distinct,
@@ -1768,7 +1768,7 @@ EXTENDED_ORACLE_SQL["v06_column_profile"] = """
         FROM orders
         ORDER BY col, n_rows, n_null, n_distinct, min_v, max_v, min_s, max_s"""
 
-EXTENDED_ORACLE_SQL["v07_quantile_report"] = """
+ORACLE_SQL["v07_quantile_report"] = """
         SELECT o_orderstatus, COUNT(*) n,
                ROUND(ROUND(quantile_cont(o_totalprice, 0.5), 6) + 1e-9, 2) p50,
                ROUND(ROUND(quantile_cont(o_totalprice, 0.9), 6) + 1e-9, 2) p90,
@@ -1776,7 +1776,7 @@ EXTENDED_ORACLE_SQL["v07_quantile_report"] = """
         FROM orders GROUP BY o_orderstatus
         ORDER BY o_orderstatus, n, p50, p90, p99"""
 
-EXTENDED_ORACLE_SQL["v08_referential_integrity"] = """
+ORACLE_SQL["v08_referential_integrity"] = """
         SELECT 'lineitem->orders' fk, (SELECT COUNT(*) FROM lineitem) n_rows,
                COUNT(*) FILTER (orphan) orphan_keys,
                CAST(COALESCE(SUM(n) FILTER (orphan), 0) AS BIGINT) orphan_rows
@@ -1806,7 +1806,7 @@ EXTENDED_ORACLE_SQL["v08_referential_integrity"] = """
               FROM lineitem GROUP BY l_suppkey)
         ORDER BY fk, n_rows, orphan_keys, orphan_rows"""
 
-EXTENDED_ORACLE_SQL["h09_lttb_downsample"] = f"""
+ORACLE_SQL["h09_lttb_downsample"] = f"""
         WITH span AS (SELECT event_type, epoch_us(MIN(ts)) t0, epoch_us(MAX(ts)) t1
                       FROM events GROUP BY event_type),
         pts AS (SELECT e.event_type,
@@ -1916,9 +1916,9 @@ def h14_changepoint(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h14_changepoint"] = h14_changepoint
+QUERIES["h14_changepoint"] = h14_changepoint
 
-EXTENDED_ORACLE_SQL["h14_changepoint"] = f"""
+ORACLE_SQL["h14_changepoint"] = f"""
         WITH b1 AS (
             SELECT user_id, ts, event_id, value,
                    ROW_NUMBER() OVER w rn,
@@ -2000,9 +2000,9 @@ def h15_interval_merge(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h15_interval_merge"] = h15_interval_merge
+QUERIES["h15_interval_merge"] = h15_interval_merge
 
-EXTENDED_ORACLE_SQL["h15_interval_merge"] = """
+ORACLE_SQL["h15_interval_merge"] = """
         WITH b AS (
             SELECT user_id, ts, event_id,
                    epoch_us(ts) + CAST(FLOOR(value * 1000000) AS BIGINT) end_us
@@ -2079,7 +2079,7 @@ def v13_split_drift(spark, sf_dir):
     ).orderBy("lang", "train_share", "val_share", "test_share", "drift")
 
 
-EXTENDED_QUERIES["v13_split_drift"] = v13_split_drift
+QUERIES["v13_split_drift"] = v13_split_drift
 
 
 def _v13_oracle() -> str:
@@ -2115,7 +2115,7 @@ def _v13_oracle() -> str:
         ORDER BY lang, train_share, val_share, test_share, drift"""
 
 
-EXTENDED_ORACLE_SQL["v13_split_drift"] = _v13_oracle()
+ORACLE_SQL["v13_split_drift"] = _v13_oracle()
 
 
 
@@ -2161,7 +2161,7 @@ def v14_dup_label_consistency(spark, sf_dir):
     ).orderBy("cluster_id", "n_docs", "n_sources", "n_langs")
 
 
-EXTENDED_QUERIES["v14_dup_label_consistency"] = v14_dup_label_consistency
+QUERIES["v14_dup_label_consistency"] = v14_dup_label_consistency
 
 
 def _v14_oracle() -> str:
@@ -2195,7 +2195,7 @@ def _v14_oracle() -> str:
         ORDER BY cluster_id, n_docs, n_sources, n_langs"""
 
 
-EXTENDED_ORACLE_SQL["v14_dup_label_consistency"] = _v14_oracle()
+ORACLE_SQL["v14_dup_label_consistency"] = _v14_oracle()
 
 
 MEDFILT_W = 6  # trailing window (rows): 7-point median filter
@@ -2233,9 +2233,9 @@ def h16_rolling_median(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h16_rolling_median"] = h16_rolling_median
+QUERIES["h16_rolling_median"] = h16_rolling_median
 
-EXTENDED_ORACLE_SQL["h16_rolling_median"] = f"""
+ORACLE_SQL["h16_rolling_median"] = f"""
         SELECT user_id, event_id,
                ROUND(ROUND(med_raw, 9) + 1e-12, 4) med,
                ROUND(ROUND(ABS(value - med_raw), 9) + 1e-12, 4) dev
@@ -2291,8 +2291,8 @@ def _v15_oracle() -> str:
     )
 
 
-EXTENDED_QUERIES["v15_profile_drift_gate"] = v15_profile_drift_gate
-EXTENDED_ORACLE_SQL["v15_profile_drift_gate"] = _v15_oracle()
+QUERIES["v15_profile_drift_gate"] = v15_profile_drift_gate
+ORACLE_SQL["v15_profile_drift_gate"] = _v15_oracle()
 
 
 HOLT_ALPHA = 0.5   # level gain  — binary-exact literal on both engines
@@ -2370,9 +2370,9 @@ def h17_holt_linear(spark, sf_dir):
     return holt_linear(series).orderBy("skey", "d", "y")
 
 
-EXTENDED_QUERIES["h17_holt_linear"] = h17_holt_linear
+QUERIES["h17_holt_linear"] = h17_holt_linear
 
-EXTENDED_ORACLE_SQL["h17_holt_linear"] = f"""
+ORACLE_SQL["h17_holt_linear"] = f"""
         WITH RECURSIVE v AS (
             SELECT event_type skey, CAST(DATE_TRUNC('day', ts) AS TIMESTAMP) d,
                    ROUND(SUM(value), 6) y,
@@ -2430,9 +2430,9 @@ def h18_scd2_intervals(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h18_scd2_intervals"] = h18_scd2_intervals
+QUERIES["h18_scd2_intervals"] = h18_scd2_intervals
 
-EXTENDED_ORACLE_SQL["h18_scd2_intervals"] = """
+ORACLE_SQL["h18_scd2_intervals"] = """
         SELECT user_id, event_id, ts valid_from,
                LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                    valid_to,
@@ -2535,9 +2535,9 @@ def v16_ks_test(spark, sf_dir):
     return ks_two_sample(o, "o_totalprice").orderBy("n_a", "n_b", "ks_d")
 
 
-EXTENDED_QUERIES["v16_ks_test"] = v16_ks_test
+QUERIES["v16_ks_test"] = v16_ks_test
 
-EXTENDED_ORACLE_SQL["v16_ks_test"] = f"""
+ORACLE_SQL["v16_ks_test"] = f"""
         WITH g AS (SELECT o_totalprice v,
                           COUNT(*) FILTER (WHERE o_orderkey % 2 = 0) ca,
                           COUNT(*) FILTER (WHERE o_orderkey % 2 = 1) cb
@@ -2598,10 +2598,10 @@ def h19_forecast_backtest(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h19_forecast_backtest"] = h19_forecast_backtest
+QUERIES["h19_forecast_backtest"] = h19_forecast_backtest
 
-EXTENDED_ORACLE_SQL["h19_forecast_backtest"] = (
-    EXTENDED_ORACLE_SQL["h17_holt_linear"]
+ORACLE_SQL["h19_forecast_backtest"] = (
+    ORACLE_SQL["h17_holt_linear"]
     .replace(
         '''SELECT skey, d, y,
                ROUND(ROUND("level", 9) + 1e-12, 4) + 0.0 AS "level",
@@ -2666,10 +2666,10 @@ def h20_forecast_anomaly(spark, sf_dir):
     ).orderBy("skey", "d", "y", "err", "baseline", "is_anomaly")
 
 
-EXTENDED_QUERIES["h20_forecast_anomaly"] = h20_forecast_anomaly
+QUERIES["h20_forecast_anomaly"] = h20_forecast_anomaly
 
-EXTENDED_ORACLE_SQL["h20_forecast_anomaly"] = (
-    EXTENDED_ORACLE_SQL["h17_holt_linear"]
+ORACLE_SQL["h20_forecast_anomaly"] = (
+    ORACLE_SQL["h17_holt_linear"]
     .replace(
         '''SELECT skey, d, y,
                ROUND(ROUND("level", 9) + 1e-12, 4) + 0.0 AS "level",
@@ -2801,10 +2801,10 @@ def h21_holt_winters(spark, sf_dir):
     return holt_winters_seasonal(series).orderBy("skey", "d", "y")
 
 
-EXTENDED_QUERIES["h21_holt_winters"] = h21_holt_winters
+QUERIES["h21_holt_winters"] = h21_holt_winters
 
 _HW_L = f"{HW_ALPHA}*(v.y - s.seas[1]) + {1.0 - HW_ALPHA}*(s.l + s.b)"
-EXTENDED_ORACLE_SQL["h21_holt_winters"] = f"""
+ORACLE_SQL["h21_holt_winters"] = f"""
         WITH RECURSIVE v AS (
             SELECT event_type skey, CAST(DATE_TRUNC('day', ts) AS TIMESTAMP) d,
                    CAST(SUM(CAST(FLOOR(value * 100) AS BIGINT)) AS DOUBLE)
@@ -2936,9 +2936,9 @@ def v17_mutual_information(spark, sf_dir):
     return mutual_information(d, "lang", "source").orderBy("n")
 
 
-EXTENDED_QUERIES["v17_mutual_information"] = v17_mutual_information
+QUERIES["v17_mutual_information"] = v17_mutual_information
 
-EXTENDED_ORACLE_SQL["v17_mutual_information"] = f"""
+ORACLE_SQL["v17_mutual_information"] = f"""
         WITH joint AS (SELECT lang x, source y, COUNT(*) cxy
                        FROM documents GROUP BY 1, 2),
         mx AS (SELECT x, SUM(cxy) cx FROM joint GROUP BY x),
@@ -3073,9 +3073,9 @@ def h22_seasonal_decompose(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h22_seasonal_decompose"] = h22_seasonal_decompose
+QUERIES["h22_seasonal_decompose"] = h22_seasonal_decompose
 
-EXTENDED_ORACLE_SQL["h22_seasonal_decompose"] = f"""
+ORACLE_SQL["h22_seasonal_decompose"] = f"""
         WITH hourly AS (
             SELECT event_type skey,
                    CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) b,
@@ -3249,9 +3249,9 @@ def v18_spearman_audit(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["v18_spearman_audit"] = v18_spearman_audit
+QUERIES["v18_spearman_audit"] = v18_spearman_audit
 
-EXTENDED_ORACLE_SQL["v18_spearman_audit"] = """
+ORACLE_SQL["v18_spearman_audit"] = """
         WITH ranked AS (
             SELECT l_returnflag, l_quantity, l_extendedprice,
                    2 * RANK() OVER (PARTITION BY l_returnflag
@@ -3347,7 +3347,7 @@ def h23_sax_symbols(spark, sf_dir):
     return sax_symbols(e).orderBy("skey", "seg", "n_hours", "paa", "symbol")
 
 
-EXTENDED_QUERIES["h23_sax_symbols"] = h23_sax_symbols
+QUERIES["h23_sax_symbols"] = h23_sax_symbols
 
 # the PAA/quartile CTE chain, shared verbatim by the h23 oracle and
 # the h24 motif oracle so the two statements can never disagree about
@@ -3374,7 +3374,7 @@ _SAX_CTE = f"""
             SELECT skey, quantile_cont(paa, [0.25, 0.5, 0.75]) q
             FROM paa GROUP BY skey)"""
 
-EXTENDED_ORACLE_SQL["h23_sax_symbols"] = f"""{_SAX_CTE}
+ORACLE_SQL["h23_sax_symbols"] = f"""{_SAX_CTE}
         SELECT p.skey, p.seg, p.n_hours,
                ROUND(ROUND(p.paa, 9) + 1e-12, 6) + 0.0 paa,
                CASE WHEN p.paa < q[1] THEN 'a'
@@ -3443,9 +3443,9 @@ def h24_sax_motifs(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h24_sax_motifs"] = h24_sax_motifs
+QUERIES["h24_sax_motifs"] = h24_sax_motifs
 
-EXTENDED_ORACLE_SQL["h24_sax_motifs"] = f"""{_SAX_CTE},
+ORACLE_SQL["h24_sax_motifs"] = f"""{_SAX_CTE},
         sym AS (
             SELECT p.skey, p.seg,
                    CASE WHEN p.paa < q[1] THEN 'a'
@@ -3559,9 +3559,9 @@ def v19_chi2_independence(spark, sf_dir):
     return chi2_independence(d, "lang", "source").orderBy("n")
 
 
-EXTENDED_QUERIES["v19_chi2_independence"] = v19_chi2_independence
+QUERIES["v19_chi2_independence"] = v19_chi2_independence
 
-EXTENDED_ORACLE_SQL["v19_chi2_independence"] = f"""
+ORACLE_SQL["v19_chi2_independence"] = f"""
         WITH joint AS (SELECT lang x, source y, COUNT(*) cxy
                        FROM documents GROUP BY 1, 2),
         mx AS (SELECT x, SUM(cxy) cx FROM joint GROUP BY x),
@@ -3707,7 +3707,7 @@ def h25_acf(spark, sf_dir):
     return acf_report(e).orderBy("skey", "lag", "n", "n_pairs", "r")
 
 
-EXTENDED_QUERIES["h25_acf"] = h25_acf
+QUERIES["h25_acf"] = h25_acf
 
 
 def _acf_oracle_ctes() -> str:
@@ -3759,7 +3759,7 @@ def _acf_oracle() -> str:
         ORDER BY skey, lag, n, n_pairs, r"""
 
 
-EXTENDED_ORACLE_SQL["h25_acf"] = _acf_oracle()
+ORACLE_SQL["h25_acf"] = _acf_oracle()
 
 
 def ljung_box(e: DataFrame) -> DataFrame:
@@ -3800,7 +3800,7 @@ def h26_ljung_box(spark, sf_dir):
     return ljung_box(e).orderBy("skey", "n", "dof", "q_lb")
 
 
-EXTENDED_QUERIES["h26_ljung_box"] = h26_ljung_box
+QUERIES["h26_ljung_box"] = h26_ljung_box
 
 
 def _lb_oracle() -> str:
@@ -3826,7 +3826,7 @@ def _lb_oracle() -> str:
         FROM fin ORDER BY skey, n, dof, q_lb"""
 
 
-EXTENDED_ORACLE_SQL["h26_ljung_box"] = _lb_oracle()
+ORACLE_SQL["h26_ljung_box"] = _lb_oracle()
 
 
 # --------------------------------------------- corpus concentration
@@ -3926,9 +3926,9 @@ def v20_token_gini(spark, sf_dir):
     return token_gini(d).orderBy("source", "n_docs", "total_tokens", "gini")
 
 
-EXTENDED_QUERIES["v20_token_gini"] = v20_token_gini
+QUERIES["v20_token_gini"] = v20_token_gini
 
-EXTENDED_ORACLE_SQL["v20_token_gini"] = """
+ORACLE_SQL["v20_token_gini"] = """
         WITH base AS (
             SELECT source, doc_id,
                    CAST(len(string_split(text, ' ')) AS BIGINT) tokens
@@ -4016,9 +4016,9 @@ def h27_peak_detection(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h27_peak_detection"] = h27_peak_detection
+QUERIES["h27_peak_detection"] = h27_peak_detection
 
-EXTENDED_ORACLE_SQL["h27_peak_detection"] = f"""
+ORACLE_SQL["h27_peak_detection"] = f"""
         WITH hourly AS (
             SELECT event_type skey,
                    CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) b,
@@ -4110,9 +4110,9 @@ def h28_bollinger_breakout(spark, sf_dir):
     )
 
 
-EXTENDED_QUERIES["h28_bollinger_breakout"] = h28_bollinger_breakout
+QUERIES["h28_bollinger_breakout"] = h28_bollinger_breakout
 
-EXTENDED_ORACLE_SQL["h28_bollinger_breakout"] = f"""
+ORACLE_SQL["h28_bollinger_breakout"] = f"""
         WITH hourly AS (
             SELECT event_type skey,
                    CAST(DATE_TRUNC('hour', ts) AS TIMESTAMP) b,

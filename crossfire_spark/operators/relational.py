@@ -1596,7 +1596,7 @@ SPARK_SQL_OVERRIDES: dict[str, str] = {
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
-RELATIONAL_QUERIES: dict[str, Builder] = {
+QUERIES: dict[str, Builder] = {
     name: fn
     for name, fn in sorted(globals().items())
     if name.startswith("q") and name[1:].isdigit() and callable(fn)

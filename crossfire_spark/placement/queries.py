@@ -253,7 +253,7 @@ def _p(name: str) -> str:
     return os.path.join(FIXTURE_DIR, f"{name}.parquet")
 
 
-PLACEMENT_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "q28": f"""WITH per_dc AS (SELECT r.block_id, d.datacenter, COUNT(*) c FROM read_parquet('{_p("replicas")}') r JOIN read_parquet('{_p("datanodes")}') d ON r.datanode_id = d.datanode_id GROUP BY r.block_id, d.datacenter) SELECT block_id, COUNT(*) dc_cnt, CAST(SUM(c) AS BIGINT) replica_cnt, MAX(c) - MIN(c) imbalance, (MAX(c) - MIN(c) <= 1) balanced FROM per_dc GROUP BY block_id ORDER BY block_id""",
     "q29": f"""WITH per_rack AS (SELECT r.block_id, d.datacenter, d.rack, COUNT(*) c FROM read_parquet('{_p("replicas")}') r JOIN read_parquet('{_p("datanodes")}') d ON r.datanode_id = d.datanode_id GROUP BY r.block_id, d.datacenter, d.rack) SELECT block_id, datacenter, COUNT(*) rack_cnt, CAST(SUM(c) AS BIGINT) replica_cnt, (MAX(c) - MIN(c) <= 1) balanced FROM per_rack GROUP BY block_id, datacenter ORDER BY block_id, datacenter""",
     "q30": f"""SELECT r.block_id, r.storage_id, ROW_NUMBER() OVER (PARTITION BY r.block_id ORDER BY CASE WHEN s.state = 'FAILED' THEN 0 ELSE 1 END, s.remaining, r.storage_id) priority FROM read_parquet('{_p("replicas")}') r JOIN read_parquet('{_p("storages")}') s ON r.storage_id = s.storage_id ORDER BY r.block_id, priority""",
@@ -325,7 +325,7 @@ FROM over_u JOIN under_u USING (datacenter, unit)
 ORDER BY datacenter, unit, from_rack, to_rack""",
 }
 
-PLACEMENT_QUERIES = {
+QUERIES = {
     "q28": q28,
     "q29": q29,
     "q30": q30,

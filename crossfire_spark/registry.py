@@ -1,279 +1,96 @@
-"""Central registry assembling every implemented query/operator into
-the driver contract: ``queries()`` and ``oracle_sql()``.
+"""Central registry assembling every implemented query into the driver
+contract: ``all_queries()`` and ``all_oracle_sql()``.
 
-Families:
-- relational Q01–Q27 (operators.relational)
-- crossfire placement domain Q28–Q31 (placement.queries)
-- LLM-pipeline extensions: dedup / text analysis / similarity
-  (functions.dedup, functions.text, functions.similarity)
+Each module in ``FAMILIES`` defines two dicts, ``QUERIES`` (key ->
+builder) and ``ORACLE_SQL`` (key -> DuckDB SQL for the oracled keys).
+A family that fails to import, a key defined by two families, and an
+oracle without a builder all raise.
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
-# The round driver's hard correctness gate samples the FIRST 50
-# registry keys; a purely family-ordered dict would spend all 50 on
-# relational queries and never oracle-check dedup/text/similarity/
-# time-series/graph/multimodal/placement/streaming. This priority
-# prefix interleaves every family (each key oracle-backed) so the
-# driver's sample spans the whole engine; remaining keys follow in
-# family order.
+FAMILIES = (
+    "crossfire_spark.operators.relational",
+    "crossfire_spark.operators.asof",
+    "crossfire_spark.operators.extended",
+    "crossfire_spark.placement.queries",
+    "crossfire_spark.functions.dedup",
+    "crossfire_spark.functions.text",
+    "crossfire_spark.functions.similarity",
+    "crossfire_spark.functions.multimodal",
+    "crossfire_spark.functions.ann_index",
+    "crossfire_spark.streaming.jobs",
+    "crossfire_spark.streaming.stateful",
+    "crossfire_spark.streaming.joins",
+    "crossfire_spark.functions.graph",
+)
+
+# The driver's correctness gate samples the FIRST 50 registry keys; a
+# purely family-ordered dict would spend all 50 on relational queries.
+# This prefix interleaves every family (each key oracle-backed) so the
+# sample spans the whole engine; remaining keys follow in family order.
 _DRIVER_SAMPLE_PREFIX = (
-    # r10 rotation (VERDICT r9 task 2): 14 multi-recorded,
-    # code-unchanged keys rotate OUT —
-    #   hash-green >=2 rounds: a02_asof_forward(x2)
-    #   d26_threshold_sweep(x3) d29_lsh_param_planner(x2)
-    #   d30_span_removal_plan(x2) g13_weighted_shortest_path(x2)
-    #   t35_shard_manifest(x2) v12_fd_audit(x2)
-    #   st09_snapshot_merge_stream(x2) st13_stream_quality(x2)
-    #   st21_late_data_audit(x2) st22_stateful_sessions(x2)
-    #   rows-only recorded x2 (declared no-oracle keys, both
-    #   recordings green): d27_simhash_recall_audit
-    #   d28_srp_recall_audit t36_compression_quality
-    # — for 14 oracled keys the driver has NEVER hashed (r1-r9),
-    # family-interleaved from the COVERAGE.md "r10 rotation prep"
-    # pool, placement/relational heads first per the VERDICT r9
-    # priority list. t31_ccnet_bucket is also REQUIRED here: its
-    # tercile split was rewritten onto the distributed-ntile shape
-    # this round (VERDICT r9 task 1 audit), so it must hash in its
-    # shipping round. Keys whose code changed this round stay for a
-    # post-change hash: v18_spearman_audit (two-phase rank rewrite),
-    # t38_stupid_backoff (lazy model checkpoints),
-    # s25_pq_distortion (half-away rounding). Keys first hashed in
-    # r9 keep one round of continuity.
-    #
-    # relational + placement heads — q28-q31 never driver-hashed.
-    # r10 additions enter in their shipping round (r6 task 8
-    # discipline), each displacing a single-r9-hashed, code-unchanged
-    # key: h25 displaces q64, h26 displaces q65, s26 displaces q61
-    # (q33/q54/q66 keep the rank-window class driver-covered, and
-    # q28-q31 restore the relational family count), g15 displaces
-    # d14_containment, v20 displaces v13_split_drift
     "q28", "q29", "q30", "q31",
-    # as-of — a04 never hashed (a02 rotates out with 2 hashes)
     "a04_asof_interpolate",
-    # dedup — d19/d22/d31 keep r9 continuity; d09 never hashed;
-    # d32 ships this round (displaces d17: single r9 hash, unchanged)
     "s28_ivf_pq_adaptive", "d22_anchor_positives",
     "d31_shard_leakage_audit", "d09_semdedup", "d32_template_dedup",
-    # time-series — h22/h24 continuity; h14 never hashed;
-    # h25/h26/h27 ship this round (h27 displaces h23: single r9 hash,
-    # code unchanged)
-    # h28 ships this round (displaces h22: single r9 hash, unchanged)
     "h24_sax_motifs",
     "h14_changepoint", "h25_acf", "h26_ljung_box",
     "h27_peak_detection", "h28_bollinger_breakout",
-    # graph — g10/g11/g14 continuity; g03 never hashed; g15 ships
-    # this round
     "g10_assortativity", "g11_clustering_coefficient",
     "g14_modularity", "g03_triangle_count", "g15_edge_embeddedness",
-    # text — t25/t27/t28/t37/t38 continuity; t31 rewritten this round
-    # t39 ships this round (displaces t28: single r9 hash, unchanged)
     "t25_heavy_hitters", "t27_zipf_fit", "t39_langid_confusion",
     "t37_vocab_coverage", "t38_stupid_backoff", "t31_ccnet_bucket",
-    # validation — v14/v19 continuity; v18 rewritten this round;
-    # v20 ships this round
     "v14_dup_label_consistency",
     "v18_spearman_audit", "v19_chi2_independence", "v20_token_gini",
-    # similarity / ANN — s12/s18/s20/s21/s24 continuity; s25 kernel
-    # rounding changed this round; s06/s13 never hashed
-    # s27 ships this round (displaces s12: single r9 hash, unchanged)
     "s27_sim_histogram", "s18_density_clusters",
     "s20_ivf_pq_topk", "s21_ivf_pq_index",
     "s25_pq_distortion", "s24_probe_recall_curve",
     "s06_ivf_index", "s13_mmr_rerank", "s26_silhouette",
-    # multimodal — m09/m11/m12 continuity; m01 never hashed; m13
-    # ships this round (displaces m08: single r9 hash, unchanged)
-    # m14 ships this round (displaces m09: single r9 hash, unchanged)
     "m14_audio_loudness", "m11_goertzel_bands",
     "m12_phash_dct", "m01_media_features", "m13_image_stats",
-    # placement — p05 never hashed
     "p05_rebalance_plan",
-    # streaming — st11/st16/st18 continuity; st10 never hashed
     "st11_stream_pii", "st16_stream_topk",
     "st18_stream_interval_merge", "st10_snapshot_source_stream",
 )
 
 
+def _merge(attr: str) -> dict:
+    out: dict = {}
+    for path in FAMILIES:
+        for k, v in getattr(importlib.import_module(path), attr).items():
+            if k in out:
+                raise KeyError(f"{attr} key {k!r} defined twice ({path})")
+            out[k] = v
+    return out
+
+
 def _interleave(out: dict[str, Builder]) -> dict[str, Builder]:
-    # A typo in the rotation prefix must FAIL LOUDLY, not silently
-    # shrink the driver's 50-key correctness sample (ADVICE r9).
+    # A typo in the prefix must fail loudly, not silently shrink the
+    # driver's 50-key correctness sample.
     missing = [k for k in _DRIVER_SAMPLE_PREFIX if k not in out]
     if missing:
         raise KeyError(
             f"_DRIVER_SAMPLE_PREFIX keys absent from registry: {missing}"
         )
-    ordered: dict[str, Builder] = {}
-    for k in _DRIVER_SAMPLE_PREFIX:
-        ordered[k] = out[k]
-    for k, v in out.items():
-        if k not in ordered:
-            ordered[k] = v
-    return ordered
+    # a repeated key keeps its first (prefix) position
+    return {k: out[k] for k in (*_DRIVER_SAMPLE_PREFIX, *out)}
 
 
 def all_queries() -> dict[str, Builder]:
-    from crossfire_spark.operators.relational import RELATIONAL_QUERIES
-
-    out: dict[str, Builder] = dict(RELATIONAL_QUERIES)
-
-    try:
-        from crossfire_spark.operators.asof import ASOF_QUERIES
-
-        out.update(ASOF_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.operators.extended import EXTENDED_QUERIES
-
-        out.update(EXTENDED_QUERIES)
-    except ImportError:
-        pass
-
-    try:
-        from crossfire_spark.placement.queries import PLACEMENT_QUERIES
-
-        out.update(PLACEMENT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.dedup import DEDUP_QUERIES
-
-        out.update(DEDUP_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.text import TEXT_QUERIES
-
-        out.update(TEXT_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.similarity import SIMILARITY_QUERIES
-
-        out.update(SIMILARITY_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.multimodal import MULTIMODAL_QUERIES
-
-        out.update(MULTIMODAL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.ann_index import ANN_INDEX_QUERIES
-
-        out.update(ANN_INDEX_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.streaming.jobs import STREAMING_QUERIES
-
-        out.update(STREAMING_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.streaming.stateful import STATEFUL_QUERIES
-
-        out.update(STATEFUL_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.streaming.joins import STREAM_JOIN_QUERIES
-
-        out.update(STREAM_JOIN_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.graph import GRAPH_QUERIES
-
-        out.update(GRAPH_QUERIES)
-    except ImportError:
-        pass
-    return _interleave(out)
+    return _interleave(_merge("QUERIES"))
 
 
 def all_oracle_sql() -> dict[str, str]:
-    from crossfire_spark.operators.relational import ORACLE_SQL
-
-    out: dict[str, str] = dict(ORACLE_SQL)
-
-    try:
-        from crossfire_spark.operators.asof import ASOF_ORACLE_SQL
-
-        out.update(ASOF_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.operators.extended import EXTENDED_ORACLE_SQL
-
-        out.update(EXTENDED_ORACLE_SQL)
-    except ImportError:
-        pass
-
-    try:
-        from crossfire_spark.placement.queries import PLACEMENT_ORACLE_SQL
-
-        out.update(PLACEMENT_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.dedup import DEDUP_ORACLE_SQL
-
-        out.update(DEDUP_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.text import TEXT_ORACLE_SQL
-
-        out.update(TEXT_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.similarity import SIMILARITY_ORACLE_SQL
-
-        out.update(SIMILARITY_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.multimodal import MULTIMODAL_ORACLE_SQL
-
-        out.update(MULTIMODAL_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.ann_index import ANN_INDEX_ORACLE_SQL
-
-        out.update(ANN_INDEX_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.streaming.jobs import STREAMING_ORACLE_SQL
-
-        out.update(STREAMING_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.streaming.stateful import STATEFUL_ORACLE_SQL
-
-        out.update(STATEFUL_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.streaming.joins import STREAM_JOIN_ORACLE_SQL
-
-        out.update(STREAM_JOIN_ORACLE_SQL)
-    except ImportError:
-        pass
-    try:
-        from crossfire_spark.functions.graph import GRAPH_ORACLE_SQL
-
-        out.update(GRAPH_ORACLE_SQL)
-    except ImportError:
-        pass
-    return out
+    oracles = _merge("ORACLE_SQL")
+    orphans = sorted(oracles.keys() - _merge("QUERIES").keys())
+    if orphans:
+        raise KeyError(f"ORACLE_SQL keys without a builder: {orphans}")
+    return oracles

@@ -6,8 +6,6 @@ north-star extension, with batch-equivalent declared queries so the
 streaming path is oracle-checkable."""
 
 from crossfire_spark.streaming.jobs import (  # noqa: F401
-    STREAMING_ORACLE_SQL,
-    STREAMING_QUERIES,
     events_stream,
     run_stream_to_memory,
 )

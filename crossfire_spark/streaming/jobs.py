@@ -629,7 +629,7 @@ def st14_index_maintenance(spark, sf_dir):
     )
 
 
-STREAMING_ORACLE_SQL: dict[str, str] = {
+ORACLE_SQL: dict[str, str] = {
     "st13_stream_quality": """
         SELECT 'errors' metric, CAST(COUNT(*) FILTER (event_type = 'error') AS BIGINT) n FROM events
         UNION ALL
@@ -712,7 +712,7 @@ def st16_stream_topk(spark, sf_dir):
     )
 
 
-STREAMING_QUERIES = {
+QUERIES = {
     "st01_stream_tumbling": st01_stream_tumbling,
     "st02_stream_sliding": st02_stream_sliding,
     "st03_session_window": st03_session_window,
@@ -729,11 +729,11 @@ STREAMING_QUERIES = {
 
 # st11's oracle is the t10 batch SQL verbatim: a stateless projection
 # replayed through the streaming engine must equal its batch run.
-from crossfire_spark.functions.text import TEXT_ORACLE_SQL as _TEXT_ORACLE_SQL  # noqa: E402
+from crossfire_spark.functions.text import ORACLE_SQL as TEXT_ORACLE_SQL  # noqa: E402
 
-STREAMING_ORACLE_SQL["st11_stream_pii"] = _TEXT_ORACLE_SQL["t10_pii_scrub"]
+ORACLE_SQL["st11_stream_pii"] = TEXT_ORACLE_SQL["t10_pii_scrub"]
 
-STREAMING_ORACLE_SQL["st16_stream_topk"] = f"""
+ORACLE_SQL["st16_stream_topk"] = f"""
         SELECT * FROM (
             SELECT user_id, ROUND(ROUND(SUM(value), 6) + 1e-9, 2) total
             FROM events GROUP BY user_id
@@ -825,9 +825,9 @@ def st19_stream_cdc_apply(spark, sf_dir):
     )
 
 
-STREAMING_QUERIES["st19_stream_cdc_apply"] = st19_stream_cdc_apply
+QUERIES["st19_stream_cdc_apply"] = st19_stream_cdc_apply
 
-STREAMING_ORACLE_SQL["st19_stream_cdc_apply"] = """
+ORACLE_SQL["st19_stream_cdc_apply"] = """
         SELECT user_id, event_id, event_type, ts, ROUND(value, 2) v
         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
                   ORDER BY ts DESC, event_id DESC) rn FROM events) t
@@ -936,15 +936,13 @@ def st20_stream_scd2(spark, sf_dir):
     )
 
 
-STREAMING_QUERIES["st20_stream_scd2"] = st20_stream_scd2
+QUERIES["st20_stream_scd2"] = st20_stream_scd2
 
 from crossfire_spark.operators.extended import (  # noqa: E402
-    EXTENDED_ORACLE_SQL as _EXT_ORACLE_SQL,
+    ORACLE_SQL as EXTENDED_ORACLE_SQL,
 )
 
-STREAMING_ORACLE_SQL["st20_stream_scd2"] = _EXT_ORACLE_SQL[
-    "h18_scd2_intervals"
-]
+ORACLE_SQL["st20_stream_scd2"] = EXTENDED_ORACLE_SQL["h18_scd2_intervals"]
 
 
 def _write_arrival_files(tagged, nb: int, work: str, watch: str) -> None:
@@ -1116,9 +1114,9 @@ def st21_late_data_audit(spark, sf_dir):
     ).orderBy("event_type")
 
 
-STREAMING_QUERIES["st21_late_data_audit"] = st21_late_data_audit
+QUERIES["st21_late_data_audit"] = st21_late_data_audit
 
-STREAMING_ORACLE_SQL["st21_late_data_audit"] = f"""
+ORACLE_SQL["st21_late_data_audit"] = f"""
         WITH sp AS (SELECT epoch_us(MIN(ts)) mn, epoch_us(MAX(ts)) mx
                     FROM events),
         e AS (SELECT event_type, epoch_us(ts) tsu,
@@ -1350,9 +1348,9 @@ def st22_stateful_sessions(spark, sf_dir):
     ).orderBy("user_id", "t_start", "t_end", "n_events", "sum_value")
 
 
-STREAMING_QUERIES["st22_stateful_sessions"] = st22_stateful_sessions
+QUERIES["st22_stateful_sessions"] = st22_stateful_sessions
 
-STREAMING_ORACLE_SQL["st22_stateful_sessions"] = f"""
+ORACLE_SQL["st22_stateful_sessions"] = f"""
         WITH b AS (SELECT user_id, ts, event_id,
                 CAST(FLOOR(value * 100) AS BIGINT) cents,
                 CASE WHEN lag(epoch_us(ts)) OVER w IS NULL

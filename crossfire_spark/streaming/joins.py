@@ -71,7 +71,7 @@ def st06_stream_stream(spark, sf_dir):
     )
 
 
-STREAM_JOIN_ORACLE_SQL = {
+ORACLE_SQL = {
     "st05_stream_static": """
         SELECT c_mktsegment, event_type, COUNT(*) c, ROUND(SUM(value), 2) s
         FROM events JOIN customer ON user_id = c_custkey
@@ -85,7 +85,7 @@ STREAM_JOIN_ORACLE_SQL = {
          AND p.ts > e.ts AND p.ts <= e.ts + INTERVAL 1 HOUR
         ORDER BY e.user_id, click_id, purchase_id""",
 }
-STREAM_JOIN_QUERIES = {
+QUERIES = {
     "st05_stream_static": st05_stream_static,
     "st06_stream_stream": st06_stream_stream,
 }

@@ -364,23 +364,25 @@ def st17_stream_funnel(spark, sf_dir):
     )
 
 
-STATEFUL_ORACLE_SQL = {
+ORACLE_SQL = {
     "st04_stateful_totals": """
         SELECT user_id, COUNT(*) c, ROUND(SUM(value),2) s
         FROM events GROUP BY user_id ORDER BY user_id, c, s""",
 }
-STATEFUL_QUERIES = {"st04_stateful_totals": st04_stateful_totals}
+QUERIES = {"st04_stateful_totals": st04_stateful_totals}
 
 
 def _register_st15() -> None:
-    from crossfire_spark.operators.extended import EXTENDED_ORACLE_SQL
+    from crossfire_spark.operators.extended import (
+        ORACLE_SQL as EXTENDED_ORACLE_SQL,
+    )
 
-    STATEFUL_QUERIES["st15_stream_anomaly"] = st15_stream_anomaly
-    STATEFUL_ORACLE_SQL["st15_stream_anomaly"] = EXTENDED_ORACLE_SQL[
+    QUERIES["st15_stream_anomaly"] = st15_stream_anomaly
+    ORACLE_SQL["st15_stream_anomaly"] = EXTENDED_ORACLE_SQL[
         "h08_rolling_anomaly"
     ]
-    STATEFUL_QUERIES["st17_stream_funnel"] = st17_stream_funnel
-    STATEFUL_ORACLE_SQL["st17_stream_funnel"] = EXTENDED_ORACLE_SQL[
+    QUERIES["st17_stream_funnel"] = st17_stream_funnel
+    ORACLE_SQL["st17_stream_funnel"] = EXTENDED_ORACLE_SQL[
         "h12_funnel"
     ]
 
@@ -524,12 +526,14 @@ def st18_stream_interval_merge(spark, sf_dir):
 
 
 def _register_st18() -> None:
-    from crossfire_spark.operators.extended import EXTENDED_ORACLE_SQL
+    from crossfire_spark.operators.extended import (
+        ORACLE_SQL as EXTENDED_ORACLE_SQL,
+    )
 
-    STATEFUL_QUERIES["st18_stream_interval_merge"] = (
+    QUERIES["st18_stream_interval_merge"] = (
         st18_stream_interval_merge
     )
-    STATEFUL_ORACLE_SQL["st18_stream_interval_merge"] = EXTENDED_ORACLE_SQL[
+    ORACLE_SQL["st18_stream_interval_merge"] = EXTENDED_ORACLE_SQL[
         "h15_interval_merge"
     ]
 

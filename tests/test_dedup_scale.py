@@ -14,13 +14,18 @@ self-join quadratic. Two defenses, both exercised here on a synthetic
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crossfire_spark.functions.dedup import (
+    MINHASH_K,
     _cap_buckets,
     _exact_dup_membership,
+    _i64,
+    _shingles,
     minhash_lsh_candidates,
     minhash_lsh_pairs,
+    minhash_signatures_wide,
     simhash_pairs,
 )
 
@@ -227,15 +232,49 @@ def test_winnowing_guarantee_detects_shared_passage(spark):
     assert not (f1 & f3) and not (f2 & f3)
 
 
+def _rotl64(col: F.Column, r: int) -> F.Column:
+    """JVM-expression rotl — the reference form the Arrow minhash
+    kernel is pinned bit-exact against."""
+    r = r % 64
+    if r == 0:
+        return col
+    return F.shiftleft(col, r).bitwiseOR(F.shiftrightunsigned(col, 64 - r))
+
+
+def minhash_signatures_wide_jvm(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
+    """All-JVM form of :func:`minhash_signatures_wide` (128 codegen'd
+    rotl/xor expressions + a k-column min aggregate). Kept as the
+    independent oracle the Arrow kernel is equality-pinned against —
+    and measured 4x slower at sf0.1, which is why it is no longer the
+    default."""
+    sh = _shingles(docs)
+    base = sh.select(
+        "doc_id",
+        F.xxhash64("shingle").alias("_h1"),
+        F.xxhash64("shingle", F.lit(1)).alias("_h2"),
+    )
+    gold = 0x9E3779B97F4A7C15
+    consts = [_i64((i * gold) & 0xFFFFFFFFFFFFFFFF) for i in range(k)]
+    hashed = base.select(
+        "doc_id",
+        *[
+            _rotl64(F.col("_h1"), 7 * i)
+            .bitwiseXOR(_rotl64(F.col("_h2"), i))
+            .bitwiseXOR(F.lit(consts[i]))
+            .alias(f"h{i}")
+            for i in range(k)
+        ],
+    )
+    return hashed.groupBy("doc_id").agg(
+        *[F.min(f"h{i}").alias(f"m{i}") for i in range(k)]
+    )
+
+
 def test_minhash_arrow_kernel_matches_jvm_expressions(spark, sf_dir):
     """The Arrow segment-min signature kernel must be BIT-EXACT
     against the independent all-JVM expression form (rotl/xor in
     uint64, min in the signed int64 domain)."""
     from crossfire_spark.catalog import load_table
-    from crossfire_spark.functions.dedup import (
-        minhash_signatures_wide,
-        minhash_signatures_wide_jvm,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     got = [tuple(r) for r in minhash_signatures_wide(docs).orderBy("doc_id").collect()]

@@ -1,36 +1,20 @@
-"""Extended operator tests: JSON, time rollup, range join (exact +
+"""Extended operator tests: the DuckDB oracle check, JSON, time rollup, range join (exact +
 binned scale path), approximate distinct accuracy."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table
 from crossfire_spark.operators.extended import (
-    EXTENDED_ORACLE_SQL,
-    EXTENDED_QUERIES,
     approx_distinct,
     price_bands,
     range_join,
     range_join_binned,
 )
-from crossfire_spark.plans import results_match
+from test_differential import oracle_test
 
-
-@pytest.mark.parametrize("name", sorted(EXTENDED_QUERIES))
-def test_extended_matches_oracle(name, spark, duck, sf_dir):
-    if name not in EXTENDED_ORACLE_SQL:
-        pytest.skip(f"{name} is rows-only (sketch output; pinned elsewhere)")
-    sdf = EXTENDED_QUERIES[name](spark, sf_dir)
-    cur = duck.execute(EXTENDED_ORACLE_SQL[name])
-    ok, reason = results_match(
-        sdf.columns,
-        [tuple(r) for r in sdf.collect()],
-        [d[0] for d in cur.description],
-        cur.fetchall(),
-    )
-    assert ok, f"{name}: {reason}"
+test_extended_matches_oracle = oracle_test("crossfire_spark.operators.extended")
 
 
 def test_binned_range_join_equals_exact(spark, sf_dir):

@@ -12,59 +12,31 @@ from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table
 from crossfire_spark.functions.dedup import (
-    DEDUP_ORACLE_SQL,
-    DEDUP_QUERIES,
     exact_jaccard_pairs,
     minhash_lsh_pairs,
     simhash_pairs,
 )
 from crossfire_spark.functions.multimodal import (
     FEATURE_DIM,
-    MULTIMODAL_ORACLE_SQL,
-    MULTIMODAL_QUERIES,
     extract_features,
     m01_media_features,
     synthesize_media,
 )
 from crossfire_spark.functions.similarity import (
-    SIMILARITY_ORACLE_SQL,
-    SIMILARITY_QUERIES,
     cosine_topk,
     ivf_topk,
     kmeans_fit,
     lsh_topk,
 )
-from crossfire_spark.functions.graph import GRAPH_ORACLE_SQL, GRAPH_QUERIES
-from crossfire_spark.functions.text import TEXT_ORACLE_SQL, TEXT_QUERIES
-from crossfire_spark.plans import results_match
+from test_differential import oracle_test
 
-ORACLED = {
-    **{n: (TEXT_QUERIES[n], TEXT_ORACLE_SQL[n]) for n in TEXT_ORACLE_SQL},
-    **{n: (DEDUP_QUERIES[n], DEDUP_ORACLE_SQL[n]) for n in DEDUP_ORACLE_SQL},
-    **{
-        n: (SIMILARITY_QUERIES[n], SIMILARITY_ORACLE_SQL[n])
-        for n in SIMILARITY_ORACLE_SQL
-    },
-    **{n: (GRAPH_QUERIES[n], GRAPH_ORACLE_SQL[n]) for n in GRAPH_ORACLE_SQL},
-    **{
-        n: (MULTIMODAL_QUERIES[n], MULTIMODAL_ORACLE_SQL[n])
-        for n in MULTIMODAL_ORACLE_SQL
-    },
-}
-
-
-@pytest.mark.parametrize("name", sorted(ORACLED))
-def test_extension_matches_oracle(name, spark, duck, sf_dir):
-    fn, sql = ORACLED[name]
-    sdf = fn(spark, sf_dir)
-    cur = duck.execute(sql)
-    ok, reason = results_match(
-        sdf.columns,
-        [tuple(r) for r in sdf.collect()],
-        [d[0] for d in cur.description],
-        cur.fetchall(),
-    )
-    assert ok, f"{name}: {reason}"
+test_extension_matches_oracle = oracle_test(
+    "crossfire_spark.functions.text",
+    "crossfire_spark.functions.dedup",
+    "crossfire_spark.functions.similarity",
+    "crossfire_spark.functions.graph",
+    "crossfire_spark.functions.multimodal",
+)
 
 
 def test_minhash_lsh_recall(spark, sf_dir):

@@ -7,26 +7,10 @@ from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table
 from crossfire_spark.functions.skew import salted_agg, salted_join
-from crossfire_spark.operators.asof import (
-    ASOF_ORACLE_SQL,
-    ASOF_QUERIES,
-    asof_join,
-    kway_merge,
-)
-from crossfire_spark.plans import results_match
+from crossfire_spark.operators.asof import asof_join, kway_merge
+from test_differential import oracle_test
 
-
-@pytest.mark.parametrize("name", sorted(ASOF_ORACLE_SQL))
-def test_asof_matches_duckdb_asof(name, spark, duck, sf_dir):
-    sdf = ASOF_QUERIES[name](spark, sf_dir)
-    cur = duck.execute(ASOF_ORACLE_SQL[name])
-    ok, reason = results_match(
-        sdf.columns,
-        [tuple(r) for r in sdf.collect()],
-        [d[0] for d in cur.description],
-        cur.fetchall(),
-    )
-    assert ok, reason
+test_asof_matches_duckdb_asof = oracle_test("crossfire_spark.operators.asof")
 
 
 def test_asof_strictness(spark):

@@ -15,32 +15,17 @@ from crossfire_spark.placement.api import (
     deletion_candidates,
     verify_placement,
 )
-from crossfire_spark.placement.queries import (
-    PLACEMENT_ORACLE_SQL,
-    PLACEMENT_QUERIES,
-    load_fixture,
-)
-from crossfire_spark.plans import results_match
+from crossfire_spark.placement.queries import QUERIES, load_fixture
+from test_differential import oracle_test
 
-
-@pytest.mark.parametrize("name", sorted(PLACEMENT_ORACLE_SQL))
-def test_placement_query_matches_oracle(name, spark, duck, sf_dir):
-    sdf = PLACEMENT_QUERIES[name](spark, sf_dir)
-    cur = duck.execute(PLACEMENT_ORACLE_SQL[name])
-    ok, reason = results_match(
-        sdf.columns,
-        [tuple(r) for r in sdf.collect()],
-        [d[0] for d in cur.description],
-        cur.fetchall(),
-    )
-    assert ok, f"{name}: {reason}"
+test_placement_query_matches_oracle = oracle_test("crossfire_spark.placement.queries")
 
 
 @pytest.mark.parametrize("name", ["p02_deletion_drain", "p03_choose_targets"])
 def test_iterative_queries_run_and_are_deterministic(name, spark, sf_dir):
     """No SQL oracle (iterative); assert non-empty + stable output."""
-    first = [tuple(r) for r in PLACEMENT_QUERIES[name](spark, sf_dir).collect()]
-    second = [tuple(r) for r in PLACEMENT_QUERIES[name](spark, sf_dir).collect()]
+    first = [tuple(r) for r in QUERIES[name](spark, sf_dir).collect()]
+    second = [tuple(r) for r in QUERIES[name](spark, sf_dir).collect()]
     assert first and first == second
 
 

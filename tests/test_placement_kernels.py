@@ -25,7 +25,7 @@ from crossfire_spark.placement.api import (
     choose_targets,
     deletion_candidates,
 )
-from crossfire_spark.placement.queries import PLACEMENT_QUERIES, load_fixture
+from crossfire_spark.placement.queries import QUERIES, load_fixture
 
 
 def _scan_choose_block(
@@ -137,10 +137,10 @@ def _build_jobs(spark, build) -> list[int]:
 
 def test_placement_builders_launch_no_jobs_but_the_candidate_collect(spark, sf_dir):
     for name in ("p01_verify_placement", "p02_deletion_drain"):
-        assert _build_jobs(spark, lambda: PLACEMENT_QUERIES[name](spark, sf_dir)) == []
+        assert _build_jobs(spark, lambda: QUERIES[name](spark, sf_dir)) == []
     tracker = spark.sparkContext.statusTracker()
     jobs = _build_jobs(
-        spark, lambda: PLACEMENT_QUERIES["p03_choose_targets"](spark, sf_dir)
+        spark, lambda: QUERIES["p03_choose_targets"](spark, sf_dir)
     )
     assert jobs
     stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]

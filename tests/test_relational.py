@@ -3,21 +3,6 @@ Q01–Q27) must match the DuckDB oracle on the same parquet."""
 
 from __future__ import annotations
 
-import pytest
+from test_differential import oracle_test
 
-from crossfire_spark.operators.relational import ORACLE_SQL, RELATIONAL_QUERIES
-from crossfire_spark.plans import results_match
-
-
-@pytest.mark.parametrize("name", sorted(RELATIONAL_QUERIES))
-def test_query_matches_oracle(name, spark, duck, sf_dir):
-    sdf = RELATIONAL_QUERIES[name](spark, sf_dir)
-    s_rows = [tuple(r) for r in sdf.collect()]
-    s_cols = sdf.columns
-
-    cur = duck.execute(ORACLE_SQL[name])
-    o_cols = [d[0] for d in cur.description]
-    o_rows = cur.fetchall()
-
-    ok, reason = results_match(s_cols, s_rows, o_cols, o_rows)
-    assert ok, f"{name}: {reason}"
+test_query_matches_oracle = oracle_test("crossfire_spark.operators.relational")

@@ -10,17 +10,17 @@ import pytest
 
 from crossfire_spark.operators.relational import (
     ORACLE_SQL,
-    RELATIONAL_QUERIES,
+    QUERIES,
     SPARK_SQL_OVERRIDES,
 )
 from crossfire_spark.plans import results_match
 from crossfire_spark.sql import sql
 
 
-@pytest.mark.parametrize("name", sorted(RELATIONAL_QUERIES))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_sql_equals_dataframe_builder(name, spark, sf_dir):
     via_sql = sql(spark, SPARK_SQL_OVERRIDES.get(name, ORACLE_SQL[name]), sf_dir)
-    via_df = RELATIONAL_QUERIES[name](spark, sf_dir)
+    via_df = QUERIES[name](spark, sf_dir)
     ok, reason = results_match(
         via_sql.columns,
         [tuple(r) for r in via_sql.collect()],

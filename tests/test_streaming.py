@@ -5,35 +5,17 @@ dedup and append-mode session-window behavior."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table
-from crossfire_spark.plans import results_match
 from crossfire_spark.streaming.jobs import (
-    STREAMING_ORACLE_SQL,
-    STREAMING_QUERIES,
     events_stream,
     run_stream_to_memory,
     session_windows,
 )
+from test_differential import oracle_test
 
-
-@pytest.mark.parametrize(
-    "name", sorted(set(STREAMING_QUERIES) & set(STREAMING_ORACLE_SQL))
-)
-def test_streaming_matches_oracle(name, spark, duck, sf_dir):
-    # rows-only streaming queries (st14: quantization-dependent) are
-    # pinned by their own equality tests instead
-    sdf = STREAMING_QUERIES[name](spark, sf_dir)
-    cur = duck.execute(STREAMING_ORACLE_SQL[name])
-    ok, reason = results_match(
-        sdf.columns,
-        [tuple(r) for r in sdf.collect()],
-        [d[0] for d in cur.description],
-        cur.fetchall(),
-    )
-    assert ok, f"{name}: {reason}"
+test_streaming_matches_oracle = oracle_test("crossfire_spark.streaming.jobs")
 
 
 def test_streaming_session_append_is_prefix_of_batch(spark, sf_dir):

@@ -67,7 +67,7 @@ def main() -> None:
         gen(scales=(30,))
 
     from crossfire_spark import get_spark
-    from crossfire_spark.functions.dedup import DEDUP_QUERIES
+    from crossfire_spark.functions.dedup import QUERIES
 
     spark = get_spark(app_name="crossfire-sf1-dedup")
     spark.sparkContext.setLogLevel("ERROR")
@@ -76,7 +76,7 @@ def main() -> None:
     for key in ("d03_minhash_lsh", "d16_weighted_neardup"):
         hwm0 = _jvm_hwm_kib()
         t0 = time.perf_counter()
-        df = DEDUP_QUERIES[key](spark, X30_DIR)
+        df = QUERIES[key](spark, X30_DIR)
         n = df.count()
         wall = round(time.perf_counter() - t0, 2)
         hwm1 = _jvm_hwm_kib()
