@@ -81,6 +81,14 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
+def stab(c: F.Column | str, dp: int = 6) -> F.Column:
+    """Round a float so both engines agree bit for bit: round to 9 dp,
+    nudge by 1e-12 past half-way ties, round to ``dp``; the trailing
+    ``+ 0.0`` turns -0.0 into +0.0. The oracle SQL spells the same
+    ``ROUND(ROUND(x, 9) + 1e-12, dp) + 0.0``."""
+    return F.round(F.round(c, 9) + F.lit(1e-12), dp) + F.lit(0.0)
+
+
 def register_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables=ALL_TABLES
 ) -> dict[str, DataFrame]:

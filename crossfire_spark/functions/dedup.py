@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, spread
+from crossfire_spark.catalog import load_table, spread, stab
 
 JACCARD_THRESHOLD = 0.5
 MINHASH_K = 128
@@ -2397,9 +2397,6 @@ def lsh_param_planner(
     POWER-arithmetic tiers, double-round stabilized."""
     pairs = exact_jaccard_pairs(docs, threshold=floor).localCheckpoint()
 
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     outs = []
     for b, r in grid:
         p_cand = 1.0 - F.pow(
@@ -2550,9 +2547,6 @@ def span_removal_plan(d: DataFrame, L: int = DUP_SPAN_L) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cut"))
     )
 
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     per_doc = (
         base.select("doc_id", "source", "n_tokens")
         .join(removed, "doc_id", "left")
@@ -2683,9 +2677,6 @@ def shard_leakage_audit(docs: DataFrame) -> DataFrame:
              & (F.col("doc_id") == F.col("keeper"))).alias("is_root"),
         )
     )
-
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
 
     return (
         tagged.groupBy("shard")

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table
+from crossfire_spark.catalog import load_table, stab
 
 PR_ITERS = 3
 PR_DAMP = 0.85
@@ -1204,9 +1204,6 @@ def modularity(edges: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_nodes"), F.sum("deg").alias("deg_sum"))
     )
 
-    def stab6(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     half = F.col("deg_sum") / (F.lit(2.0) * F.col("m"))
     return (
         degc.join(intra, "community", "left")
@@ -1217,7 +1214,7 @@ def modularity(edges: DataFrame) -> DataFrame:
             F.col("n_nodes").cast("long").alias("n_nodes"),
             F.col("intra_edges").cast("long").alias("intra_edges"),
             F.col("deg_sum").cast("long").alias("deg_sum"),
-            stab6(F.col("intra_edges") / F.col("m") - half * half).alias(
+            stab(F.col("intra_edges") / F.col("m") - half * half).alias(
                 "q_contrib"
             ),
         )

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from crossfire_spark.catalog import load_table, spread
+from crossfire_spark.catalog import load_table, spread, stab
 
 TOPK = 5
 QUERY_STRIDE = 50
@@ -1705,7 +1705,7 @@ def rp_reduce(em: DataFrame, d_out: int = RP_DIMS) -> DataFrame:
             F.col("dim").cast("long").alias("dim"),
             # + 0.0 canonicalizes IEEE -0.0 (negative dot rounding to
             # zero) to +0.0 — bit-exact vs the oracle
-            (F.round(F.round("v", 9) + F.lit(1e-12), 4) + F.lit(0.0)).alias("proj"),
+            stab("v", 4).alias("proj"),
         )
     )
 
@@ -3060,14 +3060,11 @@ def silhouette_report(em: DataFrame) -> DataFrame:
         )
     )
 
-    def stab6(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     return per_vec.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        stab6(F.avg("a")).alias("mean_a"),
-        stab6(F.avg("b")).alias("mean_b"),
-        stab6(F.avg("s")).alias("silhouette"),
+        stab(F.avg("a")).alias("mean_a"),
+        stab(F.avg("b")).alias("mean_b"),
+        stab(F.avg("s")).alias("silhouette"),
     )
 
 

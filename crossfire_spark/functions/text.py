@@ -20,7 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, spread
+from crossfire_spark.catalog import load_table, spread, stab
+from crossfire_spark.functions.skew import prefix_sums
 
 # marker stopwords per language — the declared heuristic's fixed model
 LANG_MARKERS = {
@@ -175,55 +176,6 @@ def t05_quality_filter(spark, sf_dir):
 
 
 SEQ_LEN = 256  # tokens per packed training sequence
-PACK_RANK_PARTS = 16  # range partitions backing the packing cumsum
-
-
-def _cum_tokens_before(toks: "DataFrame") -> "DataFrame":
-    """(source, doc_id, n_tok) -> + exact BIGINT ``cum_before`` =
-    tokens of all earlier (by doc_id) docs in the same source — the
-    packing prefix sum, computed WITHOUT a window partitioned on the
-    handful-valued ``source`` (the r10 low-cardinality-window audit:
-    the r9 form serialized each source's documents through one task
-    at any cluster size). Same discipline as v18/t31/t35:
-    range-repartition on (source, doc_id), per-partition running sum
-    (parallelism = PACK_RANK_PARTS), per-(pid, source) prefix TOKEN
-    TOTALS joined back from one broadcast table. Exact integers
-    throughout — the rewrite cannot move a sequence boundary."""
-    from pyspark.sql import Window
-
-    spark = toks.sparkSession
-    pv = (
-        toks.repartitionByRange(PACK_RANK_PARTS, "source", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid between offset pass and reuse
-    )
-    totals = pv.groupBy("pid", "source").agg(
-        F.sum("n_tok").alias("s")
-    ).collect()
-    acc: dict = {}
-    offs = []
-    for r in sorted(totals, key=lambda r: (r.source, r.pid)):
-        offs.append((r.pid, r.source, acc.get(r.source, 0)))
-        acc[r.source] = acc.get(r.source, 0) + int(r.s or 0)
-    if offs:
-        off_df = spark.createDataFrame(offs, "pid int, source string, off long")
-    else:
-        off_df = spark.createDataFrame([], "pid int, source string, off long")
-    w = (
-        Window.partitionBy("pid", "source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        pv.withColumn("c0", F.coalesce(F.sum("n_tok").over(w), F.lit(0)))
-        .join(F.broadcast(off_df), ["pid", "source"])
-        .select(
-            "source",
-            "doc_id",
-            "n_tok",
-            (F.col("off") + F.col("c0")).alias("cum_before"),
-        )
-    )
 
 
 def t06_pack_sequences(spark, sf_dir):
@@ -231,18 +183,15 @@ def t06_pack_sequences(spark, sf_dir):
     prep: concatenate documents in deterministic order and cut every
     ``SEQ_LEN`` tokens; report per-sequence document count and token
     total. A document's sequence = (tokens before it) DIV SEQ_LEN,
-    with the prefix sum computed by ``_cum_tokens_before``'s
-    distributed form (r10 rewrite — the r9 per-source window
-    serialized each source through one task; the range-partitioned
-    running sum packs a source across the whole cluster with the
-    same exact integer boundaries). Integer arithmetic only."""
+    with the per-source prefix sum from ``prefix_sums``. Integer
+    arithmetic only."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source", "doc_id", F.size(F.split("text", " ")).alias("n_tok")
     )
+    packed, _ = prefix_sums(toks, ["source"], ["doc_id"], ["n_tok"])
     return (
-        _cum_tokens_before(toks)
-        .withColumn("seq_id", F.expr(f"cum_before DIV {SEQ_LEN}"))
+        packed.withColumn("seq_id", F.expr(f"n_tok_before DIV {SEQ_LEN}"))
         .groupBy("source", "seq_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1550,12 +1499,12 @@ def zipf_fit(d: DataFrame, cap: int = ZIPF_CAP) -> DataFrame:
         F.log(F.col("c").cast("double")).alias("lc"),
         F.log(F.row_number().over(w).cast("double")).alias("lr"),
     )
-    stab = lambda c: F.round(F.round(c, 6) + F.lit(1e-9), 4)  # noqa: E731
+    round4 = lambda c: F.round(F.round(c, 6) + F.lit(1e-9), 4)  # noqa: E731
     return ranked.agg(
         F.count(F.lit(1)).alias("n_terms"),
-        stab(F.regr_slope("lc", "lr")).alias("slope"),
-        stab(F.regr_intercept("lc", "lr")).alias("intercept"),
-        stab(F.regr_r2("lc", "lr")).alias("r2"),
+        round4(F.regr_slope("lc", "lr")).alias("slope"),
+        round4(F.regr_intercept("lc", "lr")).alias("intercept"),
+        round4(F.regr_r2("lc", "lr")).alias("r2"),
     )
 
 
@@ -1654,17 +1603,17 @@ def source_divergence(d: DataFrame) -> DataFrame:
     )
     pairs = a.join(b, "w").where(F.col("src_a") < F.col("src_b"))
     m = (F.col("pa") + F.col("pb")) / 2
-    stab = lambda c: F.round(F.round(c, 9) + F.lit(1e-12), 4)  # noqa: E731
+    round4 = lambda c: F.round(F.round(c, 9) + F.lit(1e-12), 4)  # noqa: E731
     return (
         pairs.groupBy("src_a", "src_b")
         .agg(
-            stab(F.sum(F.col("pa") * F.log(F.col("pa") / F.col("pb")))).alias(
-                "kl_ab"
-            ),
-            stab(F.sum(F.col("pb") * F.log(F.col("pb") / F.col("pa")))).alias(
-                "kl_ba"
-            ),
-            stab(
+            round4(
+                F.sum(F.col("pa") * F.log(F.col("pa") / F.col("pb")))
+            ).alias("kl_ab"),
+            round4(
+                F.sum(F.col("pb") * F.log(F.col("pb") / F.col("pa")))
+            ).alias("kl_ba"),
+            round4(
                 F.sum(
                     F.lit(0.5) * F.col("pa") * F.log(F.col("pa") / m)
                     + F.lit(0.5) * F.col("pb") * F.log(F.col("pb") / m)
@@ -2105,9 +2054,6 @@ def _epoch_schedule_oracle() -> str:
 ORACLE_SQL["t30_epoch_schedule"] = _epoch_schedule_oracle()
 
 
-T31_RANK_PARTS = 16  # range partitions backing t31's distributed ntile
-
-
 def t31_ccnet_bucket(spark, sf_dir):
     """CCNet-style per-language perplexity bucketing (Wenzek et al.
     2020, "CCNet: Extracting High Quality Monolingual Datasets"): score
@@ -2119,15 +2065,8 @@ def t31_ccnet_bucket(spark, sf_dir):
 
     Scale shape: the model build and per-doc scoring are t08's two
     shuffles (vocab agg + per-doc avg, model joined back broadcast);
-    the tercile split is an EXACT DISTRIBUTED NTILE (rewritten r10 —
-    the r9 form windowed the full per-doc table partitioned on the
-    handful-valued ``lang``, serializing each language through one
-    task at any cluster size): range-repartition on (lang, lp DESC,
-    doc_id), per-partition ``row_number`` (parallelism =
-    T31_RANK_PARTS), per-(pid, lang) prefix offsets + per-lang totals
-    joined back from one broadcast table (the v18/t35 shard-rank
-    discipline — the driver sees partition subtotals, never docs),
-    then NTILE's closed form in exact BIGINTs: with n rows, k tiles,
+    the tercile split is an exact NTILE over ``prefix_sums``' per-lang
+    rank and total, in closed form in BIGINTs: with n rows, k tiles,
     rem = n%k, q = n÷k, the first rem tiles hold q+1 rows, so
     bucket(r) = (r-1)÷(q+1)+1 when r <= rem*(q+1) else
     rem + (r - rem*(q+1) - 1)÷q + 1.
@@ -2135,8 +2074,6 @@ def t31_ccnet_bucket(spark, sf_dir):
     (lp DESC, doc_id) has a unique tiebreak — both engines fill the
     first ``n mod 3`` groups with the extra row, so tercile borders
     are identical."""
-    from pyspark.sql import Window
-
     d = spread(load_table(spark, sf_dir, "documents"))
     words = d.select(
         "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("word")
@@ -2151,44 +2088,21 @@ def t31_ccnet_bucket(spark, sf_dir):
         .groupBy("doc_id", "lang")
         .agg(F.round(F.round(F.avg("lp_w"), 6) + F.lit(1e-9), 2).alias("lp"))
     )
-    pv = (
-        lp.repartitionByRange(
-            T31_RANK_PARTS, "lang", F.col("lp").desc(), "doc_id"
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid between offset pass and reuse
+    ranked, _ = prefix_sums(
+        lp.withColumn("one", F.lit(1)),
+        ["lang"],
+        [F.col("lp").desc(), "doc_id"],
+        ["one"],
     )
-    totals = pv.groupBy("pid", "lang").agg(
-        F.count(F.lit(1)).alias("c")
-    ).collect()
-    acc: dict = {}
-    offs = []
-    for r in sorted(totals, key=lambda r: (r.lang, r.pid)):
-        offs.append((r.pid, r.lang, acc.get(r.lang, 0)))
-        acc[r.lang] = acc.get(r.lang, 0) + r.c
-    spark2 = lp.sparkSession
-    if offs:
-        off_df = spark2.createDataFrame(
-            [(p, lg, o, acc[lg]) for p, lg, o in offs],
-            "pid int, lang string, off long, n_g long",
-        )
-    else:
-        off_df = spark2.createDataFrame(
-            [], "pid int, lang string, off long, n_g long"
-        )
-    wp = Window.partitionBy("pid", "lang").orderBy(
-        F.col("lp").desc(), F.col("doc_id")
-    )
-    rnk = F.col("off") + F.row_number().over(wp)
-    rem = F.pmod(F.col("n_g"), F.lit(3))
-    qsz = F.floor(F.col("n_g") / 3)
+    rnk = F.col("one_before") + 1
+    rem = F.pmod(F.col("one_total"), F.lit(3))
+    qsz = F.floor(F.col("one_total") / 3)
     big = rem * (qsz + 1)  # rows in the first rem (larger) tiles
     bucket = F.when(
         rnk <= big, F.floor((rnk - 1) / (qsz + 1)) + 1
     ).otherwise(rem + F.floor((rnk - big - 1) / qsz) + 1)
     return (
-        pv.join(F.broadcast(off_df), ["pid", "lang"])
-        .withColumn("bucket", bucket.cast("long"))
+        ranked.withColumn("bucket", bucket.cast("long"))
         .withColumn(
             "tier",
             F.element_at(
@@ -2232,20 +2146,21 @@ def t32_packing_efficiency(spark, sf_dir):
     documents (docs spanning a sequence boundary — the rows whose
     attention masks and loss boundaries training must special-case).
 
-    Scale shape: identical to t06 — ``_cum_tokens_before``'s
-    distributed prefix sum (r10 rewrite, no per-source window), then
-    a per-shard aggregate; everything is integer until the final
-    fill fraction (non-negative, 9→6 dp)."""
+    Scale shape: t06's ``prefix_sums``, then a per-shard aggregate;
+    everything is integer until the final fill fraction (non-negative,
+    9→6 dp)."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source", "doc_id", F.size(F.split("text", " ")).alias("n_tok")
     )
-    packed = _cum_tokens_before(toks).withColumn(
+    packed, _ = prefix_sums(toks, ["source"], ["doc_id"], ["n_tok"])
+    cum_before = F.col("n_tok_before")
+    packed = packed.withColumn(
         "frag",
         (
-            (F.col("cum_before") / F.lit(SEQ_LEN)).cast("long")
+            (cum_before / F.lit(SEQ_LEN)).cast("long")
             != (
-                (F.col("cum_before") + F.col("n_tok") - 1) / F.lit(SEQ_LEN)
+                (cum_before + F.col("n_tok") - 1) / F.lit(SEQ_LEN)
             ).cast("long")
         ).cast("long"),
     )
@@ -2253,7 +2168,7 @@ def t32_packing_efficiency(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("total_tokens"),
         (
-            (F.max(F.col("cum_before") + F.col("n_tok")) - 1)
+            (F.max(cum_before + F.col("n_tok")) - 1)
             / F.lit(SEQ_LEN)
         )
         .cast("long")
@@ -2417,7 +2332,6 @@ def token_budget_mix(docs: DataFrame) -> DataFrame:
     tot = wts.agg(
         F.sum("tokens").alias("btot"), F.sum("target_w").alias("sw")
     )
-    stab = lambda c, k: F.round(F.round(c, 9) + F.lit(1e-12), k) + F.lit(0.0)  # noqa: E731
     share = F.col("target_w") / F.col("sw")
     target_tokens = F.floor(
         F.lit(TOKEN_BUDGET_FRAC) * F.col("btot") * share
@@ -2463,7 +2377,6 @@ ORACLE_SQL["t34_token_budget_mix"] = f"""
 
 SHARD_SEED = "shard-v1"
 SHARD_COUNT = 8
-SHARD_RANK_PARTS = 16  # range partitions backing the distributed rank
 
 
 def shard_manifest(
@@ -2481,19 +2394,10 @@ def shard_manifest(
     naive hash-mod assignment (``md5 % N``), whose binomial imbalance
     is what the rank deal removes.
 
-    Scale shape: the global rank uses the v16 distributed-ECDF
-    discipline, NOT a global window — range-repartition on the hash
-    key (Spark's sort-shuffle machinery, linear at any size), ONE
-    localCheckpoint to pin partition ids, per-partition
-    ``row_number`` (parallelism = SHARD_RANK_PARTS), and the
-    partition prefix OFFSETS joined back from a broadcast
-    SHARD_RANK_PARTS-row table; the driver sees partition counts,
-    never documents. Everything after the rank is an n_shards-row
-    aggregate. Determinism: md5 both engines; hex-string ordering is
-    bytewise identical; counts are exact BIGINTs; skew ratios carry
-    the double-round stabilizer."""
-    from pyspark.sql import Window
-
+    Scale shape: the global rank is ``prefix_sums`` over (h, doc_id);
+    everything after it is an n_shards-row aggregate. Determinism: md5
+    both engines; hex-string ordering is bytewise identical; counts
+    are exact BIGINTs; skew ratios carry the double-round stabilizer."""
     spark = docs.sparkSession
     h = F.md5(F.concat(F.lit(seed), F.col("doc_id").cast("string")))
     base = docs.select(
@@ -2501,35 +2405,18 @@ def shard_manifest(
         F.size(F.split("text", " ")).alias("tokens"),
         h.alias("h"),
     )
-    pv = (
-        base.repartitionByRange(SHARD_RANK_PARTS, "h", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid assignment; counts + window reuse
+    ranked, totals = prefix_sums(
+        base.withColumn("one", F.lit(1)), [], ["h", "doc_id"], ["one"]
     )
-    totals = sorted(
-        pv.groupBy("pid").agg(F.count(F.lit(1)).alias("c")).collect(),
-        key=lambda r: r.pid,
-    )
-    offs, acc = [], 0
-    for r in totals:
-        offs.append((r.pid, acc))
-        acc += r.c
-    if not acc:
+    if not totals:
         return spark.createDataFrame(
             [],
             "shard int, n_docs long, n_tokens long, lo_h string,"
             " hi_h string, rr_skew double, hm_docs long, hm_tokens long,"
             " hm_skew double",
         )
-    off_df = spark.createDataFrame(offs, "pid int, off long")
-    w = Window.partitionBy("pid").orderBy("h", "doc_id")
-    ranked = (
-        pv.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "pid")
-        .withColumn("rnk", F.col("rn") + F.col("off") - 1)
-    )
     rr = ranked.groupBy(
-        F.pmod("rnk", F.lit(n_shards)).cast("int").alias("shard")
+        F.pmod("one_before", F.lit(n_shards)).cast("int").alias("shard")
     ).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("tokens").alias("n_tokens"),
@@ -2544,9 +2431,6 @@ def shard_manifest(
         F.sum("tokens").alias("hm_tokens"),
     )
     tot = base.agg(F.sum("tokens").alias("tt"))
-
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
 
     return (
         rr.join(hm, "shard", "left")
@@ -2655,9 +2539,6 @@ def t36_compression_quality(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     z = compression_signal(d)
 
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     rep = (F.col("comp_b") * 1000 < ZRATIO_REPETITIVE * F.col("raw_b"))
     junk = (F.col("comp_b") * 1000 >= ZRATIO_INCOMPRESSIBLE * F.col("raw_b"))
     return (
@@ -2733,9 +2614,6 @@ def vocab_coverage(d: DataFrame) -> DataFrame:
         .alias("rn"),
     )
     ns = F.array(*[F.lit(n) for n in COVERAGE_NS])
-
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
 
     return (
         ranked.select(

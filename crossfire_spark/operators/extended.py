@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table
+from crossfire_spark.catalog import load_table, stab
+from crossfire_spark.functions.skew import prefix_sums
 
 PRICE_BANDS = [
     ("low", 0.0, 50_000.0),
@@ -1075,12 +1076,8 @@ def profile_drift_gate(
         c_null = F.col(f"{c}__cnull") / cn
         b_mean = F.col(f"{c}__bmean")
         c_mean = F.col(f"{c}__cmean")
-        shift = F.round(
-            F.round((c_mean - b_mean) / F.abs(b_mean), 9) + F.lit(1e-12), 4
-        ) + F.lit(0.0)
-        null_delta = F.round(
-            F.round(c_null - b_null, 9) + F.lit(1e-12), 4
-        ) + F.lit(0.0)
+        shift = stab((c_mean - b_mean) / F.abs(b_mean), 4)
+        null_delta = stab(c_null - b_null, 4)
         status = (
             F.when(null_delta > DRIFT_NULL_TOL, F.lit("WARN_NULLS"))
             .when(F.abs(shift) > DRIFT_MEAN_TOL, F.lit("WARN_SHIFT"))
@@ -2347,14 +2344,13 @@ def holt_linear(series: DataFrame) -> DataFrame:
         "skey string, d timestamp, y double, level double, trend double,"
         " forecast double",
     )
-    stab = lambda c: F.round(F.round(c, 9) + F.lit(1e-12), 4) + F.lit(0.0)  # noqa: E731
     return out.select(
         "skey",
         "d",
         "y",
-        stab(F.col("level")).alias("level"),
-        stab(F.col("trend")).alias("trend"),
-        stab(F.col("forecast")).alias("forecast"),
+        stab(F.col("level"), 4).alias("level"),
+        stab(F.col("trend"), 4).alias("trend"),
+        stab(F.col("forecast"), 4).alias("forecast"),
     )
 
 
@@ -2444,7 +2440,6 @@ ORACLE_SQL["h18_scd2_intervals"] = """
 
 
 KS_CRIT_05 = 1.358  # Smirnov asymptotic critical coefficient, alpha=0.05
-KS_PARTS = 8
 
 
 def ks_two_sample(
@@ -2458,69 +2453,32 @@ def ks_two_sample(
     reject flag — the distribution-shift gate v15's mean test can't
     see (equal means, different shapes).
 
-    Scale shape — the distributed-ECDF discipline, not a global
-    window: per-value counts (one hash agg), range-repartition on the
-    value so partitions hold ordered slices, per-partition running
-    sums (window keyed by partition id — parallelism = KS_PARTS, no
-    single-task global sort), then each partition's prefix OFFSET
-    joins in via a broadcast of the P-row partition-total table. The
-    driver sees P rows, never values. Every cumulative count is an
-    exact integer, so D is bit-deterministic before its stabilizing
-    round."""
-    from pyspark.sql import Window
-
+    Scale shape: per-value counts, then both ECDFs from ``prefix_sums``
+    (exact integers: D is bit-deterministic before its stabilizer)."""
     spark = df.sparkSession
     pv = df.groupBy(F.col(value_col).alias("v")).agg(
         F.sum(F.when(F.col(grp_col) == 0, 1).otherwise(0)).alias("ca"),
         F.sum(F.when(F.col(grp_col) == 1, 1).otherwise(0)).alias("cb"),
     )
-    pv = (
-        pv.repartitionByRange(KS_PARTS, "v")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid assignment; totals + window reuse it
-    )
-    totals = sorted(
-        pv.groupBy("pid")
-        .agg(F.sum("ca").alias("ta"), F.sum("cb").alias("tb"))
-        .collect(),
-        key=lambda r: r.pid,
-    )
-    offs, acc_a, acc_b = [], 0, 0
-    for r in totals:
-        offs.append((r.pid, acc_a, acc_b))
-        acc_a += r.ta or 0
-        acc_b += r.tb or 0
-    n_a, n_b = acc_a, acc_b
+    cum, totals = prefix_sums(pv, [], ["v"], ["ca", "cb"])
+    n = totals.get((), {"ca": 0, "cb": 0})
+    n_a, n_b = n["ca"], n["cb"]
     if not n_a or not n_b:
         return spark.createDataFrame(
             [], "n_a long, n_b long, ks_d double, crit_05 double,"
             " reject boolean"
         )
-    off_df = spark.createDataFrame(offs, "pid int, oa long, ob long")
-    w = Window.partitionBy("pid").orderBy("v")
-    cum = (
-        pv.withColumn("la", F.sum("ca").over(w))
-        .withColumn("lb", F.sum("cb").over(w))
-        .join(F.broadcast(off_df), "pid")
-    )
     diff = F.abs(
-        (F.col("la") + F.col("oa")) / F.lit(float(n_a))
-        - (F.col("lb") + F.col("ob")) / F.lit(float(n_b))
+        (F.col("ca_before") + F.col("ca")) / F.lit(float(n_a))
+        - (F.col("cb_before") + F.col("cb")) / F.lit(float(n_b))
     )
     crit = KS_CRIT_05 * ((n_a + n_b) / (n_a * float(n_b))) ** 0.5
     return cum.agg(
         F.lit(n_a).cast("long").alias("n_a"),
         F.lit(n_b).cast("long").alias("n_b"),
-        (F.round(F.round(F.max(diff), 9) + F.lit(1e-12), 6) + F.lit(0.0)).alias(
-            "ks_d"
-        ),
-        (F.round(F.round(F.lit(crit), 9) + F.lit(1e-12), 6) + F.lit(0.0)).alias(
-            "crit_05"
-        ),
-        (
-            F.round(F.round(F.max(diff), 9) + F.lit(1e-12), 6)
-            > F.round(F.round(F.lit(crit), 9) + F.lit(1e-12), 6)
-        ).alias("reject"),
+        stab(F.max(diff)).alias("ks_d"),
+        stab(F.lit(crit)).alias("crit_05"),
+        (stab(F.max(diff)) > stab(F.lit(crit))).alias("reject"),
     )
 
 
@@ -2574,7 +2532,6 @@ def h19_forecast_backtest(spark, sf_dir):
     ).agg(F.round(F.sum("value"), 6).alias("y"))
     fit = holt_linear(series).where(F.col("forecast").isNotNull())
     err = F.col("y") - F.col("forecast")
-    stab = lambda c: F.round(F.round(c, 9) + F.lit(1e-12), 4) + F.lit(0.0)  # noqa: E731
     return (
         fit.groupBy("skey")
         .agg(
@@ -2590,9 +2547,9 @@ def h19_forecast_backtest(spark, sf_dir):
         .select(
             "skey",
             "n_steps",
-            stab(F.col("_mae")).alias("mae"),
-            stab(F.col("_mape")).alias("mape"),
-            stab(F.col("_bias")).alias("bias"),
+            stab(F.col("_mae"), 4).alias("mae"),
+            stab(F.col("_mape"), 4).alias("mape"),
+            stab(F.col("_bias"), 4).alias("bias"),
         )
         .orderBy("skey", "n_steps", "mae", "mape", "bias")
     )
@@ -2766,15 +2723,14 @@ def holt_winters_seasonal(series: DataFrame, period: int = HW_PERIOD) -> DataFra
         "skey string, d timestamp, y double, level double, trend double,"
         " season double, forecast double",
     )
-    stab = lambda c: F.round(F.round(c, 9) + F.lit(1e-12), 4) + F.lit(0.0)  # noqa: E731
     return out.select(
         "skey",
         "d",
         "y",
-        stab(F.col("level")).alias("level"),
-        stab(F.col("trend")).alias("trend"),
-        stab(F.col("season")).alias("season"),
-        stab(F.col("forecast")).alias("forecast"),
+        stab(F.col("level"), 4).alias("level"),
+        stab(F.col("trend"), 4).alias("trend"),
+        stab(F.col("season"), 4).alias("season"),
+        stab(F.col("forecast"), 4).alias("forecast"),
     )
 
 
@@ -2872,9 +2828,6 @@ def mutual_information(
         F.sum("cxy").alias("n"),
         F.count(F.lit(1)).alias("k_xy"),
     )
-
-    def stab(c: F.Column, dp: int = 6) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), dp) + F.lit(0.0)
 
     # H terms from the marginal tables (ln over exact counts; the
     # n-division happens once, after the sums)
@@ -3052,9 +3005,6 @@ def seasonal_decompose(e: DataFrame) -> DataFrame:
     )
     denom = float(2 * SD_PERIOD * 100)  # 4800: cents x 2x24-MA scale
 
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     raw = F.col("dsum") / (F.lit(denom) * F.col("n_obs"))
     mean_all = F.col("tsum") / (F.lit(denom) * F.col("tn"))
     return per_hod.join(overall, "skey").select(
@@ -3134,69 +3084,23 @@ ORACLE_SQL["h22_seasonal_decompose"] = f"""
 # engine-specific float path).
 
 
-SPEARMAN_RANK_PARTS = 32
-
-
 def _r2_map(li: DataFrame, vcol: str, out: str) -> DataFrame:
     """Distributed (l_returnflag, vcol) -> 2*avg_rank - 1 map.
 
     Identity: avg (fractional) rank of value v within its group is
     rank_min + (ties-1)/2 where rank_min = 1 + #(rows < v); so
     2*avg_rank - 1 = 2*#(rows < v) + ties — an exact BIGINT with no
-    float rank arithmetic. Computed WITHOUT a low-cardinality window
-    (VERDICT r9: l_returnflag has 3 values, so a window partitioned
-    on it sorts all of lineitem in 3 tasks at any cluster size):
-    (1) collapse to distinct (group, v) with tie counts — a
-    high-cardinality map-side-combinable shuffle; (2) range-partition
-    the collapsed values on (group, v) and cumulative-sum tie counts
-    per partition (parallelism = SPEARMAN_RANK_PARTS, each window
-    partition is (pid, group)-scoped); (3) add per-(pid, group)
-    prefix offsets joined back from a broadcast parts*groups-row
-    table (the t35 shard-rank discipline — the driver sees partition
-    subtotals, never rows)."""
-    from pyspark.sql import Window
-
-    spark = li.sparkSession
+    float rank arithmetic. #(rows < v) is ``prefix_sums`` over the
+    distinct (group, v) tie counts, not a window on the 3-valued
+    l_returnflag."""
     vals = li.groupBy("l_returnflag", vcol).agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    pv = (
-        vals.repartitionByRange(SPEARMAN_RANK_PARTS, "l_returnflag", vcol)
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid between the offset pass and reuse
-    )
-    totals = pv.groupBy("pid", "l_returnflag").agg(
-        F.sum("cnt").alias("c")
-    ).collect()
-    acc: dict[str, int] = {}
-    offs = []
-    for r in sorted(totals, key=lambda r: (r.l_returnflag, r.pid)):
-        offs.append((r.pid, r.l_returnflag, acc.get(r.l_returnflag, 0)))
-        acc[r.l_returnflag] = acc.get(r.l_returnflag, 0) + r.c
-    if not offs:
-        return vals.select(
-            "l_returnflag", vcol, F.lit(0).cast("long").alias(out)
-        )
-    off_df = spark.createDataFrame(
-        offs, "pid int, l_returnflag string, off long"
-    )
-    w = (
-        Window.partitionBy("pid", "l_returnflag")
-        .orderBy(vcol)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        pv.withColumn("cum", F.sum("cnt").over(w))
-        .join(F.broadcast(off_df), ["pid", "l_returnflag"])
-        .select(
-            "l_returnflag",
-            vcol,
-            # below = off + cum - cnt; r2 = 2*below + ties
-            (
-                F.lit(2) * (F.col("off") + F.col("cum") - F.col("cnt"))
-                + F.col("cnt")
-            ).alias(out),
-        )
+    ranked, _ = prefix_sums(vals, ["l_returnflag"], [vcol], ["cnt"])
+    return ranked.select(
+        "l_returnflag",
+        vcol,
+        (F.lit(2) * F.col("cnt_before") + F.col("cnt")).alias(out),
     )
 
 
@@ -3205,13 +3109,10 @@ def spearman_audit(li: DataFrame) -> DataFrame:
     (l_quantity, l_extendedprice): n, rho_s, rho_p, and the
     monotonicity gap rho_s - rho_p.
 
-    Scale shape (rewritten r10; the r9 form windowed the FULL fact
-    table partitioned on the 3-value l_returnflag — a 3-task sort at
-    any cluster size): two distributed rank maps via ``_r2_map``
-    (collapse -> range-partitioned cumsum -> broadcast offsets), each
-    joined back to lineitem on its high-cardinality (group, value)
-    key, + ONE corr/count aggregate. The integer 2*avg_rank keeps
-    rank arithmetic exact; only corr() touches floats."""
+    Scale shape: two ``_r2_map`` rank maps, each joined back to
+    lineitem on its high-cardinality (group, value) key, + ONE
+    corr/count aggregate. The integer 2*avg_rank keeps rank
+    arithmetic exact; only corr() touches floats."""
     rq = _r2_map(li, "l_quantity", "r2q")
     rp = _r2_map(li, "l_extendedprice", "r2p")
     ranked = (
@@ -3325,9 +3226,6 @@ def sax_symbols(e: DataFrame) -> DataFrame:
     bp = paa.groupBy("skey").agg(
         F.expr("percentile(paa, array(0.25, 0.5, 0.75))").alias("q")
     )
-
-    def stab(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
 
     return paa.join(F.broadcast(bp), "skey").select(
         "skey",
@@ -3515,9 +3413,6 @@ def chi2_independence(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
         )
     )
 
-    def stab(c: F.Column, dp: int) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), dp) + F.lit(0.0)
-
     nd = F.col("n").cast("double")
     chi2 = F.greatest(nd * (F.col("s") - F.lit(1.0)), F.lit(0.0))
     mind = F.least(F.col("k_x") - 1, F.col("k_y") - 1)
@@ -3686,15 +3581,12 @@ def acf_report(e: DataFrame) -> DataFrame:
         ).alias("x"),
     ).select("skey", "n", "den", "x.lag", "x.num")
 
-    def stab6(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 9) + F.lit(1e-12), 6) + F.lit(0.0)
-
     return long.where(F.col("n") > F.col("lag")).select(
         "skey",
         "lag",
         "n",
         (F.col("n") - F.col("lag")).alias("n_pairs"),
-        stab6(
+        stab(
             F.when(F.col("den") > 0, F.col("num") / F.col("den")).otherwise(
                 F.lit(0.0)
             )
@@ -3778,14 +3670,14 @@ def ljung_box(e: DataFrame) -> DataFrame:
         raw = F.when(
             F.col("den") > 0, F.col(f"num{k}") / F.col("den")
         ).otherwise(F.lit(0.0))
-        return F.round(F.round(raw, 9) + F.lit(1e-12), 6) + F.lit(0.0)
+        return stab(raw)
 
     nd = F.col("n").cast("double")
     q = F.lit(0.0)
     for k in range(1, ACF_MAX_LAG + 1):
         q = q + r6(k) * r6(k) / (nd - F.lit(float(k)))
     q = nd * (nd + F.lit(2.0)) * q
-    q4 = F.round(F.round(q, 9) + F.lit(1e-12), 4) + F.lit(0.0)
+    q4 = stab(q, 4)
     return comp.where(F.col("n") > ACF_MAX_LAG).select(
         "skey",
         "n",
@@ -3840,9 +3732,6 @@ ORACLE_SQL["h26_ljung_box"] = _lb_oracle()
 # G = 2 * sum(i * x_i) / (n * sum(x)) - (n + 1) / n  (the exact
 # discrete form, not a binned approximation).
 
-GINI_RANK_PARTS = 32
-
-
 def token_gini(docs: DataFrame) -> DataFrame:
     """Per-source Gini coefficient of per-document token counts:
     (source, n_docs, total_tokens, gini).
@@ -3854,54 +3743,21 @@ def token_gini(docs: DataFrame) -> DataFrame:
     a one-line change called out here so the overflow is a documented
     cliff, not a surprise.)
 
-    Scale shape: the global per-source rank uses the v18/t31/t35
-    distributed-rank discipline, NOT a window partitioned on the
-    handful-valued source column: range-repartition on (source,
-    tokens, doc_id) (unique tiebreak), per-partition ``row_number``
-    (parallelism = GINI_RANK_PARTS), per-(pid, source) prefix offsets
-    joined back from one broadcast table — the driver sees partition
-    subtotals, never documents. Equal token counts permute only
-    within a tie group, where sum(i) is order-free, so the rank
-    tiebreak cannot move the statistic."""
-    from pyspark.sql import Window
-
-    spark = docs.sparkSession
+    Scale shape: the per-source rank comes from ``prefix_sums``, not
+    a window on the handful-valued source. Equal token counts permute
+    only within a tie group, where sum(i) is order-free, so the
+    doc_id tiebreak cannot move the statistic."""
     base = docs.select(
         "source",
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.lit(1).alias("one"),
     )
-    pv = (
-        base.repartitionByRange(GINI_RANK_PARTS, "source", "tokens", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pid between offset pass and reuse
-    )
-    totals = pv.groupBy("pid", "source").agg(
-        F.count(F.lit(1)).alias("c")
-    ).collect()
-    acc: dict = {}
-    offs = []
-    for r in sorted(totals, key=lambda r: (r.source, r.pid)):
-        offs.append((r.pid, r.source, acc.get(r.source, 0)))
-        acc[r.source] = acc.get(r.source, 0) + r.c
-    if offs:
-        off_df = spark.createDataFrame(offs, "pid int, source string, off long")
-    else:
-        off_df = spark.createDataFrame([], "pid int, source string, off long")
-    w = Window.partitionBy("pid", "source").orderBy("tokens", "doc_id")
-    ranked = (
-        pv.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), ["pid", "source"])
-        .select(
-            "source",
-            "tokens",
-            (F.col("off") + F.col("rn")).alias("rnk"),
-        )
-    )
+    ranked, _ = prefix_sums(base, ["source"], ["tokens", "doc_id"], ["one"])
     agg = ranked.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("tokens").alias("total_tokens"),
-        F.sum(F.col("rnk") * F.col("tokens")).alias("sw"),
+        F.sum((F.col("one_before") + 1) * F.col("tokens")).alias("sw"),
     )
     nd = F.col("n_docs").cast("double")
     gini = F.when(
@@ -3912,12 +3768,7 @@ def token_gini(docs: DataFrame) -> DataFrame:
         - (nd + F.lit(1.0)) / nd,
     ).otherwise(F.lit(0.0))
     return agg.select(
-        "source",
-        "n_docs",
-        "total_tokens",
-        (F.round(F.round(gini, 9) + F.lit(1e-12), 6) + F.lit(0.0)).alias(
-            "gini"
-        ),
+        "source", "n_docs", "total_tokens", stab(gini).alias("gini")
     )
 
 

@@ -1110,7 +1110,7 @@ def q63(spark, sf_dir):
     float surfaces applies."""
     li = _t(spark, sf_dir, "lineitem")
 
-    def stab(c: F.Column) -> F.Column:
+    def stab4(c: F.Column) -> F.Column:
         # trailing + 0.0 canonicalizes IEEE -0.0 (covar of tiny
         # negative co-moment rounds to zero from below) to +0.0
         return F.round(F.round(c, 6) + F.lit(1e-9), 4) + F.lit(0.0)
@@ -1118,10 +1118,10 @@ def q63(spark, sf_dir):
     return (
         li.groupBy("l_returnflag")
         .agg(
-            stab(F.corr("l_quantity", "l_extendedprice")).alias("corr_qp"),
-            stab(F.covar_samp("l_discount", "l_tax")).alias("cov_dt"),
-            stab(F.stddev_samp("l_quantity")).alias("sd_q"),
-            stab(F.var_samp("l_discount")).alias("var_d"),
+            stab4(F.corr("l_quantity", "l_extendedprice")).alias("corr_qp"),
+            stab4(F.covar_samp("l_discount", "l_tax")).alias("cov_dt"),
+            stab4(F.stddev_samp("l_quantity")).alias("sd_q"),
+            stab4(F.var_samp("l_discount")).alias("var_d"),
             F.count(F.lit(1)).alias("c"),
         )
         .orderBy("l_returnflag", "corr_qp", "cov_dt", "sd_q", "var_d", "c")

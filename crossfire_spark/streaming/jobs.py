@@ -1019,7 +1019,7 @@ def st21_late_data_audit(spark, sf_dir):
     a single µs scalar. O(batch) per batch, flat in history size."""
     import shutil
 
-    from crossfire_spark.catalog import load_table
+    from crossfire_spark.catalog import load_table, stab
 
     work = _session_workdir("st21_")
     watch = os.path.join(work, "in")
@@ -1104,13 +1104,7 @@ def st21_late_data_audit(spark, sf_dir):
         "n_late",
         "n_ontime",
         F.expr("max_late_us DIV 1000000").alias("max_late_s"),
-        (
-            F.round(
-                F.round(F.col("n_late") / F.col("n_total"), 9) + F.lit(1e-12),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("late_share"),
+        stab(F.col("n_late") / F.col("n_total")).alias("late_share"),
     ).orderBy("event_type")
 
 

@@ -1,12 +1,20 @@
-"""As-of join / k-way merge / salting equivalence tests."""
+"""As-of join / k-way merge / salting / prefix-sum equivalence tests."""
 
 from __future__ import annotations
 
+import pathlib
+import random
+
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table
-from crossfire_spark.functions.skew import salted_agg, salted_join
+from crossfire_spark.functions.skew import (
+    prefix_sums,
+    salted_agg,
+    salted_join,
+)
 from crossfire_spark.operators.asof import asof_join, kway_merge
 from test_differential import oracle_test
 
@@ -87,6 +95,73 @@ def test_salted_join_rejects_dim_preserving_types(spark):
             salted_join(f, d, "k", how=how)
     # fact-preserving types still work
     assert salted_join(f, d, "k", how="left").count() == 1
+
+
+def _prefix_rows(n_rows, groups, seed):
+    """Seeded (g, k, v, one) rows: unique k, signed v, group g drawn
+    from ``groups`` (a repeated name makes that group hot)."""
+    rng = random.Random(seed)
+    return [
+        (rng.choice(groups), k, rng.randint(-50, 50), 1)
+        for k in rng.sample(range(10 * n_rows + 1), n_rows)
+    ]
+
+
+@pytest.mark.parametrize(
+    "n_rows, groups, by, order",
+    [
+        # one hot group: 997 of ~1000 rows, so it spans every pid
+        (1000, ["hot"] * 997 + ["a", "b", "c"], ["g"], ["k"]),
+        (3, ["a", "b"], ["g"], ["k"]),  # fewer rows than partitions
+        (300, ["a", "b", "c"], ["g"], ["-v", "k"]),  # "-": descending
+        (300, ["a", "b"], [], ["k"]),
+    ],
+    ids=["hot_group", "fewer_rows_than_parts", "descending", "no_group"],
+)
+def test_prefix_sums_equals_global_window(spark, n_rows, groups, by, order):
+    """The partition-offset prefix equals the one-task global window
+    (ROWS UNBOUNDED PRECEDING .. 1 PRECEDING) row for row, and the
+    driver dict holds each group's totals."""
+    rows = _prefix_rows(n_rows, groups, seed=n_rows)
+    df = spark.createDataFrame(rows, "g string, k long, v long, one int")
+    order = [F.col(o[1:]).desc() if o[0] == "-" else o for o in order]
+    got, totals = prefix_sums(df, by, order, ["v", "one"])
+    w = Window.partitionBy(*by).orderBy(*order)
+    before = w.rowsBetween(Window.unboundedPreceding, -1)
+    whole = Window.partitionBy(*by)
+    want = df.select(
+        *df.columns,
+        *[F.coalesce(F.sum(c).over(before), F.lit(0)).alias(f"{c}_before")
+          for c in ("v", "one")],
+        *[F.sum(c).over(whole).alias(f"{c}_total") for c in ("v", "one")],
+    )
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
+    want_totals = {}
+    for g, _, v, one in rows:
+        t = want_totals.setdefault((g,) if by else (), {"v": 0, "one": 0})
+        t["v"] += v
+        t["one"] += one
+    assert totals == want_totals
+
+
+def test_prefix_sums_empty_input(spark):
+    df = spark.createDataFrame([], "g string, k long, one int")
+    got, totals = prefix_sums(df, ["g"], ["k"], ["one"])
+    assert got.columns == ["g", "k", "one", "one_before", "one_total"]
+    assert got.collect() == [] and totals == {}
+
+
+def test_partition_ids_only_in_prefix_sums():
+    """Partition-id arithmetic lives in one kernel: every other module
+    ranks through ``prefix_sums`` instead of re-implementing it."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    users = sorted(
+        str(f.relative_to(pkg))
+        for f in pkg.rglob("*.py")
+        if "spark_partition_id" in f.read_text()
+    )
+    assert users == ["functions/skew.py"]
 
 
 def test_a04_interpolation_invariants(spark, sf_dir):
