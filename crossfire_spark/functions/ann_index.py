@@ -13,9 +13,19 @@ Index layouts (all snapshot tables under the index root):
 
 - IVF:      ``<root>/centroids``    (cid int, ce array<double>)
             ``<root>/assignments``  (vec_id, embedding, cid)
+- PQ:       ``<root>/codebooks``    (s int, j int, c array<double>)
+            ``<root>/codes``        (vec_id, codes array<int>)
 - MinHash:  ``<root>/membership``   (doc_id, fp, rep) exact-dup groups
             ``<root>/signatures``   (doc_id, m0..m{k-1}) wide minhash
             rows for group representatives only
+
+The IVF/PQ builds and queries call the kernels of
+:mod:`crossfire_spark.functions.similarity` that the ad-hoc queries
+call: ``first_n_centroids`` / ``centroid_frame`` and ``ivf_assign``
+build the IVF tables, ``pq_codebooks`` and ``pq_encode`` the PQ ones;
+a query runs ``ivf_topk``, ``pq_topk`` or ``ivf_pq_search`` over the
+stored tables. So an index answer equals the ad-hoc answer by
+construction, and both share one oracle.
 
 Rebuilds are new snapshot versions — readers pinned to an old version
 keep a consistent index; ``snapshot_expire`` reclaims superseded
@@ -44,6 +54,10 @@ from crossfire_spark.functions.similarity import (
     IVF_CENTROIDS,
     IVF_PROBES,
     TOPK,
+    centroid_frame,
+    first_n_centroids,
+    ivf_assign,
+    ivf_pq_search,
     ivf_topk,
     kmeans_fit,
 )
@@ -65,39 +79,14 @@ def build_ivf_index(
     plus the corpus→centroid assignment table, committed to the
     snapshot sink. The assignment pass — the full corpus scan — never
     runs again at query time."""
-    spark = embeddings.sparkSession
     if use_kmeans:
         cents, _ = kmeans_fit(embeddings, k=n_centroids, n_iter=n_iter)
-        cent = spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)], "cid int, ce array<double>"
-        )
+        cent = centroid_frame(embeddings.sparkSession, cents)
     else:
-        cent = embeddings.where(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").cast("array<double>").alias("ce"),
-        )
-    assignments = ivf_assign(embeddings, cent)
+        cent = first_n_centroids(embeddings, n_centroids)
+    assignments = ivf_assign(embeddings, cent).select("vec_id", "embedding", "cid")
     snapshot_write(cent, os.path.join(path, "centroids"))
     snapshot_write(assignments, os.path.join(path, "assignments"))
-
-
-def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
-    """corpus → nearest-centroid assignment (vec_id, embedding, cid):
-    one scan against the broadcast centroid table, rank-deterministic
-    (dist rounded 6, cid tiebreak) — identical to the ad-hoc s03 rule."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.functions.similarity import _sqdist
-
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.round(_sqdist("embedding", "ce"), 6), F.col("cid")
-    )
-    return (
-        embeddings.crossJoin(F.broadcast(centroids))
-        .withColumn("rn", F.row_number().over(aw))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cid")
-    )
 
 
 def query_ivf_index(
@@ -107,10 +96,10 @@ def query_ivf_index(
     k: int = TOPK,
     n_probes: int = IVF_PROBES,
 ) -> DataFrame:
-    """ANN top-k against a persisted IVF index: reads the centroid and
-    assignment snapshot tables; no corpus-wide recompute. Output is
-    identical to :func:`similarity.ivf_topk` over the same corpus and
-    centroids (same probe rule, same re-rank keys)."""
+    """ANN top-k against a persisted IVF index: :func:`similarity.ivf_topk`
+    over the stored centroid and assignment tables, so no corpus-wide
+    recompute and the same output as the ad-hoc run over the same
+    corpus and centroids."""
     cent = snapshot_read(spark, os.path.join(path, "centroids"))
     assignments = snapshot_read(spark, os.path.join(path, "assignments"))
     return ivf_topk(
@@ -346,11 +335,11 @@ def query_sq8_index(
     queries: DataFrame,
     k: int = TOPK,
 ) -> DataFrame:
-    """SQ8 ANN top-k against a persisted index: integer candidate
-    scores come from the stored code table, queries quantize against
-    the stored codebook, exact re-rank re-reads only candidate
-    vectors. Identical output to :func:`similarity.sq8_topk` over the
-    same corpus (same codes, same ranking keys)."""
+    """SQ8 ANN top-k against a persisted index: :func:`similarity.sq8_topk`
+    over the stored codebook and code table — integer candidate scores
+    from the stored codes, queries quantized against the stored
+    codebook, exact re-rank of candidate vectors only — so the output
+    equals the ad-hoc run over the same corpus."""
     from crossfire_spark.functions.similarity import sq8_topk
 
     bounds_df = snapshot_read(spark, os.path.join(path, "bounds"))
@@ -479,6 +468,20 @@ def build_pq_index(embeddings: DataFrame, path: str) -> None:
     return books
 
 
+def read_pq_codebooks(spark: SparkSession, path: str):
+    """The (M, K, d) codebook tensor :func:`build_pq_index` committed
+    under ``path`` — one small collect (M·K rows of d doubles)."""
+    import numpy as np
+
+    cb = snapshot_read(spark, os.path.join(path, "codebooks")).collect()
+    m = max(r["s"] for r in cb) + 1
+    kk = max(r["j"] for r in cb) + 1
+    books = np.zeros((m, kk, len(cb[0]["c"])), dtype=np.float64)
+    for r in cb:
+        books[r["s"], r["j"]] = r["c"]
+    return books
+
+
 def query_pq_index(
     spark: SparkSession,
     path: str,
@@ -486,22 +489,13 @@ def query_pq_index(
     queries: DataFrame,
     k: int = TOPK,
 ) -> DataFrame:
-    """PQ ANN against a persisted index: ADC candidates come from the
-    stored code table, distance tables build against the stored
-    codebooks, exact re-rank re-reads only candidate vectors.
-    Identical output to :func:`similarity.pq_topk` over the same
-    corpus (same codes, same ranking keys)."""
-    import numpy as np
-
+    """PQ ANN against a persisted index: :func:`similarity.pq_topk`
+    over the stored codebooks and code table, so the output is
+    identical to the ad-hoc run over the same corpus; exact re-rank
+    re-reads only candidate vectors."""
     from crossfire_spark.functions.similarity import pq_topk
 
-    cb = snapshot_read(spark, os.path.join(path, "codebooks")).collect()
-    m = max(r["s"] for r in cb) + 1
-    kk = max(r["j"] for r in cb) + 1
-    d = len(cb[0]["c"])
-    books = np.zeros((m, kk, d), dtype=np.float64)
-    for r in cb:
-        books[r["s"], r["j"]] = r["c"]
+    books = read_pq_codebooks(spark, path)
     codes = snapshot_read(spark, os.path.join(path, "codes"))
     return pq_topk(embeddings, queries, k=k, books=books, corpus_codes=codes)
 
@@ -649,62 +643,20 @@ def query_ivf_pq_index(
     """IVF-PQ ANN against a persisted index: probes rank against the
     stored centroid table, ADC candidates come from the stored
     assignment/code tables restricted to probed buckets, exact cosine
-    re-ranks survivors only. Identical output to
-    :func:`similarity.ivf_pq_topk` over the same corpus (same
-    centroids, assignment rule, codebooks, codes, and ranking keys) —
-    so it shares ``_ivf_pq_oracle`` verbatim."""
-    import numpy as np
-
-    from pyspark.sql import Window
-
-    from crossfire_spark.functions.similarity import (
-        PQ_CAND_MULT,
-        _adc_dist_col,
-        _exact_rerank,
-        _sqdist,
-        pq_adc_tables,
+    re-ranks survivors only. It runs :func:`similarity.ivf_pq_search`,
+    the body of :func:`similarity.ivf_pq_topk`, on the stored tables,
+    so the output is identical to the ad-hoc run and shares
+    ``_ivf_pq_oracle`` verbatim."""
+    return ivf_pq_search(
+        embeddings,
+        queries,
+        read_pq_codebooks(spark, path),
+        snapshot_read(spark, os.path.join(path, "centroids")),
+        snapshot_read(spark, os.path.join(path, "assignments")),
+        snapshot_read(spark, os.path.join(path, "codes")),
+        k,
+        n_probes,
     )
-
-    cb = snapshot_read(spark, os.path.join(path, "codebooks")).collect()
-    m = max(r["s"] for r in cb) + 1
-    kk = max(r["j"] for r in cb) + 1
-    books = np.zeros((m, kk, len(cb[0]["c"])), dtype=np.float64)
-    for r in cb:
-        books[r["s"], r["j"]] = r["c"]
-    cent = snapshot_read(spark, os.path.join(path, "centroids"))
-    assign = snapshot_read(spark, os.path.join(path, "assignments")).select(
-        "vec_id", "cid"
-    )
-    codes = snapshot_read(spark, os.path.join(path, "codes"))
-    qw = Window.partitionBy("qid").orderBy(
-        F.round(_sqdist("qe", "ce"), 6), F.col("cid")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(qw))
-        .where(F.col("rn") <= n_probes)
-        .select("qid", "cid")
-    )
-    adc_q = pq_adc_tables(queries, books)
-    cand0 = (
-        assign.join(probes, "cid")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id")
-    )
-    scored = (
-        cand0.join(codes, "vec_id")
-        .join(F.broadcast(adc_q), "qid")
-        .select(
-            "qid", "vec_id", F.round(_adc_dist_col(m, kk), 9).alias("adcd")
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adcd").asc(), F.col("vec_id"))
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= PQ_CAND_MULT * k)
-        .select("qid", "vec_id")
-    )
-    return _exact_rerank(embeddings, queries, cand, k)
 
 
 def s21_ivf_pq_index(spark, sf_dir):

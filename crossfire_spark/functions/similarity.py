@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from crossfire_spark.catalog import load_table, spread, stab
+from crossfire_spark.functions.dedup import _cap_buckets, connected_components
 
 TOPK = 5
 QUERY_STRIDE = 50
@@ -335,8 +336,6 @@ def lsh_topk_candidates(
     bytes for zero information; vectors are joined back on the id
     *after* the distinct (corpus side one hash join, query side a
     broadcast)."""
-    from crossfire_spark.functions.dedup import _cap_buckets
-
     bits_per_band = bits // bands
     c_b = corpus.select(
         "vec_id",
@@ -396,6 +395,56 @@ def _sqdist(a: str, b: str) -> F.Column:
         " * (cast(x as double) - cast(y as double))),"
         " cast(0.0 as double), (acc, v) -> acc + v)"
     )
+
+
+# ------------------------------------------------- IVF kernels
+# Every IVF query (s03/s04/s06/s20/s21/s22/s24/s28) routes through
+# these: one centroid table shape, one ranking rule.
+
+
+def first_n_centroids(embeddings: DataFrame, n_centroids: int) -> DataFrame:
+    """(cid, ce array<double>) — the deterministic centroid rule: the
+    first ``n_centroids`` vectors by vec_id. The cast is exact
+    (float → double), and every distance casts to double anyway."""
+    return embeddings.where(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").cast("array<double>").alias("ce"),
+    )
+
+
+def centroid_frame(spark: SparkSession, cents) -> DataFrame:
+    """(cid, ce array<double>) from driver-side centroids, e.g. a
+    :func:`kmeans_fit` result; cid is the list position."""
+    return spark.createDataFrame(list(enumerate(cents)), "cid int, ce array<double>")
+
+
+def nearest_centroids(
+    rows: DataFrame,
+    key: str,
+    vec: str,
+    centroids: DataFrame,
+    n: int,
+) -> DataFrame:
+    """The ``n`` nearest centroids of each row of ``rows`` (keyed by
+    ``key``, vector column ``vec``): one scan against the broadcast
+    centroid table, ranked by ``(ROUND(sqdist, 6), cid)`` so ties are
+    deterministic on any engine. Keeps every input column plus
+    ``cid``, ``ce`` and the 1-based rank ``rn``. Corpus assignment is
+    n = 1 over (vec_id, embedding); query probes are n = n_probes over
+    (qid, qe)."""
+    w = Window.partitionBy(key).orderBy(F.round(_sqdist(vec, "ce"), 6), F.col("cid"))
+    return (
+        rows.crossJoin(F.broadcast(centroids))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= n)
+    )
+
+
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
+    """corpus → nearest-centroid assignment: :func:`nearest_centroids`
+    with n = 1 over (vec_id, embedding). Callers select the columns
+    they keep (``ce`` is there for a residual)."""
+    return nearest_centroids(embeddings, "vec_id", "embedding", centroids, 1)
 
 
 # FAISS practice trains coarse quantizers on a bounded sample (faiss
@@ -495,33 +544,14 @@ def ivf_topk(
     """
     cent = centroids
     if cent is None:
-        cent = embeddings.where(F.col("vec_id") < n_centroids).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-        )
-    if assignments is not None:
-        # persisted-index path (functions.ann_index): the corpus scan
-        # that builds the assignment table already happened at build
-        assign = assignments.select("vec_id", "embedding", "cid")
-    else:
-        # corpus -> nearest centroid
-        aw = Window.partitionBy("vec_id").orderBy(
-            F.round(_sqdist("embedding", "ce"), 6), F.col("cid")
-        )
-        assign = (
-            embeddings.crossJoin(F.broadcast(cent))
-            .withColumn("rn", F.row_number().over(aw))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "embedding", "cid")
-        )
-    # query -> n_probes nearest centroids
-    qw = Window.partitionBy("qid").orderBy(
-        F.round(_sqdist("qe", "ce"), 6), F.col("cid")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(qw))
-        .where(F.col("rn") <= n_probes)
-        .select("qid", "qe", "cid")
+        cent = first_n_centroids(embeddings, n_centroids)
+    if assignments is None:
+        assignments = ivf_assign(embeddings, cent)
+    # else: persisted-index path (functions.ann_index) — the corpus
+    # scan that builds the assignment table already happened at build
+    assign = assignments.select("vec_id", "embedding", "cid")
+    probes = nearest_centroids(queries, "qid", "qe", cent, n_probes).select(
+        "qid", "qe", "cid"
     )
     cand = (
         assign.join(probes, "cid")
@@ -566,9 +596,7 @@ def s04_ivf_kmeans(spark, sf_dir):
     cents, _ = kmeans_fit(em, n_iter=3)
     if not cents:  # empty corpus
         return _empty_topk(spark)
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid int, ce array<double>"
-    )
+    cent_df = centroid_frame(spark, cents)
     return ivf_topk(em, _query_set(em), centroids=cent_df).orderBy(
         "qid", "vec_id", "sim"
     )
@@ -750,8 +778,6 @@ def ann_graph_candidates(
     against a SQL oracle over the exported candidates (the d13
     soundness pattern — the only non-SQL step is then the banding
     itself). ``signed`` must carry (vec_id, lsh_sig)."""
-    from crossfire_spark.functions.dedup import _cap_buckets
-
     bits_per_band = bits // bands
     b_tab = signed.select(
         "vec_id",
@@ -876,7 +902,7 @@ def density_clusters(
         .join(core.select(F.col("vec_id").alias("vb")), "vb", "left_semi")
         .select(F.col("va").alias("doc_a"), F.col("vb").alias("doc_b"))
     )
-    cc = connected_components_of(core_edges)
+    cc = connected_components(core_edges)
     # isolated cores (no core neighbor) are their own singleton cluster
     core_lbl = (
         core.join(cc, core.vec_id == cc.doc_id, "left")
@@ -902,12 +928,6 @@ def density_clusters(
     ).unionByName(
         border.select("vec_id", "cluster_id", F.lit("border").alias("kind"))
     )
-
-
-def connected_components_of(edges: DataFrame) -> DataFrame:
-    from crossfire_spark.functions.dedup import connected_components
-
-    return connected_components(edges)
 
 
 def s18_density_clusters(spark, sf_dir):
@@ -1105,7 +1125,8 @@ def pq_codebooks(embeddings: DataFrame):
     first ``PQ_K`` corpus vectors by vec_id — the nearest-sample
     analogue of s03's deterministic centroids (a production build
     swaps in per-subspace k-means; the encode/ADC machinery is
-    identical). Driver traffic is K x dim doubles."""
+    identical). K = min(PQ_K, corpus rows). Driver traffic is
+    K x dim doubles. s22 passes its residuals as ``embedding``."""
     rows = (
         embeddings.orderBy("vec_id").limit(PQ_K).select("embedding").collect()
     )
@@ -1114,7 +1135,7 @@ def pq_codebooks(embeddings: DataFrame):
     C = np.array([list(r[0]) for r in rows], dtype=np.float64)  # (K, D)
     if C.shape[1] % PQ_M:
         raise ValueError(f"dim {C.shape[1]} not divisible by M={PQ_M}")
-    return C.reshape(PQ_K, PQ_M, -1).transpose(1, 0, 2)  # (M, K, d)
+    return C.reshape(len(C), PQ_M, -1).transpose(1, 0, 2)  # (M, K, d)
 
 
 def pq_encode(embeddings: DataFrame, books) -> DataFrame:
@@ -1146,6 +1167,13 @@ def pq_adc_tables(queries: DataFrame, books) -> DataFrame:
     "model" of the PQ scan: per query M*K doubles (8 KiB at M=16,
     K=64), so even a million-query batch is a few GiB of broadcast —
     never a driver-resident tensor in a UDF closure."""
+    return queries.select("qid", _adc_table_udf(books)("qe").alias("adc"))
+
+
+def _adc_table_udf(books):
+    """The Arrow-batched UDF behind :func:`pq_adc_tables`: a vector
+    column → its flattened (M·K) table of subspace distances to
+    ``books``. s22 applies it to per-probe query residuals."""
     from pyspark.sql.functions import pandas_udf
 
     B = np.asarray(books, dtype=np.float64)
@@ -1157,7 +1185,7 @@ def pq_adc_tables(queries: DataFrame, books) -> DataFrame:
         T = ((Q - B[None, :, :, :]) ** 2).sum(-1)  # (batch, M, K)
         return pd.Series(list(T.reshape(len(qe), m * kk)))
 
-    return queries.select("qid", _tab("qe").alias("adc"))
+    return _tab
 
 
 def _adc_dist_col(m: int, kk: int) -> F.Column:
@@ -1165,10 +1193,9 @@ def _adc_dist_col(m: int, kk: int) -> F.Column:
     ``element_at`` lookups into the flattened per-query table
     (``adc[s*K + code + 1]``), summed LEFT-TO-RIGHT in fixed subspace
     order — the same sequence a numpy accumulation would perform, so
-    the float result is reduction-order-stable on any engine. Shared
-    by the full-corpus PQ scan (:func:`pq_topk`) and the IVF-routed
-    one (:func:`ivf_pq_topk`); expects ``codes`` and ``adc`` columns
-    in scope."""
+    the float result is reduction-order-stable on any engine. Used by
+    :func:`adc_shortlist`; expects ``codes`` and ``adc`` columns in
+    scope."""
     dist = F.element_at(
         "adc", (F.lit(0) * kk + F.element_at("codes", 1) + 1).cast("int")
     )
@@ -1177,6 +1204,22 @@ def _adc_dist_col(m: int, kk: int) -> F.Column:
             "adc", (F.lit(s) * kk + F.element_at("codes", s + 1) + 1).cast("int")
         )
     return dist
+
+
+def adc_shortlist(pairs: DataFrame, books, k: int) -> DataFrame:
+    """The ADC over-fetch cut shared by every PQ search (s09/s10/s20/
+    s21/s22/s28/st14): score each (qid, vec_id) pair of ``pairs``
+    (``codes`` and ``adc`` in scope) with the 9-dp-rounded ADC sum and
+    keep the ``PQ_CAND_MULT * k`` nearest per query, vec_id breaking
+    ties. Output (qid, vec_id) feeds :func:`_exact_rerank`."""
+    m, kk = np.shape(books)[:2]
+    w = Window.partitionBy("qid").orderBy(F.col("adcd").asc(), F.col("vec_id"))
+    return (
+        pairs.select("qid", "vec_id", F.round(_adc_dist_col(m, kk), 9).alias("adcd"))
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= PQ_CAND_MULT * k)
+        .select("qid", "vec_id")
+    )
 
 
 def pq_topk(
@@ -1206,33 +1249,19 @@ def pq_topk(
     subspace order — the same sequence the (removed) numpy
     accumulation performed — and round to 9 dp before ranking; no
     BLAS, no reduction-order hazard."""
-    from pyspark.sql import Window
-
     if books is None:
         books = pq_codebooks(embeddings)
     if books is None:  # empty corpus
         return _empty_topk(embeddings.sparkSession)
-    B = np.asarray(books, dtype=np.float64)
-    m, kk, _d = B.shape
     codes = (
         corpus_codes
         if corpus_codes is not None
         else pq_encode(embeddings, books)
     )
-    adc_q = pq_adc_tables(queries, books)
-    dist = _adc_dist_col(m, kk)
-    scored = (
-        codes.join(F.broadcast(adc_q))
-        .where(F.col("qid") != F.col("vec_id"))
-        .select("qid", "vec_id", F.round(dist, 9).alias("adc"))
+    pairs = codes.join(F.broadcast(pq_adc_tables(queries, books))).where(
+        F.col("qid") != F.col("vec_id")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("vec_id"))
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= PQ_CAND_MULT * k)
-        .select("qid", "vec_id")
-    )
-    return _exact_rerank(embeddings, queries, cand, k)
+    return _exact_rerank(embeddings, queries, adc_shortlist(pairs, books, k), k)
 
 
 def _exact_rerank(
@@ -2125,55 +2154,51 @@ def ivf_pq_topk(
     chain (:func:`_adc_dist_col`). Deterministic end-to-end (rounded
     assignment/encode distances, id tiebreaks), so the whole composite
     is DuckDB-oracle-exact — see ``_ivf_pq_oracle``."""
-    from pyspark.sql import Window
-
     books = pq_codebooks(embeddings)
     if books is None:  # empty corpus
         return _empty_topk(queries.sparkSession)
-    B = np.asarray(books, dtype=np.float64)
-    m, kk = B.shape[0], B.shape[1]
-    cent = embeddings.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
+    cent = first_n_centroids(embeddings, n_centroids)
+    return ivf_pq_search(
+        embeddings,
+        queries,
+        books,
+        cent,
+        ivf_assign(embeddings, cent),
+        pq_encode(embeddings, books),
+        k,
+        n_probes,
     )
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.round(_sqdist("embedding", "ce"), 6), F.col("cid")
+
+
+def ivf_pq_search(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    books,
+    centroids: DataFrame,
+    assignments: DataFrame,
+    codes: DataFrame,
+    k: int,
+    n_probes: int,
+) -> DataFrame:
+    """The IVF-PQ search body: probes (the ``n_probes`` nearest
+    centroids per query) → corpus candidates in the probed buckets →
+    their PQ codes → broadcast per-query ADC tables → the
+    :func:`adc_shortlist` cut → exact cosine re-rank. :func:`ivf_pq_topk`
+    builds its inputs; ``ann_index.query_ivf_pq_index`` reads them
+    from snapshot tables. ``assignments`` carries (vec_id, cid),
+    ``codes`` (vec_id, codes)."""
+    probes = nearest_centroids(queries, "qid", "qe", centroids, n_probes).select(
+        "qid", "cid"
     )
-    assign = (
-        embeddings.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(aw))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    qw = Window.partitionBy("qid").orderBy(
-        F.round(_sqdist("qe", "ce"), 6), F.col("cid")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(qw))
-        .where(F.col("rn") <= n_probes)
-        .select("qid", "cid")
-    )
-    codes = pq_encode(embeddings, books)
-    adc_q = pq_adc_tables(queries, books)
-    cand0 = (
-        assign.join(probes, "cid")
+    pairs = (
+        assignments.select("vec_id", "cid")
+        .join(probes, "cid")
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
+        .join(codes, "vec_id")
+        .join(F.broadcast(pq_adc_tables(queries, books)), "qid")
     )
-    scored = (
-        cand0.join(codes, "vec_id")
-        .join(F.broadcast(adc_q), "qid")
-        .select(
-            "qid", "vec_id", F.round(_adc_dist_col(m, kk), 9).alias("adcd")
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("adcd").asc(), F.col("vec_id"))
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= PQ_CAND_MULT * k)
-        .select("qid", "vec_id")
-    )
-    return _exact_rerank(embeddings, queries, cand, k)
+    return _exact_rerank(embeddings, queries, adc_shortlist(pairs, books, k), k)
 
 
 def s20_ivf_pq_topk(spark, sf_dir):
@@ -2296,75 +2321,28 @@ def ivf_pq_residual_topk(
     code tiebreak, the M ADC lookups sum left-to-right, candidates
     rank at 9 dp, re-rank at 4 dp — fully DuckDB-oracled
     (``_ivf_pq_residual_oracle``)."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
-
-    cent = embeddings.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").cast("array<double>").alias("ce"),
-    )
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.round(_sqdist("embedding", "ce"), 6), F.col("cid")
-    )
-    assign = (
-        embeddings.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(aw))
-        .where(F.col("rn") == 1)
-        .select(
-            "vec_id", "cid", _residual_col("embedding", "ce").alias("resid")
-        )
+    cent = first_n_centroids(embeddings, n_centroids)
+    assign = ivf_assign(embeddings, cent).select(
+        "vec_id", "cid", _residual_col("embedding", "ce").alias("resid")
     )
     # Residual codebooks: the nearest-sample rule of pq_codebooks,
-    # applied to residuals — the first PQ_K residual vectors by
-    # vec_id. K x dim doubles of driver traffic, corpus-independent.
-    book_rows = (
-        assign.orderBy("vec_id").limit(PQ_K).select("resid").collect()
-    )
-    if not book_rows:
+    # applied to residuals.
+    resid = assign.select("vec_id", F.col("resid").alias("embedding"))
+    books = pq_codebooks(resid)
+    if books is None:
         return _empty_topk(embeddings.sparkSession)
-    C = np.array([list(r[0]) for r in book_rows], dtype=np.float64)
-    if C.shape[1] % PQ_M:
-        raise ValueError(f"dim {C.shape[1]} not divisible by M={PQ_M}")
-    books = C.reshape(len(C), PQ_M, -1).transpose(1, 0, 2)
-    B = np.asarray(books, dtype=np.float64)
-    m, kk, d = B.shape
-
-    codes = pq_encode(
-        assign.select("vec_id", F.col("resid").alias("embedding")), books
+    codes = pq_encode(resid, books)
+    probes = nearest_centroids(queries, "qid", "qe", cent, n_probes).select(
+        "qid", "cid", _residual_col("qe", "ce").alias("qresid")
     )
-    qw = Window.partitionBy("qid").orderBy(
-        F.round(_sqdist("qe", "ce"), 6), F.col("cid")
-    )
-    probes = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(qw))
-        .where(F.col("rn") <= n_probes)
-        .select("qid", "cid", _residual_col("qe", "ce").alias("qresid"))
-    )
-
-    @pandas_udf("array<double>")
-    def _tab(qr: pd.Series) -> pd.Series:
-        Q = np.stack(qr.values).astype(np.float64).reshape(len(qr), m, 1, d)
-        T = ((Q - B[None, :, :, :]) ** 2).sum(-1)  # (batch, M, K)
-        return pd.Series(list(T.reshape(len(qr), m * kk)))
-
-    adc_q = probes.select("qid", "cid", _tab("qresid").alias("adc"))
-    scored = (
+    adc_q = probes.select("qid", "cid", _adc_table_udf(books)("qresid").alias("adc"))
+    pairs = (
         assign.select("vec_id", "cid")
         .join(codes, "vec_id")
         .join(F.broadcast(adc_q), "cid")
         .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", F.round(_adc_dist_col(m, kk), 9).alias("adcd")
-        )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adcd").asc(), F.col("vec_id"))
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= PQ_CAND_MULT * k)
-        .select("qid", "vec_id")
-    )
-    return _exact_rerank(embeddings, queries, cand, k)
+    return _exact_rerank(embeddings, queries, adc_shortlist(pairs, books, k), k)
 
 
 def s22_ivf_pq_residual(spark, sf_dir):
@@ -2471,68 +2449,66 @@ def matryoshka_recall(
     one corpus scan, per-query window top-k); the recall join is
     top-k-set sized. Recall = integer intersection counts / (k·|Q|)
     — a single exact division."""
-    from pyspark.sql import Window
 
+    def tiers():
+        w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
+        for d in MRL_DIMS:
+            corpus = embeddings.select(
+                "vec_id", F.slice("embedding", 1, d).alias("te")
+            ).withColumn("nrm", _norm("te"))
+            q = queries.select(
+                "qid", F.slice("qe", 1, d).alias("tq")
+            ).withColumn("qn", _norm("tq"))
+            scored = corpus.join(
+                F.broadcast(q), F.col("vec_id") != F.col("qid")
+            ).select(
+                "qid",
+                "vec_id",
+                F.round(
+                    _dot("te", "tq") / (F.col("nrm") * F.col("qn")), 4
+                ).alias("sim"),
+            )
+            yield d, (
+                scored.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= k)
+                .select("qid", "vec_id")
+            )
+
+    return _recall_curve(embeddings, queries, k, "dims", tiers())
+
+
+def _recall_curve(
+    embeddings: DataFrame, queries: DataFrame, k: int, tier: str, tiers
+) -> DataFrame:
+    """The shared tail of the recall sweeps (s23 MRL dims, s24
+    nprobe): (tier, n_queries, n_hits, recall) with one row per
+    ``(tier value, approx top-k)`` that the generator ``tiers`` yields.
+    The exact top-k is the one O(N·|Q|) corpus scan, materialized once
+    so no tier's hit join re-triggers it; ``tiers`` is consumed only
+    after the empty-query guard, so its own set-up jobs follow the
+    count. recall = n_hits / (k·|Q|), stabilized to 6 dp."""
     exact = (
         cosine_topk(embeddings, queries, k=k)
         .select(F.col("qid").alias("eqid"), F.col("vec_id").alias("ev"))
-        # Materialize once: the full-width exact top-k is the O(N·|Q|)
-        # corpus scan, and every tier's hits-join would otherwise
-        # re-trigger it (ADVICE r7) — same discipline as d26's shared
-        # pair table.
         .localCheckpoint()
     )
     n_q = queries.count()
+    spark = embeddings.sparkSession
     if n_q == 0:  # empty corpus/query set — recall is undefined
-        return embeddings.sparkSession.createDataFrame(
-            [], "dims int, n_queries long, n_hits long, recall double"
+        return spark.createDataFrame(
+            [], f"{tier} int, n_queries long, n_hits long, recall double"
         )
-    out = None
-    for d in MRL_DIMS:
-        corpus = embeddings.select(
-            "vec_id", F.slice("embedding", 1, d).alias("te")
-        ).withColumn("nrm", _norm("te"))
-        q = queries.select(
-            "qid", F.slice("qe", 1, d).alias("tq")
-        ).withColumn("qn", _norm("tq"))
-        scored = corpus.join(
-            F.broadcast(q), F.col("vec_id") != F.col("qid")
-        ).select(
-            "qid",
-            "vec_id",
-            F.round(
-                _dot("te", "tq") / (F.col("nrm") * F.col("qn")), 4
-            ).alias("sim"),
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("sim").desc(), F.col("vec_id")
-        )
-        approx = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("qid", "vec_id")
-        )
-        hits = approx.join(
-            exact,
-            (F.col("qid") == F.col("eqid")) & (F.col("vec_id") == F.col("ev")),
-        ).count()
-        row = embeddings.sparkSession.createDataFrame(
-            [(d, n_q, hits)], "dims int, n_queries long, n_hits long"
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.select(
-        "dims",
+    hit = (F.col("qid") == F.col("eqid")) & (F.col("vec_id") == F.col("ev"))
+    rows = [(t, n_q, approx.join(exact, hit).count()) for t, approx in tiers]
+    return spark.createDataFrame(
+        rows, f"{tier} int, n_queries long, n_hits long"
+    ).select(
+        tier,
         "n_queries",
         "n_hits",
-        (
-            F.round(
-                F.round(
-                    F.col("n_hits") / (F.lit(float(k)) * F.col("n_queries")), 9
-                )
-                + F.lit(1e-12),
-                6,
-            )
-        ).alias("recall"),
+        stab(F.col("n_hits") / (F.lit(float(k)) * F.col("n_queries"))).alias(
+            "recall"
+        ),
     )
 
 
@@ -2725,95 +2701,50 @@ def ivf_probe_recall(
     every tier then costs one prn filter + one per-query rank over
     the pre-scored rows. Ranking keys identical to ``ivf_topk``
     (dist 6 dp + cid tiebreak, sim 4 dp + vec_id tiebreak)."""
-    exact = (
-        cosine_topk(embeddings, queries, k=k)
-        .select(F.col("qid").alias("eqid"), F.col("vec_id").alias("ev"))
-        .localCheckpoint()
-    )
-    n_q = queries.count()
-    if n_q == 0:
-        return embeddings.sparkSession.createDataFrame(
-            [], "n_probes int, n_queries long, n_hits long, recall double"
+
+    def tiers():
+        cent = first_n_centroids(embeddings, n_centroids)
+        assign = (
+            ivf_assign(embeddings, cent)
+            .select("vec_id", "embedding", "cid")
+            .localCheckpoint()
         )
-    cent = embeddings.where(F.col("vec_id") < n_centroids).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
-    )
-    aw = Window.partitionBy("vec_id").orderBy(
-        F.round(_sqdist("embedding", "ce"), 6), F.col("cid")
-    )
-    assign = (
-        embeddings.crossJoin(F.broadcast(cent))
-        .withColumn("rn", F.row_number().over(aw))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cid")
-        .localCheckpoint()
-    )
-    qw = Window.partitionBy("qid").orderBy(
-        F.round(_sqdist("qe", "ce"), 6), F.col("cid")
-    )
-    pranked = (
-        queries.crossJoin(F.broadcast(cent))
-        .withColumn("prn", F.row_number().over(qw))
-        .where(F.col("prn") <= max(sweep))
-        .select("qid", "qe", "cid", "prn")
-        .localCheckpoint()
-    )
-    # Score ONCE at max(sweep) probes, carrying the probe rank each
-    # candidate entered at (r10: the per-tier loop previously re-ran
-    # the cosine kernel over nested candidate sets — tier p's
-    # candidates are a subset of p_max's, so Σ_p p/p_max of the
-    # scoring was redundant; a tier now costs one filter + one
-    # per-query rank over already-scored rows). sim per (qid, vec_id)
-    # is tier-independent, so results are bit-identical.
-    scored_all = (
-        assign.join(pranked, "cid")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            "prn",
-            F.round(
-                _dot("embedding", "qe") / (_norm("embedding") * _norm("qe")),
-                4,
-            ).alias("sim"),
+        pranked = (
+            nearest_centroids(queries, "qid", "qe", cent, max(sweep))
+            .select("qid", "qe", "cid", F.col("rn").alias("prn"))
+            .localCheckpoint()
         )
-        .localCheckpoint()  # every tier re-ranks it
-    )
-    rows = []
-    for p in sweep:
-        w = Window.partitionBy("qid").orderBy(
-            F.col("sim").desc(), F.col("vec_id")
-        )
-        approx = (
-            scored_all.where(F.col("prn") <= p)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("qid", "vec_id")
-        )
-        hits = approx.join(
-            exact,
-            (F.col("qid") == F.col("eqid"))
-            & (F.col("vec_id") == F.col("ev")),
-        ).count()
-        rows.append((p, n_q, hits))
-    out = embeddings.sparkSession.createDataFrame(
-        rows, "n_probes int, n_queries long, n_hits long"
-    )
-    return out.select(
-        "n_probes",
-        "n_queries",
-        "n_hits",
-        (
-            F.round(
+        # Score ONCE at max(sweep) probes, carrying the probe rank each
+        # candidate entered at (r10: the per-tier loop previously re-ran
+        # the cosine kernel over nested candidate sets — tier p's
+        # candidates are a subset of p_max's, so Σ_p p/p_max of the
+        # scoring was redundant; a tier now costs one filter + one
+        # per-query rank over already-scored rows). sim per (qid, vec_id)
+        # is tier-independent, so results are bit-identical.
+        scored_all = (
+            assign.join(pranked, "cid")
+            .where(F.col("vec_id") != F.col("qid"))
+            .select(
+                "qid",
+                "vec_id",
+                "prn",
                 F.round(
-                    F.col("n_hits") / (F.lit(float(k)) * F.col("n_queries")),
-                    9,
-                )
-                + F.lit(1e-12),
-                6,
+                    _dot("embedding", "qe") / (_norm("embedding") * _norm("qe")),
+                    4,
+                ).alias("sim"),
             )
-        ).alias("recall"),
-    )
+            .localCheckpoint()  # every tier re-ranks it
+        )
+        w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
+        for p in sweep:
+            yield p, (
+                scored_all.where(F.col("prn") <= p)
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= k)
+                .select("qid", "vec_id")
+            )
+
+    return _recall_curve(embeddings, queries, k, "n_probes", tiers())
 
 
 def s24_probe_recall_curve(spark, sf_dir):
@@ -3037,9 +2968,7 @@ def silhouette_report(em: DataFrame) -> DataFrame:
             "cid int, n_vecs long, mean_a double, mean_b double,"
             " silhouette double",
         )
-    cent = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "cid int, ce array<double>"
-    )
+    cent = centroid_frame(spark, cents)
     d6 = F.round(_sqdist("embedding", "ce"), 6)
     per_vec = (
         em.crossJoin(F.broadcast(cent))

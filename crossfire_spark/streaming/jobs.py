@@ -579,15 +579,14 @@ def st14_index_maintenance(spark, sf_dir):
     + one O(1)-metadata snapshot append; the historical code table is
     never rewritten and never rescanned by maintenance. Rows-only
     (quantization-dependent candidates, like s09/s10)."""
-    import numpy as np
-
     from crossfire_spark.catalog import load_table, spread
     from crossfire_spark.functions.ann_index import (
         build_pq_index,
         query_pq_index,
+        read_pq_codebooks,
     )
     from crossfire_spark.functions.similarity import _query_set, pq_encode
-    from crossfire_spark.sources.snapshot import snapshot_read, snapshot_write
+    from crossfire_spark.sources.snapshot import snapshot_write
 
     em = spread(load_table(spark, sf_dir, "embeddings"))
     base = em.where(F.col("vec_id") % 10 != 3)
@@ -598,12 +597,7 @@ def st14_index_maintenance(spark, sf_dir):
         from crossfire_spark.functions.similarity import _empty_topk
 
         return _empty_topk(spark)
-    cb = snapshot_read(spark, os.path.join(path, "codebooks")).collect()
-    m = max(r["s"] for r in cb) + 1
-    kk = max(r["j"] for r in cb) + 1
-    books = np.zeros((m, kk, len(cb[0]["c"])), dtype=np.float64)
-    for r in cb:
-        books[r["s"], r["j"]] = r["c"]
+    books = read_pq_codebooks(spark, path)
     # stream the new vectors in multiple micro-batches
     src = os.path.join(work, "in")
     new.repartition(4).write.parquet(src)

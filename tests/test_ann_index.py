@@ -304,3 +304,58 @@ def test_ivf_pq_index_equals_adhoc(spark, sf_dir, tmp_path):
         for r in ivf_pq_topk(em, q).orderBy("qid", "vec_id").collect()
     ]
     assert via_index == adhoc and len(adhoc) > 0
+
+
+@pytest.mark.parametrize("n_rows", [40, 32])
+@pytest.mark.parametrize("name", ["s09_pq_topk", "s20_ivf_pq_topk"])
+def test_pq_under_pq_k_vectors_matches_oracle(spark, sf_dir, tmp_path, name, n_rows):
+    """A corpus of fewer than PQ_K vectors builds min(PQ_K, n)-code
+    books (the oracle's ``len(al) // PQ_M`` stride): 40 rows once
+    crashed the codebook reshape on the driver, 32 rows the encode
+    UDF on the executors."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from crossfire_spark.functions.similarity import ORACLE_SQL, QUERIES
+    from crossfire_spark.plans import results_match
+
+    src = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(src.sort_by("vec_id").slice(0, n_rows), path)
+
+    sdf = QUERIES[name](spark, str(tmp_path))
+    s_rows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    cur = con.execute(ORACLE_SQL[name])
+    o_cols = [d[0] for d in cur.description]
+    ok, reason = results_match(sdf.columns, s_rows, o_cols, cur.fetchall())
+    con.close()
+    assert s_rows and ok, f"{name} @ {n_rows} rows: {reason}"
+
+
+def test_ivf_pq_kernels_defined_once():
+    """Each IVF/PQ step has one definition in the package: the
+    centroid-ranking window, the first-n centroid rule, the k-means
+    centroid frame, the ADC table UDF, the ADC over-fetch cut and the
+    codebook snapshot reader."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    src = {str(f.relative_to(pkg)): f.read_text() for f in pkg.rglob("*.py")}
+    kernels = {
+        "centroid ranking": r"orderBy\(\s*F\.round\(\s*_sqdist\(",
+        "first-n centroids": r'F\.col\("vec_id"\)\s*<\s*n_centroids',
+        "centroid frame": r'"cid int, ce array<double>"',
+        "ADC table": r"\(Q - B\[None",
+        "ADC cut": r"<=\s*PQ_CAND_MULT\s*\*\s*k\b",
+        "codebook reader": r'snapshot_read\([^)]*"codebooks"',
+    }
+    for kernel, rx in kernels.items():
+        hits = [
+            (name, len(re.findall(rx, text)))
+            for name, text in sorted(src.items())
+            if re.search(rx, text)
+        ]
+        assert sum(n for _, n in hits) == 1, f"{kernel}: {hits}"
