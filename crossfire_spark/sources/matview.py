@@ -8,30 +8,41 @@ version — the classic incremental view-maintenance algebra for
 distributive aggregates:
 
 - inserts contribute ``(+1, +measure)``, deletes ``(-1, -measure)``;
-- the per-key delta aggregate is merged into the view (upsert), and
-  keys whose maintained count reaches zero are **deleted** from it
-  (``snapshot_merge(delete_keys=...)``);
+- one pass applies the per-key delta aggregate to the view: the view
+  files that may hold a touched key are rewritten as their rows full
+  outer joined with the delta (stored + delta per touched key, stored
+  values bit for bit elsewhere), and keys whose maintained count
+  reaches zero are **dropped** from the rewritten rows. View keys match
+  the way GROUP BY forms them, so a NULL key is one view row;
 - the base version each refresh has consumed is stamped on the view
   commit's manifest ``properties``, so refresh is idempotent and
   restartable — rerunning after a crash re-reads the same change
   range and converges to the same view.
 
-Scale shape: a refresh touches O(changed rows) of the base — never
-rescans it — plus O(touched keys) of the view; the copy-on-write
-merge rewrites only view files containing touched keys. A 1-partition
-append to a 100 TB base refreshes the view with one pass over the new
-files. Copy-on-write file rewrites in the base stream survivor rows
+Scale shape: a refresh scans the CDC feed once — O(changed rows) of
+the base, never a rescan — and the view files it rewrites once, in one
+plan: an unpartitioned, unclustered view refreshes in three Spark jobs
+(the delta's exchange, the join's exchange, the write). The file pick
+is ``snapshot._rewrite_touched``, the copy-on-write core
+``snapshot_merge`` also uses: a partitioned view rewrites only the
+partitions holding touched keys and a clustered one (key stats, e.g.
+after ``snapshot_cluster``) only the files whose key range meets them;
+every other view file carries over by reference. Finding those files
+reads the delta's keys once more. A 1-partition append to a 100 TB
+base refreshes the view with one pass over the new files.
+Copy-on-write file rewrites in the base stream survivor rows
 as delete+insert pairs; their count deltas cancel exactly and their
 sum deltas cancel to within float reduction-order noise, so the
 refresh drops deltas under ``DELTA_TOLERANCE`` rather than
-no-op-merging residue into the view.
+rewriting residue into the view.
 
 COUNT and SUM are self-maintainable under insert+delete; MIN/MAX are
 not (a deleted minimum forces a per-key rescan). Views created with
 ``minmax=[...]`` therefore refresh through ``_refresh_by_rescan``:
 touched keys re-aggregate from the base head via one semi-joined scan
 — the honest cost of the operation, paid only for the keys the change
-range touched, while untouched view files carry over by reference.
+range touched — and replace their rows through the same copy-on-write
+core, while untouched view files carry over by reference.
 """
 
 from __future__ import annotations
@@ -42,8 +53,8 @@ from pyspark.sql import functions as F
 from crossfire_spark.sources.snapshot import (
     _current_version,
     _read_manifest,
+    _rewrite_touched,
     snapshot_changes,
-    snapshot_merge,
     snapshot_read,
     snapshot_write,
 )
@@ -189,47 +200,76 @@ def refresh_aggregate_view(
     for c in measures:
         nonzero = nonzero | (F.abs(F.col(f"_d_{c}")) > DELTA_TOLERANCE)
     delta = delta.where(nonzero)
-
-    cur = snapshot_read(spark, view_path).join(
-        delta.select(*keys), keys, "left_semi"
-    )
-    joined = cur.join(delta, keys, "full_outer")
-    new_cnt = F.coalesce(F.col(_CNT), F.lit(0)) + F.coalesce(
-        F.col("_d_cnt"), F.lit(0)
-    )
-    # SQL SUM semantics: a key whose contributing values are all NULL
-    # has sum NULL, not 0 — only coalesce when at least one side
-    # actually carries a number.
-    updated = joined.select(
-        *keys,
-        new_cnt.alias(_CNT),
-        *[
-            F.when(
-                F.col(f"sum_{c}").isNull() & F.col(f"_d_{c}").isNull(),
-                F.lit(None).cast("double"),
-            )
-            .otherwise(
-                F.coalesce(F.col(f"sum_{c}"), F.lit(0.0))
-                + F.coalesce(F.col(f"_d_{c}"), F.lit(0.0))
-            )
-            .alias(f"sum_{c}")
-            for c in measures
-        ],
-    )
-    upserts = updated.where(F.col(_CNT) > 0)
-    deletes = updated.where(F.col(_CNT) <= 0).select(*keys)
-    return snapshot_merge(
+    return _rewrite_touched(
         spark,
-        upserts,
         view_path,
-        keys,
-        delete_keys=deletes,
-        properties={
+        keys[0],
+        [delta.select(*keys)],
+        lambda current: _apply_delta(current, delta, keys, measures),
+        {
             "base_version": base_v,
             "keys": keys,
             "measures": measures,
             "minmax": [],
         },
+        null_safe=True,
+    )
+
+
+def _apply_delta(
+    current: DataFrame, delta: DataFrame, keys: list[str], measures: list[str]
+) -> DataFrame:
+    """New contents of the rewritten view files: the full outer join of
+    their rows with the per-key delta, planned as one GROUP BY over the
+    union of both sides. Each key has at most one row per side, so
+    ``max`` picks that side's value. Grouping (unlike ``=``) puts NULL
+    keys together, and the delta is already hash-partitioned on
+    ``keys``, so the join adds one exchange. Keys without a delta keep
+    their stored values bit for bit; touched keys get stored + delta,
+    and keys whose count reaches zero leave the view."""
+    stored = [_CNT, *[f"sum_{c}" for c in measures]]
+    deltas = ["_d_cnt", *[f"_d_{c}" for c in measures]]
+
+    def pad(df: DataFrame, other: DataFrame, cols: list[str]) -> DataFrame:
+        return df.select(
+            *df.columns,
+            *[F.lit(None).cast(other.schema[c].dataType).alias(c) for c in cols],
+        )
+
+    both = pad(current.select(*keys, *stored), delta, deltas).unionByName(
+        pad(delta, current, stored)
+    )
+    g = both.groupBy(*keys).agg(*[F.max(c).alias(c) for c in stored + deltas])
+    hit = F.col("_d_cnt").isNotNull()
+    # SQL SUM semantics: a key whose contributing values are all NULL
+    # has sum NULL, not 0 — only add when at least one side actually
+    # carries a number.
+    return g.select(
+        *keys,
+        F.when(hit, F.coalesce(F.col(_CNT), F.lit(0)) + F.col("_d_cnt"))
+        .otherwise(F.col(_CNT))
+        .alias(_CNT),
+        *[
+            F.when(
+                hit & (F.col(f"sum_{c}").isNotNull() | F.col(f"_d_{c}").isNotNull()),
+                F.coalesce(F.col(f"sum_{c}"), F.lit(0.0))
+                + F.coalesce(F.col(f"_d_{c}"), F.lit(0.0)),
+            )
+            .otherwise(F.col(f"sum_{c}"))
+            .alias(f"sum_{c}")
+            for c in measures
+        ],
+    ).where(F.col(_CNT) > 0)
+
+
+def _null_safe_join(
+    left: DataFrame, right: DataFrame, keys: list[str], how: str
+) -> DataFrame:
+    """``left`` semi/anti-joined to ``right`` on ``keys`` with NULL
+    matching NULL, the way GROUP BY forms view keys."""
+    r = right.select(*[F.col(k).alias(f"_r_{k}") for k in keys])
+    return left.join(
+        r, [F.col(k).eqNullSafe(F.col(f"_r_{k}")) for k in keys], how
     )
 
 
@@ -246,27 +286,31 @@ def _refresh_by_rescan(
     """Refresh for views with non-self-maintainable aggregates
     (MIN/MAX): keys touched by the change range are re-aggregated from
     the base head (one semi-joined scan — O(touched keys' rows), the
-    honest cost of a deleted minimum), untouched view files carry over
-    by reference through the copy-on-write merge. Keys whose rows all
-    vanished are deleted from the view."""
+    honest cost of a deleted minimum) and replace their rows in the
+    rewritten view files; keys whose rows all vanished simply have no
+    recomputed row. Untouched view files carry over by reference."""
     touched = ch.select(*keys).distinct()
     recomputed = _aggregate(
-        snapshot_read(spark, base_path).join(touched, keys, "left_semi"),
+        _null_safe_join(
+            snapshot_read(spark, base_path), touched, keys, "left_semi"
+        ),
         keys,
         measures,
         minmax,
     )
-    vanished = touched.join(recomputed.select(*keys), keys, "left_anti")
-    return snapshot_merge(
+    return _rewrite_touched(
         spark,
-        recomputed,
         view_path,
-        keys,
-        delete_keys=vanished,
-        properties={
+        keys[0],
+        [touched],
+        lambda current: recomputed.unionByName(
+            _null_safe_join(current, touched, keys, "left_anti")
+        ),
+        {
             "base_version": base_v,
             "keys": keys,
             "measures": measures,
             "minmax": minmax,
         },
+        null_safe=True,
     )

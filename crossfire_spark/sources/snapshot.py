@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -481,102 +482,167 @@ def snapshot_merge(
     """MERGE INTO the versioned table: rows of ``df`` replace existing
     rows with the same ``keys`` (upsert), rows whose keys appear in
     ``delete_keys`` are removed, committed as one new version —
-    history and pinned readers are untouched. On a partitioned table
+    history and pinned readers are untouched. Keys match with SQL
+    MERGE semantics: a NULL key never matches. On a partitioned table
     ``delete_keys`` must carry the partition columns (the merge prunes
     rewrites to touched partitions from the batch's values).
     ``properties`` is recorded verbatim on the commit's manifest (the
     hook incremental consumers use to stamp e.g. the base-table
     version a materialized view has processed).
 
-    Copy-on-write at **partition granularity**: when the table is
-    partitioned, only files in partitions the update actually touches
-    are read, anti-joined, and rewritten; every other file carries
-    over into the new manifest by reference. Merging 1 GB of updates
-    confined to one partition of a 100 TB table rewrites that
-    partition, not the table. (File-level pruning would need per-file
-    key min/max stats — noted for parity with Delta/Iceberg; partition
-    granularity is the first-order win.)
+    Copy-on-write through :func:`_rewrite_touched`: only files in
+    partitions the update touches, and among those only files whose
+    recorded key [min, max] meets the update's key range, are read,
+    anti-joined, and rewritten; every other file carries over into
+    the new manifest by reference. Merging 1 GB of updates confined to
+    one partition (or one key range of a clustered table) of a 100 TB
+    table rewrites those files, not the table.
 
     Optimistic concurrency: the merge is computed against the head it
     read. If another writer commits first, the precomputed file set is
     stale, so the merge *fails* (rerun it) rather than silently
     committing over the newer table state.
     """
+    head = _current_version(path)
+    if head is None:
+        raise FileNotFoundError(f"no snapshot log at {path}")
+    if _schema_key(_read_manifest(path, head)["schema"]) != _schema_key(
+        df.schema.json()
+    ):
+        raise ValueError(
+            "merge batch schema must match the table schema exactly"
+        )
+    all_keys = df.select(*keys).distinct()
+    touched = [df]
+    if delete_keys is not None:
+        all_keys = all_keys.unionByName(
+            delete_keys.select(*keys)
+        ).distinct()
+        touched.append(delete_keys)
+
+    def upsert(current: DataFrame) -> DataFrame:
+        return current.join(all_keys, keys, "left_anti").unionByName(df)
+
+    return _rewrite_touched(
+        spark, path, keys[0], touched, upsert, properties, batch=df
+    )
+
+
+# the directory value Spark writes for a NULL partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _rewrite_touched(
+    spark: SparkSession,
+    path: str,
+    key: str,
+    touched: list[DataFrame],
+    rewrite: Callable[[DataFrame], DataFrame],
+    properties: dict | None,
+    batch: DataFrame | None = None,
+    null_safe: bool = False,
+) -> int:
+    """Copy-on-write core of every keyed rewrite of a snapshot table:
+    pick the head files that may hold a touched row, read them, write
+    ``rewrite(rows of those files)`` in their place and commit against
+    the head it read. ``rewrite`` returns the files' complete new
+    contents (survivors, updates and inserts), so a caller plans its
+    whole change as one frame over the rewritten rows.
+
+    ``touched`` are frames naming the changed rows; each carries the
+    table's partition columns and the key column ``key``. Files are
+    picked in two steps, both from manifest metadata:
+
+    - partition pruning: on a partitioned table, only files in
+      partitions some touched row belongs to (one ``distinct`` collect
+      per frame);
+    - key-stats pruning: a file whose recorded [min, max] of ``key``
+      is disjoint from the touched key range provably holds no touched
+      row (one aggregate). Stats never cover NULLs, so a ``null_safe``
+      caller (NULL keys match each other) keeps every candidate file
+      when a touched key is NULL.
+
+    Unpartitioned tables without key stats rewrite every file and
+    launch no pruning job. ``batch``, when given, is the incoming rows:
+    they alone are checked against the table schema and its CHECK
+    constraints (rows carried over were checked when written);
+    otherwise the rewritten rows are. A commit that finds its version
+    slot taken raises: the file set was picked from a stale head.
+    """
+    from functools import reduce
+
     from pyspark.sql.types import StructType
 
     head = _current_version(path)
     if head is None:
         raise FileNotFoundError(f"no snapshot log at {path}")
     m = _read_manifest(path, head)
-    if _schema_key(m["schema"]) != _schema_key(df.schema.json()):
-        raise ValueError(
-            "merge batch schema must match the table schema exactly"
-        )
-    # the upsert batch must satisfy the table's CHECK constraints
-    # (survivor rows were validated when they were written)
-    _enforce_constraints(df, m.get("constraints", {}))
+    constraints = m.get("constraints", {})
+    if batch is not None:
+        _enforce_constraints(batch, constraints)
     part_cols = m.get("partition_by", [])
     fparts = m.get("file_partitions") or dict.fromkeys(m["files"], {})
     schema = StructType.fromJson(json.loads(m["schema"]))
     if part_cols:
-        touched = {
-            tuple(str(r[c]) for c in part_cols)
-            for r in df.select(*part_cols).distinct().collect()
-        }
-        if delete_keys is not None:
-            missing = sorted(set(part_cols) - set(delete_keys.columns))
+        hit: set[tuple] = set()
+        for t in touched:
+            missing = sorted(set(part_cols) - set(t.columns))
             if missing:
                 raise ValueError(
                     f"delete_keys must carry partition columns {missing}"
                 )
-            touched |= {
-                tuple(str(r[c]) for c in part_cols)
-                for r in delete_keys.select(*part_cols).distinct().collect()
+            hit |= {
+                tuple(
+                    _NULL_PARTITION if r[c] is None else str(r[c])
+                    for c in part_cols
+                )
+                for r in t.select(*part_cols).distinct().collect()
             }
         keep = {
             f: p
             for f, p in fparts.items()
-            if tuple(p.get(c) for c in part_cols) not in touched
+            if tuple(p.get(c) for c in part_cols) not in hit
         }
-        rewrite = sorted(f for f in fparts if f not in keep)
+        rewrite_files = sorted(f for f in fparts if f not in keep)
     else:
-        keep, rewrite = {}, sorted(fparts)
-    # file-level pruning below partition granularity: a file whose
-    # recorded [min, max] for the merge key is disjoint from the
-    # update's key range provably contains no matched row — carry it
-    # over untouched instead of rewriting it. On a key-sorted layout
-    # (zone maps), a localized update rewrites only the files it hits.
+        keep, rewrite_files = {}, sorted(fparts)
     fstats = m.get("file_stats", {})
-    key = keys[0]
-    all_keys = df.select(*keys).distinct()
-    if delete_keys is not None:
-        all_keys = all_keys.unionByName(
-            delete_keys.select(*keys)
-        ).distinct()
-    if rewrite and any(key in fstats.get(f, {}) for f in rewrite):
-        bounds = all_keys.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi")
-        ).first()
-        if bounds["lo"] is not None:
-            pruned = [
+    if rewrite_files and any(
+        key in fstats.get(f, {}) for f in rewrite_files
+    ):
+        bounds = (
+            reduce(DataFrame.unionByName, [t.select(key) for t in touched])
+            .agg(
+                F.min(key).alias("lo"),
+                F.max(key).alias("hi"),
+                F.count_if(F.col(key).isNull()).alias("nulls"),
+            )
+            .first()
+        )
+        if bounds["lo"] is not None and not (null_safe and bounds["nulls"]):
+            pruned = {
                 f
-                for f in rewrite
+                for f in rewrite_files
                 if _stats_disjoint(
                     fstats.get(f, {}), key, bounds["lo"], bounds["hi"]
                 )
-            ]
-            keep = {**keep, **{f: fparts[f] for f in pruned}}
-            rewrite = [f for f in rewrite if f not in set(pruned)]
-    current = _read_files(spark, path, rewrite, schema, part_cols)
-    survivors = current.join(all_keys, keys, "left_anti")
-    merged = survivors.unionByName(df)
-    batch = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(path, _DATA, batch)
-    writer = merged.write.mode("errorifexists")
+            }
+            keep = {**keep, **{f: fparts[f] for f in sorted(pruned)}}
+            rewrite_files = [f for f in rewrite_files if f not in pruned]
+    new = rewrite(_read_files(spark, path, rewrite_files, schema, part_cols))
+    if batch is None:
+        if _schema_key(m["schema"]) != _schema_key(new.schema.json()):
+            raise ValueError(
+                "rewritten rows must match the table schema exactly"
+            )
+        _enforce_constraints(new, constraints)
+    batch_id = uuid.uuid4().hex[:12]
+    data_dir = os.path.join(path, _DATA, batch_id)
+    writer = new.write.mode("errorifexists")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(data_dir)
-    new_files = _list_data_files(data_dir, os.path.join(_DATA, batch))
+    new_files = _list_data_files(data_dir, os.path.join(_DATA, batch_id))
     files = {**keep, **new_files}
     scols = m.get("stats_cols", [])
     stats = {f: fstats.get(f, {}) for f in keep}
@@ -598,7 +664,7 @@ def snapshot_merge(
         "file_rows": {f: rows[f] for f in sorted(files) if f in rows},
         "schema": m["schema"],
         "properties": dict(properties or {}),
-        "constraints": dict(m.get("constraints", {})),
+        "constraints": dict(constraints),
     }
     tmp = os.path.join(path, _LOG, f".tmp_{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as fh:

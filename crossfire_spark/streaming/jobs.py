@@ -456,9 +456,11 @@ def st12_stream_matview(spark, sf_dir):
     events — so the whole stream→commit→refresh loop is oracle-
     checked for any batching of the source.
 
-    Scale shape: a micro-batch refresh costs O(batch rows) + a
-    copy-on-write touch of the view files holding changed keys;
-    |event_type| keys means the view itself is tiny forever. The
+    Scale shape: a micro-batch refresh is one pass — one scan of the
+    batch's CDC rows, one of the view, one join — in 3 Spark jobs;
+    |event_type| keys means the view itself is tiny forever (a
+    partitioned or clustered view would rewrite only the files holding
+    changed keys). The
     source is split into multiple files with maxFilesPerTrigger=1 so
     several genuine micro-batch refreshes run (one parquet file would
     collapse to a single batch)."""

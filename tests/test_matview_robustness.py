@@ -1,8 +1,12 @@
 """Materialized-view robustness: maintenance commits must not break
-incremental refresh, expired CDC ranges degrade to a rebuild, and SUM
-NULL semantics survive maintenance."""
+incremental refresh, expired CDC ranges degrade to a rebuild, SUM
+NULL semantics survive maintenance, a NULL group key stays one view
+row, and a refresh keeps its job count, file pruning and stale-head
+failure."""
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,12 +16,15 @@ from crossfire_spark.sources.matview import (
     create_aggregate_view,
     refresh_aggregate_view,
 )
+from crossfire_spark.sources import snapshot
 from crossfire_spark.sources.snapshot import (
     _current_version,
+    _metadata_commit,
     _read_manifest,
     snapshot_cluster,
     snapshot_compact,
     snapshot_expire,
+    snapshot_merge,
     snapshot_read,
     snapshot_write,
 )
@@ -224,3 +231,171 @@ def test_cluster_zorder_on_string_column(spark, sf_dir, tmp_path):
     assert v == m["version"]
     assert "source" in m["stats_cols"]
     assert any(st.get("source") for st in m["file_stats"].values())
+
+
+def _rows(df):
+    """Rows as dicts (column order aside), NULL key first."""
+    return sorted(
+        (r.asDict() for r in df.collect()),
+        key=lambda r: (r["k"] is not None, str(r["k"])),
+    )
+
+
+def _group_by(spark, base, minmax):
+    """The view a from-scratch GROUP BY over the base head gives."""
+    aggs = [F.count(F.lit(1)).alias("_cnt"), F.sum("m").alias("sum_m")]
+    if minmax:
+        aggs += [F.min("m").alias("min_m"), F.max("m").alias("max_m")]
+    return _rows(snapshot_read(spark, base).groupBy("k").agg(*aggs))
+
+
+@pytest.mark.parametrize("layout", ["plain", "partitioned", "clustered"])
+@pytest.mark.parametrize("minmax", [False, True])
+def test_null_group_key_is_one_view_row(spark, tmp_path, minmax, layout):
+    """GROUP BY puts every NULL key in one group, so the view must keep
+    one NULL-key row through an insert into it and deletes from it, on
+    the COUNT/SUM path and the MIN/MAX path, with the view unpartitioned,
+    partitioned on the key, or clustered on it (key stats never cover
+    NULLs, so they must not prune the file holding the NULL key)."""
+    schema = "id long, k string, m double"
+    base = str(tmp_path / "b")
+    view = str(tmp_path / "v")
+    snapshot_write(
+        spark.createDataFrame(
+            [(1, None, 1.0)]
+            + [(10 + i, k, 2.0) for i, k in enumerate("abcdefgh")],
+            schema,
+        ),
+        base,
+    )
+    create_aggregate_view(
+        spark, base, view, keys=["k"], measures=["m"],
+        minmax=["m"] if minmax else None,
+    )
+    if layout == "partitioned":
+        props = _read_manifest(view, _current_version(view))["properties"]
+        snapshot_write(
+            snapshot_read(spark, view), view, mode="overwrite",
+            partition_by=["k"], properties=props,
+        )
+    elif layout == "clustered":
+        snapshot_cluster(spark, view, cols=["k"], bits=3, n_files=4)
+
+    def check():
+        assert _rows(snapshot_read(spark, view)) == _group_by(
+            spark, base, minmax
+        )
+
+    snapshot_write(
+        spark.createDataFrame([(3, None, 4.0), (4, "h", 8.0)], schema), base
+    )
+    refresh_aggregate_view(spark, base, view)
+    check()
+    nulls = snapshot_read(spark, view).where(F.col("k").isNull()).collect()
+    assert [(r._cnt, r.sum_m) for r in nulls] == [(2, 5.0)]
+    for ids in ([(1,)], [(3,)]):  # delete the minimum, then the last row
+        snapshot_merge(
+            spark,
+            spark.createDataFrame([], schema),
+            base,
+            keys=["id"],
+            delete_keys=spark.createDataFrame(ids, "id long"),
+        )
+        refresh_aggregate_view(spark, base, view)
+        check()
+    assert snapshot_read(spark, view).where(F.col("k").isNull()).count() == 0
+
+
+def test_refresh_launches_at_most_three_jobs(spark, tmp_path):
+    """A COUNT/SUM refresh of an unpartitioned view scans the CDC feed
+    and the view once each in one plan: the delta's exchange, the
+    join's exchange and the write — 3 Spark jobs, where planning the
+    upsert, delete and key frames separately took 9."""
+    schema = "id long, k string, m double"
+    base = str(tmp_path / "b")
+    view = str(tmp_path / "v")
+    snapshot_write(
+        spark.createDataFrame(
+            [(i, f"k{i % 5}", float(i)) for i in range(50)], schema
+        ),
+        base,
+    )
+    create_aggregate_view(spark, base, view, keys=["k"], measures=["m"])
+    snapshot_write(
+        spark.createDataFrame(
+            [(100 + i, f"k{i % 7}", float(i)) for i in range(10)], schema
+        ),
+        base,
+    )
+    sc = spark.sparkContext
+    group = f"refresh-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one matview refresh")
+    try:
+        refresh_aggregate_view(spark, base, view)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert _rows(snapshot_read(spark, view)) == _group_by(
+        spark, base, minmax=False
+    )
+
+
+@pytest.fixture()
+def clustered(spark, tmp_path):
+    """A 40-key view clustered on its key into files with disjoint
+    recorded key ranges."""
+    schema = "id long, k long, m double"
+    base = str(tmp_path / "b")
+    view = str(tmp_path / "v")
+    snapshot_write(
+        spark.createDataFrame(
+            [(i, i % 40, float(i)) for i in range(80)], schema
+        ),
+        base,
+    )
+    create_aggregate_view(spark, base, view, keys=["k"], measures=["m"])
+    snapshot_cluster(spark, view, cols=["k"], bits=3, n_files=4)
+    m = _read_manifest(view, _current_version(view))
+    assert len(m["files"]) >= 3
+    assert all("k" in st for st in m["file_stats"].values())
+    snapshot_write(
+        spark.createDataFrame([(1000, 0, 5.0), (1001, 0, 7.0)], schema), base
+    )
+    return base, view, m
+
+
+def test_clustered_refresh_rewrites_only_touched_files(spark, clustered):
+    """Key stats prune the refresh: touching key 0 rewrites the file
+    whose key range holds it, and every other file carries over into
+    the new manifest by reference."""
+    base, view, m0 = clustered
+    v = refresh_aggregate_view(spark, base, view)
+    m1 = _read_manifest(view, v)
+    far = {f for f, st in m0["file_stats"].items() if st["k"][0] > 0}
+    assert far and far == set(m0["files"]) & set(m1["files"])
+    assert all("k" in m1["file_stats"][f] for f in m1["files"])
+    assert _rows(snapshot_read(spark, view)) == _group_by(
+        spark, base, minmax=False
+    )
+
+
+def test_refresh_against_moved_head_raises(spark, clustered, monkeypatch):
+    """A refresh whose view head moves between picking its files and
+    committing raises instead of committing over the newer head."""
+    base, view, m0 = clustered
+    before = _rows(snapshot_read(spark, view))
+    list_files = snapshot._list_data_files
+
+    def commit_first(*args):
+        monkeypatch.setattr(snapshot, "_list_data_files", list_files)
+        _metadata_commit(view, "concurrent")
+        return list_files(*args)
+
+    monkeypatch.setattr(snapshot, "_list_data_files", commit_first)
+    with pytest.raises(RuntimeError, match="stale head"):
+        refresh_aggregate_view(spark, base, view)
+    head = _current_version(view)
+    assert _read_manifest(view, head)["operation"] == "concurrent"
+    assert _read_manifest(view, head)["files"] == m0["files"]
+    assert _rows(snapshot_read(spark, view)) == before
