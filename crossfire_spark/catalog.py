@@ -89,6 +89,18 @@ def stab(c: F.Column | str, dp: int = 6) -> F.Column:
     return F.round(F.round(c, 9) + F.lit(1e-12), dp) + F.lit(0.0)
 
 
+def nudge(c: F.Column | str, dp: int) -> F.Column:
+    """The older cross-engine rounding, spelled
+    ``ROUND(ROUND(x, 6) + 1e-9, dp)`` in the oracle SQL: round to 6 dp
+    first (collapses ~1e-16 cross-engine sum differences to one
+    double), then nudge +1e-9 off any exact .xx5 boundary — Spark
+    ROUND goes through decimal strings (0.575 -> 0.58) while DuckDB
+    rounds the raw binary (0.57499…9 -> 0.57); off-boundary they
+    agree, and non-boundary 6-dp multiples sit >= 1e-6 away so the
+    nudge can't flip them."""
+    return F.round(F.round(c, 6) + F.lit(1e-9), dp)
+
+
 def register_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, tables=ALL_TABLES
 ) -> dict[str, DataFrame]:

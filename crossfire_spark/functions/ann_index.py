@@ -61,6 +61,14 @@ from crossfire_spark.functions.similarity import (
     ivf_topk,
     kmeans_fit,
 )
+from crossfire_spark.functions.text import (
+    BM25_TERMS,
+    bm25,
+    doc_lengths,
+    term_freqs,
+    tokens,
+)
+from crossfire_spark.functions.text import ORACLE_SQL as TEXT_ORACLE_SQL
 from crossfire_spark.sources.snapshot import snapshot_read, snapshot_write
 
 
@@ -366,12 +374,8 @@ def build_text_index(docs: DataFrame, path: str) -> None:
     Build cost is the one tokenize+count pass every BM25 query was
     paying (t09); query traffic now reuses it. Rebuilds are new
     snapshot versions — pinned readers keep a consistent index."""
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word")
-    )
-    postings = words.groupBy("word", "doc_id").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
+    words = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
+    postings = term_freqs(words).select("word", "doc_id", "tf")
     n_parts = max(2, postings.sparkSession.sparkContext.defaultParallelism // 4)
     snapshot_write(
         postings.repartitionByRange(n_parts, "word").sortWithinPartitions(
@@ -380,32 +384,20 @@ def build_text_index(docs: DataFrame, path: str) -> None:
         os.path.join(path, "postings"),
         stats_cols=["word"],
     )
-    dl = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    dl, stats = doc_lengths(words)
     snapshot_write(dl, os.path.join(path, "doclens"))
-    snapshot_write(
-        dl.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")),
-        os.path.join(path, "stats"),
-    )
+    snapshot_write(stats, os.path.join(path, "stats"))
 
 
 def query_text_index(
-    spark: SparkSession,
-    path: str,
-    terms: list[str],
-    k: int = 20,
-    k1: float = None,
-    b: float = None,
+    spark: SparkSession, path: str, terms: list[str], k: int = 20
 ) -> DataFrame:
     """BM25 top-k from the persisted index — no corpus scan: postings
     are zone-map-pruned to the files covering the query terms'
     word range, IDF/avgdl come from the stored stats, and only
-    matched docs' lengths join in. Identical scoring pipeline (and
-    stabilized rounding) to ``text.t09_bm25``, so the same oracle
+    matched docs' lengths join in. Scores through ``text.bm25``, the
+    kernel ``text.t09_bm25`` runs on the corpus, so the same oracle
     pins it."""
-    from crossfire_spark.functions.text import BM25_B, BM25_K1
-
-    k1 = BM25_K1 if k1 is None else k1
-    b = BM25_B if b is None else b
     tf = snapshot_read(
         spark,
         os.path.join(path, "postings"),
@@ -413,31 +405,9 @@ def query_text_index(
     ).where(F.col("word").isin(*terms))
     stats = snapshot_read(spark, os.path.join(path, "stats"))
     dl = snapshot_read(spark, os.path.join(path, "doclens"))
-    df_ = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    idf = df_.join(F.broadcast(stats)).select(
-        "word",
-        F.log(
-            (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
-        ).alias("idf"),
-        "avgdl",
-    )
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(dl, "doc_id")
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * F.col("tf")
-            * (k1 + 1)
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.round(F.sum("contrib"), 6) + F.lit(1e-9), 4).alias("s")
-        )
-    )
     return (
-        scored.orderBy(F.col("s").desc(), "doc_id")
+        bm25(tf, dl, stats)
+        .orderBy(F.col("s").desc(), "doc_id")
         .limit(k)
         .select("doc_id", "s")
     )
@@ -530,7 +500,6 @@ def t16_bm25_index(spark, sf_dir):
     the index. Same scoring and rounding as t09 → same DuckDB
     oracle."""
     from crossfire_spark.catalog import load_table, spread
-    from crossfire_spark.functions.text import BM25_TERMS
     from crossfire_spark.streaming.jobs import _session_workdir
 
     d = spread(load_table(spark, sf_dir, "documents"))
@@ -590,7 +559,6 @@ def _oracle() -> dict[str, str]:
     from crossfire_spark.functions.similarity import (
         ORACLE_SQL as SIMILARITY_ORACLE_SQL,
     )
-    from crossfire_spark.functions.text import ORACLE_SQL as TEXT_ORACLE_SQL
 
     return {
         # the build's cardinalities are pure SQL over the 90% corpus:

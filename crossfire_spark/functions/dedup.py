@@ -36,7 +36,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, spread, stab
+from crossfire_spark.catalog import load_table, nudge, spread, stab
+from crossfire_spark.functions.text import (
+    CDC_CHUNKS_SQL_CTE,
+    SHARD_COUNT,
+    SHARD_SEED,
+    SPLIT_TRAIN_LIM,
+    SPLIT_VAL_LIM,
+    _hash_u16,
+    _u16_sql,
+    bag_fingerprint,
+    cdc_chunks,
+    smoothed_idf,
+    split_assign,
+    term_freqs,
+    tokens,
+)
 
 JACCARD_THRESHOLD = 0.5
 MINHASH_K = 128
@@ -105,7 +120,7 @@ def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """
     parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        spread(df).select("doc_id", F.split(F.lower(F.col("text")), " ").alias("w"))
+        spread(df).select("doc_id", tokens("text").alias("w"))
         .select(
             "doc_id",
             F.explode(
@@ -124,11 +139,8 @@ def d01_dedup_bag(spark, sf_dir):
     """Bag-of-words dedup groups: documents whose distinct-word sets
     are identical collapse to one fingerprint; keep the min doc_id."""
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.lower("text"), " "))))
-    )
     return (
-        d.select(fp.alias("fp"), "doc_id")
+        d.select(bag_fingerprint("text").alias("fp"), "doc_id")
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("c"), F.min("doc_id").alias("keep"))
         .where(F.col("c") > 1)
@@ -461,7 +473,7 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     64 conditional aggregates (whole-stage codegen keeps this one
     tight loop; no Python)."""
     words = spread(docs).select(
-        "doc_id", F.explode(F.array_distinct(F.split(F.lower("text"), " "))).alias("w")
+        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("w")
     ).withColumn("h", F.xxhash64("w"))
     bit_sums = words.groupBy("doc_id").agg(
         *[
@@ -714,7 +726,7 @@ def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -
     quadratic until doc PAIRS are formed from matching fingerprints."""
     grams = (
         spread(docs)
-        .select("doc_id", F.split(F.lower("text"), " ").alias("w"))
+        .select("doc_id", tokens("text").alias("w"))
         .select(
             "doc_id",
             F.posexplode(
@@ -811,7 +823,7 @@ def dup_span_report(d: DataFrame, L: int = DUP_SPAN_L) -> DataFrame:
     :func:`d20_dup_span_fraction`."""
     base = (
         spread(d)
-        .select("doc_id", F.split(F.lower("text"), " ").alias("w"))
+        .select("doc_id", tokens("text").alias("w"))
         .select("doc_id", F.size("w").alias("n_tokens"), "w")
         .localCheckpoint()  # consumed by grams AND the final left join
     )
@@ -878,17 +890,7 @@ def d08_source_overlap(spark, sf_dir):
     sources produce at most |sources|² output rows, so nothing
     re-explodes. Text never enters a shuffle."""
     d = load_table(spark, sf_dir, "documents")
-    fps = d.select(
-        "source",
-        F.md5(
-            F.array_join(
-                F.array_sort(
-                    F.array_distinct(F.split(F.lower("text"), " "))
-                ),
-                " ",
-            )
-        ).alias("fp"),
-    ).distinct()
+    fps = d.select("source", bag_fingerprint("text").alias("fp")).distinct()
     a, b = fps.alias("a"), fps.alias("b")
     return (
         a.join(b, "fp")
@@ -919,8 +921,6 @@ def chunk_dedup_report(docs: DataFrame) -> DataFrame:
     a partial-agg cell, not a fat sorted window partition. One shuffle
     on the 32-hex fp, one on doc_id for the report; text itself never
     shuffles (the kernel emitted fingerprints only)."""
-    from crossfire_spark.functions.text import cdc_chunks
-
     # materialize the kernel output once: both the keep-first aggregate
     # and the report join consume it — without this the Arrow chunking
     # kernel runs twice over the corpus (PLANS.md showed 2 arrowPy).
@@ -1054,16 +1054,10 @@ def _tfidf_weights(docs: DataFrame) -> DataFrame:
     (d16): tf = word count in doc, idf = ln((N+1)/(df+1)) over the
     given doc universe. One word-explode scan + two aggregates; the
     idf model is broadcast-sized."""
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word")
+    tf = term_freqs(
+        docs.select("doc_id", F.explode(tokens("text")).alias("word"))
     )
-    tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = docs.select(F.countDistinct("doc_id").alias("n"))
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    idf = dfreq.crossJoin(F.broadcast(n_docs)).select(
-        "word", F.log((F.col("n") + 1) / (F.col("df") + 1)).alias("idf")
-    )
-    return tf.join(F.broadcast(idf), "word").select(
+    return tf.join(F.broadcast(smoothed_idf(tf, docs)), "word").select(
         "doc_id", "word", (F.col("tf") * F.col("idf")).alias("wt")
     )
 
@@ -1105,9 +1099,7 @@ def sparse_cosine_pairs(
     )
     na = norms.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
     nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
-    sim = F.round(
-        F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6) + F.lit(1e-9), 4
-    )
+    sim = nudge(F.col("dot") / (F.col("na") * F.col("nb")), 4)
     return (
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -1387,9 +1379,7 @@ def _verify_weighted_cosine(
     )
     na = norms.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
     nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
-    sim = F.round(
-        F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6) + F.lit(1e-9), 4
-    )
+    sim = nudge(F.col("dot") / (F.col("na") * F.col("nb")), 4)
     return (
         dots.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -1652,8 +1642,6 @@ def d12_fuzzy_match(spark, sf_dir):
 
 
 def _d10_sql() -> str:
-    from crossfire_spark.functions.text import CDC_CHUNKS_SQL_CTE
-
     return f"""
         WITH {CDC_CHUNKS_SQL_CTE},
         rn AS (SELECT doc_id, chunk_id, n_chars, fp,
@@ -1894,8 +1882,6 @@ def split_leakage(docs: DataFrame, embeddings: DataFrame, threshold=None) -> Dat
         NEARDUP_THRESHOLD,
         embed_neardup_pairs,
     )
-    from crossfire_spark.functions.text import split_assign
-
     thr = NEARDUP_THRESHOLD if threshold is None else threshold
     splits = split_assign(docs).select("doc_id", "split")
     pairs = embed_neardup_pairs(embeddings, thr)
@@ -1934,11 +1920,6 @@ QUERIES["d21_split_leakage"] = d21_split_leakage
 
 def _split_leakage_oracle() -> str:
     from crossfire_spark.functions.similarity import NEARDUP_THRESHOLD
-    from crossfire_spark.functions.text import (
-        SPLIT_TRAIN_LIM,
-        SPLIT_VAL_LIM,
-        _u16_sql,
-    )
 
     return f"""
         WITH fp AS (SELECT doc_id,
@@ -2027,7 +2008,7 @@ def _span_grams(docs: DataFrame) -> DataFrame:
     DESCENDING, not empty)."""
     return (
         spread(docs).select(
-            "doc_id", F.split(F.lower(F.col("text")), " ").alias("w")
+            "doc_id", tokens("text").alias("w")
         )
         .select(
             "doc_id",
@@ -2509,7 +2490,7 @@ def span_removal_plan(d: DataFrame, L: int = DUP_SPAN_L) -> DataFrame:
     both engines)."""
     base = (
         spread(d)
-        .select("doc_id", "source", F.split(F.lower("text"), " ").alias("w"))
+        .select("doc_id", "source", tokens("text").alias("w"))
         .select(
             "doc_id", "source", F.size("w").alias("n_tokens"), "w"
         )
@@ -2645,8 +2626,6 @@ def shard_leakage_audit(docs: DataFrame) -> DataFrame:
     shuffle-to-shuffle (both sides already hash-partitioned by the
     groupBy), then ONE 8-row aggregate. All counts BIGINT; one final
     division."""
-    from crossfire_spark.functions.text import SHARD_COUNT, SHARD_SEED, _hash_u16
-
     base = spread(docs).select(
         "doc_id",
         F.md5("text").alias("fp"),
@@ -2714,8 +2693,6 @@ QUERIES["d31_shard_leakage_audit"] = d31_shard_leakage_audit
 
 
 def _d31_oracle() -> str:
-    from crossfire_spark.functions.text import SHARD_COUNT, SHARD_SEED, _u16_sql
-
     operand = f"CONCAT('{SHARD_SEED}', CAST(doc_id AS VARCHAR))"
     shard_expr = f"CAST({_u16_sql(operand)} % {SHARD_COUNT} AS INT)"
     return f"""

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, stab
+from crossfire_spark.catalog import load_table, nudge, stab
 
 PR_ITERS = 3
 PR_DAMP = 0.85
@@ -878,10 +878,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     return paired.agg(
         F.countDistinct("u").alias("n_nodes"),
         (F.count(F.lit(1)) / F.lit(2)).cast("long").alias("n_edges"),
-        (
-            F.round(F.round(F.corr("du", "dv"), 6) + F.lit(1e-9), 4)
-            + F.lit(0.0)
-        ).alias("assortativity"),
+        (nudge(F.corr("du", "dv"), 4) + F.lit(0.0)).alias("assortativity"),
     )
 
 

@@ -30,6 +30,12 @@ from pyspark.sql import Window
 
 from crossfire_spark.catalog import load_table, spread, stab
 from crossfire_spark.functions.dedup import _cap_buckets, connected_components
+from crossfire_spark.functions.text import (
+    BM25_B,
+    BM25_K1,
+    BM25_TERMS,
+    t09_bm25_scores,
+)
 
 TOPK = 5
 QUERY_STRIDE = 50
@@ -161,10 +167,6 @@ def s05_hybrid_rrf(spark, sf_dir):
     the cap for any N ≥ RRF_TOPK on corpora ≤ RRF_CAP (pinned by a
     cap-invariance test). Fusion is a full-outer join of two bounded
     (id, rank) tables, trivially small next to the corpus."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.functions.text import t09_bm25_scores
-
     bm = (
         t09_bm25_scores(spark, sf_dir)
         .orderBy(F.col("s").desc(), "doc_id")
@@ -1425,8 +1427,6 @@ def d09_semdedup(spark, sf_dir):
 
 
 def _bm25_sql() -> str:
-    from crossfire_spark.functions.text import BM25_B, BM25_K1, BM25_TERMS
-
     return f"""
         w AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) word
               FROM documents),

@@ -7,20 +7,27 @@ scales to a 100 TB documents table: each operator is a narrow
 per-row projection (no shuffle at all until the final ORDER BY,
 which exists only for oracle determinism).
 
-Declared queries (each with an identical-formula DuckDB oracle):
+The tokenize-and-count stage is one kernel set, shared by the text,
+dedup, ANN-index, extended and relational families:
 
-- t01_langid      — marker-word language scoring (n-gram heuristic)
-- t02_quality     — length/punctuation/stopword quality features
-- t03_tokens      — whitespace + regex (BPE-ish) token counts
-- t04_fingerprint — md5 content fingerprint + order-invariant
-                    bag-of-words fingerprint
+- ``tokens``           — lowercased whitespace tokens
+- ``bag_fingerprint``  — md5 over the sorted distinct tokens
+- ``_marker_count`` / ``_punct_count`` / ``_quality_score``
+                       — t02's quality features
+- ``term_freqs`` / ``smoothed_idf``
+                       — (doc, word) -> tf and ln((N+1)/(df+1))
+- ``doc_lengths`` / ``bm25``
+                       — Okapi BM25 over (word, doc_id, tf)
+- ``unigram_logprob``  — mean ln P(word) under the corpus unigram model
+
+The declared queries and their oracles are listed in COVERAGE.md.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, spread, stab
+from crossfire_spark.catalog import load_table, nudge, spread, stab
 from crossfire_spark.functions.skew import prefix_sums
 
 # marker stopwords per language — the declared heuristic's fixed model
@@ -36,11 +43,126 @@ _EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 # BPE-ish tokenizer: runs of alphanumerics, or single non-space symbols
 _TOKEN_RE = "[a-zA-Z0-9]+|[^a-zA-Z0-9\\s]"
 
+BM25_TERMS = ("merge", "vector", "stream")
+BM25_K1, BM25_B = 1.2, 0.75
+
+
+def tokens(col) -> F.Column:
+    """Lowercased whitespace tokens: ``split(lower(col), ' ')``, the
+    oracle's ``string_split(lower(text), ' ')``. Lowercasing never
+    adds or removes a space, so ``size(tokens(c))`` is also the raw
+    whitespace token count."""
+    return F.split(F.lower(col), " ")
+
+
+def bag_fingerprint(col) -> F.Column:
+    """Order-invariant bag-of-words fingerprint: md5 over the sorted
+    distinct tokens joined by spaces. NULL text gives NULL, as in the
+    oracle's ``array_to_string`` (``concat_ws`` would give md5(''))."""
+    return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(col))), " "))
+
 
 def _marker_count(col: str, markers: tuple[str, ...]) -> F.Column:
     inlist = ",".join(f"'{m}'" for m in markers)
     return F.expr(
         f"size(filter(split(lower({col}), ' '), w -> w IN ({inlist})))"
+    )
+
+
+def _punct_count(col: str) -> F.Column:
+    """Characters of ``col`` that are one of ``.,!?;:``."""
+    return F.length(col) - F.length(F.regexp_replace(col, "[.,!?;:]", ""))
+
+
+def _quality_score(col: str) -> F.Column:
+    """t02's composite quality at 2 dp: length saturating at 500 chars
+    (weight 0.5), the punctuation-free share (0.25) and the stopword
+    share saturating at 20 % (0.25)."""
+    n_chars = F.length(col)
+    return nudge(
+        F.least(n_chars / 500.0, F.lit(1.0)) * 0.5
+        + (1 - _punct_count(col) / n_chars) * 0.25
+        + F.least(
+            _marker_count(col, _EN_STOPWORDS) / F.size(tokens(col)) * 5.0,
+            F.lit(1.0),
+        )
+        * 0.25,
+        2,
+    )
+
+
+def term_freqs(words):
+    """(doc_id, word, tf) from a (doc_id, word) token stream."""
+    return words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+
+
+def smoothed_idf(tf, docs):
+    """(word, idf) with the add-1 smoothed idf = ln((N+1)/(df+1)): N is
+    the distinct ``doc_id`` count of ``docs``, df the number of ``tf``
+    rows holding the word. The table is vocabulary-sized, so it joins
+    back by broadcast."""
+    n_docs = docs.select(F.countDistinct("doc_id").alias("n"))
+    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    return dfreq.crossJoin(F.broadcast(n_docs)).select(
+        "word", F.log((F.col("n") + 1) / (F.col("df") + 1)).alias("idf")
+    )
+
+
+def doc_lengths(words):
+    """``(dl, stats)`` from a (doc_id, word) token stream: per-doc
+    token counts (doc_id, dl) and the 1-row (n, avgdl) corpus model
+    that :func:`bm25` reads."""
+    dl = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    return dl, dl.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
+
+
+def bm25(tf, dl, stats):
+    """(doc_id, s): Okapi BM25 over the (word, doc_id, tf) postings of
+    the query terms, the (doc_id, dl) lengths and the (n, avgdl) row.
+    IDF and avgdl are a broadcast-sized model (|terms| rows plus one
+    scalar row, a broadcast nested-loop join, never a cartesian of
+    data); the per-doc sum of a few doubles is stabilized 6 → 4 dp."""
+    df_ = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    idf = df_.join(F.broadcast(stats)).select(
+        "word",
+        F.log(
+            (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
+        ).alias("idf"),
+        "avgdl",
+    )
+    return (
+        tf.join(F.broadcast(idf), "word")
+        .join(dl, "doc_id")
+        .withColumn(
+            "contrib",
+            F.col("idf")
+            * F.col("tf")
+            * (BM25_K1 + 1)
+            / (
+                F.col("tf")
+                + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+            ),
+        )
+        .groupBy("doc_id")
+        .agg(nudge(F.sum("contrib"), 4).alias("s"))
+    )
+
+
+def unigram_logprob(words, keys: list[str]):
+    """(*keys, lp): the mean ln P(word) of each ``keys`` group under
+    the corpus's own unigram model P(w) = c(w) / N, stabilized 6 → 2
+    dp. Two shuffles: the vocabulary (word -> count) and the per-group
+    mean; the model joins back broadcast and N rides in on a 1-row
+    broadcast nested-loop join."""
+    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
+    total = vocab.agg(F.sum("c").alias("n"))
+    model = vocab.join(F.broadcast(total)).select(
+        "word", (F.log(F.col("c") * 1.0 / F.col("n"))).alias("lp_w")
+    )
+    return (
+        words.join(F.broadcast(model), "word")
+        .groupBy(*keys)
+        .agg(nudge(F.avg("lp_w"), 2).alias("lp"))
     )
 
 
@@ -78,36 +200,17 @@ def t02_quality(spark, sf_dir):
     """Quality features: word count, average word length, punctuation
     ratio, stopword ratio, and a composite quality score."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.col("text")), " ")
-    n_words = F.size(words)
-    n_punct = F.length(F.col("text")) - F.length(
-        F.regexp_replace(F.col("text"), "[.,!?;:]", "")
-    )
-    inlist = ",".join(f"'{m}'" for m in _EN_STOPWORDS)
-    n_stop = F.expr(f"size(filter(split(lower(text), ' '), w -> w IN ({inlist})))")
+    n_words = F.size(tokens("text"))
     return d.select(
         "doc_id",
         n_words.alias("n_words"),
         F.round(F.length("text") / n_words, 2).alias("avg_word_len"),
-        F.round(n_punct / F.length("text"), 2).alias("punct_ratio"),
-        F.round(n_stop / n_words, 2).alias("stop_ratio"),
-        # Stabilized rounding: round to 6 dp first (collapses ~1e-16
-        # cross-engine sum differences to one double), then nudge
-        # +1e-9 off any exact .xx5 boundary — Spark ROUND goes through
-        # decimal strings (0.575 -> 0.58) while DuckDB rounds the raw
-        # binary (0.57499…9 -> 0.57); off-boundary they agree, and
-        # non-boundary 6-dp multiples sit >= 1e-6 away so the nudge
-        # can't flip them. (Both cases hit at sf0.1.)
-        F.round(
-            F.round(
-                F.least(F.length("text") / 500.0, F.lit(1.0)) * 0.5
-                + (1 - n_punct / F.length("text")) * 0.25
-                + F.least(n_stop / n_words * 5.0, F.lit(1.0)) * 0.25,
-                6,
-            )
-            + F.lit(1e-9),
-            2,
-        ).alias("quality"),
+        F.round(_punct_count("text") / F.length("text"), 2).alias("punct_ratio"),
+        F.round(_marker_count("text", _EN_STOPWORDS) / n_words, 2).alias(
+            "stop_ratio"
+        ),
+        # the composite's .xx5 boundaries hit at sf0.1: see catalog.nudge
+        _quality_score("text").alias("quality"),
     ).orderBy("doc_id", "n_words", "avg_word_len", "punct_ratio", "stop_ratio", "quality")
 
 
@@ -118,12 +221,12 @@ def t03_tokens(spark, sf_dir):
     size(regexp_extract_all) at sf0.1 — allocation, not the regex
     scan, dominates)."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
+    words = tokens("text")
     return d.select(
         "doc_id",
         F.size(words).alias("ws_tokens"),
         F.regexp_count("text", F.lit(_TOKEN_RE)).alias("re_tokens"),
-        F.size(F.array_distinct(F.split(F.lower("text"), " "))).alias("distinct_words"),
+        F.size(F.array_distinct(words)).alias("distinct_words"),
     ).orderBy("doc_id", "ws_tokens", "re_tokens", "distinct_words")
 
 
@@ -132,13 +235,10 @@ def t04_fingerprint(spark, sf_dir):
     order-invariant bag-of-words fingerprint (md5 over the sorted
     distinct word list) — the primitive under shingle-free dedup."""
     d = load_table(spark, sf_dir, "documents")
-    bag = F.concat_ws(
-        " ", F.array_sort(F.array_distinct(F.split(F.lower("text"), " ")))
-    )
     return d.select(
         "doc_id",
         F.md5(F.lower(F.col("text"))).alias("fp_exact"),
-        F.md5(bag).alias("fp_bag"),
+        bag_fingerprint("text").alias("fp_bag"),
     ).orderBy("doc_id", "fp_exact", "fp_bag")
 
 
@@ -154,12 +254,9 @@ def t05_quality_filter(spark, sf_dir):
     the result is persisted partitioned by ``keep``."""
     d = load_table(spark, sf_dir, "documents")
     n_chars = F.length("text")
-    n_words = F.size(F.split(F.lower("text"), " "))
-    n_punct = F.length("text") - F.length(
-        F.regexp_replace(F.col("text"), "[.,!?;:]", "")
-    )
-    inlist = ",".join(f"'{m}'" for m in _EN_STOPWORDS)
-    n_stop = F.expr(f"size(filter(split(lower(text), ' '), w -> w IN ({inlist})))")
+    n_words = F.size(tokens("text"))
+    n_punct = _punct_count("text")
+    n_stop = _marker_count("text", _EN_STOPWORDS)
     reason = (
         F.when(n_chars < 100, F.lit("too_short"))
         .when(n_words < 20, F.lit("too_few_words"))
@@ -186,9 +283,7 @@ def t06_pack_sequences(spark, sf_dir):
     with the per-source prefix sum from ``prefix_sums``. Integer
     arithmetic only."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", "doc_id", F.size(F.split("text", " ")).alias("n_tok")
-    )
+    toks = d.select("source", "doc_id", F.size(tokens("text")).alias("n_tok"))
     packed, _ = prefix_sums(toks, ["source"], ["doc_id"], ["n_tok"])
     return (
         packed.withColumn("seq_id", F.expr(f"n_tok_before DIV {SEQ_LEN}"))
@@ -260,28 +355,14 @@ def t08_unigram_logprob(spark, sf_dir):
     rounded at 6 dp (re-association drift is ~1e-13) with the 1e-9
     boundary guard, then reported at 2 dp."""
     d = spread(load_table(spark, sf_dir, "documents"))
-    words = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word")
-    )
-    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    total = vocab.agg(F.sum("c").alias("n"))
-    model = vocab.join(F.broadcast(total)).select(
-        "word", (F.log(F.col("c") * 1.0 / F.col("n"))).alias("lp_w")
-    )
-    return (
-        words.join(F.broadcast(model), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.round(F.avg("lp_w"), 6) + F.lit(1e-9), 2).alias("lp")
-        )
-        .orderBy("doc_id", "lp")
-    )
+    words = d.select("doc_id", F.explode(tokens("text")).alias("word"))
+    return unigram_logprob(words, ["doc_id"]).orderBy("doc_id", "lp")
 
 
 def _bigram_instances(df, text_col: str = "text"):
     """(doc_id, prev, cur) word-bigram instances via the indexed
     ``transform`` lambda (array-side build, no positional self-join)."""
-    words = F.split(F.lower(text_col), " ")
+    words = tokens(text_col)
     pairs = F.transform(
         F.slice(words, 1, F.size(words) - 1),
         lambda w, i: F.struct(
@@ -319,7 +400,7 @@ def t14_bigram_lm(spark, sf_dir):
     bi = inst.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c2")).localCheckpoint()
     uni = bi.groupBy("prev").agg(F.sum("c2").alias("c1"))
     vocab = (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+        d.select(F.explode(tokens("text")).alias("w"))
         .agg(F.countDistinct("w").alias("v"))
     )
     model = (
@@ -336,13 +417,9 @@ def t14_bigram_lm(spark, sf_dir):
     return (
         inst.join(model, ["prev", "cur"])
         .groupBy("doc_id")
-        .agg(F.round(F.round(F.avg("lp"), 6) + F.lit(1e-9), 2).alias("lp"))
+        .agg(nudge(F.avg("lp"), 2).alias("lp"))
         .orderBy("doc_id", "lp")
     )
-
-
-BM25_TERMS = ("merge", "vector", "stream")
-BM25_K1, BM25_B = 1.2, 0.75
 
 
 def t09_bm25_scores(spark, sf_dir):
@@ -350,44 +427,10 @@ def t09_bm25_scores(spark, sf_dir):
     un-truncated retriever output (s05's fusion input). See
     :func:`t09_bm25` for the declared top-k query and scale notes."""
     d = spread(load_table(spark, sf_dir, "documents"))
-    words = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word")
-    )
-    dl = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    n_avg = dl.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-    tf = (
-        words.where(F.col("word").isin(*BM25_TERMS))
-        .groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    idf = df_.join(F.broadcast(n_avg)).select(
-        "word",
-        F.log(
-            (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
-        ).alias("idf"),
-        "avgdl",
-    )
-    scored = (
-        tf.join(F.broadcast(idf), "word")
-        .join(dl, "doc_id")
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * F.col("tf")
-            * (BM25_K1 + 1)
-            / (
-                F.col("tf")
-                + BM25_K1
-                * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.round(F.sum("contrib"), 6) + F.lit(1e-9), 4).alias("s")
-        )
-    )
-    return scored
+    words = d.select("doc_id", F.explode(tokens("text")).alias("word"))
+    dl, stats = doc_lengths(words)
+    tf = term_freqs(words.where(F.col("word").isin(*BM25_TERMS)))
+    return bm25(tf, dl, stats)
 
 
 def t09_bm25(spark, sf_dir):
@@ -694,11 +737,6 @@ def split_assign(docs) -> "DataFrame":
     needs."""
     from pyspark.sql import Window
 
-    fp = F.md5(
-        F.array_join(
-            F.array_sort(F.array_distinct(F.split(F.lower("text"), " "))), " "
-        )
-    )
     bucket = _hash_u16(F.col("fp"))
     split = (
         F.when(bucket < SPLIT_TRAIN_LIM, "train")
@@ -706,7 +744,7 @@ def split_assign(docs) -> "DataFrame":
         .otherwise("test")
     )
     return (
-        docs.select("doc_id", fp.alias("fp"))
+        docs.select("doc_id", bag_fingerprint("text").alias("fp"))
         .withColumn("rep", F.min("doc_id").over(Window.partitionBy("fp")))
         .select("doc_id", "fp", "rep", split.alias("split"))
     )
@@ -734,26 +772,13 @@ def tfidf_keywords(docs, k: int = TFIDF_TOPK) -> "DataFrame":
     float accumulation — so engines agree to the stabilized 4 dp."""
     from pyspark.sql import Window
 
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word")
-    )
+    words = docs.select("doc_id", F.explode(tokens("text")).alias("word"))
     # (doc, word, tf) feeds BOTH the document-frequency aggregate and
     # the scoring join — materialize once so the corpus tokenize runs
     # one pass, not one per consumer (PLANS.md showed 3 scans without)
-    tf = (
-        words.groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
-    n_docs = docs.select(F.countDistinct("doc_id").alias("n"))
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    idf = dfreq.crossJoin(F.broadcast(n_docs)).select(
-        "word",
-        F.log((F.col("n") + 1) / (F.col("df") + 1)).alias("idf"),
-    )
-    scored = tf.join(F.broadcast(idf), "word").withColumn(
-        "score",
-        F.round(F.round(F.col("tf") * F.col("idf"), 6) + F.lit(1e-9), 4),
+    tf = term_freqs(words).localCheckpoint()
+    scored = tf.join(F.broadcast(smoothed_idf(tf, docs)), "word").withColumn(
+        "score", nudge(F.col("tf") * F.col("idf"), 4)
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("word")
@@ -789,14 +814,9 @@ def t18_corpus_build(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     n_chars = F.length("text")
-    n_words = F.size(F.split(F.lower("text"), " "))
-    n_punct = F.length("text") - F.length(
-        F.regexp_replace(F.col("text"), "[.,!?;:]", "")
-    )
-    inlist = ",".join(f"'{m}'" for m in _EN_STOPWORDS)
-    n_stop = F.expr(
-        f"size(filter(split(lower(text), ' '), w -> w IN ({inlist})))"
-    )
+    n_words = F.size(tokens("text"))
+    n_punct = _punct_count("text")
+    n_stop = _marker_count("text", _EN_STOPWORDS)
     ok = (
         (n_chars >= 100)
         & (n_words >= 20)
@@ -804,17 +824,11 @@ def t18_corpus_build(spark, sf_dir):
         & (n_stop * 10 >= n_words)
     )
     kept = d.where(ok)
-    fp_exact = F.md5(F.lower("text"))
-    fp_bag = F.md5(
-        F.array_join(
-            F.array_sort(F.array_distinct(F.split(F.lower("text"), " "))), " "
-        )
-    )
     staged = kept.select(
         "doc_id",
         "text",
-        fp_exact.alias("fpe"),
-        fp_bag.alias("fpb"),
+        F.md5(F.lower("text")).alias("fpe"),
+        bag_fingerprint("text").alias("fpb"),
     )
     surv = staged.withColumn(
         "rep", F.min("doc_id").over(Window.partitionBy("fpe"))
@@ -828,7 +842,7 @@ def t18_corpus_build(spark, sf_dir):
     return (
         surv.select(
             split.alias("split"),
-            F.size(F.split("text", " ")).alias("n_tok"),
+            F.size(tokens("text")).alias("n_tok"),
             F.length("text").alias("n_chars"),
         )
         .groupBy("split")
@@ -887,17 +901,13 @@ def t19_token_stats(spark, sf_dir):
     sort within group with spill support — no driver materialization
     at any corpus size."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", "lang", F.size(F.split("text", " ")).alias("n_tok")
-    )
+    toks = d.select("source", "lang", F.size(tokens("text")).alias("n_tok"))
     return (
         toks.groupBy("source", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tok").alias("tok_total"),
-            F.round(F.round(F.avg("n_tok"), 6) + F.lit(1e-9), 2).alias(
-                "tok_mean"
-            ),
+            nudge(F.avg("n_tok"), 2).alias("tok_mean"),
             F.round(F.expr("percentile(n_tok, 0.5)"), 2).alias("tok_p50"),
             F.round(F.expr("percentile(n_tok, 0.9)"), 2).alias("tok_p90"),
             F.round(F.expr("percentile(n_tok, 0.99)"), 2).alias("tok_p99"),
@@ -1127,23 +1137,14 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     filters at scan speed. Ratio columns use the stabilized rounding
     convention (round 6dp, nudge, round 2dp) so the composite verdict
     compares identical doubles across engines."""
-    words = F.split(F.lower(F.col("text")), " ")
+    words = tokens("text")
     n_words = F.size(words)
     # chars excluding the n_words-1 separators, per word
-    mean_wlen = F.round(
-        F.round((F.length("text") - (n_words - 1)) / n_words, 6) + F.lit(1e-9), 2
+    mean_wlen = nudge((F.length("text") - (n_words - 1)) / n_words, 2)
+    alpha_frac = nudge(
+        F.size(F.filter(words, lambda w: w.rlike("[a-z]"))) / n_words, 2
     )
-    alpha_frac = F.round(
-        F.round(
-            F.size(F.expr("filter(split(lower(text), ' '), w -> w rlike '[a-z]')"))
-            / n_words,
-            6,
-        )
-        + F.lit(1e-9),
-        2,
-    )
-    inlist = ",".join(f"'{m}'" for m in _EN_STOPWORDS)
-    stop_hits = F.expr(f"size(filter(split(lower(text), ' '), w -> w IN ({inlist})))")
+    stop_hits = _marker_count("text", _EN_STOPWORDS)
     out = docs.select(
         "doc_id",
         n_words.alias("n_words"),
@@ -1196,7 +1197,7 @@ def boilerplate_report(docs: DataFrame, n: int = BP_NGRAM, min_docs: int = BP_MI
     )
     base = (
         docs.select(
-            "doc_id", "source", F.split(F.lower(F.col("text")), " ").alias("w")
+            "doc_id", "source", tokens("text").alias("w")
         )
         .select(
             "doc_id", "source", grams.alias("grams"), F.size(grams).alias("n_grams")
@@ -1223,11 +1224,9 @@ def boilerplate_report(docs: DataFrame, n: int = BP_NGRAM, min_docs: int = BP_MI
             "source",
             "n_grams",
             F.coalesce("n_bp", F.lit(0)).alias("n_bp"),
-            F.round(
-                F.round(F.coalesce("n_bp", F.lit(0)) / F.col("n_grams"), 6)
-                + F.lit(1e-9),
-                4,
-            ).alias("bp_frac"),
+            nudge(F.coalesce("n_bp", F.lit(0)) / F.col("n_grams"), 4).alias(
+                "bp_frac"
+            ),
         )
     )
 
@@ -1262,7 +1261,7 @@ def dsir_weights(d: DataFrame) -> DataFrame:
     collects. Mean stabilized ROUND(·,6)+1e-9 → 3 dp (the house
     float discipline)."""
     toks = d.select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", "lang", F.explode(tokens("text")).alias("w")
     )
     cnt = (
         toks.groupBy("w")
@@ -1292,7 +1291,7 @@ def dsir_weights(d: DataFrame) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             # + 0.0 canonicalizes IEEE -0.0 to +0.0 (bit-exact vs oracle)
-            (F.round(F.round(F.avg("lw"), 6) + F.lit(1e-9), 3) + F.lit(0.0)).alias("dsir"),
+            (nudge(F.avg("lw"), 3) + F.lit(0.0)).alias("dsir"),
         )
         .select(
             "doc_id", "n_tokens", "dsir", (F.col("dsir") > 0).alias("selected")
@@ -1324,7 +1323,7 @@ def ngram_novelty(d: DataFrame, n: int = NOVELTY_N) -> DataFrame:
     before the shuffle; both aggregates are gram- or doc-keyed."""
     grams = (
         spread(d)
-        .select("doc_id", F.split(F.lower("text"), " ").alias("w"))
+        .select("doc_id", tokens("text").alias("w"))
         .select(
             "doc_id",
             F.explode(
@@ -1375,7 +1374,7 @@ def heavy_hitters_exact(d: DataFrame, k: int = HH_TOPK) -> DataFrame:
     map-side-combinable word count + TakeOrdered top-k. The declared
     oracle tier; the scan cost is one token pass, the shuffle is
     vocab-bounded."""
-    toks = spread(d).select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+    toks = spread(d).select(F.explode(tokens("text")).alias("w"))
     return (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1391,7 +1390,7 @@ def heavy_hitters_sketch(d: DataFrame, k: int = HH_TOPK) -> DataFrame:
     the vocabulary itself is huge (hashed n-grams, URLs). No
     cross-engine oracle (sketch internals); agreement with the exact
     tier is pinned in tests."""
-    toks = spread(d).select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+    toks = spread(d).select(F.explode(tokens("text")).alias("w"))
     return (
         toks.agg(F.expr(f"approx_top_k(w, {k})").alias("t"))
         .select(F.explode("t").alias("e"))
@@ -1485,9 +1484,7 @@ def zipf_fit(d: DataFrame, cap: int = ZIPF_CAP) -> DataFrame:
     ln(count) ~ ln(rank) over the top-``cap`` corpus terms."""
     from pyspark.sql import Window
 
-    toks = spread(d).select(
-        F.explode(F.split(F.lower("text"), " ")).alias("w")
-    )
+    toks = spread(d).select(F.explode(tokens("text")).alias("w"))
     counts = (
         toks.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1499,12 +1496,11 @@ def zipf_fit(d: DataFrame, cap: int = ZIPF_CAP) -> DataFrame:
         F.log(F.col("c").cast("double")).alias("lc"),
         F.log(F.row_number().over(w).cast("double")).alias("lr"),
     )
-    round4 = lambda c: F.round(F.round(c, 6) + F.lit(1e-9), 4)  # noqa: E731
     return ranked.agg(
         F.count(F.lit(1)).alias("n_terms"),
-        round4(F.regr_slope("lc", "lr")).alias("slope"),
-        round4(F.regr_intercept("lc", "lr")).alias("intercept"),
-        round4(F.regr_r2("lc", "lr")).alias("r2"),
+        nudge(F.regr_slope("lc", "lr"), 4).alias("slope"),
+        nudge(F.regr_intercept("lc", "lr"), 4).alias("intercept"),
+        nudge(F.regr_r2("lc", "lr"), 4).alias("r2"),
     )
 
 
@@ -1526,19 +1522,15 @@ def readability(d: DataFrame) -> DataFrame:
     """(doc_id, n_words, n_sents, n_syll, flesch, band) — Flesch
     reading ease; syllables ≈ vowel groups, sentences ≈ terminator
     runs (floored at 1 so headline-like docs stay defined)."""
-    n_words = F.size(F.split("text", " "))
+    n_words = F.size(tokens("text"))
     n_sents = F.greatest(F.regexp_count("text", F.lit("[.!?]+")), F.lit(1))
     n_syll = F.greatest(
         F.regexp_count(F.lower("text"), F.lit("[aeiouy]+")), F.lit(1)
     )
-    flesch = F.round(
-        F.round(
-            F.lit(206.835)
-            - F.lit(1.015) * n_words / n_sents
-            - F.lit(84.6) * n_syll / n_words,
-            6,
-        )
-        + F.lit(1e-9),
+    flesch = nudge(
+        F.lit(206.835)
+        - F.lit(1.015) * n_words / n_sents
+        - F.lit(84.6) * n_syll / n_words,
         2,
     )
     return spread(d).select(
@@ -1577,7 +1569,7 @@ def source_divergence(d: DataFrame) -> DataFrame:
     """(src_a, src_b, kl_ab, kl_ba, jsd) for every unordered source
     pair, from add-one-smoothed unigram distributions."""
     toks = spread(d).select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "source", F.explode(tokens("text")).alias("w")
     )
     counts = toks.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
     vocab = counts.select("w").distinct()
@@ -1987,25 +1979,7 @@ def epoch_schedule(docs: "DataFrame") -> "DataFrame":
 
     Scale shape: one scan, no joins, no windows; the explode fans out
     at most 3x and only for the tiers that earn it."""
-    words = F.split(F.lower(F.col("text")), " ")
-    n_words = F.size(words)
-    n_punct = F.length(F.col("text")) - F.length(
-        F.regexp_replace(F.col("text"), "[.,!?;:]", "")
-    )
-    inlist = ",".join(f"'{m}'" for m in _EN_STOPWORDS)
-    n_stop = F.expr(
-        f"size(filter(split(lower(text), ' '), w -> w IN ({inlist})))"
-    )
-    quality = F.round(
-        F.round(
-            F.least(F.length("text") / 500.0, F.lit(1.0)) * 0.5
-            + (1 - n_punct / F.length("text")) * 0.25
-            + F.least(n_stop / n_words * 5.0, F.lit(1.0)) * 0.25,
-            6,
-        )
-        + F.lit(1e-9),
-        2,
-    )
+    quality = _quality_score("text")
     tiers = F.when(quality >= EPOCH_TIERS[0][0], F.lit(EPOCH_TIERS[0][1]))
     for thr, n in EPOCH_TIERS[1:]:
         tiers = tiers.when(quality >= thr, F.lit(n))
@@ -2075,19 +2049,8 @@ def t31_ccnet_bucket(spark, sf_dir):
     first ``n mod 3`` groups with the extra row, so tercile borders
     are identical."""
     d = spread(load_table(spark, sf_dir, "documents"))
-    words = d.select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("word")
-    )
-    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    total = vocab.agg(F.sum("c").alias("n"))
-    model = vocab.join(F.broadcast(total)).select(
-        "word", (F.log(F.col("c") * 1.0 / F.col("n"))).alias("lp_w")
-    )
-    lp = (
-        words.join(F.broadcast(model), "word")
-        .groupBy("doc_id", "lang")
-        .agg(F.round(F.round(F.avg("lp_w"), 6) + F.lit(1e-9), 2).alias("lp"))
-    )
+    words = d.select("doc_id", "lang", F.explode(tokens("text")).alias("word"))
+    lp = unigram_logprob(words, ["doc_id", "lang"])
     ranked, _ = prefix_sums(
         lp.withColumn("one", F.lit(1)),
         ["lang"],
@@ -2150,9 +2113,7 @@ def t32_packing_efficiency(spark, sf_dir):
     everything is integer until the final fill fraction (non-negative,
     9→6 dp)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", "doc_id", F.size(F.split("text", " ")).alias("n_tok")
-    )
+    toks = d.select("source", "doc_id", F.size(tokens("text")).alias("n_tok"))
     packed, _ = prefix_sums(toks, ["source"], ["doc_id"], ["n_tok"])
     cum_before = F.col("n_tok_before")
     packed = packed.withColumn(
@@ -2239,7 +2200,7 @@ def t33_tokenizer_fertility(spark, sf_dir):
     per_doc = d.select(
         "lang",
         F.length("text").alias("n_chars"),
-        F.size(F.split(F.col("text"), " ")).alias("n_words"),
+        F.size(tokens("text")).alias("n_words"),
         F.regexp_count("text", F.lit(_TOKEN_RE)).alias("n_tokens"),
     )
     agg = per_doc.groupBy("lang").agg(
@@ -2323,7 +2284,7 @@ def token_budget_mix(docs: DataFrame) -> DataFrame:
     ``TOKEN_BUDGET_FRAC`` × the corpus total."""
     per = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split(F.col("text"), " "))).alias("tokens"),
+        F.sum(F.size(tokens("text"))).alias("tokens"),
     )
     wts = per.withColumn(
         "target_w",
@@ -2402,7 +2363,7 @@ def shard_manifest(
     h = F.md5(F.concat(F.lit(seed), F.col("doc_id").cast("string")))
     base = docs.select(
         "doc_id",
-        F.size(F.split("text", " ")).alias("tokens"),
+        F.size(tokens("text")).alias("tokens"),
         h.alias("h"),
     )
     ranked, totals = prefix_sums(
@@ -2598,9 +2559,7 @@ def vocab_coverage(d: DataFrame) -> DataFrame:
     partition by declaration). Counts stay BIGINT end to end; the
     single division happens per output row. Deterministic tiebreak
     (c DESC, w ASC) everywhere."""
-    toks = spread(d).select(
-        F.explode(F.split(F.lower("text"), " ")).alias("w")
-    )
+    toks = spread(d).select(F.explode(tokens("text")).alias("w"))
     counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     total = counts.agg(F.sum("c").alias("total_tokens"))
     top = counts.orderBy(F.col("c").desc(), "w").limit(max(COVERAGE_NS))
@@ -2693,7 +2652,7 @@ def _trigram_instances(df, text_col: str = "text"):
     """(doc_id, u, v, w3) word-trigram instances via the indexed
     ``transform`` lambda — array-side build, no positional self-join
     (the t14 bigram pattern one order up)."""
-    words = F.split(F.lower(text_col), " ")
+    words = tokens(text_col)
     tris = F.transform(
         F.slice(words, 1, F.size(words) - 2),
         lambda w, i: F.struct(
@@ -2751,7 +2710,7 @@ def stupid_backoff_scores(docs: "DataFrame") -> "DataFrame":
         .localCheckpoint(eager=False)  # feeds tri_model AND bi_model
     )
     uni = (
-        train.select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
+        train.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c1"))
         .localCheckpoint(eager=False)  # feeds bi_model AND uni_model
@@ -2803,7 +2762,7 @@ def stupid_backoff_scores(docs: "DataFrame") -> "DataFrame":
         hits(2, "bi_hits"),
         hits(1, "uni_hits"),
         hits(0, "oov"),
-        F.round(F.round(F.avg("lp"), 6) + F.lit(1e-9), 2).alias("lp"),
+        nudge(F.avg("lp"), 2).alias("lp"),
     )
 
 

@@ -27,7 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table
+from crossfire_spark.catalog import load_table, nudge
 
 
 def asof_join(
@@ -261,7 +261,7 @@ def a04_asof_interpolate(spark, sf_dir):
     return j.select(
         "event_id",
         "user_id",
-        F.round(F.round(v, 6) + F.lit(1e-9), 2).alias("interp_value"),
+        nudge(v, 2).alias("interp_value"),
     ).orderBy("event_id", "user_id", "interp_value")
 
 

@@ -28,8 +28,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, stab
+from crossfire_spark.catalog import load_table, nudge, stab
 from crossfire_spark.functions.skew import prefix_sums
+from crossfire_spark.functions.text import (
+    SPLIT_TRAIN_LIM,
+    SPLIT_VAL_LIM,
+    _hash_u16,
+    _u16_sql,
+    bag_fingerprint,
+    split_assign,
+    tokens,
+)
 
 PRICE_BANDS = [
     ("low", 0.0, 50_000.0),
@@ -529,7 +538,7 @@ def time_weighted_avg(events: DataFrame, series_key: str = "event_type") -> Data
     ).where(F.col("dur_us").isNotNull())
     twa = F.sum(F.col("value") * F.col("dur_us")) / F.sum("dur_us")
     return weighted.groupBy(series_key).agg(
-        F.round(F.round(twa, 6) + F.lit(1e-9), 4).alias("twa"),
+        nudge(twa, 4).alias("twa"),
         F.count(F.lit(1)).alias("n_obs"),
         (F.sum("dur_us") / F.lit(1e6)).alias("span_s"),
     )
@@ -793,7 +802,7 @@ def drift_report(docs: DataFrame) -> DataFrame:
     return (
         dist.join(F.broadcast(ref), "b")
         .groupBy("source")
-        .agg(F.round(F.round(psi, 6) + F.lit(1e-9), 4).alias("psi"))
+        .agg(nudge(psi, 4).alias("psi"))
         .join(totals, "source")
         .select("source", "psi", F.col("n").alias("n_docs"))
     )
@@ -871,8 +880,6 @@ def table_diff(
     then scope the expensive row-level investigation to 1/16th of the
     key space per bad bucket. Checksums are integer sums (exact,
     order-independent), never float accumulation."""
-    from crossfire_spark.functions.text import _hash_u16
-
     def side(df: DataFrame, tag: str) -> DataFrame:
         bucket = _hash_u16(F.col(key)) % DIFF_BUCKETS
         return df.select(
@@ -1088,8 +1095,8 @@ def profile_drift_gate(
                 F.lit(c).alias("col"),
                 bn.alias("base_rows"),
                 cn.alias("cur_rows"),
-                F.round(F.round(b_mean, 6) + F.lit(1e-9), 2).alias("base_mean"),
-                F.round(F.round(c_mean, 6) + F.lit(1e-9), 2).alias("cur_mean"),
+                nudge(b_mean, 2).alias("base_mean"),
+                nudge(c_mean, 2).alias("cur_mean"),
                 null_delta.alias("null_delta"),
                 shift.alias("mean_shift"),
                 status.alias("status"),
@@ -1133,9 +1140,7 @@ def v07_quantile_report(spark, sf_dir):
             "o_orderstatus",
             "n",
             *[
-                F.round(F.round(F.col("q")[i], 6) + F.lit(1e-9), 2).alias(
-                    f"p{int(p * 100)}"
-                )
+                nudge(F.col("q")[i], 2).alias(f"p{int(p * 100)}")
                 for i, p in enumerate(QUANTILE_PS)
             ],
         )
@@ -1217,15 +1222,7 @@ def v09_sketch_cardinality(spark, sf_dir):
     accuracy (±2% vs exact) and union-vs-direct closeness pinned in
     tests."""
     d = load_table(spark, sf_dir, "documents")
-    fp = d.select(
-        "source",
-        F.md5(
-            F.array_join(
-                F.array_sort(F.array_distinct(F.split(F.lower("text"), " "))),
-                " ",
-            )
-        ).alias("fp"),
-    )
+    fp = d.select("source", bag_fingerprint("text").alias("fp"))
     sk = fp.groupBy("source").agg(F.expr("hll_sketch_agg(fp)").alias("sk"))
     sk = sk.localCheckpoint()  # per-source estimates AND the union read it
     per = sk.select("source", F.expr("hll_sketch_estimate(sk)").alias("est"))
@@ -1308,13 +1305,9 @@ def key_skew_report(df: DataFrame, label: str, key: str) -> DataFrame:
         F.sum("c").alias("n_rows"),
         F.count(F.lit(1)).alias("n_keys"),
         F.max("c").alias("max_c"),
-        F.round(
-            F.round(F.expr("percentile(c, 0.99)"), 6) + F.lit(1e-9), 2
-        ).alias("p99_c"),
-        F.round(F.round(F.avg("c"), 6) + F.lit(1e-9), 2).alias("avg_c"),
-        F.round(
-            F.round(F.max("c") / F.avg("c"), 6) + F.lit(1e-9), 2
-        ).alias("skew_ratio"),
+        nudge(F.expr("percentile(c, 0.99)"), 2).alias("p99_c"),
+        nudge(F.avg("c"), 2).alias("avg_c"),
+        nudge(F.max("c") / F.avg("c"), 2).alias("skew_ratio"),
         F.round(
             F.round(F.max("c") / F.sum("c"), 9) + F.lit(1e-12), 4
         ).alias("top_share"),
@@ -1350,7 +1343,7 @@ def h11_seasonality(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
     by = e.groupBy("event_type", F.hour("ts").alias("hod")).agg(
         F.count(F.lit(1)).alias("c"),
-        F.round(F.round(F.avg("value"), 6) + F.lit(1e-9), 2).alias("avg_v"),
+        nudge(F.avg("value"), 2).alias("avg_v"),
     )
     w = Window.partitionBy("event_type")
     return by.select(
@@ -2039,8 +2032,6 @@ def v13_split_drift(spark, sf_dir):
     no windows, no corpus-wide sort. Shares are non-negative and
     rounded 9→6 dp; drift subtracts already-rounded shares, so both
     engines compute identical bits."""
-    from crossfire_spark.functions.text import split_assign
-
     d = load_table(spark, sf_dir, "documents")
     sp = split_assign(d).select("doc_id", "split")
     j = d.select("doc_id", "lang").join(sp, "doc_id")
@@ -2080,12 +2071,6 @@ QUERIES["v13_split_drift"] = v13_split_drift
 
 
 def _v13_oracle() -> str:
-    from crossfire_spark.functions.text import (
-        SPLIT_TRAIN_LIM,
-        SPLIT_VAL_LIM,
-        _u16_sql,
-    )
-
     return f"""
         WITH f AS (SELECT doc_id, lang,
                 md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) fp
@@ -3121,9 +3106,6 @@ def spearman_audit(li: DataFrame) -> DataFrame:
         .join(rp, ["l_returnflag", "l_extendedprice"])
     )
 
-    def stab4(c: F.Column) -> F.Column:
-        return F.round(F.round(c, 6) + F.lit(1e-9), 4) + F.lit(0.0)
-
     return (
         ranked.groupBy("l_returnflag")
         .agg(
@@ -3134,9 +3116,9 @@ def spearman_audit(li: DataFrame) -> DataFrame:
         .select(
             "l_returnflag",
             "n",
-            stab4(F.col("rho_s_raw")).alias("rho_s"),
-            stab4(F.col("rho_p_raw")).alias("rho_p"),
-            stab4(F.col("rho_s_raw") - F.col("rho_p_raw")).alias(
+            (nudge(F.col("rho_s_raw"), 4) + 0.0).alias("rho_s"),
+            (nudge(F.col("rho_p_raw"), 4) + 0.0).alias("rho_p"),
+            (nudge(F.col("rho_s_raw") - F.col("rho_p_raw"), 4) + 0.0).alias(
                 "monotone_gap"
             ),
         )
@@ -3750,7 +3732,7 @@ def token_gini(docs: DataFrame) -> DataFrame:
     base = docs.select(
         "source",
         "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("tokens"),
+        F.size(tokens("text")).cast("long").alias("tokens"),
         F.lit(1).alias("one"),
     )
     ranked, _ = prefix_sums(base, ["source"], ["tokens", "doc_id"], ["one"])

@@ -30,7 +30,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table
+from crossfire_spark.catalog import load_table, nudge
+from crossfire_spark.functions.text import tokens
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -567,7 +568,7 @@ def q39(spark, sf_dir):
     ``CrossAZBlockPlacementPolicy.java:600-603``)."""
     d = _t(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
+        d.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), "word")
@@ -631,9 +632,7 @@ def q42(spark, sf_dir):
         .select(
             "c_mktsegment",
             F.round("raw_s", 2).alias("s"),
-            F.round(
-                F.round(F.col("raw_s") * 100 / F.col("tot"), 6) + F.lit(1e-9), 2
-            ).alias("pct"),
+            nudge(F.col("raw_s") * 100 / F.col("tot"), 2).alias("pct"),
         )
         .orderBy("c_mktsegment", "s", "pct")
     )
@@ -891,8 +890,8 @@ def q54(spark, sf_dir):
     return o.select(
         "o_orderkey",
         "o_orderstatus",
-        F.round(F.round(F.percent_rank().over(w), 6) + F.lit(1e-9), 4).alias("pr"),
-        F.round(F.round(F.cume_dist().over(w), 6) + F.lit(1e-9), 4).alias("cd"),
+        nudge(F.percent_rank().over(w), 4).alias("pr"),
+        nudge(F.cume_dist().over(w), 4).alias("cd"),
         F.ntile(5).over(w).alias("nt"),
         F.first("o_orderkey").over(wf).alias("fv"),
         F.last("o_orderkey").over(wf).alias("lv"),
@@ -913,9 +912,7 @@ def q55(spark, sf_dir):
     identically in both engines."""
     o = _t(spark, sf_dir, "orders")
     avg_per_cust = o.groupBy("o_custkey").agg(
-        F.round(
-            F.round(F.avg("o_totalprice") * 2, 6) + F.lit(1e-9), 2
-        ).alias("thr")
+        nudge(F.avg("o_totalprice") * 2, 2).alias("thr")
     )
     return (
         o.join(avg_per_cust, "o_custkey")
@@ -1007,13 +1004,8 @@ def q59(spark, sf_dir):
         "l_linenumber",
         F.col("l_returnflag").try_cast("int").alias("bad_cast"),
         F.col("l_linenumber").cast("string").try_cast("int").alias("good_cast"),
-        F.round(
-            F.round(
-                F.try_divide(F.col("l_extendedprice"), F.col("l_quantity") - 25),
-                6,
-            )
-            + F.lit(1e-9),
-            2,
+        nudge(
+            F.try_divide(F.col("l_extendedprice"), F.col("l_quantity") - 25), 2
         ).alias("td"),
     ).orderBy(
         "l_orderkey",
@@ -1086,7 +1078,7 @@ def q62(spark, sf_dir):
     surface; strings are not). Pure codegen'd projections — one scan,
     no shuffle before the deterministic ORDER BY."""
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
-    w = F.split(F.lower("text"), " ")
+    w = tokens("text")
     a = F.slice(w, 1, 12)
     b = F.slice(w, 7, 12)
     return d.select(
@@ -1109,19 +1101,17 @@ def q63(spark, sf_dir):
     ROUND(·,6)+1e-9 → 4 dp stabilization used by the engine's other
     float surfaces applies."""
     li = _t(spark, sf_dir, "lineitem")
-
-    def stab4(c: F.Column) -> F.Column:
-        # trailing + 0.0 canonicalizes IEEE -0.0 (covar of tiny
-        # negative co-moment rounds to zero from below) to +0.0
-        return F.round(F.round(c, 6) + F.lit(1e-9), 4) + F.lit(0.0)
-
+    # trailing + 0.0 canonicalizes IEEE -0.0 (covar of tiny negative
+    # co-moment rounds to zero from below) to +0.0
     return (
         li.groupBy("l_returnflag")
         .agg(
-            stab4(F.corr("l_quantity", "l_extendedprice")).alias("corr_qp"),
-            stab4(F.covar_samp("l_discount", "l_tax")).alias("cov_dt"),
-            stab4(F.stddev_samp("l_quantity")).alias("sd_q"),
-            stab4(F.var_samp("l_discount")).alias("var_d"),
+            (nudge(F.corr("l_quantity", "l_extendedprice"), 4) + 0.0).alias(
+                "corr_qp"
+            ),
+            (nudge(F.covar_samp("l_discount", "l_tax"), 4) + 0.0).alias("cov_dt"),
+            (nudge(F.stddev_samp("l_quantity"), 4) + 0.0).alias("sd_q"),
+            (nudge(F.var_samp("l_discount"), 4) + 0.0).alias("var_d"),
             F.count(F.lit(1)).alias("c"),
         )
         .orderBy("l_returnflag", "corr_qp", "cov_dt", "sd_q", "var_d", "c")
@@ -1249,7 +1239,7 @@ def q68(spark, sf_dir):
     the oracle states the same relation by substituting [NULL] for
     empty lists before UNNEST."""
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    long_words = F.expr("filter(split(lower(text), ' '), w -> length(w) > 9)")
+    long_words = F.filter(tokens("text"), lambda w: F.length(w) > 9)
     return (
         d.select("doc_id", F.explode_outer(long_words).alias("w"))
         .orderBy("doc_id", F.col("w").asc_nulls_first())

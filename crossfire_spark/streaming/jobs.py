@@ -34,6 +34,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crossfire_spark.catalog import nudge
+
 WATERMARK = "1 hour"
 SESSION_GAP = "30 minutes"
 
@@ -700,10 +702,7 @@ def st16_stream_topk(spark, sf_dir):
     return (
         sink.orderBy(F.col("s").desc(), "user_id")
         .limit(STREAM_TOPK)
-        .select(
-            "user_id",
-            F.round(F.round("s", 6) + F.lit(1e-9), 2).alias("total"),
-        )
+        .select("user_id", nudge("s", 2).alias("total"))
         .orderBy("user_id", "total")
     )
 

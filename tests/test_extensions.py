@@ -1371,3 +1371,75 @@ def test_threshold_sweep_monotone(spark, sf_dir):
     em = spread(load_table(spark, sf_dir, "embeddings"))
     base = embed_neardup_pairs(em, threshold=min(SWEEP_THRESHOLDS)).count()
     assert rows[0].n_pairs == base
+
+
+@pytest.mark.parametrize("name", ["d01_dedup_bag", "t04_fingerprint"])
+def test_null_text_bag_fingerprint_matches_oracle(spark, sf_dir, tmp_path, name):
+    """A NULL text has a NULL bag fingerprint, as in the oracle's
+    ``array_to_string``; ``concat_ws`` once gave it md5('')."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crossfire_spark.plans import results_match
+    from crossfire_spark.registry import all_oracle_sql, all_queries
+
+    src = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    top = max(src.column("doc_id").to_pylist())
+    nulls = src.slice(0, 2).to_pylist()
+    for i, row in enumerate(nulls, 1):
+        row.update(doc_id=top + i, text=None)
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(
+        pa.concat_tables([src, pa.Table.from_pylist(nulls, schema=src.schema)]),
+        path,
+    )
+
+    sdf = all_queries()[name](spark, str(tmp_path))
+    s_rows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    cur = con.execute(all_oracle_sql()[name])
+    o_cols = [d[0] for d in cur.description]
+    ok, reason = results_match(sdf.columns, s_rows, o_cols, cur.fetchall())
+    con.close()
+    assert s_rows and ok, f"{name}: {reason}"
+
+
+def test_text_kernels_defined_once():
+    """Each text kernel has one definition in the package: the
+    tokenizer, the bag fingerprint, the marker count, the punctuation
+    count, the smoothed IDF, BM25's IDF and length norm, the unigram
+    model and the cross-engine nudge. The one listed exception is
+    relational's Spark-SQL face of q68 (``SPARK_SQL_OVERRIDES``), a
+    reference statement that mirrors its oracle."""
+    import pathlib
+    import re
+
+    from crossfire_spark.operators.relational import SPARK_SQL_OVERRIDES
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    src = {str(f.relative_to(pkg)): f.read_text() for f in pkg.rglob("*.py")}
+    rel = "operators/relational.py"
+    assert SPARK_SQL_OVERRIDES["q68"] in src[rel]
+    src[rel] = src[rel].replace(SPARK_SQL_OVERRIDES["q68"], "")
+    kernels = {
+        "tokenizer": r"F\.split\(\s*F\.lower\(",
+        "bag fingerprint": r"array_sort\(\s*F\.array_distinct\(",
+        "marker count": r"filter\(split\(lower\(",
+        "punctuation count": r'"\[\.,!\?;:\]"',
+        "smoothed idf": r'\(F\.col\("n"\) \+ 1\) / \(F\.col\("df"\) \+ 1\)',
+        "bm25 idf": r'\(F\.col\("df"\) \+ 0\.5\)',
+        "bm25 length norm": r'1 - \w+ \+ \w+ \* F\.col\("dl"\) / F\.col\("avgdl"\)',
+        "unigram model": r'F\.col\("c"\) \* 1\.0 / F\.col\("n"\)',
+        "nudge": r"F\.lit\(1e-9\)",
+    }
+    for kernel, rx in kernels.items():
+        hits = [
+            (name, len(re.findall(rx, text)))
+            for name, text in sorted(src.items())
+            if re.search(rx, text)
+        ]
+        assert sum(n for _, n in hits) == 1, f"{kernel}: {hits}"
