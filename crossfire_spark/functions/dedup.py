@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table, nudge, spread, stab
+from crossfire_spark.functions.graph import connected_components
 from crossfire_spark.functions.text import (
     CDC_CHUNKS_SQL_CTE,
     SHARD_COUNT,
@@ -117,10 +118,14 @@ def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     exchange back to one task. The explicit repartition satisfies the
     dedup aggregate's distribution (no second shuffle) and AQE leaves
     user-specified repartitions alone.
+
+    A NULL text has no shingles, as the oracles' ``string_split``
+    gives it none.
     """
     parts = df.sparkSession.sparkContext.defaultParallelism
     return (
-        spread(df).select("doc_id", tokens("text").alias("w"))
+        spread(df.where(F.col("text").isNotNull()))
+        .select("doc_id", tokens("text").alias("w"))
         .select(
             "doc_id",
             F.explode(
@@ -562,56 +567,6 @@ def simhash_pairs(
 def d04_simhash(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     return simhash_pairs(d).orderBy("doc_a", "doc_b", "hamming")
-
-
-CC_MAX_ITERS = 25
-
-
-def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
-    """Connected components over an undirected near-dup edge list
-    ``(doc_a, doc_b)`` → ``(doc_id, cluster_id)`` where cluster_id is
-    the minimum doc_id reachable from the node.
-
-    Distributed min-label propagation: each round every node takes the
-    min of its own label and its neighbours' labels — one shuffle join
-    plus one shuffle agg per round, converging in O(cluster diameter)
-    rounds. Near-dup clusters are shallow (dups of a common source),
-    so a handful of rounds suffice even at 100 TB; ``localCheckpoint``
-    truncates plan lineage each round so the DAG stays O(1) deep
-    instead of O(rounds). Labels only ever decrease, so convergence is
-    detected by a monotone checksum — sum(lbl) strictly decreases
-    until stable — one scan of the checkpointed labels instead of a
-    self-join against the previous round.
-    """
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .distinct()
-        .localCheckpoint()  # reused every round — materialize once
-    )
-    labels = (
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    prev_sum = None
-    for _ in range(max_iters):
-        nbr = sym.join(
-            labels.select(F.col("doc_id").alias("dst"), "lbl"), "dst"
-        ).select(F.col("src").alias("doc_id"), "lbl")
-        new = (
-            labels.union(nbr)
-            .groupBy("doc_id")
-            .agg(F.min("lbl").alias("lbl"))
-            .localCheckpoint()
-        )
-        new_sum = new.agg(F.sum("lbl")).collect()[0][0]
-        converged = prev_sum is not None and new_sum == prev_sum
-        prev_sum, labels = new_sum, new
-        if converged:
-            break
-    return labels.select("doc_id", F.col("lbl").alias("cluster_id"))
 
 
 def d06_dup_clusters(spark, sf_dir):

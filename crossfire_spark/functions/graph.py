@@ -2,20 +2,29 @@
 dependency — plain joins + aggregates, the way Spark SQL users run
 graph algorithms at scale).
 
-``connected_components`` lives in ``functions.dedup`` (duplicate
-clustering); this module adds **PageRank**, the other canonical
-message-passing workload. A fixed iteration count keeps the operator
-fully deterministic and lets the DuckDB oracle state the SAME
-computation as an unrolled chain of join+aggregate CTEs — the
-iterative engine loop is therefore exactly oracle-checked, not just
-sanity-checked.
+The iterative queries share one kernel set, defined below:
+``undirected`` (the ``a < b`` closure of an edge list), ``mirror``
+(its two-direction adjacency), ``checkpoint`` (a ``localCheckpoint``
+that can carry one aggregate through an ``Observation``), ``fixpoint``
+(the round loop) and ``_pagerank`` (one PageRank round with a restart
+column). PageRank, personalized PageRank, k-core, label propagation,
+the Bellman–Ford relaxation (g13) and ``connected_components`` (the
+duplicate clustering of the dedup, ANN and validation families) all
+run through ``fixpoint``.
 
-Scale shape per iteration: one equi-join of ranks to edges on the
-source key + one aggregate on the destination key — two shuffles over
-edge-cardinality rows, the textbook distributed PageRank step. Ranks
-are ``localCheckpoint``-ed each round so the lineage (and codegen
-plan) stays O(1) deep instead of O(iterations); dangling mass is
-redistributed uniformly (the standard correction) computed as a 1-row
+A fixed iteration count keeps PageRank and label propagation fully
+deterministic and lets the DuckDB oracle state the SAME computation as
+an unrolled chain of join+aggregate CTEs — the iterative engine loop
+is therefore exactly oracle-checked, not just sanity-checked. k-core
+and connected components run to their fixpoint instead; both are
+unique, so a converged loop and the oracle state the same answer.
+
+Scale shape per PageRank iteration: one equi-join of ranks to edges on
+the source key + one aggregate on the destination key — two shuffles
+over edge-cardinality rows, the textbook distributed PageRank step.
+Every round's state is ``localCheckpoint``-ed so the lineage (and
+codegen plan) stays O(1) deep instead of O(iterations); dangling mass
+is redistributed through the restart column, computed as a 1-row
 broadcast aggregate.
 
 The declared graph is synthesized closed-form from ``documents``
@@ -26,13 +35,141 @@ operator is pinned end-to-end at any SF.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table, nudge, stab
 
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """The undirected closure of an edge list ``(src, dst)``: one
+    ``(a, b)`` row per linked node pair, ``a < b``, self-loops
+    dropped."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def mirror(pairs: DataFrame) -> DataFrame:
+    """Both directions of every ``(a, b)`` row, as ``(node, nbr)`` —
+    the symmetric adjacency of an undirected edge list."""
+    return pairs.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
+        pairs.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
+    )
+
+
+def checkpoint(df: DataFrame, counter: Column | None = None) -> tuple[DataFrame, object]:
+    """``df.localCheckpoint()`` and, when ``counter`` (an aggregate
+    Column) is given, its value over the checkpointed rows. The counter
+    rides the checkpoint's own job through an ``Observation``, so a
+    row count or a convergence checksum costs no separate job.
+    Returns ``(checkpointed frame, value or None)``."""
+    if counter is None:
+        return df.localCheckpoint(), None
+    obs = Observation()
+    df = df.observe(obs, counter.alias("value")).localCheckpoint()
+    return df, obs.get["value"]
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    until: Column | None = None,
+) -> DataFrame:
+    """Run ``state = step(state)`` for ``rounds`` rounds, checkpointing
+    every round's state so the lineage stays O(1) deep.
+
+    With ``until`` (an aggregate Column that changes whenever the state
+    does, such as a row count under peeling or a label sum under
+    min-propagation), the initial state is checkpointed too and the
+    loop stops at the first round whose ``until`` value repeats the
+    previous one — that round changed nothing. The value rides each
+    checkpoint (see :func:`checkpoint`), so convergence costs no job.
+    ``rounds`` is then a cap: running out of it while the value still
+    changes raises instead of returning an unconverged state."""
+    prev = None
+    if until is not None:
+        state, prev = checkpoint(state, until)
+    for _ in range(rounds):
+        state, value = checkpoint(step(state), until)
+        if until is not None and value == prev:
+            return state
+        prev = value
+    if until is not None:
+        raise RuntimeError(f"no fixpoint within {rounds} rounds")
+    return state
+
+
 PR_ITERS = 3
 PR_DAMP = 0.85
+
+
+def _node_set(edges: DataFrame) -> DataFrame:
+    """(node) — the distinct endpoints of an edge list."""
+    return (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+
+
+def _pagerank(
+    edges: DataFrame,
+    base: DataFrame,
+    ranks: DataFrame,
+    teleport: Column,
+    share: Column,
+    iters: int,
+    damping: float,
+) -> DataFrame:
+    """The PageRank loop shared by :func:`pagerank` and
+    :func:`personalized_pagerank`. Each round every node sends
+    rank/out_degree along its out-edges and takes
+    ``rank = teleport + d * (received + share)``, where ``dm``, the
+    total rank of nodes with no out-edges, is redistributed by
+    ``share``. ``base`` lists every node with the columns ``teleport``
+    and ``share`` read (the restart vector); ``ranks`` is the initial
+    (node, rank)."""
+    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    # edge weight = 1/out_degree(src), constant across iterations
+    w_edges = edges.join(out_deg, "src").select(
+        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
+    ).localCheckpoint()
+    has_out = w_edges.select(F.col("src").alias("node")).distinct()
+
+    def step(ranks: DataFrame) -> DataFrame:
+        # rank mass parked on dangling nodes (no out-edges): 1-row agg
+        dangling = (
+            ranks.join(has_out, "node", "left_anti")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+        )
+        contrib = (
+            w_edges.join(
+                ranks.select(F.col("node").alias("src"), "rank"), "src"
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.col("rank") * F.col("w")).alias("recv"))
+        )
+        return (
+            base.join(contrib, "node", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "node",
+                (
+                    teleport
+                    + F.lit(damping) * (F.coalesce("recv", F.lit(0.0)) + share)
+                ).alias("rank"),
+            )
+        )
+
+    return fixpoint(ranks, step, iters)
 
 
 def pagerank(
@@ -48,52 +185,19 @@ def pagerank(
     ``dangling`` is the total rank of nodes with no out-edges
     (uniformly redistributed). Returns (node, rank).
     """
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()  # scalar: drives the uniform terms
+    # N rides the node table's checkpoint: it drives the uniform terms
+    nodes, n_nodes = checkpoint(_node_set(edges), F.count(F.lit(1)))
     if n_nodes == 0:  # empty graph — empty ranks, not a ZeroDivision
         return nodes.select("node", F.lit(0.0).alias("rank"))
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # edge weight = 1/out_degree(src), constant across iterations
-    w_edges = edges.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
-    ).localCheckpoint()
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    has_out = w_edges.select(F.col("src").alias("node")).distinct()
-    for _ in range(iters):
-        # rank mass parked on dangling nodes (no out-edges): 1-row agg
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-        contrib = (
-            w_edges.join(
-                ranks.select(F.col("node").alias("src"), "rank"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("recv"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("recv", F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n_nodes))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()  # O(1) lineage depth per round
-        )
-    return ranks
+    return _pagerank(
+        edges,
+        nodes,
+        nodes.select("node", F.lit(1.0 / n_nodes).alias("rank")),
+        F.lit((1.0 - damping) / n_nodes),
+        F.col("dm") / F.lit(float(n_nodes)),
+        iters,
+        damping,
+    )
 
 
 def doc_link_graph(docs: DataFrame) -> DataFrame:
@@ -126,7 +230,7 @@ def g01_pagerank(spark, sf_dir):
     ranks = pagerank(doc_link_graph(d))
     return ranks.select(
         "node",
-        F.round(F.round(F.col("rank"), 9) + F.lit(1e-12), 6).alias("rank"),
+        stab(F.col("rank")).alias("rank"),
     ).orderBy("node", "rank")
 
 
@@ -221,20 +325,8 @@ def _triangle_triples(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     triangle triples (x, y, z) with y < z — each triangle exactly
     once. Used by g03's per-node counts and g15's per-edge
     embeddedness so the two cannot disagree about the triangle set."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()  # read by deg, orientation, and closure
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    und = undirected(edges).localCheckpoint()  # read by deg, orientation, and closure
+    deg = mirror(und).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("dega"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("degb"))
     lo_first = (F.col("dega") < F.col("degb")) | (
@@ -313,44 +405,30 @@ def kcore(edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
     ONE map-side-combinable degree aggregate plus TWO semi-joins
     filtering the symmetric adjacency to surviving endpoints — all
     equi-joins on node keys, no windows, no driver-side graph. The
-    adjacency is ``localCheckpoint``-ed per round so lineage stays
-    O(1) deep, and the loop exits at the fixpoint (peeling is
-    idempotent once every degree ≥ k, so the ``max_rounds`` cap never
-    changes a converged answer). Per-round survivor counts are the
-    only driver-side values.
+    loop runs through :func:`fixpoint` until the adjacency's row count
+    repeats (peeling is idempotent once every degree ≥ k); the count
+    rides each round's checkpoint, and a peel still shrinking after
+    ``max_rounds`` raises.
 
     Determinism: the k-core is unique (peel order never matters), so
     a bounded unrolled oracle states the identical computation.
     Returns (node, core_deg) for members of the k-core.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).localCheckpoint()
-    prev_rows = adj.count()
-    for _ in range(max_rounds):
+
+    def peel(adj: DataFrame) -> DataFrame:
         keep = (
             adj.groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
             .where(F.col("deg") >= k)
             .select("node")
         )
-        adj = (
+        return (
             adj.join(keep, "node", "left_semi")
             .join(keep.select(F.col("node").alias("nbr")), "nbr", "left_semi")
             .select("node", "nbr")
-            .localCheckpoint()  # O(1) lineage depth per round
         )
-        rows = adj.count()
-        if rows == prev_rows:  # fixpoint: every surviving degree ≥ k
-            break
-        prev_rows = rows
+
+    adj = fixpoint(mirror(undirected(edges)), peel, max_rounds, until=F.count(F.lit(1)))
     return adj.groupBy("node").agg(F.count(F.lit(1)).alias("core_deg"))
 
 
@@ -387,6 +465,47 @@ def _kcore_oracle() -> str:
         GROUP BY node ORDER BY node, core_deg"""
 
 
+CC_MAX_ITERS = 25
+
+
+def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
+    """Connected components over an undirected near-dup edge list
+    ``(doc_a, doc_b)`` → ``(doc_id, cluster_id)`` where cluster_id is
+    the minimum doc_id reachable from the node.
+
+    Distributed min-label propagation: each round every node takes the
+    min of its own label and its neighbours' labels — one shuffle join
+    plus one shuffle agg per round, converging in O(cluster diameter)
+    rounds. Near-dup clusters are shallow (dups of a common source),
+    so a handful of rounds suffice even at 100 TB.
+
+    Convergence: labels only ever decrease, so sum(lbl) strictly
+    decreases until the labels are stable. The sum rides each round's
+    checkpoint in :func:`fixpoint`, which stops at the first round that
+    leaves it unchanged; a chain still shrinking after ``max_iters``
+    rounds raises rather than returning non-minimal labels.
+    """
+    sym = (
+        mirror(edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")))
+        .distinct()
+        .localCheckpoint()  # reused every round — materialize once
+    )
+
+    def min_label(labels: DataFrame) -> DataFrame:
+        nbr = sym.join(
+            labels.select(F.col("doc_id").alias("nbr"), "lbl"), "nbr"
+        ).select(F.col("node").alias("doc_id"), "lbl")
+        return labels.union(nbr).groupBy("doc_id").agg(F.min("lbl").alias("lbl"))
+
+    labels = (
+        sym.select(F.col("node").alias("doc_id"))
+        .distinct()
+        .withColumn("lbl", F.col("doc_id"))
+    )
+    labels = fixpoint(labels, min_label, max_iters, until=F.sum("lbl"))
+    return labels.select("doc_id", F.col("lbl").alias("cluster_id"))
+
+
 LINKPRED_MIN_COMMON = 2
 
 
@@ -407,17 +526,8 @@ def link_prediction(edges: DataFrame) -> DataFrame:
     evidence through a hub is uninformative (the Adamic-Adar
     argument). The synthetic graph's degree is <= 4, so the declared
     form is exact and IS the oracle."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()  # read by adjacency (twice via adj) + anti-join
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
+    und = undirected(edges).localCheckpoint()  # read by adj (twice) + the anti-join
+    adj = mirror(und)
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     a1 = adj.select(F.col("node").alias("p"), F.col("nbr").alias("x"))
     a2 = adj.select(F.col("node").alias("q"), F.col("nbr").alias("x"))
@@ -492,32 +602,25 @@ def label_propagation(edges: DataFrame, rounds: int = LP_ROUNDS) -> DataFrame:
     Scale shape per round: one equi-join of labels to the adjacency
     on the neighbor key + two map-side-combinable aggregates (label
     counts, per-node argmax) — node/label-keyed shuffles only, no
-    windows over the corpus; ``localCheckpoint`` cuts the per-round
-    lineage exactly as pagerank's loop does."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    ).localCheckpoint()  # re-read every round
-    labels = adj.select("node").distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(rounds):
+    windows over the corpus; the rounds run through :func:`fixpoint`
+    like pagerank's."""
+    adj = mirror(undirected(edges)).localCheckpoint()  # re-read every round
+
+    def adopt(labels: DataFrame) -> DataFrame:
         nb = adj.join(
             labels.select(F.col("node").alias("nbr"), "lbl"), "nbr"
         ).select("node", "lbl")
         counts = nb.groupBy("node", "lbl").agg(F.count(F.lit(1)).alias("c"))
-        labels = (
+        return (
             counts.groupBy("node")
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("lbl"))).alias("m"))
             .select("node", F.col("m.lbl").alias("lbl"))
-            .localCheckpoint()
         )
+
+    labels = adj.select("node").distinct().select(
+        "node", F.col("node").alias("lbl")
+    )
+    labels = fixpoint(labels, adopt, rounds)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -653,8 +756,8 @@ def bipartite_projection(events: DataFrame) -> DataFrame:
             "ta",
             "tb",
             "both_users",
-            F.round(F.round(cos, 9) + F.lit(1e-12), 4).alias("cosine_aff"),
-            F.round(F.round(jac, 9) + F.lit(1e-12), 4).alias("jaccard_aff"),
+            stab(cos, 4).alias("cosine_aff"),
+            stab(jac, 4).alias("jaccard_aff"),
         )
     )
 
@@ -724,21 +827,18 @@ def personalized_pagerank(
     data-selection primitive: seed with curated documents, keep the
     corpus ranked by PPR mass (TrustRank-style curation).
 
-    Scale shape: identical per-iteration plan to :func:`pagerank`
-    (one edge-keyed join + one aggregate per round, dangling as a
-    1-row aggregate); the restart vector is a node-keyed column, not
-    a broadcast structure, so a million-seed set costs the same as
-    one seed."""
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
+    Scale shape: the same round as :func:`pagerank` (one edge-keyed
+    join + one aggregate per round, dangling as a 1-row aggregate);
+    the restart vector is a node-keyed column, not a broadcast
+    structure, so a million-seed set costs the same as one seed."""
+    nodes = _node_set(edges).localCheckpoint()
+    # |S| rides the seed table's checkpoint, which the restart join reads
+    seed_in, n_seeds = checkpoint(
+        seeds.select(F.col("seed").alias("node"))
         .distinct()
-        .localCheckpoint()
+        .join(nodes, "node", "left_semi"),
+        F.count(F.lit(1)),
     )
-    seed_in = seeds.select(F.col("seed").alias("node")).distinct().join(
-        nodes, "node", "left_semi"
-    )
-    n_seeds = seed_in.count()
     if n_seeds == 0:  # no seeds in graph — all-zero ranks, not a crash
         return nodes.select("node", F.lit(0.0).alias("rank"))
     restart = (
@@ -751,41 +851,15 @@ def personalized_pagerank(
         )
         .localCheckpoint()
     )
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    w_edges = edges.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
-    ).localCheckpoint()
-    has_out = w_edges.select(F.col("src").alias("node")).distinct()
-    ranks = restart.select("node", F.col("res").alias("rank"))
-    for _ in range(iters):
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-        contrib = (
-            w_edges.join(
-                ranks.select(F.col("node").alias("src"), "rank"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("recv"))
-        )
-        ranks = (
-            restart.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("res")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("recv", F.lit(0.0))
-                        + F.col("dm") * F.col("res")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
+    return _pagerank(
+        edges,
+        restart,
+        restart.select("node", F.col("res").alias("rank")),
+        F.lit(1.0 - damping) * F.col("res"),
+        F.col("dm") * F.col("res"),
+        iters,
+        damping,
+    )
 
 
 def g09_personalized_pagerank(spark, sf_dir):
@@ -800,7 +874,7 @@ def g09_personalized_pagerank(spark, sf_dir):
     ranks = personalized_pagerank(doc_link_graph(d), seeds)
     return ranks.select(
         "node",
-        F.round(F.round(F.col("rank"), 9) + F.lit(1e-12), 6).alias("rank"),
+        stab(F.col("rank")).alias("rank"),
     ).orderBy("node", "rank")
 
 
@@ -860,23 +934,13 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     windows, no iteration. Float discipline: corr is sign-indefinite,
     so the q63 treatment applies — ROUND 6→4 dp with the 1e-9 guard
     AND a trailing + 0.0 to canonicalize IEEE -0.0."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    bi = und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    du = deg.select(F.col("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("u").alias("v"), F.col("d").alias("dv"))
-    paired = bi.join(du, "u").join(dv, "v")
+    bi = mirror(undirected(edges))
+    deg = bi.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
+    du = deg.select(F.col("node"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("nbr"), F.col("d").alias("dv"))
+    paired = bi.join(du, "node").join(dv, "nbr")
     return paired.agg(
-        F.countDistinct("u").alias("n_nodes"),
+        F.countDistinct("node").alias("n_nodes"),
         (F.count(F.lit(1)) / F.lit(2)).cast("long").alias("n_edges"),
         (nudge(F.corr("du", "dv"), 4) + F.lit(0.0)).alias("assortativity"),
     )
@@ -922,22 +986,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     Scale shape: reuses the degree-oriented wedge join of
     :func:`triangle_counts` (fan-out Σ min-degree², the O(m^1.5)
     discipline) plus one degree aggregate and a left join — nothing
-    new shuffles more than edge cardinality. cc is non-negative, so
-    the 9→6 dp rounding needs no -0.0 guard."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    new shuffles more than edge cardinality."""
+    deg = mirror(undirected(edges)).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     tri = triangle_counts(edges)
     return (
         deg.where(F.col("deg") >= 2)
@@ -946,15 +996,10 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
             "node",
             "deg",
             F.coalesce("n_triangles", F.lit(0)).alias("n_triangles"),
-            F.round(
-                F.round(
-                    F.lit(2.0)
-                    * F.coalesce("n_triangles", F.lit(0))
-                    / (F.col("deg") * (F.col("deg") - 1)),
-                    9,
-                )
-                + F.lit(1e-12),
-                6,
+            stab(
+                F.lit(2.0)
+                * F.coalesce("n_triangles", F.lit(0))
+                / (F.col("deg") * (F.col("deg") - 1))
             ).alias("cc"),
         )
     )
@@ -1109,21 +1154,18 @@ def g13_weighted_shortest_path(spark, sf_dir):
         .cast("long")
         .alias("w"),
     ).localCheckpoint()  # the K rounds re-join this table; one scan
-    dist = spark.createDataFrame(
-        [(REACH_SRC, 0)], "node bigint, dist bigint"
-    )
-    for _ in range(G13_HOPS):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = dist.join(edges, F.col("node") == F.col("src")).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()  # cut the lineage: K-deep plan reuse
-        )
-    return dist.orderBy("node", "dist")
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist = spark.createDataFrame(
+        [(REACH_SRC, 0)], "node bigint, dist bigint"
+    )
+    return fixpoint(dist, relax, G13_HOPS).orderBy("node", "dist")
 
 
 QUERIES["g13_weighted_shortest_path"] = g13_weighted_shortest_path
@@ -1172,17 +1214,8 @@ def modularity(edges: DataFrame) -> DataFrame:
     projection rather than threaded out of ``label_propagation`` —
     one extra distinct over edge cardinality, the price of leaving
     g06's proven code path untouched."""
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()  # reused by m, intra, and the degree table
-    )
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
-    )
+    und = undirected(edges).localCheckpoint()  # reused by m, intra, and the degree table
+    adj = mirror(und)
     labels = label_propagation(edges)
     m1 = und.agg(F.count(F.lit(1)).alias("m"))
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
@@ -1305,12 +1338,7 @@ def edge_embeddedness(edges: DataFrame) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("emb"))
     )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    deg = mirror(und).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     return (
         und.join(pair, ["a", "b"], "left")
         .join(deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a")), "a")

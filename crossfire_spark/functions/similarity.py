@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from crossfire_spark.catalog import load_table, spread, stab
-from crossfire_spark.functions.dedup import _cap_buckets, connected_components
+from crossfire_spark.functions.dedup import _cap_buckets
+from crossfire_spark.functions.graph import connected_components
 from crossfire_spark.functions.text import (
     BM25_B,
     BM25_K1,

@@ -596,9 +596,9 @@ def cdc_chunks(df, text_col: str = "text", window: int = CDC_WINDOW, mod: int = 
         for pdf in batches:
             doc_ids, cids, lens, fps = [], [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                n = len(text)
-                if n == 0:
+                if not text:  # NULL or empty text: no chunks
                     continue
+                n = len(text)
                 codes = np.fromiter((ord(c) for c in text), dtype=np.int64, count=n)
                 if n >= window:
                     cum = np.concatenate(([0], np.cumsum(codes)))
@@ -1320,9 +1320,10 @@ def ngram_novelty(d: DataFrame, n: int = NOVELTY_N) -> DataFrame:
     map-side-combinable (gram → min_doc) aggregate joined back to the
     per-doc distinct-gram stream — no ordered scan, no window over
     the corpus, no pair join. Gram text reduces to an 8-byte xxhash
-    before the shuffle; both aggregates are gram- or doc-keyed."""
+    before the shuffle; both aggregates are gram- or doc-keyed. A NULL
+    text has no grams (and no row), as in the oracle."""
     grams = (
-        spread(d)
+        spread(d.where(F.col("text").isNotNull()))
         .select("doc_id", tokens("text").alias("w"))
         .select(
             "doc_id",

@@ -2117,10 +2117,8 @@ def v14_dup_label_consistency(spark, sf_dir):
     Scale shape: the cluster map is d06's node-cardinality min-label
     propagation; the report is one aggregate on the cluster key with
     two COUNT(DISTINCT) measures. Integer-only output."""
-    from crossfire_spark.functions.dedup import (
-        connected_components,
-        exact_jaccard_pairs,
-    )
+    from crossfire_spark.functions.dedup import exact_jaccard_pairs
+    from crossfire_spark.functions.graph import connected_components
 
     d = load_table(spark, sf_dir, "documents")
     cc = connected_components(exact_jaccard_pairs(d))

@@ -6,14 +6,12 @@ oracle tests; these pin the *meaning*."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crossfire_spark.catalog import load_table
-from crossfire_spark.functions.dedup import (
-    connected_components,
-    d11_dedup_savings,
-    exact_jaccard_pairs,
-)
+from crossfire_spark.functions.dedup import d11_dedup_savings, exact_jaccard_pairs
+from crossfire_spark.functions.graph import connected_components
 from crossfire_spark.functions.text import t15_split_assign
 from crossfire_spark.operators.extended import (
     SESSION_GAP_US,
@@ -123,6 +121,28 @@ def test_pagerank_mass_conservation(spark, sf_dir):
     assert abs(total - 1.0) < 1e-9
     assert all(r["rank"] > 0 for r in ranks)
     assert len(ranks) == d.count()
+
+
+def test_loop_cap_raises_instead_of_truncating(spark):
+    """Min-label propagation moves a label one hop per round, so a
+    20-node path converges inside CC_MAX_ITERS (every node gets label
+    0) and a 40-node path does not: it must raise, not return labels
+    that stopped short of the minimum. A k-core peel still shrinking
+    at its round cap raises the same way (k=2 peels a path one node
+    from each end per round)."""
+    from crossfire_spark.functions.graph import kcore
+
+    def path(n, a="doc_a", b="doc_b"):
+        return spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], f"{a} long, {b} long"
+        )
+
+    got = {r.doc_id: r.cluster_id for r in connected_components(path(20)).collect()}
+    assert got == {i: 0 for i in range(20)}
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(path(40))
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        kcore(path(40, "src", "dst"), k=2, max_rounds=4)
 
 
 def test_table_diff_localizes_drift(spark, sf_dir):

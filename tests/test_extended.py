@@ -91,10 +91,8 @@ def test_v14_flags_only_genuinely_mixed_clusters(spark, sf_dir):
     among its members (recomputed from the cluster map), and every
     mixed multi-doc cluster is flagged — no false positives or
     misses."""
-    from crossfire_spark.functions.dedup import (
-        connected_components,
-        exact_jaccard_pairs,
-    )
+    from crossfire_spark.functions.dedup import exact_jaccard_pairs
+    from crossfire_spark.functions.graph import connected_components
     from crossfire_spark.operators.extended import v14_dup_label_consistency
 
     d = load_table(spark, sf_dir, "documents")

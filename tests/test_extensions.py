@@ -1373,10 +1373,37 @@ def test_threshold_sweep_monotone(spark, sf_dir):
     assert rows[0].n_pairs == base
 
 
-@pytest.mark.parametrize("name", ["d01_dedup_bag", "t04_fingerprint"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d01_dedup_bag",
+        "t04_fingerprint",
+        # word n-gram shingles: a NULL text has none
+        "d02_ngram_jaccard",
+        "d06_dup_clusters",
+        "d07_contamination",
+        "d11_dedup_savings",
+        "d14_containment",
+        "d17_hashed_decontam",
+        "d19_dedup_keep_best",
+        "d22_anchor_positives",
+        "d24_bloom_decontam",
+        "d29_lsh_param_planner",
+        "v14_dup_label_consistency",
+        "t24_ngram_novelty",
+        "d13_build_index",
+        # content-defined chunks: a NULL text has none
+        "t12_cdc_chunks",
+        "d10_chunk_dedup",
+    ],
+)
 def test_null_text_bag_fingerprint_matches_oracle(spark, sf_dir, tmp_path, name):
     """A NULL text has a NULL bag fingerprint, as in the oracle's
-    ``array_to_string``; ``concat_ws`` once gave it md5('')."""
+    ``array_to_string`` (``concat_ws`` once gave it md5('')), and no
+    word n-gram shingles and no chunks, as the oracles'
+    ``string_split`` gives it none (shingling once gave it one empty
+    shingle, so NULL-text documents paired at Jaccard 1.0, and
+    chunking crashed on it)."""
     import os
 
     import duckdb
@@ -1443,3 +1470,51 @@ def test_text_kernels_defined_once():
             if re.search(rx, text)
         ]
         assert sum(n for _, n in hits) == 1, f"{kernel}: {hits}"
+
+
+def test_graph_kernels_defined_once():
+    """The iterative-graph scaffolding has one definition in the
+    package: the undirected closure ``least/greatest(src, dst)``, the
+    PageRank update (the uniform and the personalized rank share one
+    round) and the round loop — one ``for _ in range(...)`` loop that
+    checkpoints its state every round (``fixpoint``); every iterative
+    query calls it instead of carrying its own."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    src = {str(f.relative_to(pkg)): f.read_text() for f in pkg.rglob("*.py")}
+    kernels = {
+        "undirected closure": r'F\.least\("src", "dst"\)',
+        "pagerank update": r'F\.coalesce\("recv", F\.lit\(0\.0\)\)',
+    }
+    for kernel, rx in kernels.items():
+        hits = [
+            (name, len(re.findall(rx, text)))
+            for name, text in sorted(src.items())
+            if re.search(rx, text)
+        ]
+        assert sum(n for _, n in hits) == 1, f"{kernel}: {hits}"
+
+    def checkpoints(node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if name in ("localCheckpoint", "checkpoint"):
+                    return True
+        return False
+
+    loops = [
+        (name, loop.lineno)
+        for name, text in sorted(src.items())
+        for loop in ast.walk(ast.parse(text))
+        if isinstance(loop, ast.For)
+        and isinstance(loop.target, ast.Name)
+        and loop.target.id == "_"
+        and isinstance(loop.iter, ast.Call)
+        and getattr(loop.iter.func, "id", "") == "range"
+        and checkpoints(loop)
+    ]
+    assert len(loops) == 1, f"per-round checkpoint loops: {loops}"
