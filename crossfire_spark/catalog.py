@@ -81,12 +81,19 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
-def stab(c: F.Column | str, dp: int = 6) -> F.Column:
+def stab_signed(c: F.Column | str, dp: int) -> F.Column:
     """Round a float so both engines agree bit for bit: round to 9 dp,
-    nudge by 1e-12 past half-way ties, round to ``dp``; the trailing
-    ``+ 0.0`` turns -0.0 into +0.0. The oracle SQL spells the same
-    ``ROUND(ROUND(x, 9) + 1e-12, dp) + 0.0``."""
-    return F.round(F.round(c, 9) + F.lit(1e-12), dp) + F.lit(0.0)
+    nudge by 1e-12 past half-way ties, round to ``dp``. A -0.0 result
+    keeps its sign, as in the oracle SQL's
+    ``ROUND(ROUND(x, 9) + 1e-12, dp)``."""
+    return F.round(F.round(c, 9) + F.lit(1e-12), dp)
+
+
+def stab(c: F.Column | str, dp: int = 6) -> F.Column:
+    """``stab_signed`` plus a trailing ``+ 0.0`` that turns -0.0 into
+    +0.0, spelled ``ROUND(ROUND(x, 9) + 1e-12, dp) + 0.0`` in the
+    oracle SQL."""
+    return stab_signed(c, dp) + F.lit(0.0)
 
 
 def nudge(c: F.Column | str, dp: int) -> F.Column:

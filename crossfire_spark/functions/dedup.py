@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, spread, stab
+from crossfire_spark.catalog import load_table, nudge, spread, stab, stab_signed
 from crossfire_spark.functions.graph import connected_components
 from crossfire_spark.functions.text import (
     CDC_CHUNKS_SQL_CTE,
@@ -2224,10 +2224,7 @@ def dedup_recall_audit(
         # undefined, not a crash (ANSI division guard)
         F.when(
             F.col("n_exact") > 0,
-            F.round(
-                F.round(F.col("n_found") / F.col("n_exact"), 9) + F.lit(1e-12),
-                6,
-            ),
+            stab_signed(F.col("n_found") / F.col("n_exact"), 6),
         ).alias("recall"),
     )
 

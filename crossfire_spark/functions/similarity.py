@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from crossfire_spark.catalog import load_table, spread, stab
+from crossfire_spark.catalog import load_table, spread, stab, stab_signed
 from crossfire_spark.functions.dedup import _cap_buckets
 from crossfire_spark.functions.graph import connected_components
 from crossfire_spark.functions.text import (
@@ -2627,11 +2627,7 @@ def d26_threshold_sweep(spark, sf_dir):
         # empty corpus -> fraction undefined, not a crash (ANSI guard)
         F.when(
             F.lit(n_total) > 0,
-            F.round(
-                F.round(F.col("n_touched") / F.lit(float(max(n_total, 1))), 9)
-                + F.lit(1e-12),
-                6,
-            ),
+            stab_signed(F.col("n_touched") / F.lit(float(max(n_total, 1))), 6),
         ).alias("touched_frac"),
     ).orderBy("threshold", "n_pairs", "n_touched", "touched_frac")
 
@@ -2878,17 +2874,8 @@ def s25_pq_distortion(spark, sf_dir):
             "s",
             "n_vecs",
             "sq_nanos",
-            (
-                F.round(
-                    F.round(
-                        (F.col("sq_nanos").cast("double") / F.lit(1e9))
-                        / F.col("n_vecs"),
-                        9,
-                    )
-                    + F.lit(1e-12),
-                    6,
-                )
-                + F.lit(0.0)
+            stab(
+                (F.col("sq_nanos").cast("double") / F.lit(1e9)) / F.col("n_vecs"), 6
             ).alias("mse"),
         )
         .orderBy("s", "n_vecs", "sq_nanos", "mse")

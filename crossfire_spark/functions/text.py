@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, spread, stab
+from crossfire_spark.catalog import load_table, nudge, spread, stab, stab_signed
 from crossfire_spark.functions.skew import prefix_sums
 
 # marker stopwords per language — the declared heuristic's fixed model
@@ -1596,21 +1596,21 @@ def source_divergence(d: DataFrame) -> DataFrame:
     )
     pairs = a.join(b, "w").where(F.col("src_a") < F.col("src_b"))
     m = (F.col("pa") + F.col("pb")) / 2
-    round4 = lambda c: F.round(F.round(c, 9) + F.lit(1e-12), 4)  # noqa: E731
     return (
         pairs.groupBy("src_a", "src_b")
         .agg(
-            round4(
-                F.sum(F.col("pa") * F.log(F.col("pa") / F.col("pb")))
+            stab_signed(
+                F.sum(F.col("pa") * F.log(F.col("pa") / F.col("pb"))), 4
             ).alias("kl_ab"),
-            round4(
-                F.sum(F.col("pb") * F.log(F.col("pb") / F.col("pa")))
+            stab_signed(
+                F.sum(F.col("pb") * F.log(F.col("pb") / F.col("pa"))), 4
             ).alias("kl_ba"),
-            round4(
+            stab_signed(
                 F.sum(
                     F.lit(0.5) * F.col("pa") * F.log(F.col("pa") / m)
                     + F.lit(0.5) * F.col("pb") * F.log(F.col("pb") / m)
-                )
+                ),
+                4,
             ).alias("jsd"),
         )
     )
@@ -2145,10 +2145,7 @@ def t32_packing_efficiency(spark, sf_dir):
         "total_tokens",
         n_seqs.alias("n_seqs"),
         (capacity - F.col("total_tokens")).alias("waste_tokens"),
-        F.round(
-            F.round(F.col("total_tokens") * 1.0 / capacity, 9) + F.lit(1e-12),
-            6,
-        ).alias("fill_frac"),
+        stab_signed(F.col("total_tokens") * 1.0 / capacity, 6).alias("fill_frac"),
         "n_fragmented_docs",
     ).orderBy(
         "source", "n_docs", "total_tokens", "n_seqs", "waste_tokens",
@@ -2216,16 +2213,10 @@ def t33_tokenizer_fertility(spark, sf_dir):
         "chars_total",
         "words_total",
         "tokens_total",
-        F.round(
-            F.round(F.col("tokens_total") / F.col("words_total"), 9)
-            + F.lit(1e-12),
-            6,
-        ).alias("fertility"),
-        F.round(
-            F.round(F.col("chars_total") / F.col("tokens_total"), 9)
-            + F.lit(1e-12),
-            6,
-        ).alias("chars_per_token"),
+        stab_signed(F.col("tokens_total") / F.col("words_total"), 6).alias("fertility"),
+        stab_signed(F.col("chars_total") / F.col("tokens_total"), 6).alias(
+            "chars_per_token"
+        ),
     ).orderBy(
         "lang", "n_docs", "chars_total", "words_total", "tokens_total",
         "fertility", "chars_per_token",
@@ -2874,16 +2865,7 @@ def langid_confusion(docs: DataFrame) -> DataFrame:
     )
     lt = cm.groupBy("lang").agg(F.sum("n").alias("label_total"))
     pt = cm.groupBy("predicted").agg(F.sum("n").alias("pred_total"))
-    share = lambda num, den: (  # noqa: E731 — fixed stabilized form
-        F.round(
-            F.round(
-                F.col(num).cast("double") / F.col(den).cast("double"), 9
-            )
-            + F.lit(1e-12),
-            6,
-        )
-        + F.lit(0.0)
-    )
+    n = F.col("n").cast("double")
     return (
         cm.join(F.broadcast(lt), "lang")
         .join(F.broadcast(pt), "predicted")
@@ -2893,8 +2875,8 @@ def langid_confusion(docs: DataFrame) -> DataFrame:
             "n",
             "label_total",
             "pred_total",
-            share("n", "label_total").alias("recall_share"),
-            share("n", "pred_total").alias("precision_share"),
+            stab(n / F.col("label_total").cast("double"), 6).alias("recall_share"),
+            stab(n / F.col("pred_total").cast("double"), 6).alias("precision_share"),
         )
     )
 

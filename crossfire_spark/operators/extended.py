@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, stab
+from crossfire_spark.catalog import load_table, nudge, stab, stab_signed
 from crossfire_spark.functions.skew import prefix_sums
 from crossfire_spark.functions.text import (
     SPLIT_TRAIN_LIM,
@@ -741,7 +741,7 @@ def rolling_anomalies(events: DataFrame) -> DataFrame:
         "event_id",
         "user_id",
         "value",
-        F.round(F.round("z_raw", 9) + F.lit(1e-12), 4).alias("z"),
+        stab_signed("z_raw", 4).alias("z"),
     )
 
 
@@ -1272,7 +1272,7 @@ def ewma_smooth(events: DataFrame) -> DataFrame:
         "event_id",
         "user_id",
         "value",
-        F.round(F.round(num / den, 9) + F.lit(1e-12), 4).alias("ewma"),
+        stab_signed(num / den, 4).alias("ewma"),
     )
 
 
@@ -1308,9 +1308,7 @@ def key_skew_report(df: DataFrame, label: str, key: str) -> DataFrame:
         nudge(F.expr("percentile(c, 0.99)"), 2).alias("p99_c"),
         nudge(F.avg("c"), 2).alias("avg_c"),
         nudge(F.max("c") / F.avg("c"), 2).alias("skew_ratio"),
-        F.round(
-            F.round(F.max("c") / F.sum("c"), 9) + F.lit(1e-12), 4
-        ).alias("top_share"),
+        stab_signed(F.max("c") / F.sum("c"), 4).alias("top_share"),
     )
     return rep.select(F.lit(label).alias("keyed"), "*")
 
@@ -1351,9 +1349,7 @@ def h11_seasonality(spark, sf_dir):
         "hod",
         "c",
         "avg_v",
-        F.round(
-            F.round(F.col("c") / F.sum("c").over(w), 9) + F.lit(1e-12), 4
-        ).alias("hr_share"),
+        stab_signed(F.col("c") / F.sum("c").over(w), 4).alias("hr_share"),
     ).orderBy("event_type", "hod", "c", "avg_v", "hr_share")
 
 
@@ -1385,9 +1381,9 @@ def v11_benford_report(spark, sf_dir):
     return by.select(
         "digit",
         "c",
-        F.round(F.round(obs, 9) + F.lit(1e-12), 4).alias("obs_freq"),
-        F.round(F.round(exp, 9) + F.lit(1e-12), 4).alias("exp_freq"),
-        F.round(F.round(F.abs(obs - exp), 9) + F.lit(1e-12), 4).alias("dev"),
+        stab_signed(obs, 4).alias("obs_freq"),
+        stab_signed(exp, 4).alias("exp_freq"),
+        stab_signed(F.abs(obs - exp), 4).alias("dev"),
     ).orderBy("digit", "c", "obs_freq", "exp_freq", "dev")
 
 
@@ -1436,16 +1432,12 @@ def funnel(events: DataFrame, steps=FUNNEL_STEPS) -> DataFrame:
                 F.col(f"n{i}").alias("n_users"),
                 # try_divide: NULL on an empty cohort (0/0) — matches
                 # DuckDB's division semantics instead of ANSI-throwing
-                F.round(
-                    F.round(F.try_divide(F.col(f"n{i}"), prev), 9)
-                    + F.lit(1e-12),
-                    4,
-                ).alias("conv_from_prev"),
-                F.round(
-                    F.round(F.try_divide(F.col(f"n{i}"), F.col("n0")), 9)
-                    + F.lit(1e-12),
-                    4,
-                ).alias("conv_from_first"),
+                stab_signed(F.try_divide(F.col(f"n{i}"), prev), 4).alias(
+                    "conv_from_prev"
+                ),
+                stab_signed(F.try_divide(F.col(f"n{i}"), F.col("n0")), 4).alias(
+                    "conv_from_first"
+                ),
             )
         )
     return allc.select(F.explode(F.array(*rows)).alias("r")).select("r.*")
@@ -1496,9 +1488,7 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
         F.col("cw").alias("cohort_week"),
         F.col("off").alias("week_offset"),
         "n_active",
-        F.round(
-            F.round(F.col("n_active") / F.col("n0"), 9) + F.lit(1e-12), 4
-        ).alias("retention"),
+        stab_signed(F.col("n_active") / F.col("n0"), 4).alias("retention"),
     )
 
 
@@ -1534,14 +1524,8 @@ def fd_audit(df: DataFrame, label: str, det: str, dep: str) -> DataFrame:
         F.lit(label).alias("fd"),
         F.count(F.lit(1)).alias("n_keys"),
         F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).alias("n_viol"),
-        F.round(
-            F.round(
-                F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))
-                / F.count(F.lit(1)),
-                9,
-            )
-            + F.lit(1e-12),
-            4,
+        stab_signed(
+            F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)) / F.count(F.lit(1)), 4
         ).alias("viol_rate"),
         F.max("nd").alias("max_deps"),
     )
@@ -1891,8 +1875,8 @@ def changepoints(events: DataFrame) -> DataFrame:
             F.col("n").alias("n_events"),
             F.col("rn").alias("cp_index"),
             "cp_epoch",
-            F.round(F.round("shift_raw", 9) + F.lit(1e-12), 4).alias("mean_shift"),
-            F.round(F.round("stat_raw", 9) + F.lit(1e-12), 4).alias("cp_stat"),
+            stab_signed("shift_raw", 4).alias("mean_shift"),
+            stab_signed("stat_raw", 4).alias("cp_stat"),
         )
     )
 
@@ -2040,9 +2024,7 @@ def v13_split_drift(spark, sf_dir):
     sh = cnt.join(F.broadcast(tot), "split").select(
         "split",
         "lang",
-        F.round(
-            F.round(F.col("c") * 1.0 / F.col("t"), 9) + F.lit(1e-12), 6
-        ).alias("share"),
+        stab_signed(F.col("c") * 1.0 / F.col("t"), 6).alias("share"),
     )
 
     def share_of(split: str) -> F.Column:
@@ -3733,7 +3715,12 @@ def token_gini(docs: DataFrame) -> DataFrame:
         F.size(tokens("text")).cast("long").alias("tokens"),
         F.lit(1).alias("one"),
     )
-    ranked, _ = prefix_sums(base, ["source"], ["tokens", "doc_id"], ["one"])
+    # a NULL text has NULL tokens: it counts in n_docs, adds nothing to
+    # the sums and ranks after every counted document, as the oracle's
+    # default NULLS LAST puts it
+    ranked, _ = prefix_sums(
+        base, ["source"], [F.col("tokens").asc_nulls_last(), "doc_id"], ["one"]
+    )
     agg = ranked.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("tokens").alias("total_tokens"),

@@ -24,28 +24,19 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 
-def _pair_explode(df: DataFrame, leaf_col: str) -> DataFrame:
-    """Explode each row's ancestor chain into (parent, child) edges.
+def _edges(chain: str) -> F.Column:
+    """The (parent, child) edges of an ancestor chain, as an array of
+    structs.
 
     Replaces the reference's recursive tree walk
     (``CrossAZBlockPlacementPolicy.java:388-399``, J4) with a bounded
-    array explode: ``["/", "/dc", "/dc/rack"] + [leaf]`` yields edges
-    ``(/, /dc), (/dc, /dc/rack), (/dc/rack, leaf)``.
+    array transform: ``["/", "/dc", "/dc/rack", leaf]`` yields
+    ``(/, /dc), (/dc, /dc/rack), (/dc/rack, leaf)``. A NULL chain gives
+    NULL, so ``inline_outer`` keeps its row with NULL edge columns.
     """
-    chained = df.withColumn(
-        "_chain", F.concat(F.col("ancestors"), F.array(F.col(leaf_col)))
-    )
-    return chained.select(
-        "*",
-        F.expr(
-            "explode(transform(sequence(1, size(_chain) - 1),"
-            " i -> struct(element_at(_chain, i) as parent,"
-            "             element_at(_chain, i + 1) as child)))"
-        ).alias("_edge"),
-    ).select(
-        *[c for c in df.columns if c not in ("ancestors",)],
-        F.col("_edge.parent").alias("parent"),
-        F.col("_edge.child").alias("child"),
+    return F.expr(
+        f"transform(slice({chain}, 2, size({chain})),"
+        f" (c, i) -> struct({chain}[i] AS parent, c AS child))"
     )
 
 
@@ -70,87 +61,85 @@ def verify_placement(
     with zero replicas (the reference's empty-input case,
     ``TestCrossAZBlockPlacementPolicy.java:129``).
 
+    Distributed shape: ``replicas`` is read once and shuffled once, by
+    a hash exchange on ``block_id`` placed before the edge explode; the
+    per-child, per-parent and per-block aggregates all group on keys
+    that start with ``block_id``, so that one exchange serves all
+    three. Each replica meets its topology chain through a left
+    broadcast join. A replica on a datanode absent from the topology
+    (an orphan) keeps its row with a NULL chain, one NULL edge: the
+    reference counts every non-null datanode handed to it, so an
+    orphan counts toward ``replica_cnt`` and fails its block with
+    reason ``orphan_replica`` (its spread is unverifiable). The
+    children available per parent come from the broadcast-size
+    topology.
+
     Returns ``(block_id, replica_cnt, satisfied, reason)``.
     """
-    leafed = datanodes.withColumn(
-        "node_path", F.concat_ws("/", "location", "hostname")
-    )
-
-    # available children per parent, from the (broadcast-size) topology
-    avail = (
-        _pair_explode(leafed.select("ancestors", "node_path"), "node_path")
-        .select("parent", "child")
-        .distinct()
-        .groupBy("parent")
-        .agg(F.count(F.lit(1)).alias("available"))
-    )
-
-    placed = replicas.join(
-        F.broadcast(leafed.select("datanode_id", "ancestors", "node_path")),
+    topo = datanodes.select(
         "datanode_id",
+        F.concat(
+            "ancestors", F.array(F.concat_ws("/", "location", "hostname"))
+        ).alias("chain"),
     )
-    # replicas referencing a datanode absent from the topology would be
-    # silently dropped by the inner join above; the reference counts
-    # every non-null datanode handed to it, so count them per block and
-    # surface them (replica_cnt includes them, spread is unverifiable).
-    orphans = (
-        replicas.join(
-            F.broadcast(leafed.select("datanode_id")), "datanode_id", "left_anti"
-        )
-        .groupBy("block_id")
-        .agg(F.count(F.lit(1)).alias("orphan_cnt"))
+    avail = (
+        topo.select(F.inline(_edges("chain")))
+        .groupBy("parent")
+        .agg(F.size(F.collect_set("child")).alias("available"))
     )
-    edges = _pair_explode(placed, "node_path")
-
-    per_child = edges.groupBy("block_id", "parent", "child").agg(
-        F.count(F.lit(1)).alias("cnt")
+    edges = (
+        replicas.join(F.broadcast(topo), "datanode_id", "left")
+        .repartition("block_id")
+        .select("block_id", F.inline_outer(_edges("chain")))
     )
     per_parent = (
-        per_child.groupBy("block_id", "parent")
+        edges.groupBy("block_id", "parent", "child")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy("block_id", "parent")
         .agg(
             F.count(F.lit(1)).alias("used"),
             F.sum("cnt").alias("under"),
             (F.max("cnt") - F.min("cnt")).alias("imbalance"),
         )
-        .join(F.broadcast(avail), "parent")
-        .withColumn(
-            "parent_ok",
-            (F.col("used") == F.least(F.col("under"), F.col("available")))
-            & (F.col("imbalance") <= 1),
-        )
     )
-
-    per_block = per_parent.groupBy("block_id").agg(
-        F.max(F.when(F.col("parent") == "/", F.col("under"))).alias("replica_cnt"),
-        F.min(F.col("parent_ok").cast("int")).cast("boolean").alias("spread_ok"),
+    under, parent = F.col("under"), F.col("parent")
+    per_block = (
+        per_parent.join(F.broadcast(avail), "parent", "left")
+        .groupBy("block_id")
+        .agg(
+            # every placed replica has one edge under the root; an
+            # orphan has the one NULL edge
+            F.sum(F.when((parent == "/") | parent.isNull(), under)).alias(
+                "replica_cnt"
+            ),
+            F.sum(F.when(parent.isNull(), under)).alias("orphan_cnt"),
+            F.bool_and(
+                (F.col("used") == F.least(under, F.col("available")))
+                & (F.col("imbalance") <= 1)
+            ).alias("spread_ok"),
+        )
     )
 
     if isinstance(required, int):
-        req = per_block.select("block_id").withColumn(
-            "required_replicas", F.lit(required)
-        )
+        out = per_block.withColumn("required_replicas", F.lit(required))
     else:
-        req = required.select("block_id", "required_replicas")
-
-    out = (
-        req.join(per_block, "block_id", "left")
-        .join(orphans, "block_id", "left")
-        .na.fill({"replica_cnt": 0, "spread_ok": False, "orphan_cnt": 0})
-        .withColumn("replica_cnt", F.col("replica_cnt") + F.col("orphan_cnt"))
-        .withColumn("count_ok", F.col("replica_cnt") >= F.col("required_replicas"))
-        .withColumn(
-            "satisfied",
-            F.col("count_ok") & F.col("spread_ok") & (F.col("orphan_cnt") == 0),
+        out = required.select("block_id", "required_replicas").join(
+            per_block, "block_id", "left"
         )
-        .withColumn(
-            "reason",
-            F.when(F.col("orphan_cnt") > 0, F.lit("orphan_replica"))
-            .when(~F.col("count_ok"), F.lit("under_replicated"))
-            .when(~F.col("spread_ok"), F.lit("not_spread_or_imbalanced"))
-            .otherwise(F.lit("ok")),
-        )
+    cnt = F.coalesce("replica_cnt", F.lit(0))
+    orphan = F.coalesce("orphan_cnt", F.lit(0)) > 0
+    count_ok = cnt >= F.col("required_replicas")
+    spread_ok = F.coalesce("spread_ok", F.lit(False))
+    return out.select(
+        "block_id",
+        cnt.alias("replica_cnt"),
+        (count_ok & spread_ok & ~orphan).alias("satisfied"),
+        F.when(orphan, F.lit("orphan_replica"))
+        .when(~count_ok, F.lit("under_replicated"))
+        .when(~spread_ok, F.lit("not_spread_or_imbalanced"))
+        .otherwise(F.lit("ok"))
+        .alias("reason"),
     )
-    return out.select("block_id", "replica_cnt", "satisfied", "reason")
 
 
 def verify_placement_fast(
@@ -232,18 +221,33 @@ def _per_block(
     ``grouped`` holds one row per block: its key columns, then a last
     column with the block's ``collect_list(struct(...))``. The kernel
     gets the keys and the struct rows as plain tuples and returns
-    output tuples in ``schema``'s column order. No pandas frame is
-    built on either side.
+    output tuples in ``schema``'s column order, ``block_id`` first. No
+    pandas frame is built on either side; a column without nulls
+    converts through NumPy, an order of magnitude faster than
+    ``to_pylist``.
+
+    Input-order contract: ``grouped`` is range-partitioned on
+    ``block_id`` (``repartitionByRange`` before its ``groupBy``, so one
+    exchange serves both). The output is sorted within each partition
+    by ``schema``'s columns; since partition ``i`` holds lower block ids
+    than partition ``i + 1``, the rows come out in that order overall
+    with no global sort after the kernel. A global ``orderBy`` would
+    sample its range bounds by running the Python stage a second time.
     """
     arrow_schema = to_arrow_schema(schema)
+
+    def pylist(col: pa.Array) -> list:
+        if col.null_count:
+            return col.to_pylist()
+        return col.to_numpy(zero_copy_only=False).tolist()
 
     def run(batches):
         for batch in batches:
             *key_cols, lists = batch.columns
-            keys = zip(*(c.to_pylist() for c in key_cols))
+            keys = zip(*(pylist(c) for c in key_cols))
             # the batch's rows as one struct array, split into its fields
-            rows = list(zip(*(f.to_pylist() for f in lists.flatten().flatten())))
-            offsets = lists.offsets.to_pylist()
+            rows = list(zip(*(pylist(f) for f in lists.flatten().flatten())))
+            offsets = pylist(lists.offsets)
             out: list[tuple] = []
             for key, lo, hi in zip(keys, offsets, offsets[1:]):
                 out.extend(kernel(*key, rows[lo:hi]))
@@ -253,7 +257,7 @@ def _per_block(
                 schema=arrow_schema,
             )
 
-    return grouped.mapInArrow(run, schema)
+    return grouped.mapInArrow(run, schema).sortWithinPartitions(*schema.names)
 
 
 _DELETE_SCHEMA = T.StructType(
@@ -285,16 +289,19 @@ def deletion_candidates(
     behind a flag. Hints/excess_types are ignored exactly as the
     reference ignores them (``:295-300``).
 
-    Distributed shape: the topology joins happen before one
-    ``groupBy("block_id")`` that collects each block's replicas into
-    one row; the drain loop then runs per block over Arrow batches of
-    whole blocks (``_per_block``). The clamp is a one-row aggregate of
-    ``datanodes``, broadcast and carried to the kernel as column
-    ``keep``, so building the plan runs no job.
+    Distributed shape: the topology joins happen before one range
+    exchange on ``block_id`` that also serves the ``groupBy`` collecting
+    each block's replicas into one row; the drain loop then runs per
+    block over Arrow batches of whole blocks (``_per_block``), and the
+    rows come out ordered by ``(block_id, round)``. The clamp is a
+    one-row, single-exchange aggregate of ``datanodes``, broadcast and
+    carried to the kernel as column ``keep``, so building the plan runs
+    no job.
     """
     eff_keep = datanodes.agg(
         F.when(
-            F.lit(two_dc_clamp) & (F.count_distinct("datacenter") == 2), min(4, keep)
+            F.lit(two_dc_clamp) & (F.size(F.collect_set("datacenter")) == 2),
+            min(4, keep),
         )
         .otherwise(keep)
         .alias("keep")
@@ -308,6 +315,7 @@ def deletion_candidates(
             F.broadcast(storages.select("storage_id", "state", "remaining")),
             "storage_id",
         )
+        .repartitionByRange("block_id")
         .groupBy("block_id")
         .agg(
             F.collect_list(
@@ -436,19 +444,27 @@ def choose_targets(
     (``CrossAZBlockPlacementPolicy.java:103-219,587-721``) as a
     distributed greedy selection.
 
-    ``blocks`` is ``(block_id, additional)``. For each block, each new
-    replica goes to the datacenter with the least speculative load
-    (current + already planned, A6 ``:675-685``), then the least-loaded
-    rack within it (``:688-705``), then an unused healthy node, on its
-    best storage by the W3 preference (demanded type, most remaining,
-    lowest xceiver — ``:150-156``; deterministic tiebreak: node id).
-    Health predicate P3 (``:365-371``) and storage predicate P4
-    (``:166-188``) are applied as filters before selection.
+    ``blocks`` has one row per block: ``(block_id, additional)``, the
+    number of new replicas, or ``(block_id, required_replicas)``, the
+    target count, of which the block's current replicas are subtracted
+    (what the NameNode's redundancy monitor asks for). For each block,
+    each new replica goes to the datacenter with the least speculative
+    load (current + already planned, A6 ``:675-685``), then the
+    least-loaded rack within it (``:688-705``), then an unused healthy
+    node, on its best storage by the W3 preference (demanded type, most
+    remaining, lowest xceiver — ``:150-156``; deterministic tiebreak:
+    node id). Health predicate P3 (``:365-371``) and storage predicate
+    P4 (``:166-188``) are applied as filters before selection.
 
     The topology candidate list is collected once (broadcast-sized
-    dimension; the only job of the build) and shipped in the kernel's
-    closure; each block's current replicas are collected into one row
-    and the greedy runs per block over Arrow batches of whole blocks.
+    dimension; its two scans are the only jobs of the build) and
+    shipped in the kernel's closure. ``blocks`` and ``replicas`` meet
+    in one range exchange on ``block_id``: their rows are unioned, so
+    ``replicas`` is read and shuffled once, and one ``groupBy`` gives
+    each block its target, its replica count and its current replicas
+    as one row. The greedy runs per block over Arrow batches of whole
+    blocks (``_per_block``), and the rows come out ordered by
+    ``(block_id, slot)``.
 
     ``exclude_nodes`` are dropped from the candidate pool (the
     reference's exclusion predicate P5, ``:162-165``); ``favored_nodes``
@@ -458,54 +474,64 @@ def choose_targets(
     slots fall back to the greedy least-loaded selection, exactly as
     the reference falls back to normal placement.
     """
-    healthy = (
-        datanodes.where(
-            F.col("is_alive")
-            & ~F.col("is_decommissioned")
-            & ~F.col("is_stale")
-        )
-        .select("datanode_id", "datacenter", "rack", "xceiver_count")
-    )
-    best_storage = (
+    # The pool is broadcast-sized: two plain scans, joined and reduced
+    # on the driver (a Spark join plus max_by launched three jobs).
+    # Each node offers its storage with the most remaining space, then
+    # the lowest storage_id.
+    best: dict[int, tuple[str, int]] = {}
+    for node, sid, remaining in sorted(
         storages.where(
-            (F.col("state") == "NORMAL") & (F.col("type") == storage_type)
+            (F.col("state") == "NORMAL")
+            & (F.col("type") == storage_type)
+            & F.col("remaining").isNotNull()
         )
-        .groupBy("datanode_id")
-        .agg(F.max_by("storage_id", "remaining").alias("storage_id"),
-             F.max("remaining").alias("remaining"))
-    )
+        .select("datanode_id", "storage_id", "remaining")
+        .collect(),
+        key=lambda r: (-r[2], r[1]),
+    ):
+        best.setdefault(node, (sid, remaining))
+    healthy = datanodes.where(
+        F.col("is_alive") & ~F.col("is_decommissioned") & ~F.col("is_stale")
+    ).select("datanode_id", "datacenter", "rack", "xceiver_count")
     candidates = [
-        (
-            int(r.datanode_id),
-            r.datacenter,
-            r.rack,
-            int(r.xceiver_count),
-            r.storage_id,
-            int(r.remaining),
-        )
-        for r in healthy.join(best_storage, "datanode_id").collect()
+        (node, dc, rack, xceivers, *best[node])
+        for node, dc, rack, xceivers in healthy.collect()
+        if node in best
     ]
     choose_block = _choose_kernel(candidates, exclude_nodes, favored_nodes)
 
+    target = "additional" if "additional" in blocks.columns else "required_replicas"
+    # an orphan replica (datanode outside the topology) counts toward
+    # the block's replicas with a NULL row, which collect_list skips
+    nodes = datanodes.select(
+        "datanode_id", F.struct("datanode_id", "datacenter", "rack").alias("row")
+    )
+    held = replicas.join(F.broadcast(nodes), "datanode_id", "left").select(
+        "block_id",
+        F.lit(None).cast("int").alias("want"),
+        F.lit(1).alias("held"),
+        "row",
+    )
+    wanted = blocks.select(
+        "block_id",
+        F.col(target).cast("int").alias("want"),
+        F.lit(None).cast("int").alias("held"),
+        F.lit(None).cast(nodes.schema["row"].dataType).alias("row"),
+    )
+    additional = F.col("want")
+    if target == "required_replicas":
+        additional -= F.col("held")
     existing = (
-        blocks.where(F.col("additional") > 0)
-        .join(
-            replicas.join(
-                F.broadcast(datanodes.select("datanode_id", "datacenter", "rack")),
-                "datanode_id",
-            ).select("block_id", "datanode_id", "datacenter", "rack"),
-            "block_id",
-            "left",
-        )
-        .groupBy("block_id", "additional")
+        wanted.unionByName(held)
+        .repartitionByRange("block_id")
+        .groupBy("block_id")
         .agg(
+            F.max("want").alias("want"),
+            F.count("held").alias("held"),
             # a block with no replica keeps an empty list
-            F.collect_list(
-                F.when(
-                    F.col("datanode_id").isNotNull(),
-                    F.struct("datanode_id", "datacenter", "rack"),
-                )
-            ).alias("rows")
+            F.collect_list("row").alias("rows"),
         )
+        .select("block_id", additional.cast("int").alias("additional"), "rows")
+        .where(F.col("additional") > 0)
     )
     return _per_block(existing, choose_block, _CHOOSE_SCHEMA)

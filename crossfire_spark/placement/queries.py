@@ -133,7 +133,9 @@ def p02_deletion_drain(spark, sf_dir):
     """Iterative deletion drain (entry point 3.3, W2) over every
     fixture block, keep=3. Deterministic (total-order tiebreaks) but
     not single-statement SQL → rows-only driver check; semantics are
-    pinned by the metamorphic tests."""
+    pinned by the metamorphic tests. The rows come out ordered by
+    (block_id, round, storage_id, datanode_id) without a global sort
+    (``api._per_block``), so the Python drain runs once."""
     from crossfire_spark.placement.api import deletion_candidates
 
     return deletion_candidates(
@@ -141,34 +143,24 @@ def p02_deletion_drain(spark, sf_dir):
         load_fixture(spark, "datanodes"),
         load_fixture(spark, "storages"),
         keep=3,
-    ).orderBy("block_id", "round", "storage_id", "datanode_id")
+    )
 
 
 def p03_choose_targets(spark, sf_dir):
     """Greedy target selection (entry point 3.1) topping up every
-    under-replicated fixture block. Deterministic; rows-only check."""
-    from pyspark.sql import functions as F
-
+    under-replicated fixture block to its required count.
+    Deterministic; rows-only check. ``choose_targets`` counts the
+    current replicas in the same pass that collects them, and the rows
+    come out ordered by (block_id, slot, datanode_id, storage_id)
+    without a global sort."""
     from crossfire_spark.placement.api import choose_targets
 
-    cases = load_fixture(spark, "placement_cases")
-    replicas = load_fixture(spark, "replicas")
-    current = replicas.groupBy("block_id").count()
-    blocks = (
-        cases.join(current, "block_id", "left")
-        .na.fill({"count": 0})
-        .where(F.col("required_replicas") > F.col("count"))
-        .select(
-            "block_id",
-            (F.col("required_replicas") - F.col("count")).cast("int").alias("additional"),
-        )
-    )
     return choose_targets(
-        blocks,
-        replicas,
+        load_fixture(spark, "placement_cases").select("block_id", "required_replicas"),
+        load_fixture(spark, "replicas"),
         load_fixture(spark, "datanodes"),
         load_fixture(spark, "storages"),
-    ).orderBy("block_id", "slot", "datanode_id", "storage_id")
+    )
 
 
 def p04_verify_fast(spark, sf_dir):

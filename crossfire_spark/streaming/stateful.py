@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from crossfire_spark.catalog import stab_signed
+
 OUTPUT_SCHEMA = "user_id long, c long, s double"
 STATE_SCHEMA = "c long, s double"
 
@@ -343,16 +345,12 @@ def st17_stream_funnel(spark, sf_dir):
                 F.lit(i + 1).alias("step_no"),
                 F.lit(s).alias("step"),
                 F.col(f"n{i}").alias("n_users"),
-                F.round(
-                    F.round(F.try_divide(F.col(f"n{i}"), prev), 9)
-                    + F.lit(1e-12),
-                    4,
-                ).alias("conv_from_prev"),
-                F.round(
-                    F.round(F.try_divide(F.col(f"n{i}"), F.col("n0")), 9)
-                    + F.lit(1e-12),
-                    4,
-                ).alias("conv_from_first"),
+                stab_signed(F.try_divide(F.col(f"n{i}"), prev), 4).alias(
+                    "conv_from_prev"
+                ),
+                stab_signed(F.try_divide(F.col(f"n{i}"), F.col("n0")), 4).alias(
+                    "conv_from_first"
+                ),
             )
         )
     return (

@@ -1395,6 +1395,9 @@ def test_threshold_sweep_monotone(spark, sf_dir):
         # content-defined chunks: a NULL text has none
         "t12_cdc_chunks",
         "d10_chunk_dedup",
+        # per-source token Gini: a NULL text is a document with no
+        # token count, ranked after every counted one
+        "v20_token_gini",
     ],
 )
 def test_null_text_bag_fingerprint_matches_oracle(spark, sf_dir, tmp_path, name):
@@ -1470,6 +1473,22 @@ def test_text_kernels_defined_once():
             if re.search(rx, text)
         ]
         assert sum(n for _, n in hits) == 1, f"{kernel}: {hits}"
+
+
+def test_stab_defined_once():
+    """``ROUND(ROUND(x, 9) + 1e-12, dp)`` has one DataFrame definition,
+    ``catalog.stab_signed``; ``catalog.stab`` adds the ``+ 0.0`` on top
+    of it. A query that spells the rounding inline again fails here."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    hits = [
+        (str(f.relative_to(pkg)), n)
+        for f in sorted(pkg.rglob("*.py"))
+        if (n := len(re.findall(r"F\.lit\(1e-12\)", f.read_text())))
+    ]
+    assert hits == [("catalog.py", 1)], hits
 
 
 def test_graph_kernels_defined_once():

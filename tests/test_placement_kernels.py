@@ -9,6 +9,9 @@
   its candidate ``collect``; the deletion drain and the greedy choose
   return an empty frame with their declared schema when no block needs
   work.
+- Executing p02/p03 runs the Python kernel once per block and still
+  returns rows in the declared order, and each placement query stays
+  under its ceiling of executed Spark jobs.
 """
 
 from __future__ import annotations
@@ -16,8 +19,10 @@ from __future__ import annotations
 import random
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
+from crossfire_spark.placement import api
 from crossfire_spark.placement.api import (
     _CHOOSE_SCHEMA,
     _DELETE_SCHEMA,
@@ -122,13 +127,13 @@ def test_indexed_choose_matches_scan_oracle():
     assert all(seen.values()), seen
 
 
-def _build_jobs(spark, build) -> list[int]:
-    """Ids of the Spark jobs ``build()`` launches."""
+def _jobs(spark, run) -> list[int]:
+    """Ids of the Spark jobs ``run()`` launches."""
     sc = spark.sparkContext
-    group = f"build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "builder-time jobs")
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "placement jobs")
     try:
-        build()
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -137,9 +142,9 @@ def _build_jobs(spark, build) -> list[int]:
 
 def test_placement_builders_launch_no_jobs_but_the_candidate_collect(spark, sf_dir):
     for name in ("p01_verify_placement", "p02_deletion_drain"):
-        assert _build_jobs(spark, lambda: QUERIES[name](spark, sf_dir)) == []
+        assert _jobs(spark, lambda: QUERIES[name](spark, sf_dir)) == []
     tracker = spark.sparkContext.statusTracker()
-    jobs = _build_jobs(
+    jobs = _jobs(
         spark, lambda: QUERIES["p03_choose_targets"](spark, sf_dir)
     )
     assert jobs
@@ -174,3 +179,57 @@ def test_choose_with_no_under_replicated_block_is_empty(spark):
     )
     assert out.schema == _CHOOSE_SCHEMA
     assert out.collect() == []
+
+
+DECLARED_ORDER = {
+    "p02_deletion_drain": ("block_id", "round", "storage_id", "datanode_id"),
+    "p03_choose_targets": ("block_id", "slot", "datanode_id", "storage_id"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DECLARED_ORDER))
+def test_kernel_runs_once_per_block_in_declared_order(spark, sf_dir, monkeypatch, name):
+    """One ``collect`` calls the per-block kernel once per input block.
+    A global ``orderBy`` after the kernel ran the Python stage twice,
+    once for its range sample and once for the rows; the rows still
+    come out in the query's declared order."""
+    calls = spark.sparkContext.accumulator(0)
+    inputs = []
+    per_block = api._per_block
+
+    def counting(grouped, kernel, schema):
+        def counted(*args):
+            calls.add(1)
+            return kernel(*args)
+
+        inputs.append(grouped)
+        return per_block(grouped, counted, schema)
+
+    monkeypatch.setattr(api, "_per_block", counting)
+    rows = QUERIES[name](spark, sf_dir).collect()
+    n_blocks = inputs[0].count()
+    assert n_blocks > 0 and calls.value == n_blocks, (calls.value, n_blocks)
+    keys = DECLARED_ORDER[name]
+    assert rows == sorted(rows, key=lambda r: tuple(r[k] for k in keys))
+
+
+EXEC_JOB_CEILINGS = {
+    "p01_verify_placement": 9,
+    "p02_deletion_drain": 8,
+    "p03_choose_targets": 7,
+}
+
+
+def test_placement_exec_job_ceilings(spark, sf_dir):
+    """Executing each placement query (``noop`` sink) launches at most
+    its ceiling of Spark jobs: p01 shuffles ``replicas`` once for all
+    its aggregates, p02/p03 sample their range bounds over JVM
+    operators only and p03 reads ``replicas`` once."""
+    got = {}
+    for name in EXEC_JOB_CEILINGS:
+        df = QUERIES[name](spark, sf_dir)
+        got[name] = len(
+            _jobs(spark, lambda: df.write.format("noop").mode("overwrite").save())
+        )
+    over = {n: got[n] for n, c in EXEC_JOB_CEILINGS.items() if got[n] > c}
+    assert not over, got
