@@ -50,18 +50,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # required to read timestamp[ns] parquet.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # nanosecond parquet timestamp surfaced as long; convert to µs.
-            # Integer DIV, not float division — double loses integer
-            # precision above 2^53 and drifts the timestamp by ±1 µs.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            # µs parquet timestamp without zone (isAdjustedToUTC=false):
-            # cast to TIMESTAMP so event-time ops (watermarks) accept it;
-            # the UTC session timezone makes the cast value-preserving.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return event_ts(df) if name == "events" else df
+
+
+def event_ts(df: DataFrame) -> DataFrame:
+    """``df`` with its ``ts`` column as a µs TIMESTAMP, for the batch
+    catalog and the events stream alike."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # nanosecond parquet timestamp surfaced as long; convert to µs.
+        # Integer DIV, not float division — double loses integer
+        # precision above 2^53 and drifts the timestamp by ±1 µs.
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if ts_type == "timestamp_ntz":
+        # µs parquet timestamp without zone (isAdjustedToUTC=false):
+        # cast to TIMESTAMP so event-time ops (watermarks) accept it;
+        # the UTC session timezone makes the cast value-preserving.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -44,10 +44,12 @@ from crossfire_spark.functions.dedup import (
     JACCARD_THRESHOLD,
     LSH_BUCKET_CAP,
     MINHASH_K,
+    _cap_buckets,
     _exact_dup_membership,
-    _expand_rep_pairs,
+    _minhash_pairs,
+    _representatives,
     _verify_jaccard,
-    minhash_lsh_candidates,
+    band_table,
     minhash_signatures_wide,
 )
 from crossfire_spark.functions.similarity import (
@@ -133,14 +135,10 @@ def build_minhash_index(
     candidate verify re-reads candidate documents' text."""
     docs = docs.select("doc_id", "text")
     membership = _exact_dup_membership(docs)
-    rep_docs = docs.join(
-        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
     snapshot_write(membership, os.path.join(path, "membership"))
     snapshot_write(
-        minhash_signatures_wide(rep_docs, k), os.path.join(path, "signatures")
+        minhash_signatures_wide(_representatives(docs, membership), k),
+        os.path.join(path, "signatures"),
     )
 
 
@@ -158,24 +156,15 @@ def minhash_pairs_from_index(
     verify re-reads only candidate documents' text, member pairs
     re-expand from the stored membership. Identical output to
     :func:`dedup.minhash_lsh_pairs` over the same corpus."""
-    membership = snapshot_read(spark, os.path.join(path, "membership"))
-    signatures = snapshot_read(spark, os.path.join(path, "signatures"))
-    docs = docs.select("doc_id", "text")
-    rep_docs = docs.join(
-        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-        "left_semi",
+    return _minhash_pairs(
+        docs.select("doc_id", "text"),
+        snapshot_read(spark, os.path.join(path, "membership")),
+        threshold,
+        k,
+        bands,
+        bucket_cap,
+        signatures=snapshot_read(spark, os.path.join(path, "signatures")),
     )
-    candidates = minhash_lsh_candidates(
-        rep_docs, k, bands, bucket_cap, signatures=signatures
-    ).localCheckpoint()
-    rep_pairs = _verify_jaccard(rep_docs, candidates, threshold)
-    return _expand_rep_pairs(
-        rep_pairs,
-        membership,
-        F.when(F.lit(threshold) <= 1.0, F.lit(1.0)).cast("double"),
-        "j",
-    ).where(F.col("j").isNotNull())
 
 
 def minhash_batch_vs_index(
@@ -203,8 +192,6 @@ def minhash_batch_vs_index(
     Corpus-side hot buckets are capped exactly like the self-join path
     (``LSH_BUCKET_CAP``) so a boilerplate-heavy index cannot blow up
     the candidate fan-out of any batch."""
-    from crossfire_spark.functions.dedup import _cap_buckets, band_table
-
     membership = snapshot_read(spark, os.path.join(path, "membership"))
     signatures = snapshot_read(spark, os.path.join(path, "signatures"))
     batch = batch_docs.select("doc_id", "text")
@@ -225,11 +212,7 @@ def minhash_batch_vs_index(
     )
     # verify against the union text set: ids are globally unique, so
     # one shingle table serves both sides of each candidate pair
-    reps = corpus_docs.select("doc_id", "text").join(
-        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
+    reps = _representatives(corpus_docs.select("doc_id", "text"), membership)
     pairs = _verify_jaccard(batch.unionByName(reps), candidates, threshold)
     return pairs.select(
         F.col("doc_a").alias("batch_id"),

@@ -47,11 +47,13 @@ from crossfire_spark.functions.text import (
     _hash_u16,
     _u16_sql,
     bag_fingerprint,
+    md5_prefix_hash,
     cdc_chunks,
     smoothed_idf,
     split_assign,
     term_freqs,
     tokens,
+    word_grams,
 )
 
 JACCARD_THRESHOLD = 0.5
@@ -86,6 +88,56 @@ def _cap_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     return df.join(F.broadcast(over), keys, "left_anti")
 
 
+def _band_pairs(bands: DataFrame, key: str, bucket_cap: int) -> DataFrame:
+    """Raw band-bucket collisions of a band table ``(key, band, bsig,
+    *payload)``: every two rows in one ``(band, bsig)`` bucket, lower
+    key as ``doc_a`` and higher as ``doc_b``, each payload column as
+    ``a_<col>`` / ``b_<col>``. A pair sharing several buckets appears
+    once per bucket; callers apply their own distinct. Buckets over
+    ``bucket_cap`` rows are dropped first (:func:`_cap_buckets`), so
+    the self-join fan-out per bucket is bounded by cap²."""
+    capped = _cap_buckets(bands, ["band", "bsig"], bucket_cap)
+    payload = [c for c in bands.columns if c not in (key, "band", "bsig")]
+    a, b = capped.alias("a"), capped.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bsig") == F.col("b.bsig"))
+        & (F.col(f"a.{key}") < F.col(f"b.{key}")),
+    ).select(
+        F.col(f"a.{key}").alias("doc_a"),
+        F.col(f"b.{key}").alias("doc_b"),
+        *[F.col(f"{s}.{c}").alias(f"{s}_{c}") for c in payload for s in "ab"],
+    )
+
+
+def _int_band_table(
+    sig: DataFrame, words: list[str], n_bands: int, band_bits: int, keep: list[str]
+) -> DataFrame:
+    """(*keep, band, bsig) — unpivot consecutive ``band_bits``-bit
+    slices of a signature held as 64-bit ``words`` (least significant
+    first) into integer band values, all codegen'd bit arithmetic:
+    band b = bits [b·w, (b+1)·w) = word b//(64/w) >>> (w·(b % (64/w)))
+    masked to w bits. Banding reads a PREFIX of the signature when
+    ``n_bands·band_bits`` is shorter than it."""
+    per_word = 64 // band_bits
+    mask = (1 << band_bits) - 1
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.shiftrightunsigned(
+                F.col(words[b // per_word]), band_bits * (b % per_word)
+            )
+            .bitwiseAND(F.lit(mask))
+            .alias("bsig"),
+        )
+        for b in range(n_bands)
+    ]
+    return sig.select(*keep, F.explode(F.array(*bands)).alias("bs")).select(
+        *keep, F.col("bs.band").alias("band"), F.col("bs.bsig").alias("bsig")
+    )
+
+
 def _exact_dup_membership(docs: DataFrame) -> DataFrame:
     """(doc_id, fp, rep) — md5(text) exact-duplicate groups with the
     min doc_id as representative. Identical texts have identical
@@ -102,13 +154,19 @@ def _exact_dup_membership(docs: DataFrame) -> DataFrame:
     )
 
 
+def _representatives(df: DataFrame, membership: DataFrame) -> DataFrame:
+    """The rows of ``df`` whose doc_id represents its exact-duplicate
+    group in ``membership`` — the only rows candidate generation sees."""
+    return df.join(
+        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+
+
 def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document — built-ins only:
-    split -> transform(sequence) -> explode. No Python on the path.
-
-    The words array is materialized in its own projection first:
-    referencing ``split(...)`` inside the lambda would re-split the
-    whole document for every shingle position (O(words^2) per doc).
+    split -> ``word_grams`` -> explode. No Python on the path.
 
     Parallelism: ``spread`` widens a single-row-group scan, and the
     dedup exchange is a *pinned-width* ``repartition`` on the dedup key
@@ -126,15 +184,7 @@ def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     return (
         spread(df.where(F.col("text").isNotNull()))
         .select("doc_id", tokens("text").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(w) - {n - 1}, 1)),"
-                    f" i -> concat_ws(' ', slice(w, i, {n})))"
-                )
-            ).alias("shingle"),
-        )
+        .select("doc_id", F.explode(word_grams("w", n)).alias("shingle"))
         .repartition(parts, "doc_id", "shingle")
         .dropDuplicates()
     )
@@ -164,7 +214,6 @@ def exact_jaccard_pairs(
     banding fixes; this exact form is the correctness oracle.
     """
     sh = _shingles(docs, n)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -172,14 +221,21 @@ def exact_jaccard_pairs(
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("i"))
     )
+    return _jaccard_scores(inter, sh, threshold)
+
+
+def _jaccard_scores(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, j) from pair intersections ``(doc_a, doc_b, i)``
+    over the shingle table ``sh``: j = i / (na + nb - i), filtered on
+    the RAW ratio (the oracle does too) and rounded to 2 dp only on
+    output — otherwise 0.495 would round into the result set."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
     raw = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
     return (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
-        # filter on the RAW ratio (the oracle does too); round only the
-        # output — otherwise 0.495 would round into the result set.
         .where(raw >= threshold)
         .select("doc_a", "doc_b", F.round(raw, 2).alias("j"))
     )
@@ -320,21 +376,7 @@ def minhash_lsh_candidates(
         wide = signatures
     else:
         wide = minhash_signatures_wide(docs, k).localCheckpoint()
-    band_sig = _cap_buckets(
-        band_table(wide, k, bands), ["band", "bsig"], bucket_cap
-    )
-    a = band_sig.alias("a")
-    b = band_sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _band_pairs(band_table(wide, k, bands), "doc_id", bucket_cap).distinct()
 
 
 def _verify_jaccard(
@@ -352,7 +394,6 @@ def _verify_jaccard(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
     sh = _shingles(docs.join(cand_ids, "doc_id", "left_semi"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         candidates.join(
             sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
@@ -364,34 +405,32 @@ def _verify_jaccard(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    raw = F.col("i") / (F.col("na") + F.col("nb") - F.col("i"))
     # no broadcast hints needed: every post-candidate table is
     # candidate-sized; AQE picks broadcast joins at runtime.
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .where(raw >= threshold)
-        .select("doc_a", "doc_b", F.round(raw, 2).alias("j"))
-    )
+    return _jaccard_scores(inter, sh, threshold)
 
 
 def _expand_rep_pairs(
     rep_pairs: DataFrame,
     membership: DataFrame,
-    intra_score: F.Column,
     score_col: str,
+    threshold: float,
 ) -> DataFrame:
     """Re-expand representative-level near-dup pairs to member-level.
 
-    ``intra pairs``: every pair inside an exact-dup group scores
-    ``intra_score`` (Jaccard 1.0 / Hamming 0 — identical texts) —
-    these are output rows, so a group of n dups legitimately yields
-    n·(n-1)/2 rows; what the pre-collapse bounds is the *candidate
-    join*, which sees one row per group. ``cross pairs``: a rep-level
-    pair expands to all member cross pairs with the same score
-    (identical texts have identical shingle sets / signatures)."""
+    ``intra pairs``: every pair inside an exact-dup group scores as
+    identical texts do — Hamming 0 for the ``hamming`` distance, 1.0
+    for a similarity (Jaccard, cosine) — and is kept when that score
+    passes ``threshold``. These are output rows, so a group of n dups
+    legitimately yields n·(n-1)/2 rows; what the pre-collapse bounds
+    is the *candidate join*, which sees one row per group. ``cross
+    pairs``: a rep-level pair expands to all member cross pairs with
+    the same score (identical texts have identical shingle sets /
+    signatures)."""
+    if score_col == "hamming":
+        identical, keep_intra = F.lit(0), threshold >= 0
+    else:
+        identical, keep_intra = F.lit(1.0), threshold <= 1.0
     m1, m2 = membership.alias("m1"), membership.alias("m2")
     intra = (
         m1.join(
@@ -402,7 +441,7 @@ def _expand_rep_pairs(
         .select(
             F.col("m1.doc_id").alias("doc_a"),
             F.col("m2.doc_id").alias("doc_b"),
-            intra_score.alias(score_col),
+            identical.alias(score_col),
         )
     )
     ma = membership.select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("x"))
@@ -416,7 +455,7 @@ def _expand_rep_pairs(
             score_col,
         )
     )
-    return intra.unionByName(cross)
+    return intra.unionByName(cross) if keep_intra else cross
 
 
 def minhash_lsh_pairs(
@@ -442,23 +481,30 @@ def minhash_lsh_pairs(
        (:func:`_expand_rep_pairs`).
     """
     docs = docs.select("doc_id", "text")
-    membership = _exact_dup_membership(docs)
-    rep_docs = docs.join(
-        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-        "left_semi",
+    return _minhash_pairs(
+        docs, _exact_dup_membership(docs), threshold, k, bands, bucket_cap
     )
+
+
+def _minhash_pairs(
+    docs: DataFrame,
+    membership: DataFrame,
+    threshold: float,
+    k: int,
+    bands: int,
+    bucket_cap: int,
+    signatures: DataFrame | None = None,
+) -> DataFrame:
+    """The body of :func:`minhash_lsh_pairs` over a given exact-dup
+    ``membership`` and, from a persisted index, the representatives'
+    stored ``signatures``."""
+    rep_docs = _representatives(docs, membership)
     candidates = minhash_lsh_candidates(
-        rep_docs, k, bands, bucket_cap
+        rep_docs, k, bands, bucket_cap, signatures=signatures
     ).localCheckpoint()  # tiny (collision survivors); the verify joins
     # and the candidate id set read it without re-running the band join
     rep_pairs = _verify_jaccard(rep_docs, candidates, threshold)
-    return _expand_rep_pairs(
-        rep_pairs,
-        membership,
-        F.when(F.lit(threshold) <= 1.0, F.lit(1.0)).cast("double"),
-        "j",
-    ).where(F.col("j").isNotNull())
+    return _expand_rep_pairs(rep_pairs, membership, "j", threshold)
 
 
 def d03_minhash_lsh(spark, sf_dir):
@@ -513,55 +559,21 @@ def simhash_pairs(
     the word-explode + 64-bit-vote aggregation over the corpus."""
     docs = docs.select("doc_id", "text")
     membership = _exact_dup_membership(docs)
-    rep_docs = docs.join(
-        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
-    sig = simhash_signatures(rep_docs).localCheckpoint()
-    chunks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright("simhash", i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("val"),
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("c"),
-    ).select("doc_id", "simhash", F.col("c.chunk").alias("chunk"), F.col("c.val").alias("val"))
-    chunks = _cap_buckets(chunks, ["chunk", "val"], bucket_cap)
-    a = chunks.alias("a")
-    b = chunks.alias("b")
+    sig = simhash_signatures(_representatives(docs, membership)).localCheckpoint()
+    chunks = _int_band_table(sig, ["simhash"], 4, 16, ["doc_id", "simhash"])
     rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _band_pairs(chunks, "doc_id", bucket_cap)
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))).alias(
+                "hamming"
+            ),
         )
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
-    return _expand_rep_pairs(
-        rep_pairs,
-        membership,
-        F.when(F.lit(max_hamming) >= 0, F.lit(0)).cast("int"),
-        "hamming",
-    ).where(F.col("hamming").isNotNull())
+    return _expand_rep_pairs(rep_pairs, membership, "hamming", max_hamming)
 
 
 def d04_simhash(spark, sf_dir):
@@ -682,22 +694,8 @@ def winnow_fingerprints(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W) -
     grams = (
         spread(docs)
         .select("doc_id", tokens("text").alias("w"))
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(w) - {k - 1}, 1)),"
-                    f" i -> concat_ws(' ', slice(w, i, {k})))"
-                )
-            ).alias("pos", "gram"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
+        .select("doc_id", F.posexplode(word_grams("w", k)).alias("pos", "gram"))
+        .select("doc_id", "pos", md5_prefix_hash("gram").alias("h"))
     )
     # each gram belongs to the w windows ending at pos..pos+w-1;
     # window j's fingerprint = its min-h gram, rightmost on ties
@@ -773,34 +771,36 @@ def d20_dup_span_fraction(spark, sf_dir):
     return dup_span_report(load_table(spark, sf_dir, "documents"))
 
 
-def dup_span_report(d: DataFrame, L: int = DUP_SPAN_L) -> DataFrame:
-    """(doc_id, n_tokens, dup_tokens, dup_frac) — see
-    :func:`d20_dup_span_fraction`."""
+def _span_gram_table(
+    d: DataFrame, L: int, keep: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """``(base, grams)`` for the exact-substring tiers (d20, d30):
+    ``base`` = (doc_id, *keep, n_tokens, w), materialized because the
+    grams AND the per-doc report read it; ``grams`` = (doc_id, pos, h),
+    the :func:`md5_prefix_hash` of every L-word gram at its 1-based token
+    position. Documents shorter than L words have no grams."""
     base = (
         spread(d)
-        .select("doc_id", tokens("text").alias("w"))
-        .select("doc_id", F.size("w").alias("n_tokens"), "w")
-        .localCheckpoint()  # consumed by grams AND the final left join
+        .select("doc_id", *keep, tokens("text").alias("w"))
+        .select("doc_id", *keep, F.size("w").alias("n_tokens"), "w")
+        .localCheckpoint()
     )
     grams = (
         base.where(F.col("n_tokens") >= L)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, size(w) - {L - 1}),"
-                    f" i -> concat_ws(' ', slice(w, i, {L})))"
-                )
-            ).alias("p0", "gram"),
-        )
+        .select("doc_id", F.posexplode(word_grams("w", L)).alias("p0", "gram"))
         .select(
             "doc_id",
             (F.col("p0") + 1).alias("pos"),
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("h"),
+            md5_prefix_hash("gram").alias("h"),
         )
     )
+    return base, grams
+
+
+def dup_span_report(d: DataFrame, L: int = DUP_SPAN_L) -> DataFrame:
+    """(doc_id, n_tokens, dup_tokens, dup_frac) — see
+    :func:`d20_dup_span_fraction`."""
+    base, grams = _span_gram_table(d, L, [])
     dup_h = (
         grams.groupBy("h")
         .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
@@ -1037,9 +1037,6 @@ def sparse_cosine_pairs(
     output."""
     w = _tfidf_weights(docs).localCheckpoint()
     # consumed by norms AND both join sides
-    norms = w.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
-    )
     a, b = w.alias("a"), w.alias("b")
     dots = (
         a.join(
@@ -1051,6 +1048,17 @@ def sparse_cosine_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.sum(F.col("a.wt") * F.col("b.wt")).alias("dot"))
+    )
+    return _cosine_scores(dots, w, threshold)
+
+
+def _cosine_scores(dots: DataFrame, w: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, sim) from pair dot products ``(doc_a, doc_b,
+    dot)`` over the weight table ``w``: sim = dot / (na·nb) with the
+    engine's round(round(·,6)+1e-9, 4) stabilization, kept at or above
+    ``threshold``."""
+    norms = w.groupBy("doc_id").agg(
+        F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
     )
     na = norms.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
     nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
@@ -1262,35 +1270,6 @@ def _srp_signatures(per_doc: DataFrame, n_longs: int = SRP_LONGS) -> DataFrame:
     )
 
 
-def _srp_band_table(
-    sig: DataFrame,
-    n_bands: int = SRP_BANDS,
-    band_bits: int = SRP_BAND_BITS,
-) -> DataFrame:
-    """(doc_id, band, bsig) — unpivot consecutive ``band_bits``-bit
-    slices of the wide signature's prefix into integer band values,
-    all codegen'd bit arithmetic (band b = bits [b·w, (b+1)·w) = long
-    b//(64/w) >>> (w·(b % (64/w))) masked to w bits). Banding uses a
-    PREFIX of the signature: extra signature bits sharpen the
-    Hamming estimator without inflating the band table."""
-    per_long = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(
-                F.col(f"s{b // per_long}"), band_bits * (b % per_long)
-            )
-            .bitwiseAND(F.lit(mask))
-            .alias("bsig"),
-        )
-        for b in range(n_bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*bands)).alias("bs")
-    ).select("doc_id", F.col("bs.band").alias("band"), F.col("bs.bsig").alias("bsig"))
-
-
 def _srp_hamming(n_longs: int = SRP_LONGS) -> F.Column:
     """Codegen'd popcount distance between wide signatures joined as
     ``a_s*`` / ``b_s*``: ``n_longs`` unrolled bit_count(xor) terms
@@ -1317,9 +1296,6 @@ def _verify_weighted_cosine(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
     wc = w.join(cand_ids, "doc_id", "left_semi")
-    norms = wc.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
-    )
     dots = (
         candidates.join(
             wc.select(F.col("doc_id").alias("doc_a"), "word", F.col("wt").alias("wa")),
@@ -1332,15 +1308,7 @@ def _verify_weighted_cosine(
         .groupBy("doc_a", "doc_b")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
     )
-    na = norms.select(F.col("doc_id").alias("doc_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("nrm").alias("nb"))
-    sim = nudge(F.col("dot") / (F.col("na") * F.col("nb")), 4)
-    return (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select("doc_a", "doc_b", sim.alias("sim"))
-        .where(F.col("sim") >= threshold)
-    )
+    return _cosine_scores(dots, wc, threshold)
 
 
 def weighted_srp_pairs(
@@ -1398,13 +1366,11 @@ def weighted_srp_pairs(
     docs = docs.select("doc_id", "text")
     membership = _exact_dup_membership(docs)
     w_full = _tfidf_weights(docs)
-    reps = membership.where(F.col("doc_id") == F.col("rep")).select("doc_id")
-    w_rep = w_full.join(reps, "doc_id", "left_semi").localCheckpoint()
+    w_rep = _representatives(w_full, membership).localCheckpoint()
     sig = _srp_signatures(_per_doc_vectors(w_rep), n_longs).localCheckpoint()
-    band_sig = _cap_buckets(
-        _srp_band_table(sig, n_bands, band_bits), ["band", "bsig"], bucket_cap
+    band_sig = _int_band_table(
+        sig, [f"s{i}" for i in range(n_longs)], n_bands, band_bits, ["doc_id"]
     )
-    a, b = band_sig.alias("a"), band_sig.alias("b")
 
     def _sig_sides(k: int):
         sa = sig.select(
@@ -1448,13 +1414,7 @@ def weighted_srp_pairs(
     sa_c, sb_c = _sig_sides(coarse_longs)
     nb_coarse = 64 * coarse_longs
     coarse_cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        _band_pairs(band_sig, "doc_id", bucket_cap)
         .transform(lambda df: _attach(df, sa_c, "doc_a"))
         .transform(lambda df: _attach(df, sb_c, "doc_b"))
         .where(
@@ -1483,12 +1443,7 @@ def weighted_srp_pairs(
         # + expansion stage can be SQL-oracled over the export
         return candidates
     rep_pairs = _verify_weighted_cosine(w_rep, candidates, threshold)
-    return _expand_rep_pairs(
-        rep_pairs,
-        membership,
-        F.when(F.lit(threshold) <= 1.0, F.lit(1.0)).cast("double"),
-        "sim",
-    ).where(F.col("sim").isNotNull())
+    return _expand_rep_pairs(rep_pairs, membership, "sim", threshold)
 
 
 def d16_weighted_neardup(spark, sf_dir):
@@ -1730,7 +1685,8 @@ ORACLE_SQL["d19_dedup_keep_best"] = f"""
         ORDER BY a.cluster_id, keep_id, n_docs, chars_total"""
 
 ORACLE_SQL["d18_winnow_overlap"] = f"""
-        WITH wds AS (SELECT doc_id, string_split(lower(text), ' ') w FROM documents),
+        WITH wds AS (SELECT doc_id, string_split(lower(text), ' ') w FROM documents
+                     WHERE text IS NOT NULL),
         g AS (SELECT doc_id, i pos,
                      CAST(concat('0x', substr(md5(array_to_string(w[i:i+{WINNOW_K - 1}], ' ')), 1, 8)) AS BIGINT) h
               FROM wds, unnest(range(1, greatest(len(w) - {WINNOW_K - 1}, 1) + 1)) t(i)),
@@ -2440,33 +2396,7 @@ def span_removal_plan(d: DataFrame, L: int = DUP_SPAN_L) -> DataFrame:
     dedups positions inside the doc partition. Per-source rollup is an
     |sources|-row aggregate. Fully oracled (same md5-prefix gram hash
     both engines)."""
-    base = (
-        spread(d)
-        .select("doc_id", "source", tokens("text").alias("w"))
-        .select(
-            "doc_id", "source", F.size("w").alias("n_tokens"), "w"
-        )
-        .localCheckpoint()  # consumed by grams AND the rollup join
-    )
-    grams = (
-        base.where(F.col("n_tokens") >= L)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, size(w) - {L - 1}),"
-                    f" i -> concat_ws(' ', slice(w, i, {L})))"
-                )
-            ).alias("p0", "gram"),
-        )
-        .select(
-            "doc_id",
-            (F.col("p0") + 1).alias("pos"),
-            F.conv(F.substring(F.md5("gram"), 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("h"),
-        )
-    )
+    base, grams = _span_gram_table(d, L, ["source"])
     first_doc = grams.groupBy("h").agg(F.min("doc_id").alias("keeper"))
     removed = (
         grams.join(first_doc, "h")

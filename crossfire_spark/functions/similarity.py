@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from crossfire_spark.catalog import load_table, spread, stab, stab_signed
-from crossfire_spark.functions.dedup import _cap_buckets
-from crossfire_spark.functions.graph import connected_components
+from crossfire_spark.functions.dedup import _band_pairs, _cap_buckets, _int_band_table
+from crossfire_spark.functions.graph import connected_components, mirror
 from crossfire_spark.functions.text import (
     BM25_B,
     BM25_K1,
@@ -339,43 +339,14 @@ def lsh_topk_candidates(
     bytes for zero information; vectors are joined back on the id
     *after* the distinct (corpus side one hash join, query side a
     broadcast)."""
-    bits_per_band = bits // bands
-    c_b = corpus.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("lsh_sig", i * bits_per_band)
-                        .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("vec_id", "bv.band", "bv.val")
-    c_b = _cap_buckets(c_b, ["band", "val"], bucket_cap)
-    q_b = qsig.select(
-        "qid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("qsig", i * bits_per_band)
-                        .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("qid", "bv.band", "bv.val")
-
+    c_b = _cap_buckets(
+        _int_band_table(corpus, ["lsh_sig"], bands, bits // bands, ["vec_id"]),
+        ["band", "bsig"],
+        bucket_cap,
+    )
+    q_b = _int_band_table(qsig, ["qsig"], bands, bits // bands, ["qid"])
     return (
-        c_b.join(F.broadcast(q_b), ["band", "val"])
+        c_b.join(F.broadcast(q_b), ["band", "bsig"])
         .where(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id")
         .distinct()
@@ -781,36 +752,12 @@ def ann_graph_candidates(
     against a SQL oracle over the exported candidates (the d13
     soundness pattern — the only non-SQL step is then the banding
     itself). ``signed`` must carry (vec_id, lsh_sig)."""
-    bits_per_band = bits // bands
-    b_tab = signed.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("lsh_sig", i * bits_per_band)
-                        .bitwiseAND(F.lit((1 << bits_per_band) - 1))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bv"),
-    ).select("vec_id", "bv.band", "bv.val")
-    b_tab = _cap_buckets(b_tab, ["band", "val"], bucket_cap)
-    a, b = b_tab.alias("a"), b_tab.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_id"), F.col("b.vec_id").alias("nbr_id")
-        )
-        .distinct()
+    b_tab = _int_band_table(signed, ["lsh_sig"], bands, bits // bands, ["vec_id"])
+    pairs = _band_pairs(b_tab, "vec_id", bucket_cap).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
+    )
+    return mirror(pairs.distinct()).select(
+        F.col("node").alias("vec_id"), F.col("nbr").alias("nbr_id")
     )
 
 
@@ -827,9 +774,8 @@ def knn_graph_ann(
     exact tier's all-tiles product; exact cosine then scores
     candidates only, and the SAME per-node top-k merge finishes the
     graph. Output schema matches the exact tier; recall against it is
-    pinned in tests. The band self-join with ``a.id != b.id`` yields
-    both directions of every bucket pair, so each node ranks every
-    co-bucketed neighbor."""
+    pinned in tests. The candidate set holds both directions of every
+    bucket pair, so each node ranks every co-bucketed neighbor."""
     corpus = (
         lsh_signature(embeddings, bits=bits)
         .select("vec_id", "embedding", "lsh_sig")

@@ -11,6 +11,8 @@ The tokenize-and-count stage is one kernel set, shared by the text,
 dedup, ANN-index, extended and relational families:
 
 - ``tokens``           — lowercased whitespace tokens
+- ``word_grams``       — the word n-grams of a token array
+- ``md5_prefix_hash``  — the first 8 hex digits of md5 as a bigint
 - ``bag_fingerprint``  — md5 over the sorted distinct tokens
 - ``_marker_count`` / ``_punct_count`` / ``_quality_score``
                        — t02's quality features
@@ -53,6 +55,33 @@ def tokens(col) -> F.Column:
     adds or removes a space, so ``size(tokens(c))`` is also the raw
     whitespace token count."""
     return F.split(F.lower(col), " ")
+
+
+def word_grams(w: str, n: int) -> F.Column:
+    """The word n-grams of the token-array column ``w``, in position
+    order: ``w[i:i+n]`` joined by spaces for i = 1..size-n+1, and one
+    gram of every token when the array is shorter than ``n`` (the
+    oracles' ``range(1, greatest(len(w) - n + 1, 1) + 1)``). A NULL
+    array has no grams, as the oracles' ``string_split`` gives NULL
+    text none.
+
+    ``w`` must name a projected column: referencing ``tokens(...)``
+    inside the lambda would re-split the document for every gram
+    position (O(words^2) per doc)."""
+    return F.when(
+        F.col(w).isNotNull(),
+        F.expr(
+            f"transform(sequence(1, greatest(size({w}) - {n - 1}, 1)),"
+            f" i -> concat_ws(' ', slice({w}, i, {n})))"
+        ),
+    )
+
+
+def md5_prefix_hash(col) -> F.Column:
+    """The first 8 hex digits of md5(col) as a bigint — the same
+    integer as the oracles' ``CAST(concat('0x', substr(md5(x), 1, 8))
+    AS BIGINT)``, so both engines select and order by the same keys."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
 def bag_fingerprint(col) -> F.Column:
@@ -1086,15 +1115,7 @@ def stratified_sample(docs, k: int = STRATIFIED_K, salts: int = STRATIFIED_SALTS
     which is how the DuckDB oracle states it."""
     from pyspark.sql import Window
 
-    key = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws("#", F.lit("t21"), "doc_id")), 1, 8),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("skey")
-    )
+    key = md5_prefix_hash(F.concat_ws("#", F.lit("t21"), "doc_id")).alias("skey")
     keyed = docs.select("doc_id", "source", key)
     w1 = Window.partitionBy(
         "source", F.col("doc_id") % salts
@@ -1185,18 +1206,12 @@ def boilerplate_report(docs: DataFrame, n: int = BP_NGRAM, min_docs: int = BP_MI
     (source, gram) document-frequency aggregate is map-side-combinable
     over already-unique (doc, gram) rows; the boilerplate set joins
     back as a semi-join on the same (source, gram) key — two shuffles
-    total, both on gram keys, nothing quadratic."""
-    # words materialized in their own projection first: referencing
-    # split(...) inside the lambda would re-split the whole document
-    # for every gram position (O(words^2) per doc)
-    grams = F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(size(w) - {n - 1}, 1)),"
-            f" i -> concat_ws(' ', slice(w, i, {n})))"
-        )
-    )
+    total, both on gram keys, nothing quadratic. A NULL text has no
+    grams and no row, as in the oracle."""
+    grams = F.array_distinct(word_grams("w", n))
     base = (
-        docs.select(
+        docs.where(F.col("text").isNotNull())
+        .select(
             "doc_id", "source", tokens("text").alias("w")
         )
         .select(
@@ -1327,14 +1342,7 @@ def ngram_novelty(d: DataFrame, n: int = NOVELTY_N) -> DataFrame:
         .select("doc_id", tokens("text").alias("w"))
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(1, greatest(size(w) - {n - 1}, 1)),"
-                        f" i -> concat_ws(' ', slice(w, i, {n})))"
-                    )
-                )
-            ).alias("gram"),
+            F.explode(F.array_distinct(word_grams("w", n))).alias("gram"),
         )
         .select("doc_id", F.xxhash64("gram").alias("h"))
         .localCheckpoint()  # consumed by first-seen agg AND per-doc join
@@ -1777,7 +1785,8 @@ ORACLE_SQL["v05_gopher_rules"] = f"""
     FROM f ORDER BY doc_id, n_words, mean_wlen, alpha_frac, stop_hits, passes"""
 
 ORACLE_SQL["t22_boilerplate"] = f"""
-    WITH w AS (SELECT doc_id, source, string_split(lower(text), ' ') words FROM documents),
+    WITH w AS (SELECT doc_id, source, string_split(lower(text), ' ') words FROM documents
+               WHERE text IS NOT NULL),
     g AS (SELECT DISTINCT doc_id, source, array_to_string(words[i:i+{BP_NGRAM - 1}], ' ') gram
           FROM w, unnest(range(1, greatest(len(words) - {BP_NGRAM - 1}, 1) + 1)) t(i)),
     base AS (SELECT doc_id, source, COUNT(*) n_grams FROM g GROUP BY doc_id, source),

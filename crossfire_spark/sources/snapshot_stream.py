@@ -49,23 +49,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-_LOG = "_log"
-
-
-def _versions(path: str) -> list[int]:
-    log = os.path.join(path, _LOG)
-    if not os.path.isdir(log):
-        return []
-    return sorted(
-        int(f[1:-5])
-        for f in os.listdir(log)
-        if f.startswith("v") and f.endswith(".json")
-    )
-
-
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, _LOG, f"v{version:06d}.json")) as fh:
-        return json.load(fh)
+from crossfire_spark.sources.snapshot import _read_manifest, snapshot_versions
 
 
 class _AddedFile(InputPartition):
@@ -98,11 +82,11 @@ class SnapshotStreamReader(DataSourceStreamReader):
         # head SNAPSHOT (marked by snapshot_of), later batches are
         # per-commit adds — a new consumer of an overwrite/merge-heavy
         # table never sees superseded row versions.
-        vs = _versions(self.path)
+        vs = snapshot_versions(self.path)
         return {"version": vs[-1] if vs else -1, "snapshot_of": True}
 
     def latestOffset(self) -> dict:
-        vs = _versions(self.path)
+        vs = snapshot_versions(self.path)
         return {"version": vs[-1] if vs else -1}
 
     def partitions(self, start: dict, end: dict):
@@ -112,7 +96,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
             # initial batch: the whole file set of the offset version —
             # one consistent snapshot of the table as of stream start
             if s >= 0:
-                m = _manifest(self.path, s)
+                m = _read_manifest(self.path, s)
                 fparts = m.get("file_partitions", {})
                 for f in sorted(m["files"]):
                     parts.append(
@@ -121,13 +105,13 @@ class SnapshotStreamReader(DataSourceStreamReader):
                             dict(fparts.get(f) or {}),
                         )
                     )
-        for v in _versions(self.path):
+        for v in snapshot_versions(self.path):
             if not (s < v <= e):
                 continue
-            m = _manifest(self.path, v)
+            m = _read_manifest(self.path, v)
             parent_files: set[str] = set()
             if m["parent"] is not None:
-                parent_files = set(_manifest(self.path, m["parent"])["files"])
+                parent_files = set(_read_manifest(self.path, m["parent"])["files"])
             fparts = m.get("file_partitions", {})
             for f in sorted(set(m["files"]) - parent_files):
                 parts.append(
@@ -183,10 +167,10 @@ class SnapshotStreamSource(DataSource):
 
     def schema(self) -> StructType:
         path = self.options["path"]
-        vs = _versions(path)
+        vs = snapshot_versions(path)
         if not vs:
             raise FileNotFoundError(f"no snapshot log at {path}")
-        return StructType.fromJson(json.loads(_manifest(path, vs[-1])["schema"]))
+        return StructType.fromJson(json.loads(_read_manifest(path, vs[-1])["schema"]))
 
     def streamReader(self, schema: StructType) -> SnapshotStreamReader:
         # option keys may arrive case-normalized depending on the
@@ -206,18 +190,17 @@ def register_snapshot_source(spark: SparkSession) -> None:
     DataSource to worker processes via cloudpickle, and a by-reference
     pickle would require ``crossfire_spark`` on every executor's
     ``sys.path`` — true when the driver runs from the repo root, false
-    for a host application running elsewhere. This module is
-    deliberately self-contained (stdlib + pyarrow + pyspark only), so
-    shipping it by value is a few KB and removes the deployment
-    constraint."""
+    for a host application running elsewhere. This module and the
+    snapshot log reader it calls (``sources/snapshot.py``) use stdlib +
+    pyarrow + pyspark only, so both ship by value in a few KB and the
+    deployment constraint goes away."""
     import sys
 
     from pyspark import cloudpickle
 
     try:
-        cloudpickle.register_pickle_by_value(
-            sys.modules[SnapshotStreamSource.__module__]
-        )
+        for module in (SnapshotStreamSource.__module__, snapshot_versions.__module__):
+            cloudpickle.register_pickle_by_value(sys.modules[module])
     except Exception:
         pass  # older cloudpickle: fall back to by-reference
     spark.dataSource.register(SnapshotStreamSource)

@@ -34,7 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import nudge
+from crossfire_spark.catalog import event_ts, nudge
 
 WATERMARK = "1 hour"
 SESSION_GAP = "30 minutes"
@@ -74,20 +74,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
     # the file source wants a directory; glob-filter to the one table
-    sdf = (
+    return event_ts(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(sdf.dtypes).get("ts")
-    if ts_type == "bigint":
-        # integer DIV: float division drifts by ±1 µs above 2^53 ns
-        sdf = sdf.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif ts_type == "timestamp_ntz":
-        # µs NTZ parquet: watermarks require TIMESTAMP; UTC session tz
-        # makes the cast value-preserving.
-        sdf = sdf.withColumn("ts", F.col("ts").cast("timestamp"))
-    return sdf
 
 
 def run_stream_to_memory(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from crossfire_spark.functions.dedup import (
     MINHASH_K,
+    SRP_BAND_BITS,
     _cap_buckets,
     _exact_dup_membership,
     _i64,
@@ -97,6 +98,40 @@ def test_simhash_precollapse_and_cap(spark, hot_docs):
     assert intra.count() == N_DUPS * (N_DUPS - 1) // 2
     assert intra.where(F.col("hamming") != 0).count() == 0
     assert out.where(F.col("doc_a") == 2000).count() == 0
+
+
+@pytest.mark.parametrize("width", sorted({2, 16, SRP_BAND_BITS}))
+def test_int_band_table_matches_python_shifts(spark, width):
+    """Every band of the integer banding kernel equals the per-band
+    Python ``(x >> (width·i)) & mask`` of its 64-bit word, on seeded
+    longs including negative ones and both extremes: the logical shift
+    the kernel uses and the arithmetic one agree once masked."""
+    import random
+
+    from crossfire_spark.functions.dedup import _int_band_table
+
+    rng = random.Random(20261019)
+    rows = [[rng.getrandbits(64) - (1 << 63) for _ in range(2)] for _ in range(32)]
+    rows += [[-1, -(1 << 63)], [(1 << 63) - 1, 0]]
+    assert any(x < 0 for r in rows for x in r)
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "doc_id long, s0 long, s1 long"
+    )
+    per_word = 64 // width
+    n_bands = 2 * per_word
+    got = {
+        (r.doc_id, r.band): r.bsig
+        for r in _int_band_table(
+            df, ["s0", "s1"], n_bands, width, ["doc_id"]
+        ).collect()
+    }
+    mask = (1 << width) - 1
+    want = {
+        (i, b): (r[b // per_word] >> (width * (b % per_word))) & mask
+        for i, r in enumerate(rows)
+        for b in range(n_bands)
+    }
+    assert got == want
 
 
 def test_weighted_srp_recall_vs_exact(spark, sf_dir):

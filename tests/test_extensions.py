@@ -1392,6 +1392,8 @@ def test_threshold_sweep_monotone(spark, sf_dir):
         "v14_dup_label_consistency",
         "t24_ngram_novelty",
         "d13_build_index",
+        "d18_winnow_overlap",
+        "t22_boilerplate",
         # content-defined chunks: a NULL text has none
         "t12_cdc_chunks",
         "d10_chunk_dedup",
@@ -1537,3 +1539,44 @@ def test_graph_kernels_defined_once():
         and checkpoints(loop)
     ]
     assert len(loops) == 1, f"per-round checkpoint loops: {loops}"
+
+
+def test_dedup_kernels_defined_once():
+    """Each near-duplicate step has one definition in the package: the
+    word n-gram transform, the md5-prefix hash, the integer band
+    shift-and-mask, the band-bucket self-join, the representative
+    filter and the Jaccard and cosine scoring tails. The intra-group
+    score of a representative expansion is decided in Python inside
+    ``_expand_rep_pairs``, never as a ``F.when(F.lit(threshold) ...)``
+    column at a call site."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    src = {str(f.relative_to(pkg)): f.read_text() for f in pkg.rglob("*.py")}
+    kernels = {
+        "word n-grams": r"concat_ws\(' ', slice\(",
+        "md5-prefix hash": r"F\.substring\(\s*F\.md5\(",
+        "band shift-and-mask": (
+            r'F\.shiftright(?:unsigned)?\(\s*(?:"\w+"|F\.col\([^)]*\))\s*,[^)]*\*'
+        ),
+        "band self-join": r'F\.col\("a\.band"\) == F\.col\("b\.band"\)',
+        "representative filter": (
+            r'membership\.where\(F\.col\("doc_id"\) == F\.col\("rep"\)\)'
+        ),
+        "jaccard tail": r'F\.col\("na"\) \+ F\.col\("nb"\) - F\.col\("i"\)',
+        "cosine tail": r'F\.col\("dot"\) / \(F\.col\("na"\) \* F\.col\("nb"\)\)',
+    }
+    for kernel, rx in kernels.items():
+        hits = [
+            (name, len(re.findall(rx, text)))
+            for name, text in sorted(src.items())
+            if re.search(rx, text)
+        ]
+        assert sum(n for _, n in hits) == 1, f"{kernel}: {hits}"
+    intra = [
+        name
+        for name, text in sorted(src.items())
+        if re.search(r"F\.when\(\s*F\.lit\((?:threshold|max_hamming)\)", text)
+    ]
+    assert intra == [], f"call-site intra-group scores: {intra}"

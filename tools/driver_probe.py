@@ -8,7 +8,7 @@ the full differential suite lives in tests/ and the exhaustive sweep
 in tools/oracle_sweep.py.
 
 Usage:
-    cd /tmp && python /root/repo/tools/driver_probe.py [query ...]
+    cd /tmp && python <checkout>/tools/driver_probe.py [query ...]
 
 With no arguments probes a default set: one timestamp-sensitive query
 (q05 — breaks first if the events-table defensive confs regress), one
@@ -19,11 +19,12 @@ registration regresses), and the most recently added oracled entries.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem "

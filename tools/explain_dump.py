@@ -20,7 +20,7 @@ sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 OUT_DIR = os.environ.get(
-    "SPARK_GRAFT_PLANS_DIR", os.path.join("/root/repo", "plans", "r10")
+    "SPARK_GRAFT_PLANS_DIR", os.path.join(REPO, "plans", "r10")
 )
 
 

@@ -16,13 +16,15 @@ Usage: python tools/oracle_sweep.py [sf_dir] [query ...]
 """
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -147,7 +149,7 @@ def main() -> int:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py"
+        "entry", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -32,6 +32,7 @@ per side instead so JIT/scan caching doesn't skew the pairing.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
@@ -106,7 +107,7 @@ def main() -> None:
     if "--reps" in sys.argv:
         reps = int(sys.argv[sys.argv.index("--reps") + 1])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from crossfire_spark.placement.api import (
         choose_targets,
         deletion_candidates,

@@ -14,10 +14,12 @@ tests/test_streaming.py instead.
 """
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SKIP_PREFIXES = ("st",)
 SF_DIR = "/root/testdata/sf0.01"
@@ -104,7 +106,7 @@ def main() -> None:
                 n=name, p="yes" if pushed else "—", **counts
             )
         )
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(rows)} queries)")
 

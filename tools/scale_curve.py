@@ -161,22 +161,16 @@ def gen(scales=SCALES) -> None:
 
 def _candidate_counts(spark, sf_dir: str) -> dict[str, int]:
     """Rows reaching exact verification for the banded dedup tiers."""
-    from pyspark.sql import functions as F
-
     from crossfire_spark.catalog import load_table
     from crossfire_spark.functions.dedup import (
         _exact_dup_membership,
+        _representatives,
         minhash_lsh_candidates,
         weighted_srp_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    membership = _exact_dup_membership(docs)
-    rep_docs = docs.join(
-        membership.where(F.col("doc_id") == F.col("rep")).select("doc_id"),
-        "doc_id",
-        "left_semi",
-    )
+    rep_docs = _representatives(docs, _exact_dup_membership(docs))
     return {
         "d03_candidates": minhash_lsh_candidates(rep_docs).count(),
         "d16_candidates": weighted_srp_pairs(
