@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TPCH_TABLES = (
@@ -84,6 +84,31 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
+
+
+def materialize(
+    df: DataFrame, counters: dict[str, F.Column] | None = None, *, eager: bool = True
+):
+    """Pin an intermediate that several consumers (or every round of a
+    loop) read. This is the package's one way to materialize, so the
+    medium and how counters attach to it are decided here only.
+
+    The medium is a local checkpoint: executor-local blocks, the same
+    storage a shuffle write uses, and a plan cut so later consumers
+    read the rows instead of re-deriving them. ``eager=False`` pins the
+    rows when the first consumer's job computes them.
+
+    Given ``counters`` (name -> aggregate Column), returns
+    ``(frame, {name: value})``: the values are computed over the pinned
+    rows by the checkpoint's own job through an ``Observation``, so a
+    row count or a checksum costs no separate job."""
+    if counters:
+        if not eager:
+            raise ValueError("counters ride the eager checkpoint job")
+        obs = Observation()
+        df = df.observe(obs, *[c.alias(name) for name, c in counters.items()])
+    pinned = df.localCheckpoint(eager)
+    return (pinned, obs.get) if counters else pinned
 
 
 def stab_signed(c: F.Column | str, dp: int) -> F.Column:

@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from crossfire_spark.catalog import materialize
 from crossfire_spark.functions.dedup import (
     LSH_BANDS as D_LSH_BANDS,
     JACCARD_THRESHOLD,
@@ -195,20 +196,19 @@ def minhash_batch_vs_index(
     membership = snapshot_read(spark, os.path.join(path, "membership"))
     signatures = snapshot_read(spark, os.path.join(path, "signatures"))
     batch = batch_docs.select("doc_id", "text")
-    batch_wide = minhash_signatures_wide(batch, k).localCheckpoint()
+    batch_wide = materialize(minhash_signatures_wide(batch, k))
     corpus_bands = _cap_buckets(
         band_table(signatures, k, bands), ["band", "bsig"], bucket_cap
     ).select(F.col("doc_id").alias("corpus_id"), "band", "bsig")
     batch_bands = band_table(batch_wide, k, bands).select(
         F.col("doc_id").alias("batch_id"), "band", "bsig"
     )
-    candidates = (
+    candidates = materialize(
         batch_bands.join(corpus_bands, ["band", "bsig"])
         .select(
             F.col("batch_id").alias("doc_a"), F.col("corpus_id").alias("doc_b")
         )
         .distinct()
-        .localCheckpoint()
     )
     # verify against the union text set: ids are globally unique, so
     # one shingle table serves both sides of each candidate pair

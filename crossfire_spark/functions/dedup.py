@@ -36,7 +36,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, spread, stab, stab_signed
+from crossfire_spark.catalog import (
+    load_table,
+    materialize,
+    nudge,
+    spread,
+    stab,
+    stab_signed,
+)
 from crossfire_spark.functions.graph import connected_components
 from crossfire_spark.functions.text import (
     CDC_CHUNKS_SQL_CTE,
@@ -147,10 +154,9 @@ def _exact_dup_membership(docs: DataFrame) -> DataFrame:
     Hamming 0 by definition). Materialized once: the rep filter, the
     intra-group join (both sides), and the cross-group expansion all
     read it."""
-    return (
+    return materialize(
         docs.select("doc_id", F.md5("text").alias("fp"))
         .withColumn("rep", F.min("doc_id").over(Window.partitionBy("fp")))
-        .localCheckpoint()
     )
 
 
@@ -360,7 +366,7 @@ def minhash_lsh_candidates(
     (see ``LSH_BUCKET_CAP``), so candidate fan-out per bucket is
     bounded by cap² however duplicate-heavy the corpus is.
 
-    The signature table is *materialized once* (``localCheckpoint`` —
+    The signature table is *materialized once* (``materialize`` —
     executor-local storage, the same medium a shuffle write uses; a
     production pipeline persists it as a real table). Everything
     downstream — both sides of the band self-join, the candidate id
@@ -375,7 +381,7 @@ def minhash_lsh_candidates(
         # k-hash pass over the text already happened at build time
         wide = signatures
     else:
-        wide = minhash_signatures_wide(docs, k).localCheckpoint()
+        wide = materialize(minhash_signatures_wide(docs, k))
     return _band_pairs(band_table(wide, k, bands), "doc_id", bucket_cap).distinct()
 
 
@@ -499,10 +505,11 @@ def _minhash_pairs(
     ``membership`` and, from a persisted index, the representatives'
     stored ``signatures``."""
     rep_docs = _representatives(docs, membership)
-    candidates = minhash_lsh_candidates(
-        rep_docs, k, bands, bucket_cap, signatures=signatures
-    ).localCheckpoint()  # tiny (collision survivors); the verify joins
-    # and the candidate id set read it without re-running the band join
+    # tiny (collision survivors); the verify joins and the candidate id
+    # set read it without re-running the band join
+    candidates = materialize(
+        minhash_lsh_candidates(rep_docs, k, bands, bucket_cap, signatures=signatures)
+    )
     rep_pairs = _verify_jaccard(rep_docs, candidates, threshold)
     return _expand_rep_pairs(rep_pairs, membership, "j", threshold)
 
@@ -559,7 +566,7 @@ def simhash_pairs(
     the word-explode + 64-bit-vote aggregation over the corpus."""
     docs = docs.select("doc_id", "text")
     membership = _exact_dup_membership(docs)
-    sig = simhash_signatures(_representatives(docs, membership)).localCheckpoint()
+    sig = materialize(simhash_signatures(_representatives(docs, membership)))
     chunks = _int_band_table(sig, ["simhash"], 4, 16, ["doc_id", "simhash"])
     rep_pairs = (
         _band_pairs(chunks, "doc_id", bucket_cap)
@@ -650,11 +657,10 @@ def d17_hashed_decontam(spark, sf_dir):
     shuffle until the per-doc count agg; the verify shuffle carries
     hits only."""
     d = load_table(spark, sf_dir, "documents")
-    eval_sh = (
+    eval_sh = materialize(  # consumed by the hash-set build AND the verify
         _shingles(d.where(F.col("source") == EVAL_SOURCE), CONTAM_NGRAM)
         .select("shingle")
         .distinct()
-        .localCheckpoint()  # consumed by the hash-set build AND the verify
     )
     eval_hashes = eval_sh.select(F.xxhash64("shingle").alias("h")).distinct()
     corpus_sh = _shingles(
@@ -779,11 +785,10 @@ def _span_gram_table(
     grams AND the per-doc report read it; ``grams`` = (doc_id, pos, h),
     the :func:`md5_prefix_hash` of every L-word gram at its 1-based token
     position. Documents shorter than L words have no grams."""
-    base = (
+    base = materialize(
         spread(d)
         .select("doc_id", *keep, tokens("text").alias("w"))
         .select("doc_id", *keep, F.size("w").alias("n_tokens"), "w")
-        .localCheckpoint()
     )
     grams = (
         base.where(F.col("n_tokens") >= L)
@@ -879,7 +884,7 @@ def chunk_dedup_report(docs: DataFrame) -> DataFrame:
     # materialize the kernel output once: both the keep-first aggregate
     # and the report join consume it — without this the Arrow chunking
     # kernel runs twice over the corpus (PLANS.md showed 2 arrowPy).
-    chunks = cdc_chunks(docs).localCheckpoint()
+    chunks = materialize(cdc_chunks(docs))
     first = chunks.groupBy("fp").agg(
         F.min(F.struct("doc_id", "chunk_id")).alias("first")
     )
@@ -1035,7 +1040,7 @@ def sparse_cosine_pairs(
     only SHARED words. Scores stabilize with the engine's
     round(round(·,6)+1e-9, 4) discipline before the threshold and
     output."""
-    w = _tfidf_weights(docs).localCheckpoint()
+    w = materialize(_tfidf_weights(docs))
     # consumed by norms AND both join sides
     a, b = w.alias("a"), w.alias("b")
     dots = (
@@ -1366,8 +1371,8 @@ def weighted_srp_pairs(
     docs = docs.select("doc_id", "text")
     membership = _exact_dup_membership(docs)
     w_full = _tfidf_weights(docs)
-    w_rep = _representatives(w_full, membership).localCheckpoint()
-    sig = _srp_signatures(_per_doc_vectors(w_rep), n_longs).localCheckpoint()
+    w_rep = materialize(_representatives(w_full, membership))
+    sig = materialize(_srp_signatures(_per_doc_vectors(w_rep), n_longs))
     band_sig = _int_band_table(
         sig, [f"s{i}" for i in range(n_longs)], n_bands, band_bits, ["doc_id"]
     )
@@ -1426,16 +1431,16 @@ def weighted_srp_pairs(
     )
     nbits = 64 * n_longs
     sa, sb = _sig_sides(n_longs)
-    candidates = (
+    # small (prefilter survivors); the verify consumes it twice (id set
+    # + pair join) — without this the band self-join + prefilter
+    # execute once per consumer
+    candidates = materialize(
         _attach(_attach(coarse_cand, sa, "doc_a"), sb, "doc_b")
         .where(
             F.cos(F.lit(math.pi / nbits) * _srp_hamming(n_longs))
             >= threshold - prefilter_margin
         )
         .select("doc_a", "doc_b")
-        .localCheckpoint()  # small (prefilter survivors); the verify
-        # consumes it twice (id set + pair join) — without this the
-        # band self-join + prefilter execute once per consumer
     )
     if return_candidates:
         # test hook (the s02/s17/d03 soundness pattern): expose the
@@ -1914,26 +1919,13 @@ SPAN_MIN_RUN = 3       # min consecutive matching k-grams to report
 
 def _span_grams(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, g): md5 of each 8-token gram at token position
-    ``pos`` (1-based). Built-ins only; docs shorter than the gram
-    yield no rows (the CASE guard — Spark's ``sequence(1, 0)`` is
-    DESCENDING, not empty)."""
+    ``pos`` (1-based). Docs shorter than the gram yield no rows."""
     return (
-        spread(docs).select(
-            "doc_id", tokens("text").alias("w")
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"CASE WHEN size(w) >= {SPAN_GRAM} THEN"
-                    f" transform(sequence(1, size(w) - {SPAN_GRAM - 1}),"
-                    f" i -> struct(i AS pos,"
-                    f" md5(array_join(slice(w, i, {SPAN_GRAM}), ' ')) AS g))"
-                    " ELSE array() END"
-                )
-            ).alias("pg"),
-        )
-        .select("doc_id", "pg.pos", "pg.g")
+        spread(docs)
+        .select("doc_id", tokens("text").alias("w"))
+        .where(F.size("w") >= SPAN_GRAM)
+        .select("doc_id", F.posexplode(word_grams("w", SPAN_GRAM)).alias("p0", "gram"))
+        .select("doc_id", (F.col("p0") + 1).alias("pos"), F.md5("gram").alias("g"))
     )
 
 
@@ -2063,11 +2055,12 @@ def d24_bloom_decontam(spark, sf_dir):
     from pyspark.sql.functions import pandas_udf
 
     d = load_table(spark, sf_dir, "documents")
-    eval_sh = (
+    # bloom build AND exact verify read it; its size rides the same job
+    eval_sh, size = materialize(
         _shingles(d.where(F.col("source") == EVAL_SOURCE), CONTAM_NGRAM)
         .select("shingle")
-        .distinct()
-        .localCheckpoint()  # bloom build AND exact verify read it
+        .distinct(),
+        {"n": F.count(F.lit(1))},
     )
     corpus_sh = _shingles(
         d.where(F.col("source") != EVAL_SOURCE), CONTAM_NGRAM
@@ -2075,7 +2068,7 @@ def d24_bloom_decontam(spark, sf_dir):
     empty = corpus_sh.limit(0).select("doc_id").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shared")
     )
-    n = eval_sh.count()
+    n = size["n"]
     if n == 0:
         return empty
     m = max(64, int(np.ceil(-n * np.log(BLOOM_FPP) / (np.log(2) ** 2))))
@@ -2193,7 +2186,7 @@ def d25_dedup_recall_audit(spark, sf_dir):
     soundness, the high-band recall floor, and the audit arithmetic
     are pinned in tests."""
     d = load_table(spark, sf_dir, "documents")
-    exact = exact_jaccard_pairs(d).localCheckpoint()
+    exact = materialize(exact_jaccard_pairs(d))
     approx = minhash_lsh_pairs(d)
     return dedup_recall_audit(exact, approx).orderBy(
         "bucket", "n_exact", "n_found", "recall"
@@ -2215,7 +2208,7 @@ def d27_simhash_recall_audit(spark, sf_dir):
     d25. Scale shape: both tiers are their declared banded/exact
     shapes; the audit join itself is pair-set-sized."""
     d = load_table(spark, sf_dir, "documents")
-    exact = exact_jaccard_pairs(d).localCheckpoint()
+    exact = materialize(exact_jaccard_pairs(d))
     approx = simhash_pairs(d)
     return dedup_recall_audit(exact, approx).orderBy(
         "bucket", "n_exact", "n_found", "recall"
@@ -2238,10 +2231,9 @@ def d28_srp_recall_audit(spark, sf_dir):
     0.9–1.0 recall floor are pinned in tests. Hash-dependent →
     rows-only driver check."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 500)
-    exact = (
+    exact = materialize(
         sparse_cosine_pairs(d)
         .select("doc_a", "doc_b", F.col("sim").alias("j"))
-        .localCheckpoint()
     )
     approx = weighted_srp_pairs(d)
     return dedup_recall_audit(exact, approx).orderBy(
@@ -2276,7 +2268,7 @@ def lsh_param_planner(
 
     Scale shape: ONE exact-Jaccard pair pass at the loose ``floor``
     (the d02 kernel — the planner's only corpus-sized work, the same
-    price d25 pays), localCheckpointed; every grid config is then a
+    price d25 pays), materialized; every grid config is then a
     conditional aggregate over that pair set (the d26 sweep
     discipline: one extra hash agg per config, never another pair
     pass). Pairs below ``floor`` are ignored by construction — their
@@ -2284,7 +2276,7 @@ def lsh_param_planner(
     1-(1-floor^2)^64 and they only DEFLATE exp_cands; declared, not
     hidden. Fully oracled: the d02 pair CTE plus identical
     POWER-arithmetic tiers, double-round stabilized."""
-    pairs = exact_jaccard_pairs(docs, threshold=floor).localCheckpoint()
+    pairs = materialize(exact_jaccard_pairs(docs, threshold=floor))
 
     outs = []
     for b, r in grid:

@@ -4,13 +4,13 @@ graph algorithms at scale).
 
 The iterative queries share one kernel set, defined below:
 ``undirected`` (the ``a < b`` closure of an edge list), ``mirror``
-(its two-direction adjacency), ``checkpoint`` (a ``localCheckpoint``
-that can carry one aggregate through an ``Observation``), ``fixpoint``
-(the round loop) and ``_pagerank`` (one PageRank round with a restart
-column). PageRank, personalized PageRank, k-core, label propagation,
-the Bellman–Ford relaxation (g13) and ``connected_components`` (the
-duplicate clustering of the dedup, ANN and validation families) all
-run through ``fixpoint``.
+(its two-direction adjacency), ``fixpoint`` (the round loop, which
+pins every round's state with ``catalog.materialize``) and
+``_pagerank`` (one PageRank round with a restart column). PageRank,
+personalized PageRank, k-core, label propagation, the Bellman–Ford
+relaxation (g13) and ``connected_components`` (the duplicate
+clustering of the dedup, ANN and validation families) all run
+through ``fixpoint``.
 
 A fixed iteration count keeps PageRank and label propagation fully
 deterministic and lets the DuckDB oracle state the SAME computation as
@@ -22,7 +22,7 @@ unique, so a converged loop and the oracle state the same answer.
 Scale shape per PageRank iteration: one equi-join of ranks to edges on
 the source key + one aggregate on the destination key — two shuffles
 over edge-cardinality rows, the textbook distributed PageRank step.
-Every round's state is ``localCheckpoint``-ed so the lineage (and
+Every round's state is ``materialize``-d so the lineage (and
 codegen plan) stays O(1) deep instead of O(iterations); dangling mass
 is redistributed through the restart column, computed as a 1-row
 broadcast aggregate.
@@ -37,10 +37,10 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, stab
+from crossfire_spark.catalog import load_table, materialize, nudge, stab
 
 
 def undirected(edges: DataFrame) -> DataFrame:
@@ -64,19 +64,6 @@ def mirror(pairs: DataFrame) -> DataFrame:
     )
 
 
-def checkpoint(df: DataFrame, counter: Column | None = None) -> tuple[DataFrame, object]:
-    """``df.localCheckpoint()`` and, when ``counter`` (an aggregate
-    Column) is given, its value over the checkpointed rows. The counter
-    rides the checkpoint's own job through an ``Observation``, so a
-    row count or a convergence checksum costs no separate job.
-    Returns ``(checkpointed frame, value or None)``."""
-    if counter is None:
-        return df.localCheckpoint(), None
-    obs = Observation()
-    df = df.observe(obs, counter.alias("value")).localCheckpoint()
-    return df, obs.get["value"]
-
-
 def fixpoint(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
@@ -90,16 +77,18 @@ def fixpoint(
     does, such as a row count under peeling or a label sum under
     min-propagation), the initial state is checkpointed too and the
     loop stops at the first round whose ``until`` value repeats the
-    previous one — that round changed nothing. The value rides each
-    checkpoint (see :func:`checkpoint`), so convergence costs no job.
+    previous one — that round changed nothing. The value is a counter
+    of each round's ``materialize``, so convergence costs no job.
     ``rounds`` is then a cap: running out of it while the value still
     changes raises instead of returning an unconverged state."""
-    prev = None
     if until is not None:
-        state, prev = checkpoint(state, until)
+        state, prev = materialize(state, {"until": until})
     for _ in range(rounds):
-        state, value = checkpoint(step(state), until)
-        if until is not None and value == prev:
+        if until is None:
+            state = materialize(step(state))
+            continue
+        state, value = materialize(step(state), {"until": until})
+        if value == prev:
             return state
         prev = value
     if until is not None:
@@ -139,9 +128,11 @@ def _pagerank(
     (node, rank)."""
     out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # edge weight = 1/out_degree(src), constant across iterations
-    w_edges = edges.join(out_deg, "src").select(
-        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
-    ).localCheckpoint()
+    w_edges = materialize(
+        edges.join(out_deg, "src").select(
+            "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
+        )
+    )
     has_out = w_edges.select(F.col("src").alias("node")).distinct()
 
     def step(ranks: DataFrame) -> DataFrame:
@@ -186,7 +177,8 @@ def pagerank(
     (uniformly redistributed). Returns (node, rank).
     """
     # N rides the node table's checkpoint: it drives the uniform terms
-    nodes, n_nodes = checkpoint(_node_set(edges), F.count(F.lit(1)))
+    nodes, size = materialize(_node_set(edges), {"n": F.count(F.lit(1))})
+    n_nodes = size["n"]
     if n_nodes == 0:  # empty graph — empty ranks, not a ZeroDivision
         return nodes.select("node", F.lit(0.0).alias("rank"))
     return _pagerank(
@@ -325,17 +317,19 @@ def _triangle_triples(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     triangle triples (x, y, z) with y < z — each triangle exactly
     once. Used by g03's per-node counts and g15's per-edge
     embeddedness so the two cannot disagree about the triangle set."""
-    und = undirected(edges).localCheckpoint()  # read by deg, orientation, and closure
+    und = materialize(undirected(edges))  # read by deg, orientation, and closure
     deg = mirror(und).groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("dega"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("degb"))
     lo_first = (F.col("dega") < F.col("degb")) | (
         (F.col("dega") == F.col("degb")) & (F.col("a") < F.col("b"))
     )
-    oriented = und.join(da, "a").join(db, "b").select(
-        F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint()  # both wedge legs read it
+    oriented = materialize(  # both wedge legs read it
+        und.join(da, "a").join(db, "b").select(
+            F.when(lo_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(lo_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+        )
+    )
     # wedge enumeration fans out from the LOW-degree endpoint; the
     # unordered far pair normalizes to id order so each wedge appears
     # once and the closure lookup joins the id-ordered edge table
@@ -485,10 +479,9 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     leaves it unchanged; a chain still shrinking after ``max_iters``
     rounds raises rather than returning non-minimal labels.
     """
-    sym = (
+    sym = materialize(  # reused every round
         mirror(edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")))
         .distinct()
-        .localCheckpoint()  # reused every round — materialize once
     )
 
     def min_label(labels: DataFrame) -> DataFrame:
@@ -526,7 +519,7 @@ def link_prediction(edges: DataFrame) -> DataFrame:
     evidence through a hub is uninformative (the Adamic-Adar
     argument). The synthetic graph's degree is <= 4, so the declared
     form is exact and IS the oracle."""
-    und = undirected(edges).localCheckpoint()  # read by adj (twice) + the anti-join
+    und = materialize(undirected(edges))  # read by adj (twice) + the anti-join
     adj = mirror(und)
     deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     a1 = adj.select(F.col("node").alias("p"), F.col("nbr").alias("x"))
@@ -604,7 +597,7 @@ def label_propagation(edges: DataFrame, rounds: int = LP_ROUNDS) -> DataFrame:
     counts, per-node argmax) — node/label-keyed shuffles only, no
     windows over the corpus; the rounds run through :func:`fixpoint`
     like pagerank's."""
-    adj = mirror(undirected(edges)).localCheckpoint()  # re-read every round
+    adj = materialize(mirror(undirected(edges)))  # re-read every round
 
     def adopt(labels: DataFrame) -> DataFrame:
         nb = adj.join(
@@ -731,10 +724,9 @@ def _reach_oracle() -> str:
 def bipartite_projection(events: DataFrame) -> DataFrame:
     """(ta, tb, both_users, cosine_aff, jaccard_aff) over the
     user↔event_type bipartite graph."""
-    ue = (
+    ue = materialize(  # read three times: both join sides + counts
         events.select("user_id", "event_type")
         .distinct()
-        .localCheckpoint()  # read three times: both join sides + counts
     )
     tc = ue.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = ue.select("user_id", F.col("event_type").alias("ta"))
@@ -831,17 +823,18 @@ def personalized_pagerank(
     join + one aggregate per round, dangling as a 1-row aggregate);
     the restart vector is a node-keyed column, not a broadcast
     structure, so a million-seed set costs the same as one seed."""
-    nodes = _node_set(edges).localCheckpoint()
+    nodes = materialize(_node_set(edges))
     # |S| rides the seed table's checkpoint, which the restart join reads
-    seed_in, n_seeds = checkpoint(
+    seed_in, size = materialize(
         seeds.select(F.col("seed").alias("node"))
         .distinct()
         .join(nodes, "node", "left_semi"),
-        F.count(F.lit(1)),
+        {"n": F.count(F.lit(1))},
     )
+    n_seeds = size["n"]
     if n_seeds == 0:  # no seeds in graph — all-zero ranks, not a crash
         return nodes.select("node", F.lit(0.0).alias("rank"))
-    restart = (
+    restart = materialize(
         nodes.join(seed_in.withColumn("is_seed", F.lit(True)), "node", "left")
         .select(
             "node",
@@ -849,7 +842,6 @@ def personalized_pagerank(
             .otherwise(F.lit(0.0))
             .alias("res"),
         )
-        .localCheckpoint()
     )
     return _pagerank(
         edges,
@@ -1147,13 +1139,15 @@ def g13_weighted_shortest_path(spark, sf_dir):
     weights, BIGINT-exact; oracled by a recursive path-enumeration
     CTE (different algorithm, same answer)."""
     d = load_table(spark, sf_dir, "documents")
-    edges = doc_link_graph(d).select(
-        "src",
-        "dst",
-        (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(5)))
-        .cast("long")
-        .alias("w"),
-    ).localCheckpoint()  # the K rounds re-join this table; one scan
+    edges = materialize(  # the K rounds re-join this table; one scan
+        doc_link_graph(d).select(
+            "src",
+            "dst",
+            (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(5)))
+            .cast("long")
+            .alias("w"),
+        )
+    )
 
     def relax(dist: DataFrame) -> DataFrame:
         relaxed = dist.join(edges, F.col("node") == F.col("src")).select(
@@ -1214,7 +1208,7 @@ def modularity(edges: DataFrame) -> DataFrame:
     projection rather than threaded out of ``label_propagation`` —
     one extra distinct over edge cardinality, the price of leaving
     g06's proven code path untouched."""
-    und = undirected(edges).localCheckpoint()  # reused by m, intra, and the degree table
+    und = materialize(undirected(edges))  # reused by m, intra, and the degree table
     adj = mirror(und)
     labels = label_propagation(edges)
     m1 = und.agg(F.count(F.lit(1)).alias("m"))

@@ -24,9 +24,11 @@ Scale notes baked into the design:
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,18 +42,7 @@ from crossfire_spark.catalog import load_table, spread
 # sys.path — true when the driver runs from the repo root, false for a
 # host application running elsewhere. The codecs are deliberately
 # stdlib+numpy-only, so the by-value payload is a few KB.
-def _register_by_value() -> None:
-    import sys
-
-    from pyspark import cloudpickle
-
-    try:
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle: by-reference (driver must run in-repo)
-
-
-_register_by_value()
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MEDIA_SCHEMA = T.StructType(
     [

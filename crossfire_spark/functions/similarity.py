@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from crossfire_spark.catalog import load_table, spread, stab, stab_signed
+from crossfire_spark.catalog import load_table, materialize, spread, stab, stab_signed
 from crossfire_spark.functions.dedup import _band_pairs, _cap_buckets, _int_band_table
 from crossfire_spark.functions.graph import connected_components, mirror
 from crossfire_spark.functions.text import (
@@ -282,10 +282,9 @@ def lsh_topk(
     # materialized once: both the band explode and the post-dedup
     # re-rank read it, and the 64-hyperplane projection is the
     # expensive part of the corpus pass
-    corpus = (
+    corpus = materialize(
         lsh_signature(embeddings, bits=bits)
         .select("vec_id", "embedding", "lsh_sig")
-        .localCheckpoint()
     )
     qsig = lsh_signature(
         queries.withColumnRenamed("qe", "embedding"), "embedding", bits=bits
@@ -776,10 +775,9 @@ def knn_graph_ann(
     graph. Output schema matches the exact tier; recall against it is
     pinned in tests. The candidate set holds both directions of every
     bucket pair, so each node ranks every co-bucketed neighbor."""
-    corpus = (
+    corpus = materialize(
         lsh_signature(embeddings, bits=bits)
         .select("vec_id", "embedding", "lsh_sig")
-        .localCheckpoint()
     )
     cand = ann_graph_candidates(
         corpus, bands=bands, bits=bits, bucket_cap=bucket_cap
@@ -834,17 +832,15 @@ def density_clusters(
     attachment are one aggregate each on node-cardinality tables; CC
     is O(diameter) label-propagation rounds."""
     pairs = embed_neardup_pairs(embeddings, eps_sim).select("va", "vb")
-    sym = (
+    sym = materialize(  # read by degrees, core edges, and border join
         pairs.select(F.col("va").alias("n"), F.col("vb").alias("m"))
         .unionByName(pairs.select(F.col("vb").alias("n"), F.col("va").alias("m")))
-        .localCheckpoint()  # read by degrees, core edges, and border join
     )
-    core = (
+    core = materialize(
         sym.groupBy("n")
         .agg(F.count(F.lit(1)).alias("deg"))
         .where(F.col("deg") >= min_nbrs)
         .select(F.col("n").alias("vec_id"))
-        .localCheckpoint()
     )
     core_edges = (
         pairs.join(core.select(F.col("vec_id").alias("va")), "va", "left_semi")
@@ -853,13 +849,12 @@ def density_clusters(
     )
     cc = connected_components(core_edges)
     # isolated cores (no core neighbor) are their own singleton cluster
-    core_lbl = (
+    core_lbl = materialize(  # read twice: output + border attachment
         core.join(cc, core.vec_id == cc.doc_id, "left")
         .select(
             "vec_id",
             F.coalesce("cluster_id", "vec_id").alias("cluster_id"),
         )
-        .localCheckpoint()  # read twice: output + border attachment
     )
     border = (
         sym.join(
@@ -2434,10 +2429,9 @@ def _recall_curve(
     so no tier's hit join re-triggers it; ``tiers`` is consumed only
     after the empty-query guard, so its own set-up jobs follow the
     count. recall = n_hits / (k·|Q|), stabilized to 6 dp."""
-    exact = (
+    exact = materialize(
         cosine_topk(embeddings, queries, k=k)
         .select(F.col("qid").alias("eqid"), F.col("vec_id").alias("ev"))
-        .localCheckpoint()
     )
     n_q = queries.count()
     spark = embeddings.sparkSession
@@ -2528,25 +2522,24 @@ def d26_threshold_sweep(spark, sf_dir):
     conditional sweep)."""
     em = spread(load_table(spark, sf_dir, "embeddings"))
     n_total = em.count()
-    pairs = embed_neardup_pairs(
-        em, threshold=min(SWEEP_THRESHOLDS)
-    ).localCheckpoint()
     # ONE conditional-aggregate pass per face instead of 14 separate
     # jobs (7 thresholds x (count + distinct-count)): r8 driver data
     # showed a 2.8-9.1 s rep spread dominated by per-job plan-compile
     # + scheduling overhead, not data (VERDICT r8 task 5). n_pairs(t)
-    # is SUM(sim >= t); n_touched(t) folds the distinct through a
+    # is SUM(sim >= t), counters that ride the pair table's own
+    # checkpoint job; n_touched(t) folds the distinct through a
     # per-vector max-sim table (a vector is touched at t iff its BEST
-    # pair clears t) — two bounded 1-row collects, identical numbers,
+    # pair clears t) — one bounded 1-row collect, identical numbers,
     # and the keep-one-per-connected-pair note still holds:
     # drop count == touched - components >= touched - pairs; the
     # reported metric is the touched-vector fraction SemDeDup plots.
-    pair_row = pairs.agg(
-        *[
-            F.sum((F.col("sim") >= F.lit(t)).cast("long")).alias(f"p{i}")
+    pairs, pair_sums = materialize(
+        embed_neardup_pairs(em, threshold=min(SWEEP_THRESHOLDS)),
+        {
+            f"p{i}": F.sum((F.col("sim") >= F.lit(t)).cast("long"))
             for i, t in enumerate(SWEEP_THRESHOLDS)
-        ]
-    ).first()
+        },
+    )
     touch_row = (
         pairs.select(F.explode(F.array("va", "vb")).alias("v"), "sim")
         .groupBy("v")
@@ -2560,7 +2553,7 @@ def d26_threshold_sweep(spark, sf_dir):
         .first()
     )
     rows = [
-        (float(t), int(pair_row[i] or 0), int(touch_row[i] or 0))
+        (float(t), int(pair_sums[f"p{i}"] or 0), int(touch_row[i] or 0))
         for i, t in enumerate(SWEEP_THRESHOLDS)
     ]
     out = spark.createDataFrame(
@@ -2640,22 +2633,20 @@ def ivf_probe_recall(
     measured alpha ~1.1 on the x1/x3/x10 family because |Q| grows
     with N), the assignment table, the query→centroid ranking AND
     the candidate scoring at max(sweep) probes are each materialized
-    ONCE (``localCheckpoint`` — the d26/s23 shared-tier discipline);
+    ONCE (``materialize`` — the d26/s23 shared-tier discipline);
     every tier then costs one prn filter + one per-query rank over
     the pre-scored rows. Ranking keys identical to ``ivf_topk``
     (dist 6 dp + cid tiebreak, sim 4 dp + vec_id tiebreak)."""
 
     def tiers():
         cent = first_n_centroids(embeddings, n_centroids)
-        assign = (
+        assign = materialize(
             ivf_assign(embeddings, cent)
             .select("vec_id", "embedding", "cid")
-            .localCheckpoint()
         )
-        pranked = (
+        pranked = materialize(
             nearest_centroids(queries, "qid", "qe", cent, max(sweep))
             .select("qid", "qe", "cid", F.col("rn").alias("prn"))
-            .localCheckpoint()
         )
         # Score ONCE at max(sweep) probes, carrying the probe rank each
         # candidate entered at (r10: the per-tier loop previously re-ran
@@ -2664,7 +2655,7 @@ def ivf_probe_recall(
         # scoring was redundant; a tier now costs one filter + one
         # per-query rank over already-scored rows). sim per (qid, vec_id)
         # is tier-independent, so results are bit-identical.
-        scored_all = (
+        scored_all = materialize(  # every tier re-ranks it
             assign.join(pranked, "cid")
             .where(F.col("vec_id") != F.col("qid"))
             .select(
@@ -2676,7 +2667,6 @@ def ivf_probe_recall(
                     4,
                 ).alias("sim"),
             )
-            .localCheckpoint()  # every tier re-ranks it
         )
         w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("vec_id"))
         for p in sweep:

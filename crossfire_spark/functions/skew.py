@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
+from crossfire_spark.catalog import materialize
+
 _PARTIALS = {
     "count": (F.count, F.sum),
     "sum": (F.sum, F.sum),
@@ -113,7 +115,7 @@ def prefix_sums(
     sorts each group in one task at any cluster size. Instead,
     range-repartition on (by, order) into ``defaultParallelism``
     partitions, pin each row's partition id with ONE
-    ``localCheckpoint``, collect the per-(pid, group) subtotals
+    ``materialize``, collect the per-(pid, group) subtotals
     (P x G rows: the driver sees partition subtotals, never rows),
     prefix them on the driver in pid order, and add each partition's
     offset, joined from a broadcast of that table, to a running sum
@@ -126,10 +128,9 @@ def prefix_sums(
     and every ``sums`` column is integral."""
     spark = df.sparkSession
     parts = spark.sparkContext.defaultParallelism
-    pv = (
+    pv = materialize(  # pin pids: the subtotals and the window reuse them
         df.repartitionByRange(parts, *by, *order)
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()  # pin pids: the subtotals and the window reuse them
     )
     subtotals = pv.groupBy("pid", *by).agg(*[F.sum(c).alias(c) for c in sums])
     totals: dict[tuple, dict[str, int]] = {}

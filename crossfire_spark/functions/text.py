@@ -29,7 +29,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, spread, stab, stab_signed
+from crossfire_spark.catalog import (
+    load_table,
+    materialize,
+    nudge,
+    spread,
+    stab,
+    stab_signed,
+)
 from crossfire_spark.functions.skew import prefix_sums
 
 # marker stopwords per language — the declared heuristic's fixed model
@@ -426,7 +433,7 @@ def t14_bigram_lm(spark, sf_dir):
     # model-side joins (bi |x| uni) do not re-derive the corpus
     # instance stream — c1(prev) = sum_cur c2(prev, cur) also comes
     # from the materialized bigram table, not a third corpus pass.
-    bi = inst.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c2")).localCheckpoint()
+    bi = materialize(inst.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("c2")))
     uni = bi.groupBy("prev").agg(F.sum("c2").alias("c1"))
     vocab = (
         d.select(F.explode(tokens("text")).alias("w"))
@@ -698,9 +705,7 @@ def mixture_sample_report(docs, weights_col: F.Column | None = None):
     # |sources|-row aggregate consumed by three downstream branches
     # (weights, scale, report) — materialize once so the corpus is
     # scanned exactly twice (counts + sampling), not once per branch.
-    counts = (
-        docs.groupBy("source").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
-    )
+    counts = materialize(docs.groupBy("source").agg(F.count(F.lit(1)).alias("c")))
     wts = counts.withColumn("w", weights_col)
     scale = wts.agg(F.min(F.col("c") / F.col("w")).alias("scale"))
     rates = wts.crossJoin(F.broadcast(scale)).select(
@@ -805,7 +810,7 @@ def tfidf_keywords(docs, k: int = TFIDF_TOPK) -> "DataFrame":
     # (doc, word, tf) feeds BOTH the document-frequency aggregate and
     # the scoring join — materialize once so the corpus tokenize runs
     # one pass, not one per consumer (PLANS.md showed 3 scans without)
-    tf = term_freqs(words).localCheckpoint()
+    tf = materialize(term_freqs(words))
     scored = tf.join(F.broadcast(smoothed_idf(tf, docs)), "word").withColumn(
         "score", nudge(F.col("tf") * F.col("idf"), 4)
     )
@@ -1209,7 +1214,7 @@ def boilerplate_report(docs: DataFrame, n: int = BP_NGRAM, min_docs: int = BP_MI
     total, both on gram keys, nothing quadratic. A NULL text has no
     grams and no row, as in the oracle."""
     grams = F.array_distinct(word_grams("w", n))
-    base = (
+    base = materialize(  # read by the df-count and the per-doc report
         docs.where(F.col("text").isNotNull())
         .select(
             "doc_id", "source", tokens("text").alias("w")
@@ -1217,7 +1222,6 @@ def boilerplate_report(docs: DataFrame, n: int = BP_NGRAM, min_docs: int = BP_MI
         .select(
             "doc_id", "source", grams.alias("grams"), F.size(grams).alias("n_grams")
         )
-        .localCheckpoint()  # read by the df-count and the per-doc report
     )
     g = base.select("doc_id", "source", F.explode("grams").alias("gram"))
     bp = (
@@ -1278,7 +1282,7 @@ def dsir_weights(d: DataFrame) -> DataFrame:
     toks = d.select(
         "doc_id", "lang", F.explode(tokens("text")).alias("w")
     )
-    cnt = (
+    cnt = materialize(  # read by totals AND the model projection
         toks.groupBy("w")
         .agg(
             F.count(F.lit(1)).alias("c_r"),
@@ -1286,7 +1290,6 @@ def dsir_weights(d: DataFrame) -> DataFrame:
                 (F.col("lang") == DSIR_TARGET_LANG).cast("long")
             ).alias("c_t"),
         )
-        .localCheckpoint()  # read by totals AND the model projection
     )
     tot = cnt.agg(
         F.sum("c_r").alias("n_r"),
@@ -1337,7 +1340,7 @@ def ngram_novelty(d: DataFrame, n: int = NOVELTY_N) -> DataFrame:
     the corpus, no pair join. Gram text reduces to an 8-byte xxhash
     before the shuffle; both aggregates are gram- or doc-keyed. A NULL
     text has no grams (and no row), as in the oracle."""
-    grams = (
+    grams = materialize(  # consumed by first-seen agg AND per-doc join
         spread(d.where(F.col("text").isNotNull()))
         .select("doc_id", tokens("text").alias("w"))
         .select(
@@ -1345,7 +1348,6 @@ def ngram_novelty(d: DataFrame, n: int = NOVELTY_N) -> DataFrame:
             F.explode(F.array_distinct(word_grams("w", n))).alias("gram"),
         )
         .select("doc_id", F.xxhash64("gram").alias("h"))
-        .localCheckpoint()  # consumed by first-seen agg AND per-doc join
     )
     first_seen = grams.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -2690,7 +2692,7 @@ def stupid_backoff_scores(docs: "DataFrame") -> "DataFrame":
     penalties as decimal literals (0.16 is NOT written 0.4*0.4 — that
     float product is 0.16000000000000003 and would diverge from the
     oracle's literal). The shared bi/uni model tables are LAZY
-    localCheckpoints (r10, VERDICT r9 item 2): each is computed once
+    ``materialize`` calls (r10, VERDICT r9 item 2): each is computed once
     and pinned when the single output job first touches it, instead
     of two eager per-call materialization jobs — same plan-reuse
     guarantee, one job per invocation instead of three, and the
@@ -2704,17 +2706,17 @@ def stupid_backoff_scores(docs: "DataFrame") -> "DataFrame":
         .groupBy("u", "v", "w3")
         .agg(F.count(F.lit(1)).alias("c3"))
     )
-    bi = (
+    bi = materialize(  # feeds tri_model AND bi_model
         _bigram_instances(train)
         .groupBy("prev", "cur")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=False)  # feeds tri_model AND bi_model
+        .agg(F.count(F.lit(1)).alias("c2")),
+        eager=False,
     )
-    uni = (
+    uni = materialize(  # feeds bi_model AND uni_model
         train.select(F.explode(tokens("text")).alias("word"))
         .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=False)  # feeds bi_model AND uni_model
+        .agg(F.count(F.lit(1)).alias("c1")),
+        eager=False,
     )
     n_tok = uni.agg(F.sum("c1").alias("n"))
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crossfire_spark.catalog import load_table, nudge, stab, stab_signed
+from crossfire_spark.catalog import load_table, materialize, nudge, stab, stab_signed
 from crossfire_spark.functions.skew import prefix_sums
 from crossfire_spark.functions.text import (
     SPLIT_TRAIN_LIM,
@@ -633,7 +633,7 @@ def lttb_downsample(events: DataFrame, buckets: int = LTTB_BUCKETS) -> DataFrame
     bucket = F.expr(
         f"(unix_micros(ts) - t0) * {buckets} div (t1 - t0 + 1)"
     ).cast("int")
-    pts = (
+    pts = materialize(  # centroids AND the scoring join read it
         events.join(F.broadcast(span), "event_type")
         .select(
             "event_type",
@@ -642,7 +642,6 @@ def lttb_downsample(events: DataFrame, buckets: int = LTTB_BUCKETS) -> DataFrame
             "value",
             ((F.unix_micros("ts") - F.col("t0")) / F.lit(1e6)).alias("x"),
         )
-        .localCheckpoint()  # centroids AND the scoring join read it
     )
     cent = pts.groupBy("event_type", "bucket").agg(
         F.avg("x").alias("cx"), F.avg("value").alias("cy")
@@ -776,11 +775,10 @@ def drift_report(docs: DataFrame) -> DataFrame:
     ).cast("long")
     # |sources|x10 rows feeding three consumers (totals, grid, dist) —
     # materialize once so the corpus is scanned exactly once
-    counts = (
+    counts = materialize(
         docs.select("source", bucket.alias("b"))
         .groupBy("source", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
     )
     totals = counts.groupBy("source").agg(F.sum("c").alias("n"))
     grid = totals.select("source", "n").crossJoin(
@@ -1224,7 +1222,7 @@ def v09_sketch_cardinality(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     fp = d.select("source", bag_fingerprint("text").alias("fp"))
     sk = fp.groupBy("source").agg(F.expr("hll_sketch_agg(fp)").alias("sk"))
-    sk = sk.localCheckpoint()  # per-source estimates AND the union read it
+    sk = materialize(sk)  # per-source estimates AND the union read it
     per = sk.select("source", F.expr("hll_sketch_estimate(sk)").alias("est"))
     merged = sk.agg(
         F.expr("hll_sketch_estimate(hll_union_agg(sk))").alias("est")
@@ -1471,7 +1469,7 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
         events.select("user_id", F.date_trunc("week", "ts").alias("w"))
         .distinct()
     )
-    offs = (
+    offs = materialize(  # read twice: rows + cohort-size lookup
         active.join(first, "user_id")
         .select(
             "cw",
@@ -1479,7 +1477,6 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
         )
         .groupBy("cw", "off")
         .agg(F.count(F.lit(1)).alias("n_active"))
-        .localCheckpoint()  # read twice: rows + cohort-size lookup
     )
     size = offs.where(F.col("off") == 0).select(
         "cw", F.col("n_active").alias("n0")
@@ -2782,10 +2779,9 @@ def mutual_information(
     stabilized with the double-round discipline; the n > 0 guard
     makes the empty-input answer zero rows on both engines (the
     ADVICE r7 degenerate-input rule)."""
-    joint = (
+    joint = materialize(  # k_x*k_y rows; read by marginals + terms
         df.groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
         .agg(F.count(F.lit(1)).alias("cxy"))
-        .localCheckpoint()  # k_x*k_y rows; read by marginals + terms
     )
     mx = joint.groupBy("x").agg(F.sum("cxy").alias("cx"))
     my = joint.groupBy("y").agg(F.sum("cxy").alias("cy"))
@@ -3354,10 +3350,9 @@ def chi2_independence(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     the one float sum are ratios of exact BIGINTs (cxy^2 < 2^53 up to
     ~9e7-row cells); chi2 clamps at 0 before the sqrt because the
     float sum may land a hair under 1 on an independent pair."""
-    joint = (
+    joint = materialize(  # read by both marginals + the term sum
         df.groupBy(F.col(x_col).alias("x"), F.col(y_col).alias("y"))
         .agg(F.count(F.lit(1)).alias("cxy"))
-        .localCheckpoint()  # read by both marginals + the term sum
     )
     mx = joint.groupBy("x").agg(F.sum("cxy").alias("cx"))
     my = joint.groupBy("y").agg(F.sum("cxy").alias("cy"))

@@ -37,11 +37,3 @@ def observed_write(
     named = [col.alias(name) for name, col in metrics.items()]
     df.observe(obs, *named).write.format(fmt).mode(mode).save(path)
     return obs.get
-
-
-def observed_count(df: DataFrame, metrics: dict[str, Column]) -> tuple[int, dict]:
-    """Run ``df.count()`` with metrics attached; returns (count, metrics)."""
-    obs = Observation(f"observed_count_{uuid.uuid4().hex[:8]}")
-    named = [col.alias(name) for name, col in metrics.items()]
-    n = df.observe(obs, *named).count()
-    return n, obs.get

@@ -198,11 +198,8 @@ def register_snapshot_source(spark: SparkSession) -> None:
 
     from pyspark import cloudpickle
 
-    try:
-        for module in (SnapshotStreamSource.__module__, snapshot_versions.__module__):
-            cloudpickle.register_pickle_by_value(sys.modules[module])
-    except Exception:
-        pass  # older cloudpickle: fall back to by-reference
+    for module in (SnapshotStreamSource.__module__, snapshot_versions.__module__):
+        cloudpickle.register_pickle_by_value(sys.modules[module])
     spark.dataSource.register(SnapshotStreamSource)
 
 

@@ -105,7 +105,8 @@ def test_aqe_splits_skewed_join(spark):
 def test_observed_write_metrics_ride_the_job(spark, sf_dir, tmp_path):
     """Data-quality counters computed in the write pass itself —
     no second scan of what was just written."""
-    from crossfire_spark.plans.observe import observed_count, observed_write
+    from crossfire_spark.catalog import materialize
+    from crossfire_spark.plans.observe import observed_write
 
     docs = load_table(spark, sf_dir, "documents")
     out = str(tmp_path / "obs")
@@ -126,8 +127,10 @@ def test_observed_write_metrics_ride_the_job(spark, sf_dir, tmp_path):
 
     # DISTINCT aggregates are disallowed in observed metrics (they
     # would need a shuffle); the HLL sketch is the rideable counter
-    cnt, m = observed_count(docs, {"langs": F.approx_count_distinct("lang")})
-    assert cnt == n
+    _, m = materialize(
+        docs, {"rows": F.count(F.lit(1)), "langs": F.approx_count_distinct("lang")}
+    )
+    assert m["rows"] == n
     assert m["langs"] == docs.select("lang").distinct().count()  # exact at 3 langs
 
 

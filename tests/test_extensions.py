@@ -1523,7 +1523,7 @@ def test_graph_kernels_defined_once():
             if isinstance(n, ast.Call):
                 f = n.func
                 name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
-                if name in ("localCheckpoint", "checkpoint"):
+                if name in ("localCheckpoint", "checkpoint", "materialize"):
                     return True
         return False
 
@@ -1555,7 +1555,7 @@ def test_dedup_kernels_defined_once():
     pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
     src = {str(f.relative_to(pkg)): f.read_text() for f in pkg.rglob("*.py")}
     kernels = {
-        "word n-grams": r"concat_ws\(' ', slice\(",
+        "word n-grams": r"concat_ws\(' ', slice\(|array_join\(slice\(",
         "md5-prefix hash": r"F\.substring\(\s*F\.md5\(",
         "band shift-and-mask": (
             r'F\.shiftright(?:unsigned)?\(\s*(?:"\w+"|F\.col\([^)]*\))\s*,[^)]*\*'
@@ -1580,3 +1580,86 @@ def test_dedup_kernels_defined_once():
         if re.search(r"F\.when\(\s*F\.lit\((?:threshold|max_hamming)\)", text)
     ]
     assert intra == [], f"call-site intra-group scores: {intra}"
+
+
+def test_materialize_defined_once():
+    """How an intermediate is pinned, and how counters ride the pinning
+    job, is decided in one place: ``localCheckpoint(`` and ``.observe(``
+    appear in the package only inside ``catalog.materialize``. The two
+    listed exceptions attach counters to other actions: st13's
+    per-batch stream monitor and ``plans/observe.observed_write``."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    hits = []
+    for f in sorted(pkg.rglob("*.py")):
+        text = f.read_text()
+        funcs = [
+            n
+            for n in ast.walk(ast.parse(text))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            for call in re.findall(r"localCheckpoint\(|\.observe\(", line):
+                owner = min(
+                    (fn for fn in funcs if fn.lineno <= i <= fn.end_lineno),
+                    key=lambda fn: fn.end_lineno - fn.lineno,
+                    default=None,
+                )
+                hits.append((str(f.relative_to(pkg)), owner and owner.name, call))
+    assert sorted(hits) == [
+        ("catalog.py", "materialize", ".observe("),
+        ("catalog.py", "materialize", "localCheckpoint("),
+        ("plans/observe.py", "observed_write", ".observe("),
+        ("streaming/jobs.py", "st13_stream_quality", ".observe("),
+    ], hits
+
+
+def _job_count(spark, run):
+    """``(run()'s result, number of Spark jobs it launched)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted jobs")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_counters_ride_the_checkpoint_job(spark):
+    """``materialize`` with counters returns the same values as a
+    separate aggregate over the same rows, from the checkpoint's own
+    single job; counters without the eager job are refused."""
+    from crossfire_spark.catalog import materialize
+
+    df = spark.range(0, 1000, numPartitions=4).select((F.col("id") % 7).alias("x"))
+    counters = {"n": F.count(F.lit(1)), "s": F.sum("x")}
+    want = df.agg(*[c.alias(k) for k, c in counters.items()]).first().asDict()
+    (pinned, got), jobs = _job_count(spark, lambda: materialize(df, counters))
+    assert got == want
+    assert jobs == 1
+    assert pinned.count() == want["n"]
+    with pytest.raises(ValueError):
+        materialize(df, counters, eager=False)
+
+
+@pytest.mark.parametrize(
+    "name, ceiling",
+    # builder jobs at the suite's sf_dir before the scalar beside the
+    # checkpoint became its counter: d24 9, d26 13
+    [("d24_bloom_decontam", 7), ("d26_threshold_sweep", 11)],
+)
+def test_checkpoint_counters_save_builder_jobs(spark, sf_dir, name, ceiling):
+    """d24's eval-shingle count and d26's per-threshold pair sums ride
+    the checkpoint job of the table they count, instead of re-reading
+    it in a job of their own."""
+    from crossfire_spark.registry import all_queries
+
+    _, jobs = _job_count(spark, lambda: all_queries()[name](spark, sf_dir))
+    assert jobs <= ceiling
