@@ -110,6 +110,36 @@ def _swap_into_place(staging: str, path: str) -> None:
     shutil.rmtree(backup, ignore_errors=True)
 
 
+def newest_per_key(
+    df: DataFrame, keys: list[str], precedence: list[str]
+) -> DataFrame:
+    """The newest row per key: ``row_number() == 1`` over ``keys``,
+    each ``precedence`` column ranking descending. Rows tied on every
+    precedence column keep an arbitrary one of them."""
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in precedence])
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _merge_newest(
+    current: DataFrame,
+    updates: DataFrame,
+    keys: list[str],
+    precedence: list[str] | None,
+) -> DataFrame:
+    """The MERGE of both upserts: ``current`` ⊎ ``updates``, newest per
+    key by ``precedence``, an update winning a full tie."""
+    both = current.withColumn("__src", F.lit(0)).unionByName(
+        updates.withColumn("__src", F.lit(1))
+    )
+    return newest_per_key(both, keys, [*(precedence or []), "__src"]).drop(
+        "__src"
+    )
+
+
 def upsert_table(
     spark: SparkSession,
     updates: DataFrame,
@@ -144,17 +174,8 @@ def upsert_table(
     if not os.path.exists(path):
         write_table(updates, path, fmt=fmt)
         return
-    current = read_table(spark, path, fmt=fmt)
-    order = [F.col(c).desc() for c in (precedence or [])] + [
-        F.col("__src").desc()
-    ]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    merged = (
-        current.withColumn("__src", F.lit(0))
-        .unionByName(updates.withColumn("__src", F.lit(1)))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__src", "__rn")
+    merged = _merge_newest(
+        read_table(spark, path, fmt=fmt), updates, keys, precedence
     )
     staging = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
     merged.write.format(fmt).mode("overwrite").save(staging)
@@ -258,17 +279,7 @@ def upsert_table_bucketed(
     current = read_table(spark, path, fmt=fmt).where(
         F.col(BUCKET_COL).isin(touched)  # partition-pruned scan
     )
-    order = [F.col(c).desc() for c in (precedence or [])] + [
-        F.col("__src").desc()
-    ]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    merged = (
-        current.withColumn("__src", F.lit(0))
-        .unionByName(updates.withColumn("__src", F.lit(1)))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__src", "__rn")
-    )
+    merged = _merge_newest(current, updates, keys, precedence)
     staging = f"{path}.__staging_{uuid.uuid4().hex[:8]}"
     merged.repartition(F.col(BUCKET_COL)).write.format(fmt).mode(
         "overwrite"

@@ -1,25 +1,30 @@
 """Structured Streaming over the ``events`` table.
 
-Design: every streaming aggregation here has a *batch-equivalent
-declared form* so correctness is oracle-checkable — the streaming
-run (file source -> windowed agg -> memory sink, availableNow
-trigger) must produce exactly the batch answer (SURVEY §7.1 M4).
+Design: every streaming query here has a *batch-equivalent declared
+form* so correctness is oracle-checkable — a bounded replay through the
+streaming engine must produce exactly the batch answer (SURVEY §7.1
+M4), whatever the micro-batch split.
 
-- st01_stream_tumbling — 1-hour tumbling window counts/sums, executed
-  by the streaming engine inside the callable; oracle = the same
-  DATE_TRUNC aggregation DuckDB runs on the static table (Q26's pin).
-- st02_stream_sliding  — 1-hour window sliding every 30 minutes (each
-  event lands in 2 windows); same run-to-completion streaming
-  execution; oracle = unnest over the two bucket starts.
-- st03_session_window  — session windows (30-minute gap) via
-  ``F.session_window``; declared in batch mode (same operator the
-  streaming engine uses), oracle = gaps-and-islands SQL. The
-  streaming execution of the same plan is exercised in
-  tests/test_streaming.py (append mode emits only watermark-closed
-  sessions, so the batch form is the deterministic declared surface).
-- st07_stream_upsert   — continuous-ingest MERGE via ``foreachBatch``
-  + ``sources.io.upsert_table`` with recency precedence; oracle =
-  latest-event-per-user window SQL (result is batching-independent).
+One way to run a bounded replay:
+
+- :func:`run_stream` — the one ``availableNow`` run: checkpoint at
+  ``<work>/ckpt``, start, wait, return the query (its
+  ``recentProgress`` holds the per-batch phases and observed metrics).
+  The caller picks the sink: ``foreachBatch`` (st07, st09, st12, st14,
+  st19, st20, st21), ``noop`` (st13) or memory.
+- :func:`run_stream_to_memory` — the memory-sink run of the
+  aggregating and stateful queries; the one place the session's
+  ``spark.sql.shuffle.partitions`` is pinned (to 8) for a stream.
+- :func:`file_batches` — the one file-per-trigger reader (st12, st13,
+  st14, st21, st22): n files replay as n micro-batches.
+- ``sources.io.newest_per_key`` — the one newest-row-per-key rule
+  (``RECENCY`` = ``ts, event_id``), used by the per-batch bodies and
+  by both upserts' MERGE.
+
+The per-batch bodies of st07, st09, st19 and st20 (:func:`upsert_batch`,
+:func:`snapshot_merge_batch`, :func:`cdc_apply_batch`,
+:func:`scd2_batch`) are module functions taking ``target`` first, so the
+forced-split tests in tests/test_streaming.py replay the shipped bodies.
 
 At scale: windowed streaming aggs shuffle on (window, key) with
 partial aggregation map-side; watermarks bound state. The memory sink
@@ -30,9 +35,11 @@ from __future__ import annotations
 
 import os
 import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from crossfire_spark.catalog import event_ts, nudge
 
@@ -81,37 +88,52 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    sdf: DataFrame,
-    mode: str = "complete",
-    name: str | None = None,
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion (availableNow) into a
-    memory sink; return the sink table as a batch DataFrame.
+def run_stream(writer, work: str | None = None) -> StreamingQuery:
+    """Run a bounded replay to completion: ``writer`` is a
+    ``DataStreamWriter`` whose sink the caller chose
+    (``foreachBatch(fn)``, ``format("noop")``, ``format("memory")``).
+    With ``work`` the checkpoint lives at ``<work>/ckpt``. The
+    ``availableNow`` trigger takes everything the source holds at start,
+    in as many micro-batches as its rate limits split it into; the
+    finished query is returned, so callers read ``recentProgress``
+    (per-batch rows, phases, observed metrics) from it."""
+    if work is not None:
+        writer = writer.option("checkpointLocation", os.path.join(work, "ckpt"))
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
-    ``state_partitions`` bounds the number of state stores for the
-    run: each stateful-operator partition pays store init/commit per
-    micro-batch, which dominates bounded replays (measured 10.6 s →
-    2.1 s at sf0.1 going 32 → 8). A production cluster sizes this to
-    cores x N instead; pass None to inherit the session setting.
-    The partition count is pinned at first run per query, so setting
-    it per-run is safe.
+
+def file_batches(spark: SparkSession, schema, path: str) -> DataFrame:
+    """A parquet file-source stream over ``path`` that takes one file
+    per micro-batch, so a replay of n files runs n genuine batches (one
+    file would collapse to a single batch)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
+    )
+
+
+def run_stream_to_memory(sdf: DataFrame, mode: str = "complete") -> DataFrame:
+    """Run a streaming DataFrame to completion into a memory sink;
+    return the sink table as a batch DataFrame.
+
+    The run pins ``spark.sql.shuffle.partitions`` to 8 and restores it
+    afterwards: that bounds the number of state stores, and each
+    stateful-operator partition pays store init/commit per micro-batch,
+    which dominates bounded replays (measured 10.6 s → 2.1 s at sf0.1
+    going 32 → 8). A production cluster sizes this to cores x N
+    instead. The partition count is pinned at first run per query, so
+    setting it per run is safe; a shuffle-free stream (st11) has no
+    exchange for it to reach.
     """
     spark = sdf.sparkSession
-    name = name or f"sink_{uuid.uuid4().hex[:12]}"
+    name = f"sink_{uuid.uuid4().hex[:12]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        run_stream(sdf.writeStream.format("memory").queryName(name).outputMode(mode))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
@@ -163,89 +185,109 @@ def session_windows(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
 
 
 def st03_session_window(spark, sf_dir):
+    """Session windows (30-minute gap), declared in batch mode: append
+    mode emits only watermark-closed sessions, so the batch form is the
+    deterministic surface; tests/test_streaming.py runs the same plan
+    through the streaming engine."""
     from crossfire_spark.catalog import load_table
 
     e = load_table(spark, sf_dir, "events")
     return session_windows(e).orderBy("user_id", "session_start", "c", "s")
 
 
+# newest change per user: the precedence of every latest-per-user table
+RECENCY = ["ts", "event_id"]
+
+
+def _latest_view(rows: DataFrame) -> DataFrame:
+    """The declared result of st07/st09/st19: one row per user."""
+    return rows.select(
+        "user_id",
+        "event_id",
+        "event_type",
+        "ts",
+        F.round("value", 2).alias("v"),
+    ).orderBy("user_id", "event_id", "event_type", "ts", "v")
+
+
+def upsert_batch(target: str, batch_df: DataFrame, _batch_id) -> None:
+    """st07's micro-batch: the batch's newest event per user, upserted
+    into the parquet table at ``target`` with recency precedence."""
+    from crossfire_spark.sources.io import newest_per_key, upsert_table
+
+    upsert_table(
+        batch_df.sparkSession,
+        newest_per_key(batch_df, ["user_id"], RECENCY),
+        target,
+        keys=["user_id"],
+        precedence=RECENCY,
+    )
+
+
 def st07_stream_upsert(spark, sf_dir):
-    """Streaming MERGE (continuous ingest): ``foreachBatch`` reduces
-    each micro-batch to its newest event per user, then upserts into a
-    parquet state table keyed by ``user_id`` with recency precedence
-    (``ts, event_id``) — so the final table is the global
-    latest-event-per-user regardless of how the source was split into
-    batches (out-of-order batches cannot clobber newer state).
+    """Streaming MERGE (continuous ingest): ``foreachBatch`` runs
+    :func:`upsert_batch`, which reduces each micro-batch to its newest
+    event per user, then upserts into a parquet state table keyed by
+    ``user_id`` with recency precedence (``ts, event_id``) — so the
+    final table is the global latest-event-per-user regardless of how
+    the source was split into batches (out-of-order batches cannot
+    clobber newer state).
     This is the streaming face of ``sources.io.upsert_table``; a
     log-backed MERGE (Delta/Iceberg) would replace the staging swap,
     not the plan. Batching-independence is pinned in
-    tests/test_streaming.py with a forced 3-batch replay.
+    tests/test_streaming.py with a forced 3-batch replay of the same
+    body.
     """
-    from pyspark.sql import Window
-    from crossfire_spark.sources.io import read_table, upsert_table
+    from crossfire_spark.sources.io import read_table
 
     work = _session_workdir("st07_")
     target = os.path.join(work, "latest")
     stream = events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "ts", "value"
     )
-
-    def merge(batch_df, batch_id):
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        upsert_table(
-            batch_df.sparkSession,
-            latest,
-            target,
-            keys=["user_id"],
-            precedence=["ts", "event_id"],
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.isdir(target):  # zero-batch replay (empty source)
-        return spark.createDataFrame([], stream.schema).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.round("value", 2).alias("v"),
-        )
+    run_stream(stream.writeStream.foreachBatch(partial(upsert_batch, target)), work)
     # lazy over the session-scoped state table (atexit cleanup) — the
     # result is user-cardinality, unbounded at scale, so it must not
     # round-trip through the driver just to free a temp dir
-    return (
-        read_table(spark, target)
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.round("value", 2).alias("v"),
-        )
-        .orderBy("user_id", "event_id", "event_type", "ts", "v")
+    if not os.path.isdir(target):  # zero-batch replay (empty source)
+        rows = spark.createDataFrame([], stream.schema)
+    else:
+        rows = read_table(spark, target)
+    return _latest_view(rows)
+
+
+def snapshot_merge_batch(target: str, batch_df: DataFrame, _batch_id) -> None:
+    """st09's micro-batch: the batch's newest event per user, merged
+    with the stored rows of the users it touches (newest wins), commits
+    one ``snapshot_merge`` version of the table at ``target``."""
+    from crossfire_spark.sources.io import newest_per_key
+    from crossfire_spark.sources.snapshot import (
+        snapshot_merge,
+        snapshot_read,
+        snapshot_versions,
+        snapshot_write,
     )
+
+    latest = newest_per_key(batch_df, ["user_id"], RECENCY)
+    if not snapshot_versions(target):
+        snapshot_write(latest, target)
+        return
+    s = batch_df.sparkSession
+    current = snapshot_read(s, target).join(
+        latest.select("user_id"), "user_id", "left_semi"
+    )
+    best = newest_per_key(current.unionByName(latest), ["user_id"], RECENCY)
+    snapshot_merge(s, best, target, keys=["user_id"])
 
 
 def st09_snapshot_merge_stream(spark, sf_dir):
     """Streaming MERGE INTO the log-backed versioned table
     (``sources.snapshot``): every micro-batch commits one
-    ``snapshot_merge`` version of the latest-event-per-user table —
-    continuous ingest with snapshot isolation (readers pinned to a
-    version never see a half-applied batch), commit history across
-    batch boundaries, and partition-level copy-on-write under the
-    merge.
+    ``snapshot_merge`` version of the latest-event-per-user table
+    (:func:`snapshot_merge_batch`) — continuous ingest with snapshot
+    isolation (readers pinned to a version never see a half-applied
+    batch), commit history across batch boundaries, and partition-level
+    copy-on-write under the merge.
 
     Recency is enforced by read-merge-write: the batch's candidate
     rows are unioned with the current state of the touched keys and
@@ -256,75 +298,23 @@ def st09_snapshot_merge_stream(spark, sf_dir):
     this is the version that survives concurrent readers and crashes
     (a torn write leaves an unclaimed version slot, never a torn
     table)."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.sources.snapshot import (
-        snapshot_merge,
-        snapshot_read,
-        snapshot_versions,
-        snapshot_write,
-    )
+    from crossfire_spark.sources.snapshot import snapshot_read, snapshot_versions
 
     work = _session_workdir("st09_")
     target = os.path.join(work, "latest")
     stream = events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "ts", "value"
     )
-
-    def merge(batch_df, batch_id):
-        s = batch_df.sparkSession
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not snapshot_versions(target):
-            snapshot_write(latest, target)
-            return
-        current = snapshot_read(s, target).join(
-            latest.select("user_id"), "user_id", "left_semi"
-        )
-        best = (
-            current.unionByName(latest)
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        snapshot_merge(s, best, target, keys=["user_id"])
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    run_stream(
+        stream.writeStream.foreachBatch(partial(snapshot_merge_batch, target)), work
     )
-    q.awaitTermination()
-    from crossfire_spark.sources.snapshot import snapshot_versions as _sv
-
-    if not _sv(target):  # zero-batch replay (empty source)
-        return spark.createDataFrame([], stream.schema).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.round("value", 2).alias("v"),
-        )
     # lazy over the session-scoped snapshot log (atexit cleanup) — see
     # st07: no driver round-trip for an unbounded result
-    return (
-        snapshot_read(spark, target)
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.round("value", 2).alias("v"),
-        )
-        .orderBy("user_id", "event_id", "event_type", "ts", "v")
-    )
+    if not snapshot_versions(target):  # zero-batch replay (empty source)
+        rows = spark.createDataFrame([], stream.schema)
+    else:
+        rows = snapshot_read(spark, target)
+    return _latest_view(rows)
 
 
 def st08_stream_dedup(spark, sf_dir):
@@ -432,7 +422,7 @@ def st11_stream_pii(spark, sf_dir):
         ),
         F.md5(F.col("scrubbed")).alias("scrubbed_fp"),
     )
-    sink = run_stream_to_memory(s, mode="append", state_partitions=None)
+    sink = run_stream_to_memory(s, mode="append")
     return sink.orderBy(
         "doc_id", "n_email", "n_phone", "n_ip", "has_pii", "scrubbed_fp"
     )
@@ -454,9 +444,8 @@ def st12_stream_matview(spark, sf_dir):
     |event_type| keys means the view itself is tiny forever (a
     partitioned or clustered view would rewrite only the files holding
     changed keys). The
-    source is split into multiple files with maxFilesPerTrigger=1 so
-    several genuine micro-batch refreshes run (one parquet file would
-    collapse to a single batch)."""
+    source is split into 4 files read by :func:`file_batches`, so
+    several genuine micro-batch refreshes run."""
     from crossfire_spark.catalog import load_table
     from crossfire_spark.sources.matview import (
         create_aggregate_view,
@@ -474,11 +463,6 @@ def st12_stream_matview(spark, sf_dir):
     view = os.path.join(work, "view")
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     ev.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
 
     def ingest(batch_df, _batch_id):
         s = batch_df.sparkSession
@@ -490,13 +474,8 @@ def st12_stream_matview(spark, sf_dir):
         else:
             refresh_aggregate_view(s, base, view)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    batches = file_batches(spark, ev.schema, src)
+    run_stream(batches.writeStream.foreachBatch(ingest), work)
     return (
         snapshot_read(spark, view)
         .select(
@@ -530,25 +509,14 @@ def st13_stream_quality(spark, sf_dir):
         "event_type", "user_id", "value"
     )
     ev.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    observed = stream.observe(
+    observed = file_batches(spark, ev.schema, src).observe(
         "quality",
         F.count(F.lit(1)).alias("rows_total"),
         F.count_if(F.col("value") > 50).alias("high_value"),
         F.count_if(F.col("event_type") == "error").alias("errors"),
         F.count_if(F.col("user_id").isNull()).alias("null_user"),
     )
-    q = (
-        observed.writeStream.format("noop")
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_stream(observed.writeStream.format("noop"), work)
     totals = {"rows_total": 0, "high_value": 0, "errors": 0, "null_user": 0}
     for p in q.recentProgress:
         om = (p.get("observedMetrics") or {}).get("quality")
@@ -596,23 +564,13 @@ def st14_index_maintenance(spark, sf_dir):
     # stream the new vectors in multiple micro-batches
     src = os.path.join(work, "in")
     new.repartition(4).write.parquet(src)
-    stream = (
-        spark.readStream.schema(new.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     codes_path = os.path.join(path, "codes")
 
     def ingest(batch_df, _bid):
         snapshot_write(pq_encode(batch_df, books), codes_path)
 
-    q = (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    batches = file_batches(spark, new.schema, src)
+    run_stream(batches.writeStream.foreachBatch(ingest), work)
     return query_pq_index(spark, path, em, _query_set(em)).orderBy(
         "qid", "vec_id", "sim"
     )
@@ -727,30 +685,41 @@ ORACLE_SQL["st16_stream_topk"] = f"""
         ORDER BY user_id, total"""
 
 
+def cdc_apply_batch(target: str, batch_df: DataFrame, _batch_id) -> None:
+    """st19's micro-batch: the batch's newest change per user, op
+    included, MERGEd with recency precedence into the bucketed state
+    table at ``target`` (a delete lands as a tombstone row)."""
+    from crossfire_spark.sources.io import newest_per_key, upsert_table_bucketed
+
+    upsert_table_bucketed(
+        batch_df.sparkSession,
+        newest_per_key(batch_df, ["user_id"], RECENCY),
+        target,
+        keys=["user_id"],
+        precedence=RECENCY,
+    )
+
+
 def st19_stream_cdc_apply(spark, sf_dir):
     """Streaming CDC apply — st07's MERGE plus DELETE semantics, the
     full changelog contract (Debezium/Delta CDF shape): each event is
     an upsert ('U') or a delete ('D' — here the deterministic proxy
     ``event_type = 'error'``), keyed by ``user_id``, ordered by
-    ``(ts, event_id)``. Per micro-batch the newest change per key is
-    MERGEd into the state table WITH its op — deletes persist as
-    TOMBSTONES so a late-arriving older upsert cannot resurrect a
-    deleted key (the recency precedence settles the race); the read
-    view filters tombstones out. This is exactly how log-compacted
-    CDC state works at scale: tombstones survive until compaction,
-    the final projection hides them. Batching-independence (1-batch
-    vs forced split replay) is pinned in tests/test_streaming.py.
+    ``(ts, event_id)``. Per micro-batch (:func:`cdc_apply_batch`) the
+    newest change per key is MERGEd into the state table WITH its op —
+    deletes persist as TOMBSTONES so a late-arriving older upsert cannot
+    resurrect a deleted key (the recency precedence settles the race);
+    the read view filters tombstones out. This is exactly how
+    log-compacted CDC state works at scale: tombstones survive until
+    compaction, the final projection hides them. Batching-independence
+    (1-batch vs forced split replay of the same body) is pinned in
+    tests/test_streaming.py.
 
     State is bucket-partitioned (``upsert_table_bucketed``): each
     micro-batch reads and rewrites only the hash-buckets its keys
     touch, so per-batch cost is O(batch + touched buckets), flat in
     accumulated state size (measured: tools/stream_state_curve.py)."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.sources.io import (
-        read_state_table,
-        upsert_table_bucketed,
-    )
+    from crossfire_spark.sources.io import read_state_table
 
     work = _session_workdir("st19_")
     target = os.path.join(work, "state")
@@ -764,51 +733,13 @@ def st19_stream_cdc_apply(spark, sf_dir):
         .otherwise(F.lit("U"))
         .alias("op"),
     )
-
-    def merge(batch_df, batch_id):
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        upsert_table_bucketed(
-            batch_df.sparkSession,
-            latest,
-            target,
-            keys=["user_id"],
-            precedence=["ts", "event_id"],
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(stream.writeStream.foreachBatch(partial(cdc_apply_batch, target)), work)
     if not os.path.isdir(target):  # zero-batch replay (empty source)
-        return spark.createDataFrame([], stream.schema).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.round("value", 2).alias("v"),
-        )
-    return (
-        read_state_table(spark, target)
-        .where(F.col("op") == "U")  # hide tombstones, keep them stored
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            "ts",
-            F.round("value", 2).alias("v"),
-        )
-        .orderBy("user_id", "event_id", "event_type", "ts", "v")
-    )
+        state = spark.createDataFrame([], stream.schema)
+    else:
+        state = read_state_table(spark, target)
+    # hide tombstones, keep them stored
+    return _latest_view(state.where(F.col("op") == "U"))
 
 
 QUERIES["st19_stream_cdc_apply"] = st19_stream_cdc_apply
@@ -819,6 +750,61 @@ ORACLE_SQL["st19_stream_cdc_apply"] = """
                   ORDER BY ts DESC, event_id DESC) rn FROM events) t
         WHERE rn = 1 AND event_type != 'error'
         ORDER BY user_id, event_id, event_type, ts, v"""
+
+
+def scd2_batch(target: str, batch_df: DataFrame, _batch_id) -> None:
+    """st20's micro-batch: re-derive the validity chain of the users
+    the batch touches and MERGE it into the bucketed version store at
+    ``target``; only the touched users' buckets are read."""
+    from pyspark.sql import Window
+
+    from crossfire_spark.sources.io import (
+        BUCKET_COL,
+        read_table,
+        state_bucket_expr,
+        upsert_table_bucketed,
+    )
+
+    sp = batch_df.sparkSession
+    fresh = batch_df.select(
+        "user_id",
+        "event_id",
+        F.col("ts").alias("valid_from"),
+        "event_type",
+        F.round("value", 2).alias("v"),
+    )
+    if os.path.isdir(target):
+        touched = fresh.select("user_id").distinct()
+        touched_buckets = [
+            r[0]
+            for r in touched.select(state_bucket_expr(["user_id"]).alias("b"))
+            .distinct()
+            .collect()
+        ]
+        current = (
+            read_table(sp, target)
+            .where(F.col(BUCKET_COL).isin(touched_buckets))
+            .drop(BUCKET_COL)  # partition-pruned: untouched buckets unread
+            .join(F.broadcast(touched), "user_id", "left_semi")
+            .select("user_id", "event_id", "valid_from", "event_type", "v")
+        )
+        allrows = current.unionByName(fresh).dropDuplicates(["user_id", "event_id"])
+    else:
+        allrows = fresh
+    w = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
+    rechained = allrows.withColumn(
+        "valid_to", F.lead("valid_from").over(w)
+    ).withColumn("is_current", F.col("valid_to").isNull())
+    upsert_table_bucketed(
+        sp,
+        rechained.select(
+            "user_id", "event_id", "valid_from", "valid_to",
+            "event_type", "v", "is_current",
+        ),
+        target,
+        keys=["user_id", "event_id"],
+        bucket_keys=["user_id"],  # a user's versions co-live
+    )
 
 
 def st20_stream_scd2(spark, sf_dir):
@@ -832,18 +818,14 @@ def st20_stream_scd2(spark, sf_dir):
     or rewritten — per-batch cost is O(batch + touched users'
     versions), the incremental-view discipline st12/st14 use. Equals
     the batch h18 build under any micro-batch split (pinned by a
-    forced split-replay test); shares h18's DuckDB oracle.
+    forced split-replay test of the same body, :func:`scd2_batch`);
+    shares h18's DuckDB oracle.
 
     The version store is bucket-partitioned on ``user_id``
     (``upsert_table_bucketed``), so the MERGE in (d) rewrites only
     the touched hash-buckets — per-batch cost stays flat as the
     dimension's history grows (measured: tools/stream_state_curve.py)."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.sources.io import (
-        read_state_table,
-        upsert_table_bucketed,
-    )
+    from crossfire_spark.sources.io import read_state_table
 
     work = _session_workdir("st20_")
     target = os.path.join(work, "scd2")
@@ -855,66 +837,7 @@ def st20_stream_scd2(spark, sf_dir):
         " valid_to timestamp, event_type string, v double,"
         " is_current boolean"
     )
-
-    def merge(batch_df, batch_id):
-        sp = batch_df.sparkSession
-        fresh = batch_df.select(
-            "user_id",
-            "event_id",
-            F.col("ts").alias("valid_from"),
-            "event_type",
-            F.round("value", 2).alias("v"),
-        )
-        if os.path.isdir(target):
-            from crossfire_spark.sources.io import (
-                BUCKET_COL,
-                read_table,
-                state_bucket_expr,
-            )
-
-            touched = fresh.select("user_id").distinct()
-            touched_buckets = [
-                r[0]
-                for r in touched.select(
-                    state_bucket_expr(["user_id"]).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            current = (
-                read_table(sp, target)
-                .where(F.col(BUCKET_COL).isin(touched_buckets))
-                .drop(BUCKET_COL)  # partition-pruned: untouched buckets unread
-                .join(F.broadcast(touched), "user_id", "left_semi")
-                .select("user_id", "event_id", "valid_from", "event_type", "v")
-            )
-            allrows = current.unionByName(fresh).dropDuplicates(
-                ["user_id", "event_id"]
-            )
-        else:
-            allrows = fresh
-        w = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
-        rechained = allrows.withColumn(
-            "valid_to", F.lead("valid_from").over(w)
-        ).withColumn("is_current", F.col("valid_to").isNull())
-        upsert_table_bucketed(
-            sp,
-            rechained.select(
-                "user_id", "event_id", "valid_from", "valid_to",
-                "event_type", "v", "is_current",
-            ),
-            target,
-            keys=["user_id", "event_id"],
-            bucket_keys=["user_id"],  # a user's versions co-live
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(stream.writeStream.foreachBatch(partial(scd2_batch, target)), work)
     if not os.path.isdir(target):  # zero-batch replay (empty source)
         return spark.createDataFrame([], out_schema)
     return read_state_table(spark, target).orderBy(
@@ -1032,11 +955,6 @@ def st21_late_data_audit(spark, sf_dir):
     tagged = ev.withColumn("arrival", arr.cast("int"))
     _write_arrival_files(tagged, nb, work, watch)
 
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, tsu long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch)
-    )
     state = {"max_tsu": None}
     acc: dict[str, list] = {}  # event_type -> [n, n_late, max_late_us]
 
@@ -1068,13 +986,8 @@ def st21_late_data_audit(spark, sf_dir):
             if state["max_tsu"] is None or r.mt > state["max_tsu"]:
                 state["max_tsu"] = r.mt
 
-    q = (
-        stream.writeStream.foreachBatch(audit)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = file_batches(spark, "event_id long, event_type string, tsu long", watch)
+    run_stream(stream.writeStream.foreachBatch(audit), work)
 
     out = spark.createDataFrame(
         [
@@ -1309,11 +1222,7 @@ def st22_stateful_sessions(spark, sf_dir):
     _write_arrival_files(tagged, nb, work, watch)
 
     stream = (
-        spark.readStream.schema(
-            "user_id long, event_id long, tsu long, cents long"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(watch)
+        file_batches(spark, "user_id long, event_id long, tsu long, cents long", watch)
         .withColumn("ts", F.timestamp_micros("tsu"))
         .withWatermark("ts", f"{SESSION_WM_DELAY_MS // 1000} seconds")
     )

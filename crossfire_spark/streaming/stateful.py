@@ -134,12 +134,10 @@ def st04_stateful_totals(spark, sf_dir):
         mode="update",
     )
     # update mode emits one row per (user, batch); keep the final one
-    from pyspark.sql import Window
+    from crossfire_spark.sources.io import newest_per_key
 
-    w = Window.partitionBy("user_id").orderBy(F.col("c").desc())
     return (
-        out.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        newest_per_key(out, ["user_id"], ["c"])
         .select("user_id", "c", "s")
         .orderBy("user_id", "c", "s")
     )

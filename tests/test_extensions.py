@@ -1582,39 +1582,82 @@ def test_dedup_kernels_defined_once():
     assert intra == [], f"call-site intra-group scores: {intra}"
 
 
-def test_materialize_defined_once():
-    """How an intermediate is pinned, and how counters ride the pinning
-    job, is decided in one place: ``localCheckpoint(`` and ``.observe(``
-    appear in the package only inside ``catalog.materialize``. The two
-    listed exceptions attach counters to other actions: st13's
-    per-batch stream monitor and ``plans/observe.observed_write``."""
+def _owned_hits(pattern, dirs=("crossfire_spark",)):
+    """Every match of ``pattern`` in the ``.py`` files under ``dirs``
+    (package files named relative to the package, others relative to
+    the checkout), each with its innermost enclosing function:
+    ``[(file, function or None, match)]``."""
     import ast
     import pathlib
     import re
 
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "crossfire_spark"
+    root = pathlib.Path(__file__).resolve().parent.parent
     hits = []
-    for f in sorted(pkg.rglob("*.py")):
-        text = f.read_text()
-        funcs = [
-            n
-            for n in ast.walk(ast.parse(text))
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-        ]
-        for i, line in enumerate(text.splitlines(), 1):
-            for call in re.findall(r"localCheckpoint\(|\.observe\(", line):
+    for d in dirs:
+        base = root / d if d == "crossfire_spark" else root
+        for f in sorted((root / d).rglob("*.py")):
+            text = f.read_text()
+            funcs = [
+                n
+                for n in ast.walk(ast.parse(text))
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for m in re.finditer(pattern, text):
+                i = text.count("\n", 0, m.start()) + 1
                 owner = min(
                     (fn for fn in funcs if fn.lineno <= i <= fn.end_lineno),
                     key=lambda fn: fn.end_lineno - fn.lineno,
                     default=None,
                 )
-                hits.append((str(f.relative_to(pkg)), owner and owner.name, call))
-    assert sorted(hits) == [
+                hits.append(
+                    (str(f.relative_to(base)), owner and owner.name, m.group(0))
+                )
+    return sorted(hits)
+
+
+def test_materialize_defined_once():
+    """How an intermediate is pinned, and how counters ride the pinning
+    job, is decided in one place: ``localCheckpoint(`` and ``.observe(``
+    appear in the package and in ``tools/`` only inside
+    ``catalog.materialize``. The two listed exceptions attach counters
+    to other actions: st13's per-batch stream monitor and
+    ``plans/observe.observed_write``."""
+    hits = _owned_hits(
+        r"localCheckpoint\(|\.observe\(", dirs=("crossfire_spark", "tools")
+    )
+    assert hits == [
         ("catalog.py", "materialize", ".observe("),
         ("catalog.py", "materialize", "localCheckpoint("),
         ("plans/observe.py", "observed_write", ".observe("),
         ("streaming/jobs.py", "st13_stream_quality", ".observe("),
     ], hits
+
+
+def test_stream_kernels_defined_once():
+    """A bounded stream replay is run one way: the ``availableNow``
+    trigger and the wait live only in ``run_stream``, the one-file-per-
+    micro-batch option only in ``file_batches``, and the newest-row-per-
+    key ``row_number`` window only in ``sources.io.newest_per_key``.
+    The two listed ``== 1`` picks rank ascending, a different rule:
+    q31's least-loaded rack and h-family's strongest change point."""
+    run = [("streaming/jobs.py", "run_stream")]
+    kernels = {
+        r"\bawaitTermination\(": run,
+        r"\bavailableNow\s*=": run,
+        r"[\"']maxFilesPerTrigger[\"']": [("streaming/jobs.py", "file_batches")],
+    }
+    for rx, want in kernels.items():
+        assert [(f, fn) for f, fn, _ in _owned_hits(rx)] == want, rx
+    rn_one = (
+        r"F\.row_number\(\)\.over\(\w+\)\)\s*"
+        r"\.where\(\s*F\.col\(\"\w+\"\)\s*==\s*1\s*\)"
+    )
+    picks = [(f, fn) for f, fn, _ in _owned_hits(rn_one)]
+    assert picks == [
+        ("operators/extended.py", "changepoints"),
+        ("placement/queries.py", "q31"),
+        ("sources/io.py", "newest_per_key"),
+    ], picks
 
 
 def _job_count(spark, run):

@@ -14,9 +14,9 @@ from crossfire_spark.sources.snapshot_stream import snapshot_read_stream
 from crossfire_spark.streaming.jobs import run_stream_to_memory
 
 
-def _rows(spark, path, starting_version=None, ckpt=None, name=None):
+def _rows(spark, path, starting_version=None):
     sdf = snapshot_read_stream(spark, path, starting_version=starting_version)
-    sink = run_stream_to_memory(sdf.select("id", "val"), mode="append", name=name)
+    sink = run_stream_to_memory(sdf.select("id", "val"), mode="append")
     return {(r.id, r.val) for r in sink.collect()}
 
 

@@ -18,6 +18,46 @@ from test_differential import oracle_test
 test_streaming_matches_oracle = oracle_test("crossfire_spark.streaming.jobs")
 
 
+def _three_file_split(spark, events, tmp_path):
+    """``events`` written as 3 parquet files, one per
+    ``pmod(event_id, 3)`` (interleaved rows, so every file spans all
+    users and all of time), and streamed back one file per
+    micro-batch."""
+    src = str(tmp_path / "src")
+    events.withColumn("b", F.pmod("event_id", F.lit(3))).repartition(
+        "b"
+    ).write.partitionBy("b").parquet(src)
+    return (
+        spark.readStream.schema(events.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(src)
+    )
+
+
+def _replay(stream, body, target, tmp_path):
+    """Run the shipped per-batch ``body`` into ``target`` over
+    ``stream``; returns the number of micro-batches that read rows."""
+    from functools import partial
+
+    from crossfire_spark.streaming.jobs import run_stream
+
+    q = run_stream(
+        stream.writeStream.foreachBatch(partial(body, target)), str(tmp_path)
+    )
+    return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+
+
+def _newest(events):
+    """The batch answer: each user's newest row by (ts, event_id)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return events.withColumn("rn", F.row_number().over(w)).where("rn = 1")
+
+
 def test_streaming_session_append_is_prefix_of_batch(spark, sf_dir):
     """Append-mode session windows emit only watermark-closed
     sessions: the streaming output must be a subset of the batch
@@ -41,67 +81,24 @@ def test_streaming_session_append_is_prefix_of_batch(spark, sf_dir):
 
 def test_stream_upsert_batching_independent(spark, sf_dir, tmp_path):
     """Streaming MERGE is deterministic under any micro-batch split:
-    replay events as 3 single-file micro-batches (maxFilesPerTrigger=1
-    over a row-sliced copy — files arrive in arbitrary ts order) and
-    the merged state table must equal the batch latest-per-user."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.sources.io import read_table, upsert_table
+    st07's shipped body replays events as 3 single-file micro-batches
+    (files arrive in arbitrary ts order) and the merged state table
+    must equal the batch latest-per-user."""
+    from crossfire_spark.sources.io import read_table
+    from crossfire_spark.streaming.jobs import upsert_batch
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts", "value"
     )
-    src = str(tmp_path / "src")
-    # 3 files with interleaved rows -> every batch spans all users
-    events.withColumn("b", F.pmod("event_id", F.lit(3))).repartition(
-        "b"
-    ).write.partitionBy("b").parquet(src)
-    schema = events.schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
     target = str(tmp_path / "latest")
-    n_batches = []
-
-    def merge(batch_df, batch_id):
-        n_batches.append(batch_id)
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .drop("rn")
-        )
-        upsert_table(
-            batch_df.sparkSession, latest, target,
-            keys=["user_id"], precedence=["ts", "event_id"],
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert len(n_batches) >= 3, "replay did not split into micro-batches"
+    stream = _three_file_split(spark, events, tmp_path)
+    n_batches = _replay(stream, upsert_batch, target, tmp_path)
+    assert n_batches >= 3, "replay did not split into micro-batches"
     got = {
         (r.user_id, r.event_id)
         for r in read_table(spark, target).collect()
     }
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    expect = {
-        (r.user_id, r.event_id)
-        for r in events.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .collect()
-    }
+    expect = {(r.user_id, r.event_id) for r in _newest(events).collect()}
     assert got == expect
 
 
@@ -119,65 +116,19 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
 
 
 def test_snapshot_merge_stream_batching_independent(spark, sf_dir, tmp_path):
-    """st09's read-merge-write into the versioned table is
+    """st09's shipped read-merge-write body into the versioned table is
     deterministic under any micro-batch split, and each batch is one
     committed version (history survives across batches)."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.sources.snapshot import (
-        snapshot_history,
-        snapshot_merge,
-        snapshot_read,
-        snapshot_versions,
-        snapshot_write,
-    )
+    from crossfire_spark.sources.snapshot import snapshot_history, snapshot_read
+    from crossfire_spark.streaming.jobs import snapshot_merge_batch
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts", "value"
     )
-    src = str(tmp_path / "src")
-    events.withColumn("b", F.pmod("event_id", F.lit(3))).repartition(
-        "b"
-    ).write.partitionBy("b").parquet(src)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
     target = str(tmp_path / "latest")
-
-    def merge(batch_df, batch_id):
-        s = batch_df.sparkSession
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .drop("rn")
-        )
-        if not snapshot_versions(target):
-            snapshot_write(latest, target)
-            return
-        current = snapshot_read(s, target).join(
-            latest.select("user_id"), "user_id", "left_semi"
-        )
-        best = (
-            current.unionByName(latest)
-            .withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .drop("rn")
-        )
-        snapshot_merge(s, best, target, keys=["user_id"])
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _three_file_split(spark, events, tmp_path)
+    n_batches = _replay(stream, snapshot_merge_batch, target, tmp_path)
+    assert n_batches >= 3, "replay did not split into micro-batches"
     hist = snapshot_history(target)
     assert len(hist) >= 3, "each micro-batch must commit one version"
     assert {h["operation"] for h in hist[1:]} == {"merge"}
@@ -185,15 +136,7 @@ def test_snapshot_merge_stream_batching_independent(spark, sf_dir, tmp_path):
         (r.user_id, r.event_id)
         for r in snapshot_read(spark, target).collect()
     }
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    expect = {
-        (r.user_id, r.event_id)
-        for r in events.withColumn("rn", F.row_number().over(w))
-        .where("rn = 1")
-        .collect()
-    }
+    expect = {(r.user_id, r.event_id) for r in _newest(events).collect()}
     assert got == expect
 
 
@@ -452,14 +395,13 @@ def test_st18_interval_merge_order_independent_across_batches(
 def test_stream_cdc_apply_batching_independent_and_tombstones(
     spark, sf_dir, tmp_path
 ):
-    """st19's CDC apply under a forced 3-batch split equals the batch
-    changelog compaction: newest change per user wins, users whose
-    newest change is a delete are ABSENT from the read view but
-    PRESENT as tombstones in the stored state (so a late older upsert
-    cannot resurrect them)."""
-    from pyspark.sql import Window
-
-    from crossfire_spark.sources.io import read_table, upsert_table
+    """st19's shipped CDC body (bucketed upsert) under a forced 3-batch
+    split equals the batch changelog compaction: newest change per user
+    wins, users whose newest change is a delete are ABSENT from the
+    read view but PRESENT as tombstones in the stored state (so a late
+    older upsert cannot resurrect them)."""
+    from crossfire_spark.sources.io import read_state_table
+    from crossfire_spark.streaming.jobs import cdc_apply_batch
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id",
@@ -471,44 +413,12 @@ def test_stream_cdc_apply_batching_independent_and_tombstones(
         .otherwise(F.lit("U"))
         .alias("op"),
     )
-    src = str(tmp_path / "src")
-    events.withColumn("b", F.pmod("event_id", F.lit(3))).repartition(
-        "b"
-    ).write.partitionBy("b").parquet(src)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
     target = str(tmp_path / "state")
-
-    def merge(batch_df, batch_id):
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .where("rn = 1")
-            .drop("rn")
-        )
-        upsert_table(
-            batch_df.sparkSession, latest, target,
-            keys=["user_id"], precedence=["ts", "event_id"],
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    state = read_table(spark, target)
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    newest = events.withColumn("rn", F.row_number().over(w)).where("rn = 1")
+    stream = _three_file_split(spark, events, tmp_path)
+    n_batches = _replay(stream, cdc_apply_batch, target, tmp_path)
+    assert n_batches >= 3, "replay did not split into micro-batches"
+    state = read_state_table(spark, target)
+    newest = _newest(events)
     live_expect = {
         (r.user_id, r.event_id) for r in newest.where("op = 'U'").collect()
     }
@@ -524,77 +434,25 @@ def test_stream_cdc_apply_batching_independent_and_tombstones(
 
 
 def test_stream_scd2_batching_independent(spark, sf_dir, tmp_path):
-    """st20's incremental SCD2 maintenance under a forced 3-batch
-    split equals the batch h18 build: every version row, every
-    valid_to closure (including intervals that straddle batch
-    boundaries), and exactly one open interval per user."""
-    import os
-
+    """st20's shipped incremental SCD2 body (touched-bucket pruning,
+    bucketed upsert) under a forced 3-batch split equals the batch h18
+    build: every version row, every valid_to closure (including
+    intervals that straddle batch boundaries), and exactly one open
+    interval per user."""
     from crossfire_spark.operators.extended import scd2_intervals
-    from crossfire_spark.streaming import jobs as sj
-    from crossfire_spark.sources.io import read_table, upsert_table
-    from pyspark.sql import Window
+    from crossfire_spark.sources.io import read_state_table
+    from crossfire_spark.streaming.jobs import scd2_batch
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    src = str(tmp_path / "src")
-    events.withColumn("b", F.pmod("event_id", F.lit(3))).repartition(
-        "b"
-    ).write.partitionBy("b").parquet(src)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
     target = str(tmp_path / "scd2")
-
-    def merge(batch_df, batch_id):
-        sp = batch_df.sparkSession
-        fresh = batch_df.select(
-            "user_id",
-            "event_id",
-            F.col("ts").alias("valid_from"),
-            "event_type",
-            F.round("value", 2).alias("v"),
-        )
-        if os.path.isdir(target):
-            touched = fresh.select("user_id").distinct()
-            current = (
-                read_table(sp, target)
-                .join(F.broadcast(touched), "user_id", "left_semi")
-                .select("user_id", "event_id", "valid_from", "event_type", "v")
-            )
-            allrows = current.unionByName(fresh).dropDuplicates(
-                ["user_id", "event_id"]
-            )
-        else:
-            allrows = fresh
-        w = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
-        rechained = allrows.withColumn(
-            "valid_to", F.lead("valid_from").over(w)
-        ).withColumn("is_current", F.col("valid_to").isNull())
-        upsert_table(
-            sp,
-            rechained.select(
-                "user_id", "event_id", "valid_from", "valid_to",
-                "event_type", "v", "is_current",
-            ),
-            target,
-            keys=["user_id", "event_id"],
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _three_file_split(spark, events, tmp_path)
+    n_batches = _replay(stream, scd2_batch, target, tmp_path)
+    assert n_batches >= 3, "replay did not split into micro-batches"
     got = {
         (r.user_id, r.event_id): (r.valid_from, r.valid_to, r.is_current)
-        for r in read_table(spark, target).collect()
+        for r in read_state_table(spark, target).collect()
     }
     expect = {
         (r.user_id, r.event_id): (r.valid_from, r.valid_to, r.is_current)

@@ -95,11 +95,12 @@ def bench_cdc_merge(spark, work, n_keys, n_buckets, reps, bucketed):
     """st19's merge body: newest-per-key window + MERGE, against a
     state table of n_keys accumulated keys. Returns (median_s,
     touched_buckets, touched_rows)."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from crossfire_spark.catalog import materialize
     from crossfire_spark.sources.io import (
         BUCKET_COL,
+        newest_per_key,
         read_table,
         state_bucket_expr,
         upsert_table,
@@ -117,17 +118,10 @@ def bench_cdc_merge(spark, work, n_keys, n_buckets, reps, bucketed):
         upsert_table(
             spark, seed, path, keys=["user_id"], precedence=["ts", "event_id"]
         )
-    batch = _cdc_rows(spark, BATCH_ROWS, BATCH_KEYS, salt=1).localCheckpoint()
+    batch = materialize(_cdc_rows(spark, BATCH_ROWS, BATCH_KEYS, salt=1))
 
     def merge():
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .drop("__rn")
-        )
+        latest = newest_per_key(batch, ["user_id"], ["ts", "event_id"])
         if bucketed:
             upsert_table_bucketed(
                 spark, latest, path,
@@ -163,6 +157,7 @@ def bench_scd2_merge(spark, work, n_keys, n_buckets, reps):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from crossfire_spark.catalog import materialize
     from crossfire_spark.sources.io import (
         BUCKET_COL,
         read_table,
@@ -185,14 +180,12 @@ def bench_scd2_merge(spark, work, n_keys, n_buckets, reps):
         keys=["user_id", "event_id"], bucket_keys=["user_id"],
         n_buckets=n_buckets,
     )
-    batch = (
-        _cdc_rows(spark, BATCH_ROWS, BATCH_KEYS, salt=1)
-        .select(
+    batch = materialize(
+        _cdc_rows(spark, BATCH_ROWS, BATCH_KEYS, salt=1).select(
             "user_id", "event_id", F.col("ts").alias("valid_from"),
             F.lit("batch").alias("event_type"), F.col("value").alias("v"),
             "payload",
         )
-        .localCheckpoint()
     )
 
     def merge():
@@ -241,6 +234,7 @@ def bench_pq_ingest(spark, work, mult, reps):
     import numpy as np
     from pyspark.sql import functions as F
 
+    from crossfire_spark.catalog import materialize
     from crossfire_spark.functions.ann_index import build_pq_index
     from crossfire_spark.functions.similarity import pq_encode
     from crossfire_spark.sources.snapshot import snapshot_read, snapshot_write
@@ -257,12 +251,11 @@ def bench_pq_ingest(spark, work, mult, reps):
     for r in cb:
         books[r["s"], r["j"]] = r["c"]
     # fixed ingest batch: the x1 corpus's first VEC_BATCH vectors
-    batch = (
+    batch = materialize(
         spark.read.parquet(os.path.join(SCALE_FIX, "x1", "embeddings.parquet"))
         .orderBy("vec_id")
         .limit(VEC_BATCH)
         .withColumn("vec_id", F.col("vec_id") + 90_000_000)
-        .localCheckpoint()
     )
     codes_path = os.path.join(path, "codes")
     state_rows = em.count()
@@ -402,6 +395,8 @@ def bench_session_eviction(spark, work, mult):
     from crossfire_spark.streaming.jobs import (
         SESSION_WM_DELAY_MS,
         _write_arrival_files,
+        file_batches,
+        run_stream,
         stateful_sessions,
     )
 
@@ -433,25 +428,19 @@ def bench_session_eviction(spark, work, mult):
             watch,
         )
         stream = (
-            spark.readStream.schema(
-                "user_id long, event_id long, tsu long, cents long"
+            file_batches(
+                spark, "user_id long, event_id long, tsu long, cents long", watch
             )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(watch)
             .withColumn("ts", F.timestamp_micros("tsu"))
             .withWatermark("ts", f"{SESSION_WM_DELAY_MS // 1000} seconds")
         )
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            q = (
-                stateful_sessions(stream, evict=evict)
-                .writeStream.format("noop")
-                .option("checkpointLocation", os.path.join(sub, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+            q = run_stream(
+                stateful_sessions(stream, evict=evict).writeStream.format("noop"),
+                sub,
             )
-            q.awaitTermination()
             state_rows, state_bytes, last_ms = 0, 0, 0.0
             for p in q.recentProgress:
                 ops = p.get("stateOperators") or []
